@@ -1541,11 +1541,10 @@ def q_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Depth-2 greedy tree (round 11, VERDICT r10 #5b): root split + the
-# best split inside EACH branch, all on q_stump's exact Gini machinery
-# over the bounded distinct-score table — the next rung on the
-# oracle-checked training ladder toward the reference's depth-5 trees
-# (train_model.py:69-80).
+# Exact Gini tree machinery: the bounded distinct-score prefix table and
+# the branch-offset split key every Gini tree rung (q_tree2, q_tree3,
+# q_tree5, q_boosted_tree2) searches — toward the reference's depth-5
+# trees (train_model.py:69-80).
 # ---------------------------------------------------------------------------
 
 
@@ -1554,8 +1553,8 @@ def _tree_cum_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     score domain) + ONE prefix-count pass over it (coarse 1e-3-bucket
     offsets via a <=1001-row broadcast self-join + PARTITIONED
     within-bucket windows — never a global single-partition sort),
-    checkpointed once. Shared by the q_tree2/q_tree3 training ladder:
-    every node argmin at any depth is a bounded scan of this table."""
+    checkpointed once. Shared by the Gini tree ladder: every level's
+    argmin at any depth is a bounded scan of this table."""
     return tree_cum_table(scored(spark, sf_dir))
 
 
@@ -1626,40 +1625,10 @@ def _tree_key(n0, p0, nb, pb):
     )
 
 
-def _tree_node(tag: str, cands, n0, p0, nb, pb):
-    """Best split inside one branch: TakeOrdered(1) over the bounded
-    candidate scan by the exact (key, score) order (Spark twin of
-    _gini_node_sql)."""
-    nbd = nb.cast("double")
-    pbd = pb.cast("double")
-    base = (
-        F.lit(1.0)
-        - (pbd / nbd) * (pbd / nbd)
-        - ((nbd - pbd) / nbd) * ((nbd - pbd) / nbd)
-    )
-    k = F.col("key")
-    return (
-        cands.withColumn("key", _tree_key(n0, p0, nb, pb))
-        .orderBy("key", "score")
-        .limit(1)
-        .select(
-            F.lit(tag).alias("node"),
-            F.col("score").alias("threshold"),
-            (F.col("cum_n") - n0).cast("bigint").alias("n_left"),
-            (F.col("cum_p") - p0).cast("bigint").alias("pos_left"),
-            (nb - (F.col("cum_n") - n0)).cast("bigint").alias("n_right"),
-            (pb - (F.col("cum_p") - p0)).cast("bigint").alias("pos_right"),
-            pround(k / nbd, 6).alias("gini_split"),
-            pround(base, 6).alias("gini_base"),
-            pround(base - k / nbd, 6).alias("gain"),
-        )
-    )
-
-
 def _gini_key_sql(n0: str, p0: str, nb: str, pb: str) -> str:
     """Branch-offset Gini split key at a candidate threshold (exact
     integer counts cast once to DOUBLE — identical IEEE expression on
-    both engines). Shared by the q_tree2/q_tree3 oracles."""
+    both engines). Shared by the Gini tree oracles."""
     nl = f"CAST(cum_n - {n0} AS DOUBLE)"
     pl = f"CAST(cum_p - {p0} AS DOUBLE)"
     nr = f"CAST({nb} - (cum_n - {n0}) AS DOUBLE)"
@@ -1674,363 +1643,6 @@ def _gini_base_sql(nb: str, pb: str) -> str:
     p_ = f"(CAST({pb} AS DOUBLE) / {nb})"
     q_ = f"(CAST({nb} - {pb} AS DOUBLE) / {nb})"
     return f"(1.0 - {p_} * {p_} - {q_} * {q_})"
-
-
-def _gini_node_sql(
-    tag: str, src: str, n0: str, p0: str, nb: str, pb: str
-) -> str:
-    k = _gini_key_sql(n0, p0, nb, pb)
-    base = _gini_base_sql(nb, pb)
-    return (
-        f"SELECT '{tag}' AS node, score AS threshold, "
-        f"CAST(cum_n - {n0} AS BIGINT) AS n_left, "
-        f"CAST(cum_p - {p0} AS BIGINT) AS pos_left, "
-        f"CAST({nb} - (cum_n - {n0}) AS BIGINT) AS n_right, "
-        f"CAST({pb} - (cum_p - {p0}) AS BIGINT) AS pos_right, "
-        + sql_round(f"({k}) / {nb}", 6) + " AS gini_split, "
-        + sql_round(base, 6) + " AS gini_base, "
-        + sql_round(f"{base} - ({k}) / {nb}", 6) + " AS gain "
-        f"FROM {src} ORDER BY {k}, score LIMIT 1"
-    )
-
-
-def _tree2_oracle() -> str:
-    """DuckDB twin of the depth-2 greedy Gini tree. Branch splits are
-    CLOSED FORMS over the one materialized prefix-count table: with
-    branch base offsets (n0, p0) and branch totals (nb, pb), a split
-    at t inside the branch has left counts (cum_n(t)-n0, cum_p(t)-p0)
-    — so each branch argmin is one scan of `c`, no re-aggregation."""
-    node = _gini_node_sql
-
-    return (
-        f"WITH s AS ({SCORED_SQL}), "
-        "g AS (SELECT score, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(label) AS BIGINT) AS pos FROM s GROUP BY score), "
-        "t AS MATERIALIZED (SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
-        "CAST(SUM(pos) AS BIGINT) AS p FROM g), "
-        "c AS MATERIALIZED (SELECT score, "
-        "CAST(SUM(cnt) OVER (ORDER BY score) AS BIGINT) AS cum_n, "
-        "CAST(SUM(pos) OVER (ORDER BY score) AS BIGINT) AS cum_p, "
-        "n, p FROM g, t), "
-        "root AS MATERIALIZED ("
-        + node("root", "c WHERE cum_n < n", "0", "0", "n", "p")
-        + "), "
-        # left branch: thresholds strictly below the root threshold;
-        # branch totals = root's left counts
-        "lc AS (SELECT c.*, root.n_left AS nb, root.pos_left AS pb "
-        "FROM c, root WHERE c.score < root.threshold), "
-        "lpick AS MATERIALIZED ("
-        + node("left", "lc WHERE cum_n < nb", "0", "0", "nb", "pb")
-        + "), "
-        # right branch: thresholds strictly above the root threshold
-        # and below the branch max; base offsets = root's left counts
-        "rc AS (SELECT c.*, root.n_left AS n0, root.pos_left AS p0, "
-        "root.n_right AS nb, root.pos_right AS pb "
-        "FROM c, root WHERE c.score > root.threshold), "
-        "rpick AS MATERIALIZED ("
-        + node("right", "rc WHERE cum_n - n0 < nb", "n0", "p0", "nb", "pb")
-        + ") "
-        "SELECT * FROM root UNION ALL SELECT * FROM lpick "
-        "UNION ALL SELECT * FROM rpick"
-    )
-
-
-@query(
-    "q_tree2",
-    oracle=_tree2_oracle(),
-    tags=("ml", "train", "split"),
-    eager=True,
-)
-def q_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train a depth-2 greedy decision tree on the published model
-    score by EXACT Gini split search: q_stump's root split, then the
-    best split INSIDE each branch (left: score <= t_root, right:
-    score > t_root), each with its own branch-conditional impurity and
-    gain. Emits up to 3 rows (node = root/left/right; a pure or
-    single-valued branch emits none) — the next rung on the
-    oracle-checked training ladder toward the reference's depth-5
-    trees (train_model.py:69-80), still hash-verifiable because every
-    candidate's branch-conditional counts are exact integers.
-
-    Exactness: branch split keys are the q_stump expression on
-    BRANCH-OFFSET exact integers — with branch base (n0, p0) and
-    totals (nb, pb), the candidate at t has left counts
-    (cum_n(t)-n0, cum_p(t)-p0) — the same IEEE doubles on both
-    engines, so each ORDER BY (key, score) argmin is engine-identical;
-    display values round at 6 dp.
-
-    Scale: the q_stump/q_boosted_stumps discipline — ONE fact fold to
-    the distinct-score table (bounded by the 6-dp score domain), ONE
-    prefix-count pass over it (coarse 1e-3-bucket offsets via a
-    <=1001-row broadcast self-join + PARTITIONED within-bucket
-    windows, never a global single-partition sort), checkpointed once;
-    the root and both branch argmins are then three scans of that
-    bounded checkpointed table + TakeOrdered(1) each, with the root
-    row broadcast into the branch scans. Depth d costs 2^d bounded
-    scans, never a fact re-shuffle. Eager by construction (the
-    checkpointed cum table); the registry eager contract applies."""
-    c = _tree_cum_table(spark, sf_dir)
-    _node = _tree_node
-    zero = F.lit(0)
-    root = _node(
-        "root",
-        c.filter(F.col("cum_n") < F.col("n")),
-        zero,
-        zero,
-        F.col("n"),
-        F.col("p"),
-    ).localCheckpoint()
-    cb = c.crossJoin(F.broadcast(root.select(
-        F.col("threshold").alias("t0"),
-        F.col("n_left").alias("bn0"),
-        F.col("pos_left").alias("bp0"),
-        F.col("n_right").alias("bn1"),
-        F.col("pos_right").alias("bp1"),
-    )))
-    left = _node(
-        "left",
-        cb.filter(
-            (F.col("score") < F.col("t0")) & (F.col("cum_n") < F.col("bn0"))
-        ),
-        zero,
-        zero,
-        F.col("bn0"),
-        F.col("bp0"),
-    )
-    right = _node(
-        "right",
-        cb.filter(
-            (F.col("score") > F.col("t0"))
-            & (F.col("cum_n") - F.col("bn0") < F.col("bn1"))
-        ),
-        F.col("bn0"),
-        F.col("bp0"),
-        F.col("bn1"),
-        F.col("bp1"),
-    )
-    return root.unionAll(left).unionAll(right)
-
-
-# ---------------------------------------------------------------------------
-# q_tree3 — depth-3 greedy Gini tree (VERDICT r11 #4): root + both
-# depth-1 branch splits + all four depth-2 leaf splits, every argmin a
-# CLOSED FORM over the one checkpointed prefix-count table — the next
-# rung toward the reference's depth-5 trees (train_model.py:69-80).
-# ---------------------------------------------------------------------------
-
-
-def _tree3_oracle() -> str:
-    """DuckDB twin of the depth-3 greedy Gini tree. Level-2 leaves
-    reuse the level-1 picks exactly as q_tree2's branches reuse the
-    root: with parent base offsets (o_n, o_p) and parent-branch totals
-    (nb2, pb2) attached as columns, each leaf argmin is one more scan
-    of the materialized `c`. An empty parent pick (pure or
-    single-valued branch) makes the leaf's cross join empty, so the
-    leaf emits nothing — same semantics as the Spark side's crossJoin
-    of the 0-or-1-row pick."""
-    node = _gini_node_sql
-
-    return (
-        f"WITH s AS ({SCORED_SQL}), "
-        "g AS (SELECT score, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(label) AS BIGINT) AS pos FROM s GROUP BY score), "
-        "t AS MATERIALIZED (SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
-        "CAST(SUM(pos) AS BIGINT) AS p FROM g), "
-        "c AS MATERIALIZED (SELECT score, "
-        "CAST(SUM(cnt) OVER (ORDER BY score) AS BIGINT) AS cum_n, "
-        "CAST(SUM(pos) OVER (ORDER BY score) AS BIGINT) AS cum_p, "
-        "n, p FROM g, t), "
-        "root AS MATERIALIZED ("
-        + node("root", "c WHERE cum_n < n", "0", "0", "n", "p")
-        + "), "
-        "lc AS (SELECT c.*, root.n_left AS nb, root.pos_left AS pb "
-        "FROM c, root WHERE c.score < root.threshold), "
-        "lpick AS MATERIALIZED ("
-        + node("left", "lc WHERE cum_n < nb", "0", "0", "nb", "pb")
-        + "), "
-        "rc AS (SELECT c.*, root.n_left AS n0, root.pos_left AS p0, "
-        "root.n_right AS nb, root.pos_right AS pb "
-        "FROM c, root WHERE c.score > root.threshold), "
-        "rpick AS MATERIALIZED ("
-        + node("right", "rc WHERE cum_n - n0 < nb", "n0", "p0", "nb", "pb")
-        + "), "
-        # depth-2 leaves: parent pick's counts attached as columns,
-        # candidate set bounded strictly inside the parent interval
-        "llc AS (SELECT c.*, lpick.n_left AS nb2, lpick.pos_left AS pb2 "
-        "FROM c, lpick WHERE c.score < lpick.threshold), "
-        "llpick AS ("
-        + node("ll", "llc WHERE cum_n < nb2", "0", "0", "nb2", "pb2")
-        + "), "
-        "lrc AS (SELECT c.*, lpick.n_left AS o_n, lpick.pos_left AS o_p, "
-        "lpick.n_right AS nb2, lpick.pos_right AS pb2 "
-        "FROM c, root, lpick "
-        "WHERE c.score > lpick.threshold AND c.score < root.threshold), "
-        "lrpick AS ("
-        + node("lr", "lrc WHERE cum_n - o_n < nb2", "o_n", "o_p", "nb2", "pb2")
-        + "), "
-        "rlc AS (SELECT c.*, root.n_left AS o_n, root.pos_left AS o_p, "
-        "rpick.n_left AS nb2, rpick.pos_left AS pb2 "
-        "FROM c, root, rpick "
-        "WHERE c.score > root.threshold AND c.score < rpick.threshold), "
-        "rlpick AS ("
-        + node("rl", "rlc WHERE cum_n - o_n < nb2", "o_n", "o_p", "nb2", "pb2")
-        + "), "
-        "rrc AS (SELECT c.*, root.n_left + rpick.n_left AS o_n, "
-        "root.pos_left + rpick.pos_left AS o_p, "
-        "rpick.n_right AS nb2, rpick.pos_right AS pb2 "
-        "FROM c, root, rpick WHERE c.score > rpick.threshold), "
-        "rrpick AS ("
-        + node("rr", "rrc WHERE cum_n - o_n < nb2", "o_n", "o_p", "nb2", "pb2")
-        + ") "
-        "SELECT * FROM root UNION ALL SELECT * FROM lpick "
-        "UNION ALL SELECT * FROM rpick UNION ALL SELECT * FROM llpick "
-        "UNION ALL SELECT * FROM lrpick UNION ALL SELECT * FROM rlpick "
-        "UNION ALL SELECT * FROM rrpick"
-    )
-
-
-@query(
-    "q_tree3",
-    oracle=_tree3_oracle(),
-    tags=("ml", "train", "split"),
-    eager=True,
-)
-def q_tree3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train a depth-3 greedy decision tree on the published model
-    score by EXACT Gini split search: q_tree2's root + branch picks,
-    then the best split inside each of the four depth-2 leaves
-    (ll: score < t_left; lr: t_left < score < t_root;
-    rl: t_root < score < t_right; rr: score > t_right). Emits up to 7
-    rows (node = root/left/right/ll/lr/rl/rr; a pure or single-valued
-    branch emits none, and its children then emit none too) — the
-    third rung on the oracle-checked training ladder toward the
-    reference's depth-5 trees (train_model.py:69-80).
-
-    Exactness: identical to q_tree2 one level down — every leaf
-    candidate's branch-conditional counts are (cum_n - o_n,
-    cum_p - o_p) on exact integers, where the leaf base offset o_n is
-    the parent pick's absolute cumulative position (for rr:
-    root.n_left + right.n_left = cum_n(t_right)); the argmin key is
-    the same IEEE double expression on both engines, ORDER BY
-    (key, score) ties broken identically.
-
-    Scale (VERDICT r11 #4 cost budget): NO new fact passes — the one
-    fact fold + ONE checkpointed prefix-count pass of q_tree2
-    (_tree_cum_table), then SEVEN bounded scans of that checkpointed
-    table + TakeOrdered(1) each (2^d - 1 at depth d), with the root
-    and level-1 pick rows broadcast into the deeper scans. Three tiny
-    localCheckpoints (root, left, right picks — <=1 row each) keep
-    every level's offsets exact constants instead of re-derived
-    subplans. An empty pick propagates emptiness to its children via
-    the crossJoin, matching the oracle's `FROM c, parent` semantics."""
-    c = _tree_cum_table(spark, sf_dir)
-    _node = _tree_node
-    zero = F.lit(0)
-    root = _node(
-        "root",
-        c.filter(F.col("cum_n") < F.col("n")),
-        zero,
-        zero,
-        F.col("n"),
-        F.col("p"),
-    ).localCheckpoint()
-    cb = c.crossJoin(F.broadcast(root.select(
-        F.col("threshold").alias("t0"),
-        F.col("n_left").alias("bn0"),
-        F.col("pos_left").alias("bp0"),
-        F.col("n_right").alias("bn1"),
-        F.col("pos_right").alias("bp1"),
-    )))
-    left = _node(
-        "left",
-        cb.filter(
-            (F.col("score") < F.col("t0")) & (F.col("cum_n") < F.col("bn0"))
-        ),
-        zero,
-        zero,
-        F.col("bn0"),
-        F.col("bp0"),
-    ).localCheckpoint()
-    right = _node(
-        "right",
-        cb.filter(
-            (F.col("score") > F.col("t0"))
-            & (F.col("cum_n") - F.col("bn0") < F.col("bn1"))
-        ),
-        F.col("bn0"),
-        F.col("bp0"),
-        F.col("bn1"),
-        F.col("bp1"),
-    ).localCheckpoint()
-    cl = cb.crossJoin(F.broadcast(left.select(
-        F.col("threshold").alias("t1"),
-        F.col("n_left").alias("ln0"),
-        F.col("pos_left").alias("lq0"),
-        F.col("n_right").alias("ln1"),
-        F.col("pos_right").alias("lq1"),
-    )))
-    ll = _node(
-        "ll",
-        cl.filter(
-            (F.col("score") < F.col("t1")) & (F.col("cum_n") < F.col("ln0"))
-        ),
-        zero,
-        zero,
-        F.col("ln0"),
-        F.col("lq0"),
-    )
-    lr = _node(
-        "lr",
-        cl.filter(
-            (F.col("score") > F.col("t1"))
-            & (F.col("score") < F.col("t0"))
-            & (F.col("cum_n") - F.col("ln0") < F.col("ln1"))
-        ),
-        F.col("ln0"),
-        F.col("lq0"),
-        F.col("ln1"),
-        F.col("lq1"),
-    )
-    cr = cb.crossJoin(F.broadcast(right.select(
-        F.col("threshold").alias("t2"),
-        F.col("n_left").alias("rn0"),
-        F.col("pos_left").alias("rq0"),
-        F.col("n_right").alias("rn1"),
-        F.col("pos_right").alias("rq1"),
-    )))
-    rl = _node(
-        "rl",
-        cr.filter(
-            (F.col("score") > F.col("t0"))
-            & (F.col("score") < F.col("t2"))
-            & (F.col("cum_n") - F.col("bn0") < F.col("rn0"))
-        ),
-        F.col("bn0"),
-        F.col("bp0"),
-        F.col("rn0"),
-        F.col("rq0"),
-    )
-    rr = _node(
-        "rr",
-        cr.filter(
-            (F.col("score") > F.col("t2"))
-            & (
-                F.col("cum_n") - F.col("bn0") - F.col("rn0") < F.col("rn1")
-            )
-        ),
-        F.col("bn0") + F.col("rn0"),
-        F.col("bp0") + F.col("rq0"),
-        F.col("rn1"),
-        F.col("rq1"),
-    )
-    return (
-        root.unionAll(left)
-        .unionAll(right)
-        .unionAll(ll)
-        .unionAll(lr)
-        .unionAll(rl)
-        .unionAll(rr)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2301,12 +1913,12 @@ def q_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q_tree5 — depth-5 exact Gini tree, PER-LEVEL form (round 12): the
 # reference's actual model depth (train_model.py:69-80 — XGBClassifier
-# depth-5) reached on the oracle-checked training ladder. Unlike
-# q_tree2/q_tree3's per-node TakeOrdered scans (2^d - 1 jobs), each
-# LEVEL here is ONE broadcast interval-join of the checkpointed prefix
-# table against the <=2^k live-branch rows + ONE per-branch argmin
-# aggregate — depth d costs d bounded jobs, the form that extends to
-# any depth without job-count blow-up.
+# depth-5) reached on the oracle-checked training ladder. Each LEVEL
+# is ONE broadcast interval-join of the checkpointed prefix table
+# against the <=2^k live-branch rows + ONE per-branch argmin aggregate
+# — depth d costs d bounded jobs (not 2^d - 1 per-node scans), the
+# form that extends to any depth without job-count blow-up. q_tree2
+# and q_tree3 are its depth-2 and depth-3 runs.
 # ---------------------------------------------------------------------------
 
 _TREE5_DEPTH = 5
@@ -2315,7 +1927,7 @@ _TREE5_DEPTH = 5
 def _tree5_chain_sql(
     depth: int = _TREE5_DEPTH, with_final_children: bool = False
 ) -> str:
-    """The shared WITH-chain of the depth-5 ladder oracles: scored ->
+    """The shared WITH-chain of the Gini ladder oracles: scored ->
     distinct-score cum table -> per level k, cand_k = c x branches_k
     (interval containment), pick_k = per-branch (key, score) argmin
     via ROW_NUMBER, branches_{k+1} = the two children of every pick.
@@ -2360,9 +1972,9 @@ def _tree5_chain_sql(
     return "".join(parts)
 
 
-def _tree5_oracle() -> str:
-    """DuckDB twin of q_tree5: the shared ladder chain + the per-level
-    pick projections."""
+def _tree5_oracle(depth: int = _TREE5_DEPTH) -> str:
+    """DuckDB twin of the ladder's level frames: the shared chain + the
+    per-level pick projections."""
     gb = _gini_base_sql("nb", "pb")
     gk = "key"
     sel = (
@@ -2377,13 +1989,15 @@ def _tree5_oracle() -> str:
         + sql_round(f"{gb} - ({gk}) / nb", 6) + " AS gain "
         "FROM pick{k}"
     )
-    return _tree5_chain_sql() + (
-        " " + " UNION ALL ".join(sel.format(k=k) for k in range(_TREE5_DEPTH))
+    return _tree5_chain_sql(depth) + (
+        " " + " UNION ALL ".join(sel.format(k=k) for k in range(depth))
     )
 
 
-def _tree5_ladder(spark: SparkSession, sf_dir: str):
-    """Runs the per-level depth-5 ladder once and returns
+def _tree5_ladder(
+    spark: SparkSession, sf_dir: str, depth: int = _TREE5_DEPTH
+):
+    """Runs the per-level ladder to ``depth`` once and returns
     (level_display_frames, leaves): the ≤2^k-row pick of every level
     projected to the q_tree5 output columns, plus the LAZY leaf
     partition of the trained tree — every branch row that produced no
@@ -2405,7 +2019,7 @@ def _tree5_ladder(spark: SparkSession, sf_dir: str):
     )
     levels = []
     leaf_parts = []
-    for k in range(_TREE5_DEPTH):
+    for k in range(depth):
         cand = (
             c.crossJoin(F.broadcast(branches))
             .filter(
@@ -2494,6 +2108,17 @@ def _tree5_ladder(spark: SparkSession, sf_dir: str):
     return levels, leaves
 
 
+def _tree5_levels(
+    spark: SparkSession, sf_dir: str, depth: int = _TREE5_DEPTH
+) -> DataFrame:
+    """The ladder's per-level pick frames, unioned level by level."""
+    levels, _leaves = _tree5_ladder(spark, sf_dir, depth)
+    out = levels[0]
+    for lv in levels[1:]:
+        out = out.unionAll(lv)
+    return out
+
+
 @query(
     "q_tree5",
     oracle=_tree5_oracle(),
@@ -2517,20 +2142,106 @@ def q_tree5(spark: SparkSession, sf_dir: str) -> DataFrame:
     within a branch (distinct scores, disjoint intervals) and Spark
     struct comparison is lexicographic, the same total order as the
     oracle's ROW_NUMBER. Depth d costs d bounded jobs + d tiny
-    checkpoints — vs 2^d - 1 TakeOrdered jobs if q_tree3's per-node
-    form were extended — and ZERO new fact passes beyond
-    _tree_cum_table's single fold.
+    checkpoints — vs 2^d - 1 jobs for a per-node TakeOrdered form —
+    and ZERO new fact passes beyond _tree_cum_table's single fold.
 
-    Exactness: identical branch-offset integer counts as
-    q_tree2/q_tree3 (children carry (n0, p0) = the parent pick's
-    absolute cumulative position); the argmin key is the same IEEE
-    expression on both engines; a pure/single-valued branch emits no
-    pick and no children on either engine (empty join)."""
-    levels, _leaves = _tree5_ladder(spark, sf_dir)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionAll(lv)
-    return out
+    Exactness: branch-offset integer counts (children carry
+    (n0, p0) = the parent pick's absolute cumulative position); the
+    argmin key is the same IEEE expression on both engines; a
+    pure/single-valued branch emits no pick and no children on either
+    engine (empty join)."""
+    return _tree5_levels(spark, sf_dir)
+
+
+# q_tree2/q_tree3 publish the first 2/3 levels of the ladder keyed by
+# node name instead of (level, branch) — one relabelling, both engines.
+_TREE_NODE_SQL = (
+    "CASE "
+    + " ".join(
+        f"WHEN level = {k} AND branch = {b} THEN '{name}'"
+        for (k, b), name in (
+            ((0, 0), "root"),
+            ((1, 0), "left"),
+            ((1, 1), "right"),
+            ((2, 0), "ll"),
+            ((2, 1), "lr"),
+            ((2, 2), "rl"),
+            ((2, 3), "rr"),
+        )
+    )
+    + " END"
+)
+_TREE_NODE_COLS = (
+    "threshold", "n_left", "pos_left", "n_right", "pos_right",
+    "gini_split", "gini_base", "gain",
+)
+
+
+def _tree_nodes_oracle(depth: int) -> str:
+    """DuckDB twin of _tree_nodes."""
+    return (
+        f"SELECT {_TREE_NODE_SQL} AS node, {', '.join(_TREE_NODE_COLS)} "
+        f"FROM ({_tree5_oracle(depth)}) AS lv"
+    )
+
+
+def _tree_nodes(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
+    """The ladder's first ``depth`` levels keyed by node name."""
+    return _tree5_levels(spark, sf_dir, depth).select(
+        F.expr(_TREE_NODE_SQL).alias("node"), *_TREE_NODE_COLS
+    )
+
+
+@query(
+    "q_tree2",
+    oracle=_tree_nodes_oracle(2),
+    tags=("ml", "train", "split"),
+    eager=True,
+)
+def q_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train a depth-2 greedy decision tree on the published model
+    score by EXACT Gini split search: q_stump's root split, then the
+    best split INSIDE each branch (left: score <= t_root, right:
+    score > t_root), each with its own branch-conditional impurity and
+    gain. Emits up to 3 rows (node = root/left/right; a pure or
+    single-valued branch emits none) — the first two levels of
+    q_tree5's ladder, relabelled from (level, branch).
+
+    Exactness: branch split keys are the q_stump expression on
+    BRANCH-OFFSET exact integers — with branch base (n0, p0) and
+    totals (nb, pb), the candidate at t has left counts
+    (cum_n(t)-n0, cum_p(t)-p0) — the same IEEE doubles on both
+    engines, so each per-branch (key, score) argmin is
+    engine-identical; display values round at 6 dp.
+
+    Scale: _tree_cum_table's one fact fold + checkpointed prefix pass,
+    then one bounded per-level job per level (2 here)."""
+    return _tree_nodes(spark, sf_dir, 2)
+
+
+@query(
+    "q_tree3",
+    oracle=_tree_nodes_oracle(3),
+    tags=("ml", "train", "split"),
+    eager=True,
+)
+def q_tree3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train a depth-3 greedy decision tree on the published model
+    score by EXACT Gini split search: q_tree2's root + branch picks,
+    then the best split inside each of the four depth-2 leaves
+    (ll: score < t_left; lr: t_left < score < t_root;
+    rl: t_root < score < t_right; rr: score > t_right). Emits up to 7
+    rows (node = root/left/right/ll/lr/rl/rr; a pure or single-valued
+    branch emits none, and its children then emit none too) — the
+    first three levels of q_tree5's ladder, relabelled.
+
+    Exactness: identical to q_tree2 one level down — every leaf
+    candidate's branch-conditional counts are offsets from the parent
+    pick's absolute cumulative position (for rr:
+    root.n_left + right.n_left = cum_n(t_right)).
+
+    Scale: q_tree2's plan plus one more bounded per-level job."""
+    return _tree_nodes(spark, sf_dir, 3)
 
 
 def _tree5_confusion_oracle() -> str:
@@ -2601,10 +2312,13 @@ def q_tree5_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             if pred_col is None
             else pred_col.when(cond, branch)
         )
+    # no leaves only when no row is scored: the grouping then emits no
+    # rows, matching the oracle's empty routing join
+    pred = F.lit(-1) if pred_col is None else pred_col.otherwise(F.lit(-1))
     s = scored(spark, sf_dir)
     return (
         s.groupBy(
-            pred_col.otherwise(F.lit(-1)).cast("int").alias("prediction"),
+            pred.cast("int").alias("prediction"),
             F.col("label").alias("label"),
         )
         .agg(F.count("*").cast("bigint").alias("n"))
@@ -4596,55 +4310,108 @@ _XGB_SIG_SQL = (
 )
 
 
-def _xgb_round_oracle() -> str:
-    """DuckDB twin: same 6-dp feature/score grid, same exact integer
-    g/h sufficient statistics, same gain argmin text."""
-    fsel = ", ".join(
-        sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS
+def _xgb_fold_sql(
+    sfx: str, src: str | None = None, u: str = "u", key: str = ""
+) -> str:
+    """The Newton histogram CTE chain, every name suffixed ``sfx``:
+    r (per-row exact integer gradient g = p - y in 1e-6 units and
+    hessian h = p(1-p) in 1e-12 units — integer functions of the 6-dp
+    margin integer column ``u``, no rounding anywhere), up (the
+    per-feature unpivot), g (the per-(key, feat, val) HUGEINT fold),
+    t (totals: the fact fold, or per key the g table's 'disc' slice —
+    the exact closed form the Spark side uses) and c (prefix cums with
+    the totals attached). ``src`` carries (label, disc, price, qty,
+    ``key``, ``u``); without one the chain opens with the shared base
+    CTE f: lineitem -> label, the 6-dp feature grid and the 6-dp score
+    integer u. SQL twin of _xgb_fold/_xgb_branch_hist."""
+    head = ""
+    if src is None:
+        src = "f"
+        head = (
+            "WITH f AS (SELECT "
+            "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
+            + ", ".join(
+                sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS
+            )
+            + ", CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") "
+            "* 1000000 + 0.5) AS BIGINT) AS u FROM lineitem), "
+        )
+    k = f"{key}, " if key else ""
+    unpivot = " UNION ALL ".join(
+        f"SELECT {k}'{f}' AS feat, {f} AS val, gu, hu FROM r{sfx}"
+        for f in _MF_FEATS
     )
-    u1 = " UNION ALL ".join(
-        f"SELECT '{f}' AS feat, {f} AS val, gu, hu FROM r" for f in _MF_FEATS
+    if key:
+        tot = (
+            f"SELECT {key}, CAST(SUM(cnt) AS BIGINT) AS n, "
+            "CAST(SUM(g) AS HUGEINT) AS gt, CAST(SUM(h) AS HUGEINT) AS ht "
+            f"FROM g{sfx} WHERE feat = 'disc' GROUP BY {key}"
+        )
+        gt_join = f"g{sfx} JOIN t{sfx} USING ({key})"
+    else:
+        tot = (
+            "SELECT CAST(COUNT(*) AS BIGINT) AS n, "
+            "CAST(SUM(gu) AS HUGEINT) AS gt, "
+            f"CAST(SUM(hu) AS HUGEINT) AS ht FROM r{sfx}"
+        )
+        gt_join = f"g{sfx}, t{sfx}"
+    cums = ", ".join(
+        f"CAST(SUM({m}) OVER (PARTITION BY {k}feat ORDER BY val) "
+        f"AS HUGEINT) AS {o}"
+        for m, o in (("cnt", "cum_n"), ("g", "cum_g"), ("h", "cum_h"))
     )
-    gl = "CAST(cum_g AS DOUBLE) / 1000000"
+    return (
+        head
+        + f"r{sfx} AS (SELECT {k}label, disc, price, qty, "
+        f"{u} - label * 1000000 AS gu, {u} * (1000000 - {u}) AS hu "
+        f"FROM {src}), "
+        f"up{sfx} AS ({unpivot}), "
+        f"g{sfx} AS (SELECT {k}feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
+        "CAST(SUM(gu) AS HUGEINT) AS g, "
+        f"CAST(SUM(hu) AS HUGEINT) AS h FROM up{sfx} GROUP BY {k}feat, val), "
+        f"t{sfx} AS ({tot}), "
+        f"c{sfx} AS (SELECT {k}feat, val, {cums}, n, gt, ht FROM {gt_join})"
+    )
+
+
+def _xgb_pick_sql(
+    rnd: int | None,
+    src: str,
+    node: str | None = None,
+    where: str = "",
+    feat: str = "feat",
+    grad=None,
+    g_names: tuple[str, str] = ("g_left", "g_right"),
+) -> str:
+    """One Newton pick as SQL over a cum CTE ``src`` carrying
+    (feat, val, cum_n, cum_g, cum_h, n, gt, ht): the gain-key argmin
+    over the candidates with cum_n < n (and ``where``), tie-broken by
+    (key, feat, val). ``node``/``rnd`` label tree-node and
+    boosting-round outputs; ``feat`` may add columns after feat;
+    ``grad`` maps each integer gradient sum (left, right, total) before
+    the terms, published as ``g_names`` (q_xgb_alpha's soft threshold).
+    SQL twin of _newton_terms/_newton_take."""
+    g = grad or (lambda x: x)
+    gl = f"CAST({g('cum_g')} AS DOUBLE) / 1000000"
     hl = "CAST(cum_h AS DOUBLE) / 1000000000000"
-    gr = "CAST(gt - cum_g AS DOUBLE) / 1000000"
+    gr = f"CAST({g('gt - cum_g')} AS DOUBLE) / 1000000"
     hr = "CAST(ht - cum_h AS DOUBLE) / 1000000000000"
-    gt = "CAST(gt AS DOUBLE) / 1000000"
+    gt = f"CAST({g('gt')} AS DOUBLE) / 1000000"
     ht = "CAST(ht AS DOUBLE) / 1000000000000"
     kl = f"(({gl}) * ({gl}) / (({hl}) + 1.0))"
     kr = f"(({gr}) * ({gr}) / (({hr}) + 1.0))"
     key = f"(0.0 - ({kl} + {kr}))"
+    head = (f"'{node}' AS node, " if node is not None else "") + (
+        f"CAST({rnd} AS INT) AS round, " if rnd is not None else ""
+    )
+    cond = "cum_n < n" + (f" AND ({where})" if where else "")
     return (
-        "WITH f AS (SELECT "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-        f"{fsel}, "
-        "CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") "
-        "* 1000000 + 0.5) AS BIGINT) AS u FROM lineitem), "
-        # g_i = p_i - y_i in exact 1e-6 units; h_i = p_i(1-p_i) in
-        # exact 1e-12 units — NO rounding anywhere: both are integer
-        # functions of the 6-dp score integer u
-        "r AS (SELECT f.*, u - label * 1000000 AS gu, "
-        "u * (1000000 - u) AS hu FROM f), "
-        f"u AS ({u1}), "
-        "g AS (SELECT feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(gu) AS HUGEINT) AS g, "
-        "CAST(SUM(hu) AS HUGEINT) AS h FROM u GROUP BY feat, val), "
-        "t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(gu) AS HUGEINT) AS gt, "
-        "CAST(SUM(hu) AS HUGEINT) AS ht FROM r), "
-        "c AS (SELECT feat, val, "
-        "CAST(SUM(cnt) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_n, "
-        "CAST(SUM(g) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_g, "
-        "CAST(SUM(h) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_h, n, gt, ht FROM g, t) "
-        "SELECT feat, val AS threshold, "
+        f"SELECT {head}{feat}, val AS threshold, "
         "CAST(cum_n AS BIGINT) AS n_left, "
         "CAST(n - cum_n AS BIGINT) AS n_right, "
-        + sql_round(gl, 6) + " AS g_left, "
+        + sql_round(gl, 6) + f" AS {g_names[0]}, "
         + sql_round(hl, 6) + " AS h_left, "
-        + sql_round(gr, 6) + " AS g_right, "
+        + sql_round(gr, 6) + f" AS {g_names[1]}, "
         + sql_round(hr, 6) + " AS h_right, "
         + sql_round(
             f"0.5 * (({kl} + {kr}) - ({gt}) * ({gt}) / (({ht}) + 1.0))", 6
@@ -4654,8 +4421,30 @@ def _xgb_round_oracle() -> str:
         + " AS w_left, "
         + sql_round(f"0.0 - 0.1 * ({gr}) / (({hr}) + 1.0)", 6)
         + " AS w_right "
-        f"FROM c WHERE cum_n < n ORDER BY {key}, feat, val LIMIT 1"
+        f"FROM {src} WHERE {cond} ORDER BY {key}, feat, val LIMIT 1"
     )
+
+
+def _xgb_step_sql(u: str, w: str) -> str:
+    """SQL twin of _xgb_step."""
+    return (
+        f"CAST(FLOOR((1.0 / (1.0 + EXP(-(LN(CAST({u} AS DOUBLE) "
+        f"/ (1000000 - {u})) + ({w}))))) * 1000000 + 0.5) AS BIGINT)"
+    )
+
+
+def _xgb_update_sql(u: str, w: str) -> str:
+    """SQL twin of _xgb_update."""
+    return (
+        f"CASE WHEN {u} = 0 OR {u} = 1000000 THEN {u} "
+        f"ELSE {_xgb_step_sql(u, w)} END"
+    )
+
+
+def _xgb_round_oracle() -> str:
+    """DuckDB twin: same 6-dp feature/score grid, same exact integer
+    g/h sufficient statistics, same gain argmin text."""
+    return _xgb_fold_sql("1") + " " + _xgb_pick_sql(None, "c1")
 
 
 # Exact integer g/h sums WITHOUT Decimal aggregation (round 17,
@@ -4679,6 +4468,10 @@ def _xgb_round_oracle() -> str:
 #   value and type as before — every downstream consumer
 #   (prefix cums, the integer cover/monotone gates, the oracle
 #   comparison) is bit-identical.
+# * The bound is enforced at runtime: session.get_spark pins ANSI mode
+#   (the Spark 4 default), under which a BIGINT SUM overflow raises
+#   ARITHMETIC_OVERFLOW instead of wrapping. Only a caller session with
+#   ANSI turned off could wrap silently past the bound.
 #
 # Measured (r17, interleaved A/B at sf0.1): the (feat,val) histogram
 # pass drops ~25-30% (1.4-1.8 s -> 1.0-1.3 s warm) because the hash
@@ -4744,12 +4537,19 @@ def _xgb_gh(base: DataFrame, ucol: str = "u") -> DataFrame:
     )
 
 
-def _xgb_newton_pick(base: DataFrame, rnd: int | None = None) -> DataFrame:
-    """One exact Newton split pick over (label, feats, gu, hu): totals
-    fold + stack-explode (feat,val) g/h histogram + _mf_cum prefix
-    sums + the gain-key TakeOrdered(1). ``rnd`` prepends a round
-    column (q_xgb_round2's 2-row output); None emits q_xgb_round's
-    1-row shape."""
+def _feat_val(fcol: str) -> F.Column:
+    """The row's value of the feature named in column ``fcol``."""
+    return (
+        F.when(F.col(fcol) == "disc", F.col("disc"))
+        .when(F.col(fcol) == "price", F.col("price"))
+        .otherwise(F.col("qty"))
+    )
+
+
+def _xgb_fold(base: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(label, feats, gu, hu) -> (c, tot): the 3-scalar totals fold
+    (n, gt, ht) and the stack-explode (feat, val) g/h histogram's
+    _mf_cum prefix sums with the totals broadcast onto every row."""
     dec = "decimal(38,0)"
     tot = base.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -4771,44 +4571,124 @@ def _xgb_newton_pick(base: DataFrame, rnd: int | None = None) -> DataFrame:
         out_cast=dec,
         measures=(("cnt", "cum_n"), ("g", "cum_g"), ("h", "cum_h")),
     ).crossJoin(F.broadcast(tot))
-    gl = F.col("cum_g").cast("double") / 1000000
-    hl = F.col("cum_h").cast("double") / 1000000000000
-    gr = (F.col("gt") - F.col("cum_g")).cast("double") / 1000000
-    hr = (F.col("ht") - F.col("cum_h")).cast("double") / 1000000000000
-    gtd = F.col("gt").cast("double") / 1000000
-    htd = F.col("ht").cast("double") / 1000000000000
+    return c, tot
+
+
+def _newton_terms(
+    cg: str = "cum_g", ch: str = "cum_h", gt: str = "gt", ht: str = "ht",
+    grad=None,
+) -> dict[str, F.Column]:
+    """The Newton split terms off exact integer sums — left cums
+    ``cg``/``ch`` and totals ``gt``/``ht`` (g in 1e-6, h in 1e-12
+    units): branch sums gl/hl/gr/hr as doubles, the argmin key
+    −(GL²/(HL+λ) + GR²/(HR+λ)), the structure gain
+    ½(GL²/(HL+λ) + GR²/(HR+λ) − G²/(H+λ)) and the shrunken leaf
+    weights −G/(H+λ)·η (λ = 1, η = 0.1). ``grad`` maps each integer
+    gradient sum (left, right, total) first — q_xgb_alpha's soft
+    threshold. Spark twin of _xgb_pick_sql's text."""
+    g = grad or (lambda x: x)
+    gl = g(F.col(cg)).cast("double") / 1000000
+    hl = F.col(ch).cast("double") / 1000000000000
+    gr = g(F.col(gt) - F.col(cg)).cast("double") / 1000000
+    hr = (F.col(ht) - F.col(ch)).cast("double") / 1000000000000
+    gtd = g(F.col(gt)).cast("double") / 1000000
+    htd = F.col(ht).cast("double") / 1000000000000
     kl = (gl * gl) / (hl + F.lit(1.0))
     kr = (gr * gr) / (hr + F.lit(1.0))
-    key = F.lit(0.0) - (kl + kr)
-    head = [] if rnd is None else [F.lit(rnd).cast("int").alias("round")]
+    return {
+        "gl": gl,
+        "hl": hl,
+        "gr": gr,
+        "hr": hr,
+        "key": F.lit(0.0) - (kl + kr),
+        "gain": F.lit(0.5) * ((kl + kr) - (gtd * gtd) / (htd + F.lit(1.0))),
+        "w_left": F.lit(0.0) - F.lit(0.1) * gl / (hl + F.lit(1.0)),
+        "w_right": F.lit(0.0) - F.lit(0.1) * gr / (hr + F.lit(1.0)),
+    }
+
+
+def _newton_cols(
+    t: dict[str, F.Column], g_names: tuple[str, str] = ("g_left", "g_right")
+) -> list[F.Column]:
+    """The published 6-dp pick columns of Newton terms ``t``."""
+    return [
+        pround(t["gl"], 6).alias(g_names[0]),
+        pround(t["hl"], 6).alias("h_left"),
+        pround(t["gr"], 6).alias(g_names[1]),
+        pround(t["hr"], 6).alias("h_right"),
+        pround(t["gain"], 6).alias("gain"),
+        pround(t["w_left"], 6).alias("w_left"),
+        pround(t["w_right"], 6).alias("w_right"),
+    ]
+
+
+def _newton_take(
+    cand: DataFrame,
+    head: tuple = (),
+    feat: tuple = ("feat",),
+    grad=None,
+    g_names: tuple[str, str] = ("g_left", "g_right"),
+) -> DataFrame:
+    """The gain-key TakeOrdered(1) over candidate cum rows by the
+    (key, feat, val) tie-break, projected to the pick schema: ``head``
+    columns, ``feat`` columns, threshold, branch counts and the Newton
+    terms (``grad``/``g_names`` as in _newton_terms/_newton_cols)."""
+    t = _newton_terms(grad=grad)
     return (
-        c.filter(F.col("cum_n") < F.col("n"))
-        .withColumn("key", key)
+        cand.withColumn("key", t["key"])
         .orderBy("key", "feat", "val")
         .limit(1)
         .select(
             *head,
-            "feat",
+            *feat,
             F.col("val").alias("threshold"),
             F.col("cum_n").cast("bigint").alias("n_left"),
             (F.col("n") - F.col("cum_n")).cast("bigint").alias("n_right"),
-            pround(gl, 6).alias("g_left"),
-            pround(hl, 6).alias("h_left"),
-            pround(gr, 6).alias("g_right"),
-            pround(hr, 6).alias("h_right"),
-            pround(
-                F.lit(0.5)
-                * ((kl + kr) - (gtd * gtd) / (htd + F.lit(1.0))),
-                6,
-            ).alias("gain"),
-            pround(F.lit(0.0) - F.lit(0.1) * gl / (hl + F.lit(1.0)), 6).alias(
-                "w_left"
-            ),
-            pround(F.lit(0.0) - F.lit(0.1) * gr / (hr + F.lit(1.0)), 6).alias(
-                "w_right"
-            ),
+            *_newton_cols(t, g_names),
         )
     )
+
+
+def _xgb_newton_pick(base: DataFrame, rnd: int | None = None) -> DataFrame:
+    """One exact Newton split pick over (label, feats, gu, hu): the
+    _xgb_fold histogram + the gain-key TakeOrdered(1). ``rnd`` prepends
+    a round column (q_xgb_round2's 2-row output); None emits
+    q_xgb_round's 1-row shape."""
+    c, _tot = _xgb_fold(base)
+    head = () if rnd is None else (F.lit(rnd).cast("int").alias("round"),)
+    return _newton_take(c.filter(F.col("cum_n") < F.col("n")), head)
+
+
+def _xgb_step(ucol: str, w: F.Column) -> F.Column:
+    """One margin step on the 6-dp margin integer ``ucol``:
+    round(sigmoid(logit(u/1e6) + w)·1e6)."""
+    return F.floor(
+        (
+            F.lit(1.0)
+            / (
+                F.lit(1.0)
+                + F.exp(
+                    -(
+                        F.log(
+                            F.col(ucol).cast("double")
+                            / (F.lit(1000000) - F.col(ucol))
+                        )
+                        + w
+                    )
+                )
+            )
+        )
+        * 1000000
+        + F.lit(0.5)
+    ).cast("bigint")
+
+
+def _xgb_update(ucol: str, w: F.Column) -> F.Column:
+    """_xgb_step with saturated margins (u = 0 or 1e6) kept as they
+    are."""
+    return F.when(
+        (F.col(ucol) == 0) | (F.col(ucol) == 1000000), F.col(ucol)
+    ).otherwise(_xgb_step(ucol, w))
 
 
 @query(
@@ -4867,44 +4747,24 @@ def q_xgb_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _xgb_pick_sql(
-    rnd: int | None, src: str, extra_cols: str = "", node: str | None = None
-) -> str:
-    """One Newton pick as SQL over a cum CTE ``src`` carrying
-    (feat, val, cum_n, cum_g, cum_h, n, gt, ht). ``rnd`` labels the
-    boosting-round outputs (q_xgb_round2/q_xgb_fit); ``node`` labels
-    the tree-node outputs (q_xgb_tree2) instead."""
-    if node is not None:
-        extra_cols = f"'{node}' AS node, " + extra_cols
-    gl = "CAST(cum_g AS DOUBLE) / 1000000"
-    hl = "CAST(cum_h AS DOUBLE) / 1000000000000"
-    gr = "CAST(gt - cum_g AS DOUBLE) / 1000000"
-    hr = "CAST(ht - cum_h AS DOUBLE) / 1000000000000"
-    gt = "CAST(gt AS DOUBLE) / 1000000"
-    ht = "CAST(ht AS DOUBLE) / 1000000000000"
-    kl = f"(({gl}) * ({gl}) / (({hl}) + 1.0))"
-    kr = f"(({gr}) * ({gr}) / (({hr}) + 1.0))"
-    key = f"(0.0 - ({kl} + {kr}))"
+def _xgb_round2_chain_sql() -> str:
+    """The 2-round pick chain shared by the q_xgb_round2/q_xgb_fit
+    oracles: the round-1 fold and MATERIALIZED pick p1 drive the margin
+    update f2; round 2 repeats the fold on u2 into the pick p2."""
+    # the new 6-dp margin integer: sigmoid(logit(u/1e6) + picked leaf
+    # weight), saturated rows (u = 0 or 1e6) stay saturated
+    leaf_w = (
+        "CASE WHEN (" + _mf_val_case("p1.feat") + ") <= p1.threshold "
+        "THEN p1.w_left ELSE p1.w_right END"
+    )
     return (
-        f"SELECT {extra_cols}"
-        + (f"CAST({rnd} AS INT) AS round, " if rnd is not None else "")
-        + "feat, "
-        "val AS threshold, "
-        "CAST(cum_n AS BIGINT) AS n_left, "
-        "CAST(n - cum_n AS BIGINT) AS n_right, "
-        + sql_round(gl, 6) + " AS g_left, "
-        + sql_round(hl, 6) + " AS h_left, "
-        + sql_round(gr, 6) + " AS g_right, "
-        + sql_round(hr, 6) + " AS h_right, "
-        + sql_round(
-            f"0.5 * (({kl} + {kr}) - ({gt}) * ({gt}) / (({ht}) + 1.0))", 6
-        )
-        + " AS gain, "
-        + sql_round(f"0.0 - 0.1 * ({gl}) / (({hl}) + 1.0)", 6)
-        + " AS w_left, "
-        + sql_round(f"0.0 - 0.1 * ({gr}) / (({hr}) + 1.0)", 6)
-        + " AS w_right "
-        f"FROM {src} WHERE cum_n < n ORDER BY {key}, feat, val LIMIT 1"
+        _xgb_fold_sql("1")
+        + ", p1 AS MATERIALIZED (" + _xgb_pick_sql(1, "c1") + "), "
+        "f2 AS (SELECT f.label, f.disc, f.price, f.qty, "
+        + _xgb_update_sql("u", leaf_w)
+        + " AS u2 FROM f, p1), "
+        + _xgb_fold_sql("2", "f2", "u2")
+        + ", p2 AS MATERIALIZED (" + _xgb_pick_sql(2, "c2") + ")"
     )
 
 
@@ -4912,65 +4772,30 @@ def _xgb_round2_oracle() -> str:
     """DuckDB twin of the 2-round chain: round-1 CTEs are the
     q_xgb_round oracle's verbatim; the MATERIALIZED pick drives the
     margin update; round-2 repeats the fold on u2."""
-    fsel = ", ".join(
-        sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS
-    )
-
-    def unpivot(src):
-        return " UNION ALL ".join(
-            f"SELECT '{f}' AS feat, {f} AS val, gu, hu FROM {src}"
-            for f in _MF_FEATS
-        )
-
-    def fold(src, up, g, t, c):
-        return (
-            f"{up} AS ({unpivot(src)}), "
-            f"{g} AS (SELECT feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-            "CAST(SUM(gu) AS HUGEINT) AS g, "
-            f"CAST(SUM(hu) AS HUGEINT) AS h FROM {up} GROUP BY feat, val), "
-            f"{t} AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-            "CAST(SUM(gu) AS HUGEINT) AS gt, "
-            f"CAST(SUM(hu) AS HUGEINT) AS ht FROM {src}), "
-            f"{c} AS (SELECT feat, val, "
-            "CAST(SUM(cnt) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-            "AS cum_n, "
-            "CAST(SUM(g) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-            "AS cum_g, "
-            "CAST(SUM(h) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-            f"AS cum_h, n, gt, ht FROM {g}, {t}) "
-        )
-
-    # the new 6-dp margin integer: sigmoid(logit(u/1e6) + picked leaf
-    # weight), saturated rows (u = 0 or 1e6) stay saturated
-    leaf_w = (
-        "CASE WHEN (CASE p1.feat WHEN 'disc' THEN f.disc "
-        "WHEN 'price' THEN f.price ELSE f.qty END) <= p1.threshold "
-        "THEN p1.w_left ELSE p1.w_right END"
-    )
-    u2 = (
-        "CASE WHEN u = 0 OR u = 1000000 THEN u ELSE "
-        "CAST(FLOOR((1.0 / (1.0 + EXP(-(LN(CAST(u AS DOUBLE) "
-        f"/ (1000000 - u)) + ({leaf_w}))))) * 1000000 + 0.5) AS BIGINT) "
-        "END"
-    )
     return (
-        "WITH f AS (SELECT "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-        f"{fsel}, "
-        "CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") "
-        "* 1000000 + 0.5) AS BIGINT) AS u FROM lineitem), "
-        "r1 AS (SELECT f.*, u - label * 1000000 AS gu, "
-        "u * (1000000 - u) AS hu FROM f), "
-        + fold("r1", "up1", "g1", "t1", "c1")
-        + ", p1 AS MATERIALIZED (" + _xgb_pick_sql(1, "c1") + "), "
-        f"f2 AS (SELECT f.label, f.disc, f.price, f.qty, {u2} AS u2 "
-        "FROM f, p1), "
-        "r2 AS (SELECT label, disc, price, qty, "
-        "u2 - label * 1000000 AS gu, u2 * (1000000 - u2) AS hu FROM f2), "
-        + fold("r2", "up2", "g2", "t2", "c2")
-        + ", p2 AS (" + _xgb_pick_sql(2, "c2") + ") "
-        "SELECT * FROM p1 UNION ALL SELECT * FROM p2"
+        _xgb_round2_chain_sql()
+        + " SELECT * FROM p1 UNION ALL SELECT * FROM p2"
     )
+
+
+def _xgb_round2_picks(base: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two chained Newton picks over the _xgb_base rows: round 1
+    (localCheckpoint'd — it drives the margin update) and round 2
+    (lazy) off the updated 6-dp margin integer u2."""
+    p1 = _xgb_newton_pick(_xgb_gh(base), rnd=1).localCheckpoint()
+    pick = p1.select(
+        F.col("feat").alias("bfeat"),
+        F.col("threshold").alias("bt"),
+        F.col("w_left").alias("bwl"),
+        F.col("w_right").alias("bwr"),
+    )
+    leaf_w = F.when(_feat_val("bfeat") <= F.col("bt"), F.col("bwl")).otherwise(
+        F.col("bwr")
+    )
+    f2 = base.crossJoin(F.broadcast(pick)).select(
+        "label", "disc", "price", "qty", _xgb_update("u", leaf_w).alias("u2")
+    )
+    return p1, _xgb_newton_pick(_xgb_gh(f2, ucol="u2"), rnd=2)
 
 
 @query(
@@ -5008,47 +4833,7 @@ def q_xgb_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick is a localCheckpoint'd 1-row broadcast (eager by
     construction, the registry eager contract). R more rounds cost
     one pass each."""
-    base = _xgb_base(spark, sf_dir)
-    p1 = _xgb_newton_pick(_xgb_gh(base), rnd=1).localCheckpoint()
-    pick = p1.select(
-        F.col("feat").alias("bfeat"),
-        F.col("threshold").alias("bt"),
-        F.col("w_left").alias("bwl"),
-        F.col("w_right").alias("bwr"),
-    )
-    fv = (
-        F.when(F.col("bfeat") == "disc", F.col("disc"))
-        .when(F.col("bfeat") == "price", F.col("price"))
-        .otherwise(F.col("qty"))
-    )
-    leaf_w = F.when(fv <= F.col("bt"), F.col("bwl")).otherwise(F.col("bwr"))
-    u2 = F.when(
-        (F.col("u") == 0) | (F.col("u") == 1000000), F.col("u")
-    ).otherwise(
-        F.floor(
-            (
-                F.lit(1.0)
-                / (
-                    F.lit(1.0)
-                    + F.exp(
-                        -(
-                            F.log(
-                                F.col("u").cast("double")
-                                / (F.lit(1000000) - F.col("u"))
-                            )
-                            + leaf_w
-                        )
-                    )
-                )
-            )
-            * 1000000
-            + F.lit(0.5)
-        ).cast("bigint")
-    )
-    f2 = base.crossJoin(F.broadcast(pick)).select(
-        "label", "disc", "price", "qty", u2.alias("u2")
-    )
-    p2 = _xgb_newton_pick(_xgb_gh(f2, ucol="u2"), rnd=2)
+    p1, p2 = _xgb_round2_picks(_xgb_base(spark, sf_dir))
     return p1.unionAll(p2)
 
 
@@ -5067,53 +4852,6 @@ def _xgb_fit_oracle() -> str:
     """DuckDB twin: the q_xgb_round2 pick chain (p1, p2 MATERIALIZED),
     then ONE fact fold to the bounded (u, b1, b2) cell table; u2/u3
     and the three LL terms are closed forms per cell."""
-    fsel = ", ".join(
-        sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS
-    )
-
-    def unpivot(src):
-        return " UNION ALL ".join(
-            f"SELECT '{f}' AS feat, {f} AS val, gu, hu FROM {src}"
-            for f in _MF_FEATS
-        )
-
-    def fold(src, up, g, t, c):
-        return (
-            f"{up} AS ({unpivot(src)}), "
-            f"{g} AS (SELECT feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-            "CAST(SUM(gu) AS HUGEINT) AS g, "
-            f"CAST(SUM(hu) AS HUGEINT) AS h FROM {up} GROUP BY feat, val), "
-            f"{t} AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-            "CAST(SUM(gu) AS HUGEINT) AS gt, "
-            f"CAST(SUM(hu) AS HUGEINT) AS ht FROM {src}), "
-            f"{c} AS (SELECT feat, val, "
-            "CAST(SUM(cnt) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-            "AS cum_n, "
-            "CAST(SUM(g) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-            "AS cum_g, "
-            "CAST(SUM(h) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-            f"AS cum_h, n, gt, ht FROM {g}, {t}) "
-        )
-
-    leaf_w1 = (
-        "CASE WHEN (CASE p1.feat WHEN 'disc' THEN f.disc "
-        "WHEN 'price' THEN f.price ELSE f.qty END) <= p1.threshold "
-        "THEN p1.w_left ELSE p1.w_right END"
-    )
-    u2 = (
-        "CASE WHEN u = 0 OR u = 1000000 THEN u ELSE "
-        "CAST(FLOOR((1.0 / (1.0 + EXP(-(LN(CAST(u AS DOUBLE) "
-        f"/ (1000000 - u)) + ({leaf_w1}))))) * 1000000 + 0.5) AS BIGINT) "
-        "END"
-    )
-    # per-cell closed forms off the (u, b1, b2) cell table
-    step = (
-        "CAST(FLOOR((1.0 / (1.0 + EXP(-(LN(CAST({src} AS DOUBLE) "
-        "/ (1000000 - {src})) + (CASE WHEN {b} = 1 THEN {wl} ELSE {wr} "
-        "END))))) * 1000000 + 0.5) AS BIGINT)"
-    )
-    u2c = step.format(src="u", b="b1", wl="p1.w_left", wr="p1.w_right")
-    u3c = step.format(src="u2", b="b2", wl="p2.w_left", wr="p2.w_right")
 
     def ll(ucol):
         return (
@@ -5124,31 +4862,22 @@ def _xgb_fit_oracle() -> str:
             "* 1000000000 + 0.5) AS BIGINT)"
         )
 
+    # per-cell closed forms off the (u, b1, b2) cell table
+    u2c = _xgb_step_sql(
+        "u", "CASE WHEN b1 = 1 THEN p1.w_left ELSE p1.w_right END"
+    )
+    u3c = _xgb_step_sql(
+        "u2", "CASE WHEN b2 = 1 THEN p2.w_left ELSE p2.w_right END"
+    )
     return (
-        "WITH f AS (SELECT "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-        f"{fsel}, "
-        "CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") "
-        "* 1000000 + 0.5) AS BIGINT) AS u FROM lineitem), "
-        "r1 AS (SELECT f.*, u - label * 1000000 AS gu, "
-        "u * (1000000 - u) AS hu FROM f), "
-        + fold("r1", "up1", "g1", "t1", "c1")
-        + ", p1 AS MATERIALIZED (" + _xgb_pick_sql(1, "c1") + "), "
-        f"f2 AS (SELECT f.label, f.disc, f.price, f.qty, {u2} AS u2 "
-        "FROM f, p1), "
-        "r2 AS (SELECT label, disc, price, qty, "
-        "u2 - label * 1000000 AS gu, u2 * (1000000 - u2) AS hu FROM f2), "
-        + fold("r2", "up2", "g2", "t2", "c2")
-        + ", p2 AS MATERIALIZED (" + _xgb_pick_sql(2, "c2") + "), "
+        _xgb_round2_chain_sql() + ", "
         # ONE fact fold to the bounded (u, b1, b2) cell table; branch
         # bits evaluated on the original features (trees split on
         # features); u must be LN-safe before anything downstream
         "v AS (SELECT CAST(f.u AS BIGINT) AS u, "
-        "CASE WHEN (CASE p1.feat WHEN 'disc' THEN f.disc "
-        "WHEN 'price' THEN f.price ELSE f.qty END) <= p1.threshold "
+        "CASE WHEN (" + _mf_val_case("p1.feat") + ") <= p1.threshold "
         "THEN 1 ELSE 0 END AS b1, "
-        "CASE WHEN (CASE p2.feat WHEN 'disc' THEN f.disc "
-        "WHEN 'price' THEN f.price ELSE f.qty END) <= p2.threshold "
+        "CASE WHEN (" + _mf_val_case("p2.feat") + ") <= p2.threshold "
         "THEN 1 ELSE 0 END AS b2, label FROM f, p1, p2 "
         "WHERE f.u > 0 AND f.u < 1000000), "
         "cells AS (SELECT u, b1, b2, CAST(COUNT(*) AS BIGINT) AS cnt, "
@@ -5217,58 +4946,19 @@ def q_xgb_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row model tables."""
     base = _xgb_base(spark, sf_dir)
     dec = "decimal(38,0)"
-    p1 = _xgb_newton_pick(_xgb_gh(base), rnd=1).localCheckpoint()
+    p1, p2 = _xgb_round2_picks(base)
+    p2 = p2.localCheckpoint()
     pk1 = p1.select(
         F.col("feat").alias("f1"),
         F.col("threshold").alias("t1"),
         F.col("w_left").alias("wl1"),
         F.col("w_right").alias("wr1"),
     )
-    fv1 = (
-        F.when(F.col("f1") == "disc", F.col("disc"))
-        .when(F.col("f1") == "price", F.col("price"))
-        .otherwise(F.col("qty"))
-    )
-    leaf_w1 = F.when(fv1 <= F.col("t1"), F.col("wl1")).otherwise(
-        F.col("wr1")
-    )
-    u2row = F.when(
-        (F.col("u") == 0) | (F.col("u") == 1000000), F.col("u")
-    ).otherwise(
-        F.floor(
-            (
-                F.lit(1.0)
-                / (
-                    F.lit(1.0)
-                    + F.exp(
-                        -(
-                            F.log(
-                                F.col("u").cast("double")
-                                / (F.lit(1000000) - F.col("u"))
-                            )
-                            + leaf_w1
-                        )
-                    )
-                )
-            )
-            * 1000000
-            + F.lit(0.5)
-        ).cast("bigint")
-    )
-    f2 = base.crossJoin(F.broadcast(pk1)).select(
-        "label", "disc", "price", "qty", u2row.alias("u2")
-    )
-    p2 = _xgb_newton_pick(_xgb_gh(f2, ucol="u2"), rnd=2).localCheckpoint()
     pk2 = p2.select(
         F.col("feat").alias("f2c"),
         F.col("threshold").alias("t2"),
         F.col("w_left").alias("wl2"),
         F.col("w_right").alias("wr2"),
-    )
-    fv2 = (
-        F.when(F.col("f2c") == "disc", F.col("disc"))
-        .when(F.col("f2c") == "price", F.col("price"))
-        .otherwise(F.col("qty"))
     )
     v = (
         base.crossJoin(F.broadcast(pk1))
@@ -5276,8 +4966,12 @@ def q_xgb_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("u") > 0) & (F.col("u") < 1000000))
         .select(
             F.col("u").cast("bigint").alias("u"),
-            F.when(fv1 <= F.col("t1"), 1).otherwise(0).alias("b1"),
-            F.when(fv2 <= F.col("t2"), 1).otherwise(0).alias("b2"),
+            F.when(_feat_val("f1") <= F.col("t1"), 1)
+            .otherwise(0)
+            .alias("b1"),
+            F.when(_feat_val("f2c") <= F.col("t2"), 1)
+            .otherwise(0)
+            .alias("b2"),
             "label",
         )
     )
@@ -5287,27 +4981,9 @@ def q_xgb_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def stepcol(src, b, wl, wr):
-        return F.floor(
-            (
-                F.lit(1.0)
-                / (
-                    F.lit(1.0)
-                    + F.exp(
-                        -(
-                            F.log(
-                                F.col(src).cast("double")
-                                / (F.lit(1000000) - F.col(src))
-                            )
-                            + F.when(F.col(b) == 1, F.col(wl)).otherwise(
-                                F.col(wr)
-                            )
-                        )
-                    )
-                )
-            )
-            * 1000000
-            + F.lit(0.5)
-        ).cast("bigint")
+        return _xgb_step(
+            src, F.when(F.col(b) == 1, F.col(wl)).otherwise(F.col(wr))
+        )
 
     s2 = cells.crossJoin(F.broadcast(pk1)).select(
         "u", "b1", "b2", "cnt", "pos",
@@ -5363,76 +5039,40 @@ def q_xgb_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _xgb_tree2_sql(
+    sfx: str, p: str, rnd: int | None = None, src: str | None = None,
+    u: str = "u",
+) -> str:
+    """CTE text growing one depth-2 Newton tree over fact CTE ``src``
+    (margin integer ``u``; none = the base f): the root fold (suffix
+    ``sfx``) and MATERIALIZED pick pr{p}, branch rows rb{p} routed on
+    the original features, the per-(branch, feature) fold (suffix
+    ``sfx``b — branch totals off its 'disc' slice) and the MATERIALIZED
+    child picks lp{p}/rp{p}, labeled with round ``rnd``."""
+    return (
+        _xgb_fold_sql(sfx, src, u)
+        + f", pr{p} AS MATERIALIZED ("
+        + _xgb_pick_sql(rnd, f"c{sfx}", node="root")
+        + f"), rb{p} AS (SELECT f.*, CASE WHEN ("
+        + _mf_val_case(f"pr{p}.feat")
+        + f") <= pr{p}.threshold THEN 0 ELSE 1 END AS br "
+        f"FROM {src or 'f'} AS f, pr{p}), "
+        + _xgb_fold_sql(f"{sfx}b", f"rb{p}", u, key="br")
+        + f", lp{p} AS MATERIALIZED ("
+        + _xgb_pick_sql(rnd, f"c{sfx}b", node="left", where="br = 0")
+        + f"), rp{p} AS MATERIALIZED ("
+        + _xgb_pick_sql(rnd, f"c{sfx}b", node="right", where="br = 1")
+        + ")"
+    )
+
+
 def _xgb_tree2_oracle() -> str:
     """DuckDB twin: root fold + pick (the q_xgb_round text), branch
     assignment on the original features, per-(branch, feature) fold,
     per-branch picks with branch totals recomputed exactly from the
     cell table (feat='disc' slice — same closed form as Spark)."""
-    fsel = ", ".join(
-        sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS
-    )
-    u1 = " UNION ALL ".join(
-        f"SELECT '{f}' AS feat, {f} AS val, gu, hu FROM r1"
-        for f in _MF_FEATS
-    )
-    u2 = " UNION ALL ".join(
-        f"SELECT br, '{f}' AS feat, {f} AS val, gu, hu FROM r2"
-        for f in _MF_FEATS
-    )
-    return (
-        "WITH f AS (SELECT "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-        f"{fsel}, "
-        "CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") "
-        "* 1000000 + 0.5) AS BIGINT) AS u FROM lineitem), "
-        "r1 AS (SELECT f.*, u - label * 1000000 AS gu, "
-        "u * (1000000 - u) AS hu FROM f), "
-        f"up1 AS ({u1}), "
-        "g1 AS (SELECT feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(gu) AS HUGEINT) AS g, "
-        "CAST(SUM(hu) AS HUGEINT) AS h FROM up1 GROUP BY feat, val), "
-        "t1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(gu) AS HUGEINT) AS gt, "
-        "CAST(SUM(hu) AS HUGEINT) AS ht FROM r1), "
-        "c1 AS (SELECT feat, val, "
-        "CAST(SUM(cnt) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_n, "
-        "CAST(SUM(g) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_g, "
-        "CAST(SUM(h) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_h, n, gt, ht FROM g1, t1), "
-        "p1 AS MATERIALIZED (" + _xgb_pick_sql(None, "c1", node="root") + "), "
-        "r2 AS (SELECT r1.*, CASE WHEN (CASE p1.feat "
-        "WHEN 'disc' THEN r1.disc WHEN 'price' THEN r1.price "
-        "ELSE r1.qty END) <= p1.threshold THEN 0 ELSE 1 END AS br "
-        "FROM r1, p1), "
-        f"up2 AS ({u2}), "
-        "g2 AS (SELECT br, feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(gu) AS HUGEINT) AS g, "
-        "CAST(SUM(hu) AS HUGEINT) AS h FROM up2 GROUP BY br, feat, val), "
-        # exact branch totals off the cell table's 'disc' slice — the
-        # same closed form the Spark side uses (no rounded carry-over)
-        "bt AS (SELECT br, CAST(SUM(cnt) AS BIGINT) AS n, "
-        "CAST(SUM(g) AS HUGEINT) AS gt, "
-        "CAST(SUM(h) AS HUGEINT) AS ht FROM g2 WHERE feat = 'disc' "
-        "GROUP BY br), "
-        "c2 AS (SELECT g2.br, feat, val, "
-        "CAST(SUM(cnt) OVER (PARTITION BY g2.br, feat ORDER BY val) "
-        "AS HUGEINT) AS cum_n, "
-        "CAST(SUM(g) OVER (PARTITION BY g2.br, feat ORDER BY val) "
-        "AS HUGEINT) AS cum_g, "
-        "CAST(SUM(h) OVER (PARTITION BY g2.br, feat ORDER BY val) "
-        "AS HUGEINT) AS cum_h, bt.n, bt.gt, bt.ht "
-        "FROM g2 JOIN bt ON g2.br = bt.br), "
-        "lc AS (SELECT * FROM c2 WHERE br = 0), "
-        "rc AS (SELECT * FROM c2 WHERE br = 1), "
-        "lp AS MATERIALIZED ("
-        + _xgb_pick_sql(None, "lc", node="left")
-        + "), "
-        "rp AS MATERIALIZED ("
-        + _xgb_pick_sql(None, "rc", node="right")
-        + ") "
-        "SELECT * FROM p1 UNION ALL SELECT * FROM lp "
+    return _xgb_tree2_sql("1", "") + (
+        " SELECT * FROM pr UNION ALL SELECT * FROM lp "
         "UNION ALL SELECT * FROM rp"
     )
 
@@ -5471,123 +5111,20 @@ def q_xgb_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct-argmin job (the q_boosted_mf_tree2 pattern). Depth d costs
     d+1 passes — the distributed XGBoost histogram schedule."""
     base = _xgb_base(spark, sf_dir)
-    gh = _xgb_gh(base)
-    dec = "decimal(38,0)"
-    root = _xgb_newton_pick(gh, ).localCheckpoint()
-    root_row = root.select(F.lit("root").alias("node"), "*")
+    root = _xgb_newton_pick(_xgb_gh(base)).localCheckpoint()
     rinfo = root.select(
         F.col("feat").alias("rfeat"), F.col("threshold").alias("rt")
     )
-    rootval = (
-        F.when(F.col("rfeat") == "disc", F.col("disc"))
-        .when(F.col("rfeat") == "price", F.col("price"))
-        .otherwise(F.col("qty"))
-    )
-    f2 = (
-        base.crossJoin(F.broadcast(rinfo))
-        .withColumn(
-            "br", F.when(rootval <= F.col("rt"), F.lit(0)).otherwise(F.lit(1))
-        )
-        .select(
-            "label",
-            "disc",
-            "price",
-            "qty",
-            "br",
-            (F.col("u") - F.col("label") * 1000000).alias("gu"),
-            (F.col("u") * (F.lit(1000000) - F.col("u"))).alias("hu"),
-        )
-    )
-    g2 = (
-        _mf_unpivot(f2, ["br", "gu", "hu"])
-        .groupBy("br", "feat", "val")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            _sum_gu_dec("gu").alias("g"),
-            _sum_hu_dec("hu").alias("h"),
-        )
-    )
-    bt = (
-        g2.filter(F.col("feat") == "disc")
-        .groupBy("br")
-        .agg(
-            F.sum("cnt").cast("bigint").alias("n"),
-            F.sum("g").cast(dec).alias("gt"),
-            F.sum("h").cast(dec).alias("ht"),
-        )
-    )
-    c2 = _mf_cum(
-        g2,
-        ["br", "feat"],
-        out_cast=dec,
-        measures=(("cnt", "cum_n"), ("g", "cum_g"), ("h", "cum_h")),
-    ).join(F.broadcast(bt), "br")
-    gl = F.col("cum_g").cast("double") / 1000000
-    hl = F.col("cum_h").cast("double") / 1000000000000
-    gr = (F.col("gt") - F.col("cum_g")).cast("double") / 1000000
-    hr = (F.col("ht") - F.col("cum_h")).cast("double") / 1000000000000
-    kl = (gl * gl) / (hl + F.lit(1.0))
-    kr = (gr * gr) / (hr + F.lit(1.0))
-    key = F.lit(0.0) - (kl + kr)
-    picks = (
-        c2.filter(F.col("cum_n") < F.col("n"))
-        .groupBy("br")
-        .agg(
-            F.min(
-                F.struct(
-                    key.alias("key"),
-                    F.col("feat"),
-                    F.col("val"),
-                    F.col("cum_n").alias("cn"),
-                    F.col("cum_g").alias("cg"),
-                    F.col("cum_h").alias("ch"),
-                    F.col("n").alias("nb"),
-                    F.col("gt").alias("gb"),
-                    F.col("ht").alias("hb"),
-                )
-            ).alias("s")
-        )
-        .select("br", "s.*")
-    )
-    pgl = F.col("cg").cast("double") / 1000000
-    phl = F.col("ch").cast("double") / 1000000000000
-    pgr = (F.col("gb") - F.col("cg")).cast("double") / 1000000
-    phr = (F.col("hb") - F.col("ch")).cast("double") / 1000000000000
-    pgb = F.col("gb").cast("double") / 1000000
-    phb = F.col("hb").cast("double") / 1000000000000
-    pkl = (pgl * pgl) / (phl + F.lit(1.0))
-    pkr = (pgr * pgr) / (phr + F.lit(1.0))
-    children = picks.select(
-        F.when(F.col("br") == 0, F.lit("left"))
-        .otherwise(F.lit("right"))
-        .alias("node"),
-        "feat",
-        F.col("val").alias("threshold"),
-        F.col("cn").cast("bigint").alias("n_left"),
-        (F.col("nb") - F.col("cn")).cast("bigint").alias("n_right"),
-        pround(pgl, 6).alias("g_left"),
-        pround(phl, 6).alias("h_left"),
-        pround(pgr, 6).alias("g_right"),
-        pround(phr, 6).alias("h_right"),
-        pround(
-            F.lit(0.5) * ((pkl + pkr) - (pgb * pgb) / (phb + F.lit(1.0))),
-            6,
-        ).alias("gain"),
-        pround(F.lit(0.0) - F.lit(0.1) * pgl / (phl + F.lit(1.0)), 6).alias(
-            "w_left"
-        ),
-        pround(F.lit(0.0) - F.lit(0.1) * pgr / (phr + F.lit(1.0)), 6).alias(
-            "w_right"
-        ),
-    )
-    return root_row.unionAll(children)
+    g2, bt = _xgb_branch_hist(_xgb_branch_rows(base, rinfo, "u"))
+    children = _xgb_children(_xgb_branch_picks(g2, bt))
+    return root.select(F.lit("root").alias("node"), "*").unionAll(children)
 
 
 # ---------------------------------------------------------------------------
 # q_xgb_boosted_tree2 — TWO shrinkage-chained Newton rounds of DEPTH-2
 # trees (round 16, VERDICT r15 #1): the reference XGBClassifier's
 # actual iteration — boosted TREES, not stumps
-# (/root/reference/train_model.py:69-80) — at the next hash-checkable
+# (train_model.py:69-80) — at the next hash-checkable
 # rung. Round 1 is exactly q_xgb_tree2's tree (test-pinned); margins
 # update by the compiled 4-leaf CASE (with the branch's own Newton
 # weight as the no-split fallback — totality, never hit on shipped
@@ -5597,46 +5134,38 @@ def q_xgb_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _xgbt_tree(base: DataFrame, ucol: str, rnd: int):
-    """Grow ONE exact Newton depth-2 tree over ``base`` (label, feats,
-    6-dp margin integer ``ucol``). Returns (tree rows labeled with
-    (round, node), broadcastable 1-row root info, 2-row per-branch
-    child picks, 2-row per-branch fallback Newton weights). The body
-    is q_xgb_tree2's pass parameterized by margin column and round
-    label; q_xgb_tree2 itself is untouched and the round-1 identity is
-    pinned behaviorally by tests/test_round16_ops.py. The bounded pick
-    tables (<=2 rows) are localCheckpoint'd so the round-2 pass can
-    chain off them without replaying round 1."""
+def _xgb_route(base: DataFrame, rinfo: DataFrame) -> DataFrame:
+    """Rows with their branch br (0 = left) under the broadcast 1-row
+    root split ``rinfo`` (rfeat, rt)."""
+    return base.crossJoin(F.broadcast(rinfo)).withColumn(
+        "br",
+        F.when(_feat_val("rfeat") <= F.col("rt"), F.lit(0)).otherwise(
+            F.lit(1)
+        ),
+    )
+
+
+def _xgb_branch_rows(
+    base: DataFrame, rinfo: DataFrame, ucol: str
+) -> DataFrame:
+    """(label, feats, br, gu, hu): _xgb_route'd rows with the exact
+    integer g/h off the 6-dp margin integer ``ucol``."""
+    return _xgb_route(base, rinfo).select(
+        "label",
+        "disc",
+        "price",
+        "qty",
+        "br",
+        (F.col(ucol) - F.col("label") * 1000000).alias("gu"),
+        (F.col(ucol) * (F.lit(1000000) - F.col(ucol))).alias("hu"),
+    )
+
+
+def _xgb_branch_hist(f2: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(g2, bt): the per-(br, feat, val) exact g/h histogram and the
+    exact per-branch totals off its 'disc' slice (a closed form —
+    never the rounded root-row doubles)."""
     dec = "decimal(38,0)"
-    root = _xgb_newton_pick(_xgb_gh(base, ucol=ucol)).localCheckpoint()
-    root_row = root.select(
-        F.lit(rnd).cast("int").alias("round"),
-        F.lit("root").alias("node"),
-        "*",
-    )
-    rinfo = root.select(
-        F.col("feat").alias("rfeat"), F.col("threshold").alias("rt")
-    )
-    rootval = (
-        F.when(F.col("rfeat") == "disc", F.col("disc"))
-        .when(F.col("rfeat") == "price", F.col("price"))
-        .otherwise(F.col("qty"))
-    )
-    f2 = (
-        base.crossJoin(F.broadcast(rinfo))
-        .withColumn(
-            "br", F.when(rootval <= F.col("rt"), F.lit(0)).otherwise(F.lit(1))
-        )
-        .select(
-            "label",
-            "disc",
-            "price",
-            "qty",
-            "br",
-            (F.col(ucol) - F.col("label") * 1000000).alias("gu"),
-            (F.col(ucol) * (F.lit(1000000) - F.col(ucol))).alias("hu"),
-        )
-    )
     g2 = (
         _mf_unpivot(f2, ["br", "gu", "hu"])
         .groupBy("br", "feat", "val")
@@ -5654,28 +5183,27 @@ def _xgbt_tree(base: DataFrame, ucol: str, rnd: int):
             F.sum("g").cast(dec).alias("gt"),
             F.sum("h").cast(dec).alias("ht"),
         )
-        .localCheckpoint()
     )
+    return g2, bt
+
+
+def _xgb_branch_picks(g2: DataFrame, bt: DataFrame) -> DataFrame:
+    """Both child picks in ONE per-branch struct-argmin job over the
+    per-(br, feat) prefix cums with the branch totals ``bt`` attached:
+    (br, key, feat, val, cn, cg, ch, nb, gb, hb)."""
     c2 = _mf_cum(
         g2,
         ["br", "feat"],
-        out_cast=dec,
+        out_cast="decimal(38,0)",
         measures=(("cnt", "cum_n"), ("g", "cum_g"), ("h", "cum_h")),
     ).join(F.broadcast(bt), "br")
-    gl = F.col("cum_g").cast("double") / 1000000
-    hl = F.col("cum_h").cast("double") / 1000000000000
-    gr = (F.col("gt") - F.col("cum_g")).cast("double") / 1000000
-    hr = (F.col("ht") - F.col("cum_h")).cast("double") / 1000000000000
-    kl = (gl * gl) / (hl + F.lit(1.0))
-    kr = (gr * gr) / (hr + F.lit(1.0))
-    key = F.lit(0.0) - (kl + kr)
-    picks = (
+    return (
         c2.filter(F.col("cum_n") < F.col("n"))
         .groupBy("br")
         .agg(
             F.min(
                 F.struct(
-                    key.alias("key"),
+                    _newton_terms()["key"].alias("key"),
                     F.col("feat"),
                     F.col("val"),
                     F.col("cum_n").alias("cn"),
@@ -5688,18 +5216,13 @@ def _xgbt_tree(base: DataFrame, ucol: str, rnd: int):
             ).alias("s")
         )
         .select("br", "s.*")
-        .localCheckpoint()
     )
-    pgl = F.col("cg").cast("double") / 1000000
-    phl = F.col("ch").cast("double") / 1000000000000
-    pgr = (F.col("gb") - F.col("cg")).cast("double") / 1000000
-    phr = (F.col("hb") - F.col("ch")).cast("double") / 1000000000000
-    pgb = F.col("gb").cast("double") / 1000000
-    phb = F.col("hb").cast("double") / 1000000000000
-    pkl = (pgl * pgl) / (phl + F.lit(1.0))
-    pkr = (pgr * pgr) / (phr + F.lit(1.0))
-    children = picks.select(
-        F.lit(rnd).cast("int").alias("round"),
+
+
+def _xgb_children(picks: DataFrame, head: tuple = ()) -> DataFrame:
+    """The _xgb_branch_picks rows in the pick schema, node left/right."""
+    return picks.select(
+        *head,
         F.when(F.col("br") == 0, F.lit("left"))
         .otherwise(F.lit("right"))
         .alias("node"),
@@ -5707,43 +5230,43 @@ def _xgbt_tree(base: DataFrame, ucol: str, rnd: int):
         F.col("val").alias("threshold"),
         F.col("cn").cast("bigint").alias("n_left"),
         (F.col("nb") - F.col("cn")).cast("bigint").alias("n_right"),
-        pround(pgl, 6).alias("g_left"),
-        pround(phl, 6).alias("h_left"),
-        pround(pgr, 6).alias("g_right"),
-        pround(phr, 6).alias("h_right"),
-        pround(
-            F.lit(0.5) * ((pkl + pkr) - (pgb * pgb) / (phb + F.lit(1.0))),
-            6,
-        ).alias("gain"),
-        pround(F.lit(0.0) - F.lit(0.1) * pgl / (phl + F.lit(1.0)), 6).alias(
-            "w_left"
-        ),
-        pround(F.lit(0.0) - F.lit(0.1) * pgr / (phr + F.lit(1.0)), 6).alias(
-            "w_right"
-        ),
+        *_newton_cols(_newton_terms("cg", "ch", "gb", "hb")),
     )
+
+
+def _xgbt_tree(base: DataFrame, ucol: str, rnd: int):
+    """Grow ONE exact Newton depth-2 tree over ``base`` (label, feats,
+    6-dp margin integer ``ucol``). Returns (tree rows labeled with
+    (round, node), broadcastable 1-row root info, 2-row per-branch
+    child picks, 2-row per-branch fallback Newton weights). The body
+    is q_xgb_tree2's pass parameterized by margin column and round
+    label; the round-1 identity with q_xgb_tree2 is pinned
+    behaviorally by tests/test_round16_ops.py. The bounded pick
+    tables (<=2 rows) are localCheckpoint'd so the round-2 pass can
+    chain off them without replaying round 1."""
+    head = (F.lit(rnd).cast("int").alias("round"),)
+    root = _xgb_newton_pick(_xgb_gh(base, ucol=ucol)).localCheckpoint()
+    root_row = root.select(*head, F.lit("root").alias("node"), "*")
+    rinfo = root.select(
+        F.col("feat").alias("rfeat"), F.col("threshold").alias("rt")
+    )
+    g2, bt = _xgb_branch_hist(_xgb_branch_rows(base, rinfo, ucol))
+    bt = bt.localCheckpoint()
+    picks = _xgb_branch_picks(g2, bt).localCheckpoint()
+    pt = _newton_terms("cg", "ch", "gb", "hb")
     cp = picks.select(
         "br",
         F.col("feat").alias("cfeat"),
         F.col("val").alias("ct"),
-        pround(F.lit(0.0) - F.lit(0.1) * pgl / (phl + F.lit(1.0)), 6).alias(
-            "cwl"
-        ),
-        pround(F.lit(0.0) - F.lit(0.1) * pgr / (phr + F.lit(1.0)), 6).alias(
-            "cwr"
-        ),
+        pround(pt["w_left"], 6).alias("cwl"),
+        pround(pt["w_right"], 6).alias("cwr"),
     )
+    # the branch's own Newton weight: the left weight of a split that
+    # keeps the whole branch on its left
     fbw = bt.select(
-        "br",
-        pround(
-            F.lit(0.0)
-            - F.lit(0.1)
-            * (F.col("gt").cast("double") / 1000000)
-            / ((F.col("ht").cast("double") / 1000000000000) + F.lit(1.0)),
-            6,
-        ).alias("wb"),
+        "br", pround(_newton_terms("gt", "ht")["w_left"], 6).alias("wb")
     )
-    return root_row.unionAll(children), rinfo, cp, fbw
+    return root_row.unionAll(_xgb_children(picks, head)), rinfo, cp, fbw
 
 
 def _xgbt_update(
@@ -5754,51 +5277,19 @@ def _xgbt_update(
     broadcast child pick (fallback: the branch's own Newton weight),
     then u' = round(sigmoid(logit(u/1e6) + w)*1e6), saturation-guarded
     — the q_xgb_round2 margin-update text with the tree's leaf CASE."""
-    rootval = (
-        F.when(F.col("rfeat") == "disc", F.col("disc"))
-        .when(F.col("rfeat") == "price", F.col("price"))
-        .otherwise(F.col("qty"))
-    )
     fx = (
-        base.crossJoin(F.broadcast(rinfo))
-        .withColumn(
-            "br", F.when(rootval <= F.col("rt"), F.lit(0)).otherwise(F.lit(1))
-        )
+        _xgb_route(base, rinfo)
         .join(F.broadcast(cp), "br", "left")
         .join(F.broadcast(fbw), "br", "left")
     )
-    fv = (
-        F.when(F.col("cfeat") == "disc", F.col("disc"))
-        .when(F.col("cfeat") == "price", F.col("price"))
-        .otherwise(F.col("qty"))
-    )
     w = F.when(F.col("cfeat").isNull(), F.col("wb")).otherwise(
-        F.when(fv <= F.col("ct"), F.col("cwl")).otherwise(F.col("cwr"))
+        F.when(_feat_val("cfeat") <= F.col("ct"), F.col("cwl")).otherwise(
+            F.col("cwr")
+        )
     )
-    u2 = F.when(
-        (F.col(ucol) == 0) | (F.col(ucol) == 1000000), F.col(ucol)
-    ).otherwise(
-        F.floor(
-            (
-                F.lit(1.0)
-                / (
-                    F.lit(1.0)
-                    + F.exp(
-                        -(
-                            F.log(
-                                F.col(ucol).cast("double")
-                                / (F.lit(1000000) - F.col(ucol))
-                            )
-                            + w
-                        )
-                    )
-                )
-            )
-            * 1000000
-            + F.lit(0.5)
-        ).cast("bigint")
+    return fx.select(
+        "label", "disc", "price", "qty", _xgb_update(ucol, w).alias("u2")
     )
-    return fx.select("label", "disc", "price", "qty", u2.alias("u2"))
 
 
 def _xgb_boosted_tree2_oracle() -> str:
@@ -5807,79 +5298,8 @@ def _xgb_boosted_tree2_oracle() -> str:
     the margin update is the q_xgb_round2 text with the 4-leaf CASE
     (LEFT JOIN on the branch pick, branch-weight fallback), tree 2
     repeats the fold on u2."""
-    fsel = ", ".join(
-        sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS
-    )
-
-    def tree(r, p, rnd):
-        """CTE text growing one depth-2 Newton tree over fact CTE
-        ``r`` carrying (label, disc, price, qty, gu, hu); all CTE
-        names suffixed with ``p``."""
-        u1 = " UNION ALL ".join(
-            f"SELECT '{f}' AS feat, {f} AS val, gu, hu FROM {r}"
-            for f in _MF_FEATS
-        )
-        u2 = " UNION ALL ".join(
-            f"SELECT br, '{f}' AS feat, {f} AS val, gu, hu FROM rb{p}"
-            for f in _MF_FEATS
-        )
-        return (
-            f"u1{p} AS ({u1}), "
-            f"ga{p} AS (SELECT feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-            "CAST(SUM(gu) AS HUGEINT) AS g, "
-            f"CAST(SUM(hu) AS HUGEINT) AS h FROM u1{p} GROUP BY feat, val), "
-            f"ta{p} AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-            "CAST(SUM(gu) AS HUGEINT) AS gt, "
-            f"CAST(SUM(hu) AS HUGEINT) AS ht FROM {r}), "
-            f"ca{p} AS (SELECT feat, val, "
-            "CAST(SUM(cnt) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-            "AS cum_n, "
-            "CAST(SUM(g) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-            "AS cum_g, "
-            "CAST(SUM(h) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-            f"AS cum_h, n, gt, ht FROM ga{p}, ta{p}), "
-            f"pr{p} AS MATERIALIZED ("
-            + _xgb_pick_sql(rnd, f"ca{p}", node="root")
-            + "), "
-            f"rb{p} AS (SELECT {r}.*, CASE WHEN (CASE pr{p}.feat "
-            f"WHEN 'disc' THEN {r}.disc WHEN 'price' THEN {r}.price "
-            f"ELSE {r}.qty END) <= pr{p}.threshold THEN 0 ELSE 1 END AS br "
-            f"FROM {r}, pr{p}), "
-            f"u2{p} AS ({u2}), "
-            f"gb{p} AS (SELECT br, feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-            "CAST(SUM(gu) AS HUGEINT) AS g, "
-            f"CAST(SUM(hu) AS HUGEINT) AS h FROM u2{p} GROUP BY br, feat, val), "
-            f"bt{p} AS (SELECT br, CAST(SUM(cnt) AS BIGINT) AS n, "
-            "CAST(SUM(g) AS HUGEINT) AS gt, "
-            f"CAST(SUM(h) AS HUGEINT) AS ht FROM gb{p} WHERE feat = 'disc' "
-            "GROUP BY br), "
-            f"cb{p} AS (SELECT gb{p}.br, feat, val, "
-            f"CAST(SUM(cnt) OVER (PARTITION BY gb{p}.br, feat ORDER BY val) "
-            "AS HUGEINT) AS cum_n, "
-            f"CAST(SUM(g) OVER (PARTITION BY gb{p}.br, feat ORDER BY val) "
-            "AS HUGEINT) AS cum_g, "
-            f"CAST(SUM(h) OVER (PARTITION BY gb{p}.br, feat ORDER BY val) "
-            f"AS HUGEINT) AS cum_h, bt{p}.n, bt{p}.gt, bt{p}.ht "
-            f"FROM gb{p} JOIN bt{p} ON gb{p}.br = bt{p}.br), "
-            f"lc{p} AS (SELECT * FROM cb{p} WHERE br = 0), "
-            f"rc{p} AS (SELECT * FROM cb{p} WHERE br = 1), "
-            f"lp{p} AS MATERIALIZED ("
-            + _xgb_pick_sql(rnd, f"lc{p}", node="left")
-            + "), "
-            f"rp{p} AS MATERIALIZED ("
-            + _xgb_pick_sql(rnd, f"rc{p}", node="right")
-            + ")"
-        )
-
     return (
-        "WITH f AS (SELECT "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-        f"{fsel}, "
-        "CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") "
-        "* 1000000 + 0.5) AS BIGINT) AS u FROM lineitem), "
-        "r1 AS (SELECT f.*, u - label * 1000000 AS gu, "
-        "u * (1000000 - u) AS hu FROM f), "
-        + tree("r1", "a", 1)
+        _xgb_tree2_sql("1", "a", 1)
         + ", "
         # compiled 4-leaf CASE: broadcast root + per-branch child pick
         # (LEFT JOIN; fallback = the branch's own shrunken Newton
@@ -5893,25 +5313,16 @@ def _xgb_boosted_tree2_oracle() -> str:
             "/ ((CAST(ht AS DOUBLE) / 1000000000000) + 1.0)",
             6,
         )
-        + " AS wb FROM bta), "
-        "fxa AS (SELECT f.label, f.disc, f.price, f.qty, f.u, "
-        "CASE WHEN (CASE pra.feat WHEN 'disc' THEN f.disc "
-        "WHEN 'price' THEN f.price ELSE f.qty END) <= pra.threshold "
-        "THEN 0 ELSE 1 END AS br FROM f, pra), "
-        "fwa AS (SELECT fxa.*, CASE WHEN cpa.br IS NULL THEN fba.wb "
-        "ELSE CASE WHEN (CASE cpa.feat WHEN 'disc' THEN fxa.disc "
-        "WHEN 'price' THEN fxa.price ELSE fxa.qty END) <= cpa.threshold "
+        + " AS wb FROM t1b), "
+        "fwa AS (SELECT f.*, CASE WHEN cpa.br IS NULL THEN fba.wb "
+        "ELSE CASE WHEN (" + _mf_val_case("cpa.feat") + ") <= cpa.threshold "
         "THEN cpa.w_left ELSE cpa.w_right END END AS w "
-        "FROM fxa LEFT JOIN cpa ON fxa.br = cpa.br "
-        "LEFT JOIN fba ON fxa.br = fba.br), "
+        "FROM rba AS f LEFT JOIN cpa ON f.br = cpa.br "
+        "LEFT JOIN fba ON f.br = fba.br), "
         "f2 AS (SELECT label, disc, price, qty, "
-        "CASE WHEN u = 0 OR u = 1000000 THEN u ELSE "
-        "CAST(FLOOR((1.0 / (1.0 + EXP(-(LN(CAST(u AS DOUBLE) "
-        "/ (1000000 - u)) + w)))) * 1000000 + 0.5) AS BIGINT) "
-        "END AS u2 FROM fwa), "
-        "r2 AS (SELECT label, disc, price, qty, "
-        "u2 - label * 1000000 AS gu, u2 * (1000000 - u2) AS hu FROM f2), "
-        + tree("r2", "b", 2)
+        + _xgb_update_sql("u", "w")
+        + " AS u2 FROM fwa), "
+        + _xgb_tree2_sql("2", "b", 2, "f2", "u2")
         + " SELECT * FROM pra UNION ALL SELECT * FROM lpa "
         "UNION ALL SELECT * FROM rpa "
         "UNION ALL SELECT * FROM prb UNION ALL SELECT * FROM lpb "
@@ -5984,66 +5395,15 @@ def _xgb_gamma_oracle() -> str:
     """DuckDB twin: the q_xgb_round fold, candidate counts before/after
     the cover gate, the cover-constrained argmin, and the gamma flag
     off the identical 6-dp-rounded gain."""
-    fsel = ", ".join(
-        sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS
-    )
-    u1 = " UNION ALL ".join(
-        f"SELECT '{f}' AS feat, {f} AS val, gu, hu FROM r" for f in _MF_FEATS
-    )
-    gl = "CAST(cum_g AS DOUBLE) / 1000000"
-    hl = "CAST(cum_h AS DOUBLE) / 1000000000000"
-    gr = "CAST(gt - cum_g AS DOUBLE) / 1000000"
-    hr = "CAST(ht - cum_h AS DOUBLE) / 1000000000000"
-    gt = "CAST(gt AS DOUBLE) / 1000000"
-    ht = "CAST(ht AS DOUBLE) / 1000000000000"
-    kl = f"(({gl}) * ({gl}) / (({hl}) + 1.0))"
-    kr = f"(({gr}) * ({gr}) / (({hr}) + 1.0))"
-    key = f"(0.0 - ({kl} + {kr}))"
-    gain6 = sql_round(
-        f"0.5 * (({kl} + {kr}) - ({gt}) * ({gt}) / (({ht}) + 1.0))", 6
-    )
     cover = (
         f"cum_h >= {_XGB_MCW_UNITS} AND ht - cum_h >= {_XGB_MCW_UNITS}"
     )
     return (
-        "WITH f AS (SELECT "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-        f"{fsel}, "
-        "CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") "
-        "* 1000000 + 0.5) AS BIGINT) AS u FROM lineitem), "
-        "r AS (SELECT f.*, u - label * 1000000 AS gu, "
-        "u * (1000000 - u) AS hu FROM f), "
-        f"u AS ({u1}), "
-        "g AS (SELECT feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(gu) AS HUGEINT) AS g, "
-        "CAST(SUM(hu) AS HUGEINT) AS h FROM u GROUP BY feat, val), "
-        "t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(gu) AS HUGEINT) AS gt, "
-        "CAST(SUM(hu) AS HUGEINT) AS ht FROM r), "
-        "c AS (SELECT feat, val, "
-        "CAST(SUM(cnt) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_n, "
-        "CAST(SUM(g) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_g, "
-        "CAST(SUM(h) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_h, n, gt, ht FROM g, t), "
-        "cand AS (SELECT * FROM c WHERE cum_n < n), "
-        "cnts AS (SELECT CAST(COUNT(*) AS BIGINT) AS cand_total, "
+        _xgb_fold_sql("1")
+        + ", cnts AS (SELECT CAST(COUNT(*) AS BIGINT) AS cand_total, "
         f"CAST(SUM(CASE WHEN {cover} THEN 1 ELSE 0 END) AS BIGINT) "
-        "AS cand_cover FROM cand), "
-        "p AS (SELECT feat, val AS threshold, "
-        "CAST(cum_n AS BIGINT) AS n_left, "
-        "CAST(n - cum_n AS BIGINT) AS n_right, "
-        + sql_round(gl, 6) + " AS g_left, "
-        + sql_round(hl, 6) + " AS h_left, "
-        + sql_round(gr, 6) + " AS g_right, "
-        + sql_round(hr, 6) + " AS h_right, "
-        + gain6 + " AS gain, "
-        + sql_round(f"0.0 - 0.1 * ({gl}) / (({hl}) + 1.0)", 6)
-        + " AS w_left, "
-        + sql_round(f"0.0 - 0.1 * ({gr}) / (({hr}) + 1.0)", 6)
-        + " AS w_right "
-        f"FROM cand WHERE {cover} ORDER BY {key}, feat, val LIMIT 1) "
+        "AS cand_cover FROM c1 WHERE cum_n < n), "
+        "p AS (" + _xgb_pick_sql(None, "c1", where=cover) + ") "
         "SELECT p.*, "
         f"CASE WHEN p.gain > {_XGB_GAMMA!r} THEN 1 ELSE 0 END AS gamma_pass, "
         "cand_total, cand_cover FROM p, cnts"
@@ -6082,30 +5442,9 @@ def q_xgb_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate table (one extra 2-scalar fold over <=~1.5k rows). The
     gates are WHERE clauses on the bounded cell table, free at any
     scale — exactly how distributed XGBoost evaluates them."""
-    base = _xgb_gh(_xgb_base(spark, sf_dir))
-    dec = "decimal(38,0)"
-    tot = base.agg(
-        F.count("*").cast("bigint").alias("n"),
-        _sum_gu_dec("gu").alias("gt"),
-        _sum_hu_dec("hu").alias("ht"),
-    )
-    g1 = (
-        _mf_unpivot(base, ["gu", "hu"])
-        .groupBy("feat", "val")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            _sum_gu_dec("gu").alias("g"),
-            _sum_hu_dec("hu").alias("h"),
-        )
-    )
-    c = _mf_cum(
-        g1,
-        ["feat"],
-        out_cast=dec,
-        measures=(("cnt", "cum_n"), ("g", "cum_g"), ("h", "cum_h")),
-    ).crossJoin(F.broadcast(tot))
+    c, _tot = _xgb_fold(_xgb_gh(_xgb_base(spark, sf_dir)))
     cand = c.filter(F.col("cum_n") < F.col("n"))
-    mcw = F.lit(_XGB_MCW_UNITS).cast(dec)
+    mcw = F.lit(_XGB_MCW_UNITS).cast("decimal(38,0)")
     cover = (F.col("cum_h") >= mcw) & (
         (F.col("ht") - F.col("cum_h")) >= mcw
     )
@@ -6115,41 +5454,7 @@ def q_xgb_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cand_cover"
         ),
     )
-    gl = F.col("cum_g").cast("double") / 1000000
-    hl = F.col("cum_h").cast("double") / 1000000000000
-    gr = (F.col("gt") - F.col("cum_g")).cast("double") / 1000000
-    hr = (F.col("ht") - F.col("cum_h")).cast("double") / 1000000000000
-    gtd = F.col("gt").cast("double") / 1000000
-    htd = F.col("ht").cast("double") / 1000000000000
-    kl = (gl * gl) / (hl + F.lit(1.0))
-    kr = (gr * gr) / (hr + F.lit(1.0))
-    key = F.lit(0.0) - (kl + kr)
-    gain6 = pround(
-        F.lit(0.5) * ((kl + kr) - (gtd * gtd) / (htd + F.lit(1.0))), 6
-    )
-    p = (
-        cand.filter(cover)
-        .withColumn("key", key)
-        .orderBy("key", "feat", "val")
-        .limit(1)
-        .select(
-            "feat",
-            F.col("val").alias("threshold"),
-            F.col("cum_n").cast("bigint").alias("n_left"),
-            (F.col("n") - F.col("cum_n")).cast("bigint").alias("n_right"),
-            pround(gl, 6).alias("g_left"),
-            pround(hl, 6).alias("h_left"),
-            pround(gr, 6).alias("g_right"),
-            pround(hr, 6).alias("h_right"),
-            gain6.alias("gain"),
-            pround(F.lit(0.0) - F.lit(0.1) * gl / (hl + F.lit(1.0)), 6).alias(
-                "w_left"
-            ),
-            pround(F.lit(0.0) - F.lit(0.1) * gr / (hr + F.lit(1.0)), 6).alias(
-                "w_right"
-            ),
-        )
-    )
+    p = _newton_take(cand.filter(cover))
     return p.crossJoin(F.broadcast(cnts)).select(
         "feat",
         "threshold",
@@ -6200,64 +5505,12 @@ _MONO_GATE_SQL = (
 def _xgb_monotone_oracle() -> str:
     """DuckDB twin: the q_xgb_round fold with the integer monotone
     gate in the candidate WHERE, plus before/after candidate counts."""
-    fsel = ", ".join(
-        sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS
-    )
-    u1 = " UNION ALL ".join(
-        f"SELECT '{f}' AS feat, {f} AS val, gu, hu FROM r" for f in _MF_FEATS
-    )
-    gl = "CAST(cum_g AS DOUBLE) / 1000000"
-    hl = "CAST(cum_h AS DOUBLE) / 1000000000000"
-    gr = "CAST(gt - cum_g AS DOUBLE) / 1000000"
-    hr = "CAST(ht - cum_h AS DOUBLE) / 1000000000000"
-    gt = "CAST(gt AS DOUBLE) / 1000000"
-    ht = "CAST(ht AS DOUBLE) / 1000000000000"
-    kl = f"(({gl}) * ({gl}) / (({hl}) + 1.0))"
-    kr = f"(({gr}) * ({gr}) / (({hr}) + 1.0))"
-    key = f"(0.0 - ({kl} + {kr}))"
     return (
-        "WITH f AS (SELECT "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-        f"{fsel}, "
-        "CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") "
-        "* 1000000 + 0.5) AS BIGINT) AS u FROM lineitem), "
-        "r AS (SELECT f.*, u - label * 1000000 AS gu, "
-        "u * (1000000 - u) AS hu FROM f), "
-        f"u AS ({u1}), "
-        "g AS (SELECT feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(gu) AS HUGEINT) AS g, "
-        "CAST(SUM(hu) AS HUGEINT) AS h FROM u GROUP BY feat, val), "
-        "t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(gu) AS HUGEINT) AS gt, "
-        "CAST(SUM(hu) AS HUGEINT) AS ht FROM r), "
-        "c AS (SELECT feat, val, "
-        "CAST(SUM(cnt) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_n, "
-        "CAST(SUM(g) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_g, "
-        "CAST(SUM(h) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_h, n, gt, ht FROM g, t), "
-        "cand AS (SELECT * FROM c WHERE cum_n < n), "
-        "cnts AS (SELECT CAST(COUNT(*) AS BIGINT) AS cand_total, "
+        _xgb_fold_sql("1")
+        + ", cnts AS (SELECT CAST(COUNT(*) AS BIGINT) AS cand_total, "
         f"CAST(SUM(CASE WHEN {_MONO_GATE_SQL} THEN 1 ELSE 0 END) AS BIGINT) "
-        "AS cand_allowed FROM cand), "
-        "p AS (SELECT feat, val AS threshold, "
-        "CAST(cum_n AS BIGINT) AS n_left, "
-        "CAST(n - cum_n AS BIGINT) AS n_right, "
-        + sql_round(gl, 6) + " AS g_left, "
-        + sql_round(hl, 6) + " AS h_left, "
-        + sql_round(gr, 6) + " AS g_right, "
-        + sql_round(hr, 6) + " AS h_right, "
-        + sql_round(
-            f"0.5 * (({kl} + {kr}) - ({gt}) * ({gt}) / (({ht}) + 1.0))", 6
-        )
-        + " AS gain, "
-        + sql_round(f"0.0 - 0.1 * ({gl}) / (({hl}) + 1.0)", 6)
-        + " AS w_left, "
-        + sql_round(f"0.0 - 0.1 * ({gr}) / (({hr}) + 1.0)", 6)
-        + " AS w_right "
-        f"FROM cand WHERE {_MONO_GATE_SQL} ORDER BY {key}, feat, val "
-        "LIMIT 1) "
+        "AS cand_allowed FROM c1 WHERE cum_n < n), "
+        "p AS (" + _xgb_pick_sql(None, "c1", where=_MONO_GATE_SQL) + ") "
         "SELECT p.*, cand_total, cand_allowed FROM p, cnts"
     )
 
@@ -6296,30 +5549,9 @@ def q_xgb_monotone(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (plus one 2-scalar fold over it), free at any scale —
     exactly how distributed XGBoost enforces the constraint during
     split enumeration."""
-    base = _xgb_gh(_xgb_base(spark, sf_dir))
-    dec = "decimal(38,0)"
-    tot = base.agg(
-        F.count("*").cast("bigint").alias("n"),
-        _sum_gu_dec("gu").alias("gt"),
-        _sum_hu_dec("hu").alias("ht"),
-    )
-    g1 = (
-        _mf_unpivot(base, ["gu", "hu"])
-        .groupBy("feat", "val")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            _sum_gu_dec("gu").alias("g"),
-            _sum_hu_dec("hu").alias("h"),
-        )
-    )
-    c = _mf_cum(
-        g1,
-        ["feat"],
-        out_cast=dec,
-        measures=(("cnt", "cum_n"), ("g", "cum_g"), ("h", "cum_h")),
-    ).crossJoin(F.broadcast(tot))
+    c, _tot = _xgb_fold(_xgb_gh(_xgb_base(spark, sf_dir)))
     cand = c.filter(F.col("cum_n") < F.col("n"))
-    lam = F.lit(1000000000000).cast(dec)
+    lam = F.lit(1000000000000).cast("decimal(38,0)")
     lhs = F.col("cum_g") * (F.col("ht") - F.col("cum_h") + lam)
     rhs = (F.col("gt") - F.col("cum_g")) * (F.col("cum_h") + lam)
     allowed = (
@@ -6333,43 +5565,7 @@ def q_xgb_monotone(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cand_allowed"
         ),
     )
-    gl = F.col("cum_g").cast("double") / 1000000
-    hl = F.col("cum_h").cast("double") / 1000000000000
-    gr = (F.col("gt") - F.col("cum_g")).cast("double") / 1000000
-    hr = (F.col("ht") - F.col("cum_h")).cast("double") / 1000000000000
-    gtd = F.col("gt").cast("double") / 1000000
-    htd = F.col("ht").cast("double") / 1000000000000
-    kl = (gl * gl) / (hl + F.lit(1.0))
-    kr = (gr * gr) / (hr + F.lit(1.0))
-    key = F.lit(0.0) - (kl + kr)
-    p = (
-        cand.filter(allowed)
-        .withColumn("key", key)
-        .orderBy("key", "feat", "val")
-        .limit(1)
-        .select(
-            "feat",
-            F.col("val").alias("threshold"),
-            F.col("cum_n").cast("bigint").alias("n_left"),
-            (F.col("n") - F.col("cum_n")).cast("bigint").alias("n_right"),
-            pround(gl, 6).alias("g_left"),
-            pround(hl, 6).alias("h_left"),
-            pround(gr, 6).alias("g_right"),
-            pround(hr, 6).alias("h_right"),
-            pround(
-                F.lit(0.5)
-                * ((kl + kr) - (gtd * gtd) / (htd + F.lit(1.0))),
-                6,
-            ).alias("gain"),
-            pround(F.lit(0.0) - F.lit(0.1) * gl / (hl + F.lit(1.0)), 6).alias(
-                "w_left"
-            ),
-            pround(F.lit(0.0) - F.lit(0.1) * gr / (hr + F.lit(1.0)), 6).alias(
-                "w_right"
-            ),
-        )
-    )
-    return p.crossJoin(F.broadcast(cnts))
+    return _newton_take(cand.filter(allowed)).crossJoin(F.broadcast(cnts))
 
 
 # ---------------------------------------------------------------------------
@@ -6394,73 +5590,15 @@ def _xgb_alpha_oracle() -> str:
     soft-thresholded by the EXACT integer alpha before the gain key,
     the emitted weights, and the gain."""
     A = _XGB_ALPHA_UNITS
-    fsel = ", ".join(
-        sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS
-    )
-    u1 = " UNION ALL ".join(
-        f"SELECT '{f}' AS feat, {f} AS val, gu, hu FROM r" for f in _MF_FEATS
-    )
-    tgl = (
-        f"(CASE WHEN cum_g > {A} THEN cum_g - {A} "
-        f"WHEN cum_g < -{A} THEN cum_g + {A} ELSE 0 END)"
-    )
-    tgr = (
-        f"(CASE WHEN gt - cum_g > {A} THEN gt - cum_g - {A} "
-        f"WHEN gt - cum_g < -{A} THEN gt - cum_g + {A} ELSE 0 END)"
-    )
-    tgt = (
-        f"(CASE WHEN gt > {A} THEN gt - {A} "
-        f"WHEN gt < -{A} THEN gt + {A} ELSE 0 END)"
-    )
-    gl = f"CAST({tgl} AS DOUBLE) / 1000000"
-    gr = f"CAST({tgr} AS DOUBLE) / 1000000"
-    gt = f"CAST({tgt} AS DOUBLE) / 1000000"
-    hl = "CAST(cum_h AS DOUBLE) / 1000000000000"
-    hr = "CAST(ht - cum_h AS DOUBLE) / 1000000000000"
-    ht = "CAST(ht AS DOUBLE) / 1000000000000"
-    kl = f"(({gl}) * ({gl}) / (({hl}) + 1.0))"
-    kr = f"(({gr}) * ({gr}) / (({hr}) + 1.0))"
-    key = f"(0.0 - ({kl} + {kr}))"
-    return (
-        "WITH f AS (SELECT "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-        f"{fsel}, "
-        "CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") "
-        "* 1000000 + 0.5) AS BIGINT) AS u FROM lineitem), "
-        "r AS (SELECT f.*, u - label * 1000000 AS gu, "
-        "u * (1000000 - u) AS hu FROM f), "
-        f"u AS ({u1}), "
-        "g AS (SELECT feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(gu) AS HUGEINT) AS g, "
-        "CAST(SUM(hu) AS HUGEINT) AS h FROM u GROUP BY feat, val), "
-        "t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(gu) AS HUGEINT) AS gt, "
-        "CAST(SUM(hu) AS HUGEINT) AS ht FROM r), "
-        "c AS (SELECT feat, val, "
-        "CAST(SUM(cnt) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_n, "
-        "CAST(SUM(g) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_g, "
-        "CAST(SUM(h) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_h, n, gt, ht FROM g, t) "
-        "SELECT feat, val AS threshold, "
-        "CAST(cum_n AS BIGINT) AS n_left, "
-        "CAST(n - cum_n AS BIGINT) AS n_right, "
-        + sql_round(gl, 6) + " AS tg_left, "
-        + sql_round("CAST(cum_h AS DOUBLE) / 1000000000000", 6)
-        + " AS h_left, "
-        + sql_round(gr, 6) + " AS tg_right, "
-        + sql_round("CAST(ht - cum_h AS DOUBLE) / 1000000000000", 6)
-        + " AS h_right, "
-        + sql_round(
-            f"0.5 * (({kl} + {kr}) - ({gt}) * ({gt}) / (({ht}) + 1.0))", 6
+
+    def soft(x):
+        return (
+            f"(CASE WHEN {x} > {A} THEN {x} - {A} "
+            f"WHEN {x} < -{A} THEN {x} + {A} ELSE 0 END)"
         )
-        + " AS gain, "
-        + sql_round(f"0.0 - 0.1 * ({gl}) / (({hl}) + 1.0)", 6)
-        + " AS w_left, "
-        + sql_round(f"0.0 - 0.1 * ({gr}) / (({hr}) + 1.0)", 6)
-        + " AS w_right "
-        f"FROM c WHERE cum_n < n ORDER BY {key}, feat, val LIMIT 1"
+
+    return _xgb_fold_sql("1") + " " + _xgb_pick_sql(
+        None, "c1", grad=soft, g_names=("tg_left", "tg_right")
     )
 
 
@@ -6497,28 +5635,7 @@ def q_xgb_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing — it is a CASE on already-exact histogram sums, exactly
     where distributed XGBoost applies it."""
     A = _XGB_ALPHA_UNITS
-    base = _xgb_gh(_xgb_base(spark, sf_dir))
-    dec = "decimal(38,0)"
-    tot = base.agg(
-        F.count("*").cast("bigint").alias("n"),
-        _sum_gu_dec("gu").alias("gt"),
-        _sum_hu_dec("hu").alias("ht"),
-    )
-    g1 = (
-        _mf_unpivot(base, ["gu", "hu"])
-        .groupBy("feat", "val")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            _sum_gu_dec("gu").alias("g"),
-            _sum_hu_dec("hu").alias("h"),
-        )
-    )
-    c = _mf_cum(
-        g1,
-        ["feat"],
-        out_cast=dec,
-        measures=(("cnt", "cum_n"), ("g", "cum_g"), ("h", "cum_h")),
-    ).crossJoin(F.broadcast(tot))
+    c, _tot = _xgb_fold(_xgb_gh(_xgb_base(spark, sf_dir)))
 
     def soft(col):
         return (
@@ -6527,50 +5644,10 @@ def q_xgb_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(0).cast("decimal(38,0)"))
         )
 
-    tgl = soft(F.col("cum_g"))
-    tgr = soft(F.col("gt") - F.col("cum_g"))
-    tgt = soft(F.col("gt"))
-    gl = tgl.cast("double") / 1000000
-    gr = tgr.cast("double") / 1000000
-    gtd = tgt.cast("double") / 1000000
-    hl = F.col("cum_h").cast("double") / 1000000000000
-    hr = (F.col("ht") - F.col("cum_h")).cast("double") / 1000000000000
-    htd = F.col("ht").cast("double") / 1000000000000
-    kl = (gl * gl) / (hl + F.lit(1.0))
-    kr = (gr * gr) / (hr + F.lit(1.0))
-    key = F.lit(0.0) - (kl + kr)
-    return (
-        c.filter(F.col("cum_n") < F.col("n"))
-        .withColumn("key", key)
-        .orderBy("key", "feat", "val")
-        .limit(1)
-        .select(
-            "feat",
-            F.col("val").alias("threshold"),
-            F.col("cum_n").cast("bigint").alias("n_left"),
-            (F.col("n") - F.col("cum_n")).cast("bigint").alias("n_right"),
-            pround(gl, 6).alias("tg_left"),
-            pround(F.col("cum_h").cast("double") / 1000000000000, 6).alias(
-                "h_left"
-            ),
-            pround(gr, 6).alias("tg_right"),
-            pround(
-                (F.col("ht") - F.col("cum_h")).cast("double")
-                / 1000000000000,
-                6,
-            ).alias("h_right"),
-            pround(
-                F.lit(0.5)
-                * ((kl + kr) - (gtd * gtd) / (htd + F.lit(1.0))),
-                6,
-            ).alias("gain"),
-            pround(F.lit(0.0) - F.lit(0.1) * gl / (hl + F.lit(1.0)), 6).alias(
-                "w_left"
-            ),
-            pround(F.lit(0.0) - F.lit(0.1) * gr / (hr + F.lit(1.0)), 6).alias(
-                "w_right"
-            ),
-        )
+    return _newton_take(
+        c.filter(F.col("cum_n") < F.col("n")),
+        grad=soft,
+        g_names=("tg_left", "tg_right"),
     )
 
 
@@ -6597,69 +5674,19 @@ def _xgb_hist_oracle() -> str:
     per-(feat, bin) boundary rows via MAX(val) + self-join on the
     bounded cum table, candidate count, and the gain argmin."""
     B = _XGB_HIST_BINS
-    fsel = ", ".join(
-        sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS
-    )
-    u1 = " UNION ALL ".join(
-        f"SELECT '{f}' AS feat, {f} AS val, gu, hu FROM r" for f in _MF_FEATS
-    )
-    gl = "CAST(cum_g AS DOUBLE) / 1000000"
-    hl = "CAST(cum_h AS DOUBLE) / 1000000000000"
-    gr = "CAST(gt - cum_g AS DOUBLE) / 1000000"
-    hr = "CAST(ht - cum_h AS DOUBLE) / 1000000000000"
-    gt = "CAST(gt AS DOUBLE) / 1000000"
-    ht = "CAST(ht AS DOUBLE) / 1000000000000"
-    kl = f"(({gl}) * ({gl}) / (({hl}) + 1.0))"
-    kr = f"(({gr}) * ({gr}) / (({hr}) + 1.0))"
-    key = f"(0.0 - ({kl} + {kr}))"
     return (
-        "WITH f AS (SELECT "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-        f"{fsel}, "
-        "CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") "
-        "* 1000000 + 0.5) AS BIGINT) AS u FROM lineitem), "
-        "r AS (SELECT f.*, u - label * 1000000 AS gu, "
-        "u * (1000000 - u) AS hu FROM f), "
-        f"u AS ({u1}), "
-        "g AS (SELECT feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(gu) AS HUGEINT) AS g, "
-        "CAST(SUM(hu) AS HUGEINT) AS h FROM u GROUP BY feat, val), "
-        "t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(gu) AS HUGEINT) AS gt, "
-        "CAST(SUM(hu) AS HUGEINT) AS ht FROM r), "
-        "c AS (SELECT feat, val, "
-        "CAST(SUM(cnt) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_n, "
-        "CAST(SUM(g) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_g, "
-        "CAST(SUM(h) OVER (PARTITION BY feat ORDER BY val) AS HUGEINT) "
-        "AS cum_h, n, gt, ht FROM g, t), "
-        "cb AS (SELECT feat, val, cum_n, cum_g, cum_h, n, gt, ht, "
-        f"((CAST(cum_n AS BIGINT) - 1) * {B}) // n AS bin FROM c), "
+        _xgb_fold_sql("1")
+        + ", cb AS (SELECT feat, val, cum_n, cum_g, cum_h, n, gt, ht, "
+        f"((CAST(cum_n AS BIGINT) - 1) * {B}) // n AS bin FROM c1), "
         "bb AS (SELECT feat, bin, MAX(val) AS bval FROM cb "
         "GROUP BY feat, bin), "
-        "cand AS (SELECT cb.* , cb.bin AS bin_id FROM cb JOIN bb "
+        "cand AS (SELECT cb.* FROM cb JOIN bb "
         "ON cb.feat = bb.feat AND cb.bin = bb.bin AND cb.val = bb.bval "
         "WHERE cb.cum_n < cb.n), "
         "cnts AS (SELECT CAST(COUNT(*) AS BIGINT) AS cand_bins FROM cand), "
-        "p AS (SELECT feat, CAST(bin_id AS BIGINT) AS bin, "
-        "val AS threshold, "
-        "CAST(cum_n AS BIGINT) AS n_left, "
-        "CAST(n - cum_n AS BIGINT) AS n_right, "
-        + sql_round(gl, 6) + " AS g_left, "
-        + sql_round(hl, 6) + " AS h_left, "
-        + sql_round(gr, 6) + " AS g_right, "
-        + sql_round(hr, 6) + " AS h_right, "
-        + sql_round(
-            f"0.5 * (({kl} + {kr}) - ({gt}) * ({gt}) / (({ht}) + 1.0))", 6
-        )
-        + " AS gain, "
-        + sql_round(f"0.0 - 0.1 * ({gl}) / (({hl}) + 1.0)", 6)
-        + " AS w_left, "
-        + sql_round(f"0.0 - 0.1 * ({gr}) / (({hr}) + 1.0)", 6)
-        + " AS w_right "
-        f"FROM cand ORDER BY {key}, feat, val LIMIT 1) "
-        "SELECT p.*, cand_bins FROM p, cnts"
+        "p AS ("
+        + _xgb_pick_sql(None, "cand", feat="feat, CAST(bin AS BIGINT) AS bin")
+        + ") SELECT p.*, cand_bins FROM p, cnts"
     )
 
 
@@ -6705,28 +5732,7 @@ def q_xgb_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct feature values the data carries — the exact shape
     distributed XGBoost/LightGBM ship."""
     B = _XGB_HIST_BINS
-    base = _xgb_gh(_xgb_base(spark, sf_dir))
-    dec = "decimal(38,0)"
-    tot = base.agg(
-        F.count("*").cast("bigint").alias("n"),
-        _sum_gu_dec("gu").alias("gt"),
-        _sum_hu_dec("hu").alias("ht"),
-    )
-    g1 = (
-        _mf_unpivot(base, ["gu", "hu"])
-        .groupBy("feat", "val")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            _sum_gu_dec("gu").alias("g"),
-            _sum_hu_dec("hu").alias("h"),
-        )
-    )
-    c = _mf_cum(
-        g1,
-        ["feat"],
-        out_cast=dec,
-        measures=(("cnt", "cum_n"), ("g", "cum_g"), ("h", "cum_h")),
-    ).crossJoin(F.broadcast(tot))
+    c, tot = _xgb_fold(_xgb_gh(_xgb_base(spark, sf_dir)))
     cb = c.withColumn(
         "bin",
         F.expr(f"((CAST(cum_n AS BIGINT) - 1) * {B}) DIV n"),
@@ -6748,40 +5754,7 @@ def q_xgb_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cum_n") < F.col("n"))
     )
     cnts = cand.agg(F.count("*").cast("bigint").alias("cand_bins"))
-    gl = F.col("cum_g").cast("double") / 1000000
-    hl = F.col("cum_h").cast("double") / 1000000000000
-    gr = (F.col("gt") - F.col("cum_g")).cast("double") / 1000000
-    hr = (F.col("ht") - F.col("cum_h")).cast("double") / 1000000000000
-    gtd = F.col("gt").cast("double") / 1000000
-    htd = F.col("ht").cast("double") / 1000000000000
-    kl = (gl * gl) / (hl + F.lit(1.0))
-    kr = (gr * gr) / (hr + F.lit(1.0))
-    key = F.lit(0.0) - (kl + kr)
-    p = (
-        cand.withColumn("key", key)
-        .orderBy("key", "feat", "val")
-        .limit(1)
-        .select(
-            "feat",
-            F.col("bin").cast("bigint").alias("bin"),
-            F.col("val").alias("threshold"),
-            F.col("cum_n").cast("bigint").alias("n_left"),
-            (F.col("n") - F.col("cum_n")).cast("bigint").alias("n_right"),
-            pround(gl, 6).alias("g_left"),
-            pround(hl, 6).alias("h_left"),
-            pround(gr, 6).alias("g_right"),
-            pround(hr, 6).alias("h_right"),
-            pround(
-                F.lit(0.5)
-                * ((kl + kr) - (gtd * gtd) / (htd + F.lit(1.0))),
-                6,
-            ).alias("gain"),
-            pround(F.lit(0.0) - F.lit(0.1) * gl / (hl + F.lit(1.0)), 6).alias(
-                "w_left"
-            ),
-            pround(F.lit(0.0) - F.lit(0.1) * gr / (hr + F.lit(1.0)), 6).alias(
-                "w_right"
-            ),
-        )
+    p = _newton_take(
+        cand, feat=("feat", F.col("bin").cast("bigint").alias("bin"))
     )
     return p.crossJoin(F.broadcast(cnts))

@@ -50,6 +50,10 @@ def get_spark(app_name: str = "fraud_detection_spark") -> SparkSession:
         # JVM error messages (guide §1.2 "per-task work" applied to
         # the driver's own hot loop).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # ANSI is the Spark 4 default; pinned because the trainers' exact
+        # BIGINT sums (ml_metrics._sum_gu_dec/_sum_hu_dec) rely on an
+        # overflow raising ARITHMETIC_OVERFLOW instead of wrapping.
+        .config("spark.sql.ansi.enabled", "true")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -61,11 +65,17 @@ def get_spark(app_name: str = "fraud_detection_spark") -> SparkSession:
     # Make it deterministic: ensure the runtime conf is false even on a
     # reused pre-existing session, and reset the latch so the next op
     # re-reads the (now false) conf.
-    if spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") != "false":
-        spark.conf.set("spark.python.sql.dataFrameDebugging.enabled", "false")
-    import pyspark.errors.utils as _pyspark_errors_utils
-
-    if getattr(_pyspark_errors_utils, "_enable_debugging_cache", None) is not False:
+    # The latch is private PySpark API: if a release moves it, skip the
+    # reset and keep the (slower, still correct) debugging path.
+    flag = "spark.python.sql.dataFrameDebugging.enabled"
+    if spark.conf.get(flag, "true") != "false":
+        spark.conf.set(flag, "false")
+    try:
+        import pyspark.errors.utils as _pyspark_errors_utils
+    except ImportError:
+        return spark
+    latch = getattr(_pyspark_errors_utils, "_enable_debugging_cache", False)
+    if latch is not False:
         _pyspark_errors_utils._enable_debugging_cache = None
     return spark
 

@@ -19,7 +19,9 @@ plus the 9 non-self copies of the query vector).
 
 Gated behind SPARK_GRAFT_SCALE_TESTS=1 (~2 min at sf0.1). Measured
 numbers live in SCALE.md ("Dedup/ANN families, 10x smoke") —
-re-measure here when the kernels change.
+re-measure here when the kernels change. The timing-free ANN closed
+form also runs ungated at the test SF, so a drifted kernel signature
+fails the normal suite instead of hiding behind the gate.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from pyspark.sql import functions as F
 SCALE_SF_DIR = os.environ.get("SPARK_GRAFT_SCALE_SF_DIR", "/root/testdata/sf0.1")
 REPLICAS = 10
 
-pytestmark = pytest.mark.skipif(
+scale = pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_SCALE_TESTS") != "1",
     reason="scale exercise; run with SPARK_GRAFT_SCALE_TESTS=1",
 )
@@ -103,6 +105,7 @@ def _timed_count(df):
     return n, time.time() - t0
 
 
+@scale
 def test_jaccard_candidate_build_scales_linearly(spark):
     """MinHash blocking is CONTENT-dependent, so salted replicas are
     fresh hash draws, not blocking-isomorphic copies (measured 10.10x
@@ -156,6 +159,7 @@ def test_jaccard_candidate_build_scales_linearly(spark):
     )
 
 
+@scale
 def test_neardup_sources_rollup_scales(spark):
     """The per-(source, source) attribution over the replicated pair
     set: replica 0 (salt-identical to the 1x corpus) must reproduce
@@ -207,11 +211,9 @@ def test_neardup_sources_rollup_scales(spark):
     assert int(full.n_pairs.sum()) == pairs10_df.count()
 
 
-def test_ivfpq_probe_candidates_scale_linearly(spark):
-    """Coarse-cell probe pruning at 10x corpus: same embeddings, so
-    cells replicate and the candidate count obeys the closed form
-    cand10 = 10*cand1 + 9 (copies of candidates + the 9 non-self
-    query copies); wall stays ~linear."""
+def _ivfpq_probe_counts(spark, sf_dir):
+    """(cand1, wall1, cand10, wall10): coarse-cell probe candidates of
+    the corpus and of its 10x vec_id-salted copy."""
     from fraud_detection_spark.operators.similarity import (
         _IVFPQ_HAM,
         QUERY_VEC_ID,
@@ -220,12 +222,12 @@ def test_ivfpq_probe_candidates_scale_linearly(spark):
     )
     from fraud_detection_spark.sources import load_table
 
-    emb = load_table(spark, SCALE_SF_DIR, "embeddings").select(
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("e")
     )
 
     def probe_cands(base):
-        b = base.withColumn("cell", _coarse_cell(F.col("e")))
+        b = base.withColumn("cell", _coarse_cell("e"))
         qrow = b.filter(F.col("vec_id") == QUERY_VEC_ID).select(
             F.col("cell").alias("qcell")
         )
@@ -245,6 +247,23 @@ def test_ivfpq_probe_candidates_scale_linearly(spark):
     probe_cands(emb).count()  # warm
     c1, t1 = _timed_count(probe_cands(emb))
     c10, t10 = _timed_count(probe_cands(emb10))
+    return c1, t1, c10, t10
+
+
+def test_ivfpq_probe_candidates_closed_form(spark, sf_dir):
+    """The cand10 = 10*cand1 + 9 closed form at the test SF, ungated:
+    pins the probe kernel's signature and semantics in tier-1."""
+    c1, _, c10, _ = _ivfpq_probe_counts(spark, sf_dir)
+    assert c10 == REPLICAS * c1 + (REPLICAS - 1), (c1, c10)
+
+
+@scale
+def test_ivfpq_probe_candidates_scale_linearly(spark):
+    """Coarse-cell probe pruning at 10x corpus: same embeddings, so
+    cells replicate and the candidate count obeys the closed form
+    cand10 = 10*cand1 + 9 (copies of candidates + the 9 non-self
+    query copies); wall stays ~linear."""
+    c1, t1, c10, t10 = _ivfpq_probe_counts(spark, SCALE_SF_DIR)
     assert c10 == REPLICAS * c1 + (REPLICAS - 1), (c1, c10)
     # timing recorded, not asserted (ADVICE r12 #2) — see SCALE.md
     print(f"SCALE ivfpq probe: 1x={c1}@{t1:.2f}s 10x={c10}@{t10:.2f}s")

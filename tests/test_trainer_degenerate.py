@@ -1,0 +1,80 @@
+"""Degenerate-input parity for the trainer family: each query below
+must return its DuckDB oracle's rows exactly (the test_partition_stress
+rule) when lineitem is empty, holds a single row, or holds one class
+only (no l_returnflag = 'R'). The inputs derive from the test SF's
+parquet under a pytest tmp dir: lineitem is rewritten by a DuckDB
+COPY and every other table is symlinked."""
+
+from __future__ import annotations
+
+import os
+
+import duckdb
+import pytest
+from test_partition_stress import assert_exact
+
+from fraud_detection_spark.registry import load_all
+from fraud_detection_spark.sources import TABLES
+
+REGISTRY = load_all()
+
+TRAINERS = (
+    "q_stump",
+    "q_tree2",
+    "q_tree3",
+    "q_tree5",
+    "q_tree5_confusion",
+    "q_tree_multifeat",
+    "q_xgb_round",
+    "q_xgb_round2",
+    "q_xgb_fit",
+    "q_xgb_tree2",
+    "q_xgb_boosted_tree2",
+    "q_xgb_gamma",
+    "q_xgb_monotone",
+    "q_xgb_alpha",
+    "q_xgb_hist",
+)
+
+# lineitem rewrite per case (a SELECT tail over the shipped table)
+CASES = {
+    "empty": "WHERE FALSE",
+    "one_row": "ORDER BY l_orderkey, l_linenumber LIMIT 1",
+    "one_class": "WHERE l_returnflag <> 'R'",
+}
+
+
+@pytest.fixture(scope="module")
+def degenerate(tmp_path_factory, sf_dir):
+    """case -> (sf dir, DuckDB connection with views over it)."""
+    out = {}
+    for case, tail in CASES.items():
+        d = tmp_path_factory.mktemp(f"degenerate_{case}")
+        con = duckdb.connect()
+        for t in TABLES:
+            src = os.path.join(sf_dir, f"{t}.parquet")
+            dst = os.path.join(d, f"{t}.parquet")
+            if t == "lineitem":
+                con.execute(
+                    f"COPY (SELECT * FROM read_parquet('{src}') {tail}) "
+                    f"TO '{dst}' (FORMAT PARQUET)"
+                )
+            elif os.path.exists(src):
+                os.symlink(src, dst)
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{dst}')"
+            )
+        out[case] = (str(d), con)
+    yield out
+    for _, con in out.values():
+        con.close()
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+@pytest.mark.parametrize("name", TRAINERS)
+def test_trainer_degenerate_input_matches_oracle(spark, degenerate, name, case):
+    d, con = degenerate[case]
+    q = REGISTRY[name]
+    want = con.execute(q.oracle).df()
+    got = q.fn(spark, d).toPandas()
+    assert_exact(got, want, f"{name}@{case}")
