@@ -127,7 +127,9 @@ def q_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_view",
             "n_click",
             "n_purchase",
-            pround(F.col("n_click") * 1.0 / F.col("n_view"), 6).alias("view_to_click"),
+            pround(
+                F.col("n_click") * 1.0 / F.nullif(F.col("n_view"), F.lit(0)), 6
+            ).alias("view_to_click"),
             pround(
                 F.col("n_purchase") * 1.0 / F.nullif(F.col("n_click"), F.lit(0)), 6
             ).alias("click_to_purchase"),

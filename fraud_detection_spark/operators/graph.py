@@ -289,7 +289,9 @@ def pagerank_ranks(
     ).select("src", "dst", "share").localCheckpoint()
 
     nodes = ed.select(F.col("src").alias("node")).distinct()
-    n_nodes = nodes.count()  # bounded: |customers| + |suppliers|
+    # bounded: |customers| + |suppliers|; with no edges there are no
+    # nodes to rank and the 1/n literals below are never evaluated
+    n_nodes = max(nodes.count(), 1)
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
     for i in range(iters):
         contrib = (
@@ -1281,7 +1283,8 @@ def hits_vectors(e0: DataFrame) -> tuple[DataFrame, DataFrame]:
     ))
     e = e0.coalesce(parts)
     ids = e.select("custkey").distinct().localCheckpoint()
-    n_cust = ids.count()
+    # with no edges there are no ids and the start vector is empty
+    n_cust = max(ids.count(), 1)
     h = ids.select(
         F.col("custkey").alias("k"),
         F.lit(int(float(_HITS_FP) / n_cust + 0.5)).cast("bigint").alias("u"),
@@ -1301,7 +1304,9 @@ def hits_vectors(e0: DataFrame) -> tuple[DataFrame, DataFrame]:
         # metadata); float(int-Decimal) is the same nearest-double
         # CAST(.. AS DOUBLE) performs, so the renorm stays
         # engine-identical.
-        t = float(int(r.filter(F.col("g") == 1).collect()[0]["r"]))
+        # An empty fold has no total row (and no rows to scale).
+        tot = r.filter(F.col("g") == 1).collect()
+        t = float(int(tot[0]["r"])) if tot else 1.0
         return r.filter(F.col("g") == 0).select(
             F.col(dst).alias("k"),
             F.floor(

@@ -1,9 +1,12 @@
-"""Degenerate-input parity for the trainer family: each query below
-must return its DuckDB oracle's rows exactly (the test_partition_stress
-rule) when lineitem is empty, holds a single row, or holds one class
-only (no l_returnflag = 'R'). The inputs derive from the test SF's
-parquet under a pytest tmp dir: lineitem is rewritten by a DuckDB
-COPY and every other table is symlinked."""
+"""Degenerate-input parity: each query below must return its DuckDB
+oracle's rows exactly (the test_partition_stress rule) on inputs the
+fixtures never hold. The trainer family runs with lineitem empty,
+holding a single row, or holding one class only (no
+l_returnflag = 'R'); the queries that divide by a fact count run with
+lineitem and events both empty. The inputs derive from the test SF's
+parquet under a pytest tmp dir: each rewritten table is a DuckDB COPY
+of a SELECT tail over the shipped one, and every other table is
+symlinked."""
 
 from __future__ import annotations
 
@@ -25,6 +28,10 @@ TRAINERS = (
     "q_tree5",
     "q_tree5_confusion",
     "q_tree_multifeat",
+    "q_boosted_stumps",
+    "q_boosted_tree2",
+    "q_boosted_multifeat",
+    "q_boosted_mf_tree2",
     "q_xgb_round",
     "q_xgb_round2",
     "q_xgb_fit",
@@ -44,30 +51,48 @@ CASES = {
 }
 
 
+# queries that divide by a fact-table count
+EMPTY_FACTS_QUERIES = ("q_funnel_steps", "q_pagerank", "q_hits")
+
+
+def _rewrite(d, sf_dir: str, tails: dict[str, str]):
+    """A DuckDB connection with views over ``d``, where each table of
+    ``tails`` is the shipped one filtered by its SELECT tail and every
+    other table is a symlink to the shipped one."""
+    con = duckdb.connect()
+    for t in TABLES:
+        src = os.path.join(sf_dir, f"{t}.parquet")
+        dst = os.path.join(d, f"{t}.parquet")
+        if t in tails:
+            con.execute(
+                f"COPY (SELECT * FROM read_parquet('{src}') {tails[t]}) "
+                f"TO '{dst}' (FORMAT PARQUET)"
+            )
+        elif os.path.exists(src):
+            os.symlink(src, dst)
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{dst}')")
+    return con
+
+
 @pytest.fixture(scope="module")
 def degenerate(tmp_path_factory, sf_dir):
     """case -> (sf dir, DuckDB connection with views over it)."""
     out = {}
     for case, tail in CASES.items():
         d = tmp_path_factory.mktemp(f"degenerate_{case}")
-        con = duckdb.connect()
-        for t in TABLES:
-            src = os.path.join(sf_dir, f"{t}.parquet")
-            dst = os.path.join(d, f"{t}.parquet")
-            if t == "lineitem":
-                con.execute(
-                    f"COPY (SELECT * FROM read_parquet('{src}') {tail}) "
-                    f"TO '{dst}' (FORMAT PARQUET)"
-                )
-            elif os.path.exists(src):
-                os.symlink(src, dst)
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{dst}')"
-            )
-        out[case] = (str(d), con)
+        out[case] = (str(d), _rewrite(d, sf_dir, {"lineitem": tail}))
     yield out
     for _, con in out.values():
         con.close()
+
+
+@pytest.fixture(scope="module")
+def empty_facts(tmp_path_factory, sf_dir):
+    """(sf dir, DuckDB connection) with lineitem and events empty."""
+    d = tmp_path_factory.mktemp("degenerate_empty_facts")
+    con = _rewrite(d, sf_dir, {"lineitem": "WHERE FALSE", "events": "WHERE FALSE"})
+    yield str(d), con
+    con.close()
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
@@ -78,3 +103,12 @@ def test_trainer_degenerate_input_matches_oracle(spark, degenerate, name, case):
     want = con.execute(q.oracle).df()
     got = q.fn(spark, d).toPandas()
     assert_exact(got, want, f"{name}@{case}")
+
+
+@pytest.mark.parametrize("name", EMPTY_FACTS_QUERIES)
+def test_empty_facts_matches_oracle(spark, empty_facts, name):
+    d, con = empty_facts
+    q = REGISTRY[name]
+    want = con.execute(q.oracle).df()
+    got = q.fn(spark, d).toPandas()
+    assert_exact(got, want, f"{name}@empty_facts")

@@ -17,8 +17,11 @@ row count while their integer contents scale in closed form:
   pair becomes 10x10 replica pairs of the same orientation; same-value
   replicas add only ties, which nc/nd never count).
 
-Timing is recorded, never asserted (ADVICE r12 #2). Gated behind
-SPARK_GRAFT_SCALE_TESTS=1; measured numbers live in SCALE.md.
+Timing is recorded, never asserted (ADVICE r12 #2). The timed runs
+are gated behind SPARK_GRAFT_SCALE_TESTS=1; measured numbers live in
+SCALE.md. The tree_cum_table and multi-feature fold closed forms also
+run ungated at the test SF, so a reshaped kernel fails the normal
+suite instead of rotting behind the gate.
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ from pyspark.sql import functions as F
 SCALE_SF_DIR = os.environ.get("SPARK_GRAFT_SCALE_SF_DIR", "/root/testdata/sf0.1")
 REPLICAS = 10
 
-pytestmark = pytest.mark.skipif(
+scale = pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_SCALE_TESTS") != "1",
     reason="scale exercise; run with SPARK_GRAFT_SCALE_TESTS=1",
 )
@@ -53,6 +56,7 @@ def _timed_count(df):
     return n, time.time() - t0
 
 
+@scale
 def test_delong_unit_tables_fixed_under_fact_replication(spark):
     """q_delong's broadcast claim (ml_metrics 'the unit tables are
     bounded by the 6-dp score domain ... REGARDLESS of fact size'):
@@ -92,16 +96,17 @@ def test_delong_unit_tables_fixed_under_fact_replication(spark):
     print(f"SCALE delong units: {n1} rows @1x {w1:.2f}s @10x {w10:.2f}s")
 
 
-def test_tree_cum_table_fixed_under_fact_replication(spark):
+def _tree_cum_replicated(spark, sf_dir):
     """The q_auc/q_stump/q_tree* bucket-offset prefix table is bounded
     by the distinct 6-dp score domain: 10x fact rows -> identical row
-    count, cum counts and totals exactly 10x."""
+    count, cum counts and totals exactly 10x. Returns the 1x/10x row
+    counts and count seconds."""
     from fraud_detection_spark.operators.ml_metrics import (
         scored,
         tree_cum_table,
     )
 
-    s1 = scored(spark, SCALE_SF_DIR).select("label", "score")
+    s1 = scored(spark, sf_dir).select("label", "score")
     s10 = _replicate(s1)
 
     c1 = tree_cum_table(s1)
@@ -130,9 +135,22 @@ def test_tree_cum_table_fixed_under_fact_replication(spark):
         )
     )
     assert bad.count() == 0
+    return n1, w1, n10, w10
+
+
+def test_tree_cum_table_replication_closed_form(spark, sf_dir):
+    """The replication closed form at the test SF, ungated: pins
+    tree_cum_table's signature and semantics in tier-1."""
+    _tree_cum_replicated(spark, sf_dir)
+
+
+@scale
+def test_tree_cum_table_fixed_under_fact_replication(spark):
+    n1, w1, n10, w10 = _tree_cum_replicated(spark, SCALE_SF_DIR)
     print(f"SCALE tree cum: {n1} rows @1x {w1:.2f}s @10x {w10:.2f}s")
 
 
+@scale
 def test_kendall_grid_fixed_under_fact_replication(spark):
     """q_kendall_tau's dense grid is |distinct vx| x 24 regardless of
     fact rows: 10x replication keeps the grid fixed; n scales 10x and
@@ -193,6 +211,7 @@ def _replicate_jittered(df, jitter_cols, k=REPLICAS):
     return out.drop("_rep")
 
 
+@scale
 def test_rank_units_bounded_under_domain_growth(spark):
     """q_delong's _rank_units under 10x replicas each shifted to NEW
     6-dp score points: the unit table GROWS (unlike the fixed-value
@@ -219,6 +238,7 @@ def test_rank_units_bounded_under_domain_growth(spark):
     )
 
 
+@scale
 def test_tree_cum_table_bounded_under_domain_growth(spark):
     """The tree ladder's prefix-count table under jittered replicas:
     grows with new 6-dp scores, bounded by the score domain."""
@@ -238,6 +258,7 @@ def test_tree_cum_table_bounded_under_domain_growth(spark):
           f"{w1:.2f}s -> {w10:.2f}s")
 
 
+@scale
 def test_kendall_grid_bounded_under_domain_growth(spark):
     """q_kendall_tau's dense grid under replicas jittered to NEW vx
     units: the grid grows (each replica adds distinct 1e-4-unit
@@ -276,6 +297,7 @@ def test_kendall_grid_bounded_under_domain_growth(spark):
           f"cells (facts {facts10}); 10x {w10:.2f}s")
 
 
+@scale
 def test_cindex_grid_bounded_under_user_growth(spark):
     """q_cindex's fix for VERDICT r13 #1, exercised where the old
     design failed: grow the USER axis 10x with genuinely NEW users
@@ -341,45 +363,51 @@ def test_cindex_grid_bounded_under_user_growth(spark):
     )
 
 
-def test_mf_trainer_cell_tables_fixed_under_fact_replication(spark):
+def _mf_cells_replicated(spark, sf_dir):
     """The multi-feature trainer family's per-(feat, val) fold — the
     only non-broadcast structure in q_tree_multifeat /
     q_boosted_multifeat / q_boosted_mf_tree2 — is bounded by the three
     6-dp feature DOMAINS, not fact rows: 10x value-identical fact
     replication keeps the cell table exactly fixed while counts scale
-    10x."""
-    from fraud_detection_spark.operators.ml_metrics import (
-        _mf_base,
-        _mf_unpivot,
-    )
+    10x. Returns the 1x/10x row counts and count seconds."""
+    from fraud_detection_spark.operators.ml_metrics import _mf_base, _mf_fold
 
-    base1 = _mf_base(spark, SCALE_SF_DIR)
+    base1 = _mf_base(spark, sf_dir)
     base10 = _replicate(base1)
 
-    def cells(b):
-        return (
-            _mf_unpivot(b, [])
-            .groupBy("feat", "val")
-            .agg(F.count("*").cast("bigint").alias("cnt"))
-        )
-
-    c1, c10 = cells(base1), cells(base10)
+    c1, c10 = _mf_fold(base1, []), _mf_fold(base10, [])
     n1, w1 = _timed_count(c1)
     n10, w10 = _timed_count(c10)
     assert n1 == n10, (n1, n10)
     bad = (
-        c1.select("feat", "val", F.col("cnt").alias("c1"))
+        c1.select(
+            "feat", "val", F.col("cnt").alias("c1"), F.col("pos").alias("p1")
+        )
         .join(c10, ["feat", "val"], "full")
         .filter(
             (F.col("cnt") != REPLICAS * F.col("c1"))
+            | (F.col("pos") != REPLICAS * F.col("p1"))
             | F.col("c1").isNull()
             | F.col("cnt").isNull()
         )
     )
     assert bad.count() == 0
+    return n1, w1, n10, w10
+
+
+def test_mf_trainer_cells_replication_closed_form(spark, sf_dir):
+    """The replication closed form at the test SF, ungated: pins the
+    grower's _mf_base/_mf_fold signatures and semantics in tier-1."""
+    _mf_cells_replicated(spark, sf_dir)
+
+
+@scale
+def test_mf_trainer_cell_tables_fixed_under_fact_replication(spark):
+    n1, w1, n10, w10 = _mf_cells_replicated(spark, SCALE_SF_DIR)
     print(f"SCALE mf-trainer cells: {n1} rows @1x {w1:.2f}s @10x {w10:.2f}s")
 
 
+@scale
 def test_mf_trainer_cell_tables_bounded_under_domain_growth(spark):
     """VERDICT r14 #6: the fixed-value twin above replicates values
     identically; this one jitters all THREE feature columns onto NEW
@@ -388,12 +416,8 @@ def test_mf_trainer_cell_tables_bounded_under_domain_growth(spark):
     per-feature 6-dp DOMAIN bound span*1e6+1 — the claim that actually
     carries the bucket-offset broadcast at 100 TB, where facts dwarf
     every feature domain."""
-    from fraud_detection_spark.operators.ml_metrics import (
-        _mf_base,
-        _mf_unpivot,
-    )
-
     from fraud_detection_spark.functions import pround
+    from fraud_detection_spark.operators.ml_metrics import _mf_base, _mf_fold
 
     base1 = _mf_base(spark, SCALE_SF_DIR)
     # jitter, then re-round to the 6-dp grid — _mf_base guarantees
@@ -411,14 +435,7 @@ def test_mf_trainer_cell_tables_bounded_under_domain_growth(spark):
         *[pround(F.col(c), 6).alias(c) for c in ("disc", "price", "qty")],
     )
 
-    def cells(b):
-        return (
-            _mf_unpivot(b, [])
-            .groupBy("feat", "val")
-            .agg(F.count("*").cast("bigint").alias("cnt"))
-        )
-
-    c1, c10 = cells(base1), cells(base10)
+    c1, c10 = _mf_fold(base1, []), _mf_fold(base10, [])
     n1, w1 = _timed_count(c1)
     n10, w10 = _timed_count(c10)
     assert n1 < n10  # the jitter really created new domain points
@@ -445,6 +462,7 @@ def test_mf_trainer_cell_tables_bounded_under_domain_growth(spark):
     )
 
 
+@scale
 def test_xgb_gh_histogram_fixed_under_fact_replication(spark):
     """q_xgb_round's per-(feat, val) g/h histogram — the structure a
     distributed XGBoost builds per round — is bounded by the feature
@@ -497,6 +515,7 @@ def test_xgb_gh_histogram_fixed_under_fact_replication(spark):
     print(f"SCALE xgb g/h cells: {n1} rows @1x {w1:.2f}s @10x {w10:.2f}s")
 
 
+@scale
 def test_xgb_hist_boundaries_bounded_under_domain_growth(spark):
     """q_xgb_hist's 100 TB claim: the candidate-boundary table is
     bounded by the BIN count (<= 256 per feature), not by distinct
