@@ -20,13 +20,20 @@ crash-safe file MERGE:
 - the target is hash-bucketed on ``transaction_id`` (``pmod(xxhash64)``)
   so a batch reads and rewrites ONLY the buckets its keys fall in —
   cost is O(touched buckets), not O(table), per batch;
+- each commit writes ONE parquet file per touched bucket: the merged
+  rows are shuffled on the bucket id before the write, so every
+  bucket's rows sit in one write task. Write parallelism is one task
+  per touched bucket, less where bucket ids collide in the shuffle
+  hash and share a task; the next batch opens one file per bucket it
+  reads;
 - each bucket directory holds immutable version subdirs plus a
   ``_CURRENT`` pointer file; a commit writes the new version, then
-  atomically flips the pointer (``os.replace``). The old version
-  survives until the flip, so a crash at ANY point leaves every bucket
-  readable at a consistent version — recovery never sees an empty or
-  half-swapped target, and checkpoint replay of the same batch
-  converges (merge is keyed on transaction_id).
+  atomically flips the pointer (``os.replace``). The live version is
+  never deleted before the flip (a replay whose version name is live
+  commits under a fresh name), so a crash at ANY point leaves every
+  bucket readable at a consistent version — recovery never sees an
+  empty or half-swapped target, and checkpoint replay of the same
+  batch converges (merge is keyed on transaction_id).
 
 Read the table through :func:`read_results` (current version of every
 bucket), which preserves the idempotence contract the reference gets
@@ -159,6 +166,19 @@ def read_results(spark: SparkSession, results_dir: str) -> DataFrame | None:
     return spark.read.parquet(*paths)
 
 
+def _commit_name(bucket_dir: str, version: str) -> str:
+    """Directory name for this commit of the bucket: ``version``, unless
+    that is the live version (a replay of an already-committed batch),
+    which must survive until the pointer flips — then the first
+    ``version.k`` that is not live. A dir of the chosen name is a
+    leftover of a crashed commit and is safe to replace."""
+    live, name, k = _current_version(bucket_dir), version, 0
+    while name == live:
+        k += 1
+        name = f"{version}.{k}"
+    return name
+
+
 def upsert_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -171,13 +191,14 @@ def upsert_batch(
 
     Only the hash buckets containing incoming keys are read and
     rewritten (one Spark job stages all of them, hive-partitioned by
-    bucket); untouched buckets' files are not opened, moved, or
-    rewritten. Per-bucket commit = rename staged version into place,
-    then atomic pointer flip — crash-safe at every step."""
+    bucket, one file per bucket); untouched buckets' files are not
+    opened, moved, or rewritten. Per-bucket commit = rename staged
+    version into place, then atomic pointer flip — crash-safe at every
+    step."""
     spark = batch_df.sparkSession
     bucket_of = F.pmod(F.xxhash64("transaction_id"), F.lit(num_buckets))
-    # persist: the batch feeds THREE jobs (touched-bucket listing,
-    # anti-join, staged write) — uncached, each job would re-scan the
+    # persist: the batch feeds the touched-bucket listing, the anti-join
+    # and the staged write — uncached, each would re-scan the
     # micro-batch's source files (measured 3x input amplification in
     # the sf0.1 serving exercise, tests/test_streaming_scale.py)
     incoming = (
@@ -206,8 +227,12 @@ def upsert_batch(
         if v is not None:
             existing_paths.append(os.path.join(bdir, v))
     if existing_paths:
-        existing = spark.read.parquet(*existing_paths).withColumn(
-            "pbucket", bucket_of
+        # the committed rows have the batch's own schema: passing it
+        # skips the footer schema-inference job
+        existing = (
+            spark.read.schema(batch_df.schema)
+            .parquet(*existing_paths)
+            .withColumn("pbucket", bucket_of)
         )
         keep = existing.join(
             incoming.select("transaction_id"), "transaction_id", "left_anti"
@@ -216,22 +241,25 @@ def upsert_batch(
     else:
         merged = incoming
 
-    # one job stages every touched bucket as a hive partition
+    # one write stages every touched bucket as a hive partition; the
+    # shuffle puts each bucket in one task, so each gets one file
     stage = os.path.join(results_dir, f".stage-{batch_id}")
     try:
-        merged.write.mode("overwrite").partitionBy("pbucket").parquet(stage)
+        merged.repartition(num_buckets, "pbucket").write.mode(
+            "overwrite"
+        ).partitionBy("pbucket").parquet(stage)
     finally:
         incoming.unpersist()
 
-    version = f"v{batch_id}"
     for b in touched:
         src = os.path.join(stage, f"pbucket={b}")
         if not os.path.isdir(src):
             continue
         bdir = os.path.join(root, str(b))
         os.makedirs(bdir, exist_ok=True)
+        version = _commit_name(bdir, f"v{batch_id}")
         dst = os.path.join(bdir, version)
-        if os.path.isdir(dst):  # replay of a half-committed batch
+        if os.path.isdir(dst):  # leftover of a crashed commit, not live
             shutil.rmtree(dst)
         os.rename(src, dst)
         _flip_pointer(bdir, version)

@@ -23,6 +23,27 @@ def write_requests(req_dir: str, rows: list[dict], fname: str) -> None:
             f.write(json.dumps(r) + "\n")
 
 
+def parquet_files(version_dir: str) -> int:
+    return sum(1 for n in os.listdir(version_dir) if n.endswith(".parquet"))
+
+
+def parquet_files_per_version(res_dir: str) -> list[int]:
+    """Number of parquet files in each bucket's current version."""
+    from fraud_detection_spark.streaming.serving import current_result_paths
+
+    return [parquet_files(v) for v in current_result_paths(res_dir)]
+
+
+def scored(spark, rows: list[tuple]):
+    from fraud_detection_spark.streaming.serving import REQUEST_SCHEMA, score_requests
+
+    return score_requests(spark.createDataFrame(rows, REQUEST_SCHEMA))
+
+
+def by_id(df) -> dict:
+    return {r["transaction_id"]: r.asDict() for r in df.collect()}
+
+
 def test_serving_stream_end_to_end(spark, dirs):
     from fraud_detection_spark.streaming.serving import run_serving_stream
 
@@ -143,6 +164,172 @@ def test_upsert_crash_recovery(spark, tmp_path):
     out2 = {r["transaction_id"]: r.asDict() for r in read_results(spark, res_dir).collect()}
     assert set(out2) == {"a", "b"}
     assert out2["a"]["correlation_id"] == "c2"
+
+
+def test_upsert_replay_crash_keeps_committed_rows(spark, tmp_path, monkeypatch):
+    """A replay of an already-committed batch finds its version name
+    live. A crash during that replay's commit must not lose the bucket:
+    the live version may not be deleted before the pointer flips."""
+    from fraud_detection_spark.streaming.serving import (
+        _bucket_root,
+        current_result_paths,
+        read_results,
+        upsert_batch,
+    )
+
+    res_dir = str(tmp_path / "results")
+    os.makedirs(res_dir)
+    upsert_batch(
+        scored(spark, [(f"t{i}", "c", float(i), 1.0, 1.0) for i in range(40)]),
+        0,
+        res_dir,
+    )
+    batch1 = scored(spark, [("t1", "c1b", 50.0, 1.0, 1.0)])
+    upsert_batch(batch1, 1, res_dir)
+    assert read_results(spark, res_dir).count() == 40
+
+    def crash(src, dst):
+        raise OSError("crash before rename")
+
+    monkeypatch.setattr(os, "rename", crash)
+    with pytest.raises(OSError, match="crash before rename"):
+        upsert_batch(batch1, 1, res_dir)
+    monkeypatch.undo()
+    after_crash = by_id(read_results(spark, res_dir))
+    assert len(after_crash) == 40, "a crashed replay lost committed rows"
+    assert after_crash["t1"]["correlation_id"] == "c1b"
+
+    # the replay, re-run to completion, converges under a fresh name
+    # and GCs the one it replaced
+    upsert_batch(batch1, 1, res_dir)
+    out = read_results(spark, res_dir)
+    rows = by_id(out)
+    assert out.count() == len(rows) == 40
+    assert rows["t1"]["correlation_id"] == "c1b"
+    assert parquet_files_per_version(res_dir) == [1] * 8
+    assert "v1.1" in {os.path.basename(v) for v in current_result_paths(res_dir)}
+    root = _bucket_root(res_dir)
+    for b in os.listdir(root):
+        assert sum(d.startswith("v") for d in os.listdir(os.path.join(root, b))) == 1
+
+
+def test_serving_stream_one_file_per_bucket_version(spark, tmp_path):
+    """Each commit writes one parquet file per touched bucket, so after
+    a multi-batch stream every current bucket version holds one file."""
+    from fraud_detection_spark.streaming.serving import read_results, run_serving_stream
+
+    req_dir = str(tmp_path / "requests")
+    os.makedirs(req_dir)
+    for k in range(3):
+        # each file updates half of the previous file's keys
+        write_requests(
+            req_dir,
+            [
+                {"transaction_id": f"t{i}", "correlation_id": f"c{k}",
+                 "f_value": float(i), "f_k": float(k), "f_hour": 1.0}
+                for i in range(20 * k, 20 * k + 40)
+            ],
+            f"batch{k}.json",
+        )
+        # the file source orders a backlog by modification time
+        os.utime(os.path.join(req_dir, f"batch{k}.json"), (1e9 + k, 1e9 + k))
+    res_dir = str(tmp_path / "results")
+    stats = run_serving_stream(
+        spark, req_dir, res_dir, str(tmp_path / "ckpt"), max_files_per_trigger=1
+    )
+    assert len(stats["batches"]) == 3 and stats["rows"] == 120
+    out = read_results(spark, res_dir)
+    rows = by_id(out)
+    assert out.count() == len(rows) == 80
+    assert rows["t39"]["correlation_id"] == "c1"  # updated by file 1
+    assert rows["t79"]["correlation_id"] == "c2"
+    assert parquet_files_per_version(res_dir) == [1] * 8
+
+
+def test_upsert_merges_into_multi_file_versions(spark, tmp_path):
+    """Tables committed before one-file-per-bucket hold several files
+    per bucket version. A merge into them (reading with the batch's
+    schema instead of inferring it) must keep every untouched row
+    exactly and replace the updated keys."""
+    from pyspark.sql import functions as F
+
+    from fraud_detection_spark.streaming.serving import (
+        NUM_BUCKETS,
+        _bucket_root,
+        _flip_pointer,
+        current_result_paths,
+        read_results,
+        upsert_batch,
+    )
+
+    res_dir = str(tmp_path / "results")
+    stage = str(tmp_path / "legacy")
+    (
+        scored(spark, [(f"t{i}", "c0", float(i), 2.0, 3.0) for i in range(60)])
+        .withColumn("pbucket", F.pmod(F.xxhash64("transaction_id"), F.lit(NUM_BUCKETS)))
+        .repartition(4)
+        .write.partitionBy("pbucket")
+        .parquet(stage)
+    )
+    for d in os.listdir(stage):
+        if d.startswith("pbucket="):
+            bdir = os.path.join(_bucket_root(res_dir), d.split("=")[1])
+            os.makedirs(bdir)
+            os.rename(os.path.join(stage, d), os.path.join(bdir, "v0"))
+            _flip_pointer(bdir, "v0")
+    assert max(parquet_files_per_version(res_dir)) > 1
+    before = by_id(read_results(spark, res_dir))
+    assert len(before) == 60
+
+    updates = [(f"t{i}", "c1", float(i), 9.0, 9.0) for i in range(0, 80, 4)]
+    upsert_batch(scored(spark, updates), 1, res_dir)
+    after = by_id(read_results(spark, res_dir))
+    updated = {u[0] for u in updates}
+    assert set(after) == set(before) | updated
+    for k, row in after.items():
+        if k in updated:
+            assert row["correlation_id"] == "c1" and row["f_k"] == 9.0, k
+        else:
+            assert row == before[k], k
+    rewritten = [
+        parquet_files(v)
+        for v in current_result_paths(res_dir)
+        if os.path.basename(v) == "v1"
+    ]
+    assert rewritten and set(rewritten) == {1}, rewritten
+
+
+# jobs one warm upsert into an existing table runs, measured at local[4]:
+# touched-bucket listing, anti-join and the shuffled staged write (8 also
+# before the one-file-per-bucket write: its shuffle stage took the place
+# of the schema-inference job it removed)
+UPSERT_JOB_CEILING = 8
+
+
+def test_warm_upsert_job_budget(spark, tmp_path):
+    """Pins the jobs of one warm upsert (job group + status tracker), so
+    a re-added pass over the batch or the table fails here."""
+    from fraud_detection_spark.streaming.serving import upsert_batch
+
+    res_dir = str(tmp_path / "results")
+    os.makedirs(res_dir)
+    def batch(lo, hi):
+        rows = [(f"t{i}", "c", float(i), 1.0, 1.0) for i in range(lo, hi)]
+        return scored(spark, rows)
+
+    upsert_batch(batch(0, 40), 0, res_dir)
+    upsert_batch(batch(30, 70), 1, res_dir)
+    sc = spark.sparkContext
+    group = "test-warm-upsert-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        upsert_batch(batch(50, 90), 2, res_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= UPSERT_JOB_CEILING, (
+        f"one warm upsert ran {jobs} Spark jobs (ceiling {UPSERT_JOB_CEILING})"
+    )
 
 
 def test_scoring_logic_batch_stream_parity(spark):

@@ -9,8 +9,11 @@ result table converges to one row per transaction. The measured
 rows/s + batch latency figures live in SCALE.md ("Serving throughput,
 measured" — re-measure here when the pipeline changes).
 
-Gated behind SPARK_GRAFT_SCALE_TESTS=1: ~1-2 min of wall clock at
-sf0.1 is scale-exercise budget, not unit-suite budget.
+The sf0.1 exercises are gated behind SPARK_GRAFT_SCALE_TESTS=1: ~1-2
+min of wall clock at sf0.1 is scale-exercise budget, not unit-suite
+budget. The same serving run over the test SF's events runs ungated,
+so a change to the serving helpers fails the normal suite instead of
+rotting behind the gate.
 """
 
 from __future__ import annotations
@@ -22,13 +25,18 @@ import pytest
 
 SCALE_SF_DIR = os.environ.get("SPARK_GRAFT_SCALE_SF_DIR", "/root/testdata/sf0.1")
 
-pytestmark = pytest.mark.skipif(
+scale = pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_SCALE_TESTS") != "1",
     reason="scale exercise; run with SPARK_GRAFT_SCALE_TESTS=1",
 )
 
 
-def test_serving_stream_full_sf01_events(spark, tmp_path):
+def _serve_events(spark, sf_dir, tmp_path, n_files, max_files_per_trigger):
+    """Every event of ``sf_dir`` as one request, written as ``n_files``
+    JSON files and drained through ``run_serving_stream``; checks the
+    stream read every record, the table holds one COMPLETED row per
+    transaction and every current bucket version holds one file.
+    Returns the stream's progress summary."""
     from pyspark.sql import functions as F
 
     from fraud_detection_spark.sources import events_with_time
@@ -36,8 +44,9 @@ def test_serving_stream_full_sf01_events(spark, tmp_path):
         read_results,
         run_serving_stream,
     )
+    from tests.test_streaming import parquet_files_per_version
 
-    ev = events_with_time(spark, SCALE_SF_DIR)
+    ev = events_with_time(spark, sf_dir)
     n_events = ev.count()
     requests = ev.select(
         F.col("event_id").cast("string").alias("transaction_id"),
@@ -47,23 +56,36 @@ def test_serving_stream_full_sf01_events(spark, tmp_path):
         ((F.col("ts_sec") % 86400) / 3600).cast("double").alias("f_hour"),
     )
     req_dir = str(tmp_path / "requests")
-    requests.repartition(16).write.json(req_dir)
+    requests.repartition(n_files).write.json(req_dir)
 
     results_dir = str(tmp_path / "results")
     stats = run_serving_stream(
-        spark, req_dir, results_dir, max_files_per_trigger=2
+        spark, req_dir, results_dir, max_files_per_trigger=max_files_per_trigger
     )
 
     # every request processed, in a real multi-batch cadence
     assert stats["rows"] == n_events
-    assert len(stats["batches"]) >= 4, stats
+    assert len(stats["batches"]) >= n_files // max_files_per_trigger, stats
     # upsert converged: one row per transaction, all COMPLETED
     res = read_results(spark, results_dir)
     assert res is not None
     assert res.count() == n_events
     assert res.filter(F.col("status") != "COMPLETED").count() == 0
     assert res.select("transaction_id").distinct().count() == n_events
+    files = parquet_files_per_version(results_dir)
+    assert files and set(files) == {1}, files
+    return stats
 
+
+def test_serving_stream_test_sf_events(spark, sf_dir, tmp_path):
+    _serve_events(spark, sf_dir, tmp_path, n_files=4, max_files_per_trigger=1)
+
+
+@scale
+def test_serving_stream_full_sf01_events(spark, tmp_path):
+    stats = _serve_events(
+        spark, SCALE_SF_DIR, tmp_path, n_files=16, max_files_per_trigger=2
+    )
     per_row_ms = stats["ms"] / stats["rows"]
     print("\nSERVING_SCALE " + json.dumps(stats | {"per_row_ms": per_row_ms}))
     # sanity floor only (box-noise safe): well under the reference's
@@ -71,6 +93,7 @@ def test_serving_stream_full_sf01_events(spark, tmp_path):
     assert per_row_ms < 50, stats
 
 
+@scale
 def test_training_pipeline_full_sf01(spark):
     """End-to-end train->evaluate at sf0.1: the leak-free feature table
     (~10^5 rows) through the MLlib pipeline with a USER-GROUPED holdout
@@ -128,6 +151,7 @@ def test_training_pipeline_full_sf01(spark):
     assert auc >= 0.80, auc
 
 
+@scale
 def test_corpus_pipeline_full_sf01(spark, tmp_path):
     """Third end-to-end scale exercise: the full corpus-prep job at
     sf0.1 (5,000 docs) with EVERY optional stage on — exact dedup ->
@@ -169,6 +193,7 @@ def test_corpus_pipeline_full_sf01(spark, tmp_path):
     )
 
 
+@scale
 def test_session_path_stream_full_sf01(spark, tmp_path):
     """Streaming session-path twin at full sf0.1 volume (VERDICT r7
     #5): the whole events table as a 3-slice in-order backlog through
