@@ -332,31 +332,44 @@ def q_asof_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Shared KM duration fold (round 15, VERDICT r14 #5): the 7 survival
-# queries (q_kaplan_meier, q_logrank, q_gehan, q_tarone_ware,
-# q_nelson_aalen, q_rmst, q_fleming_harrington) all start from the
-# SAME per-user time-to-first-error fold — one conditional MIN/MAX
-# aggregate of the event stream to per-user rows, then (dur, ev)
-# with right-censoring at last activity. Both engine texts are
-# generated from these two helpers so the identical-expression-text
-# discipline is mechanical, not 7-way copy-editing; the generated SQL
-# is byte-identical to the pre-refactor per-query texts (pinned by
-# tests/test_round15_ops.py::test_km_fold_sql_generation).
+# Shared survival risk-set tables. The 13 survival queries (q_kaplan_meier,
+# q_nelson_aalen, q_rmst, q_km_bands, q_km_median, q_logrank, q_gehan,
+# q_tarone_ware, q_fleming_harrington, q_logrank_strat,
+# q_schoenfeld_trend, q_cox_score, q_cindex) all start from the SAME
+# per-user time-to-first-error fold — one conditional MIN/MAX aggregate
+# of the event stream to per-user rows, then (dur, ev) with
+# right-censoring at last activity — and all but q_cindex build their
+# statistics on bounded per-duration tables: the Kaplan-Meier
+# product-limit table, the two-arm at-risk table, and the per-arm
+# summary. The fold and each table exist once per engine below, a
+# Spark helper next to the SQL text it mirrors, so the
+# identical-expression-text discipline is mechanical; the per-query
+# terms (weights, fixed-point folds, NULL-z guards) stay in the
+# queries. The generated SQL is pinned by
+# tests/test_round15_ops.py::test_km_fold_sql_generation and
+# test_km_table_sql_in_oracles.
 # ---------------------------------------------------------------------------
 
 
-def _km_dur_sql(arm: bool = False, strat: bool = False) -> str:
+def _km_dur_sql(
+    arm: bool = False, strat: bool = False, extra: dict[str, str] | None = None
+) -> str:
     """DuckDB CTE prefix (u + d) of the shared survival duration fold;
     ``arm=True`` adds the user_id-parity A/B arm (q_abtest's
     deterministic assignment) carried by the test-family members;
     ``strat=True`` additionally carries a 3-way stratum (user_id//2)%3
     — deterministic and independent of the parity arm — for the
-    stratified test members (q_logrank_strat)."""
+    stratified test members (q_logrank_strat); ``extra`` maps a column
+    name to a per-user aggregate carried through to ``d`` (the
+    covariates of q_cox_score and q_cindex)."""
     head = "user_id % 2 AS arm, " if arm else "user_id, "
     dsel = "arm, " if arm else ""
     if strat:
         head += "(user_id // 2) % 3 AS stratum, "
         dsel += "stratum, "
+    for name, agg in (extra or {}).items():
+        head += f"{agg} AS {name}, "
+        dsel += f"{name}, "
     return (
         f"WITH u AS (SELECT {head}"
         "MIN(epoch_ns(ts) // 1000000000) AS first_sec, "
@@ -371,15 +384,19 @@ def _km_dur_sql(arm: bool = False, strat: bool = False) -> str:
 
 
 def _km_durations(
-    spark: SparkSession, sf_dir: str, arm: bool = False, strat: bool = False
+    ev: DataFrame,
+    arm: bool = False,
+    strat: bool = False,
+    extra: dict[str, Column] | None = None,
 ) -> DataFrame:
-    """Spark twin of _km_dur_sql: events -> ([arm,] [stratum,] dur,
-    ev). One conditional-MIN/MAX fold of the 100 TB event stream to
-    per-user rows; everything downstream operates on the bounded
-    distinct-duration table."""
-    ev = load_table(spark, sf_dir, "events")
+    """Spark twin of _km_dur_sql: events -> ([arm,] [stratum,]
+    [extra...,] dur, ev). One conditional-MIN/MAX fold of the 100 TB
+    event stream to per-user rows; everything downstream operates on
+    the bounded distinct-duration table."""
     sec = F.expr("ts div 1000000000")
+    extra = extra or {}
     u = ev.groupBy("user_id").agg(
+        *(c.alias(name) for name, c in extra.items()),
         F.min(sec).alias("first_sec"),
         F.max(sec).alias("last_sec"),
         F.min(F.when(F.col("event_type") == "error", sec)).alias("err_sec"),
@@ -389,6 +406,7 @@ def _km_durations(
         cols.append(F.expr("(user_id div 2) % 3").alias("stratum"))
     return u.select(
         *cols,
+        *extra,
         F.when(
             F.col("err_sec").isNotNull(),
             F.expr("(err_sec - first_sec) div 86400"),
@@ -399,22 +417,198 @@ def _km_durations(
     )
 
 
+def _km_surv_sql(ev: str, risk: str, *run: str) -> str:
+    """``s`` CTE over ``r``: the product-limit extinction flag ``alive``
+    and LN sum ``ln_s`` of events ``ev`` over the risk set ``risk``,
+    plus the named running sums of ``run`` ("na": Nelson-Aalen,
+    "gw": Greenwood, divide-then-divide so no integer product
+    risk*(risk-ev) can overflow at scale)."""
+    sums = {
+        "na": f"SUM({ev} * 1.0 / {risk}) OVER (ORDER BY dur) AS na",
+        "gw": f"SUM(CASE WHEN {ev} < {risk} THEN "
+        f"({ev} * 1.0 / {risk}) / ({risk} - {ev}) "
+        "ELSE NULL END) OVER (ORDER BY dur) AS gw",
+    }
+    return (
+        "s AS (SELECT *, "
+        f"MIN(CASE WHEN {ev} = {risk} THEN 0 ELSE 1 END) OVER (ORDER BY dur)"
+        " AS alive, "
+        f"SUM(CASE WHEN {ev} < {risk} THEN LN(1 - {ev} * 1.0 / {risk}) "
+        "ELSE NULL END) OVER (ORDER BY dur) AS ln_s"
+        + "".join(f", {sums[c]}" for c in run)
+        + " FROM r)"
+    )
+
+
+def _km_surv(r: DataFrame, ev: str, risk: str, *run: str) -> DataFrame:
+    """Spark twin of _km_surv_sql."""
+    w_cum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
+    e, n = F.col(ev), F.col(risk)
+    ratio = e * 1.0 / n
+    sums = {
+        "alive": F.min(F.when(e == n, 0).otherwise(1)),
+        "ln_s": F.sum(F.when(e < n, F.log(F.lit(1.0) - ratio))),
+        "na": F.sum(ratio),
+        "gw": F.sum(F.when(e < n, ratio / (n - e))),
+    }
+    for c in ("alive", "ln_s", *run):
+        r = r.withColumn(c, sums[c].over(w_cum))
+    return r
+
+
+def _km_sql(*run: str) -> str:
+    """Kaplan-Meier product-limit table over ``d``: per distinct
+    duration n_event / n_censored (``t``), the at-risk suffix sum
+    n_risk (``r``), then _km_surv_sql (``s``)."""
+    return (
+        "t AS (SELECT dur, CAST(SUM(ev) AS BIGINT) AS n_event, "
+        "CAST(COUNT(*) - SUM(ev) AS BIGINT) AS n_censored FROM d GROUP BY dur), "
+        "r AS (SELECT *, CAST(SUM(n_event + n_censored) OVER "
+        "(ORDER BY dur DESC) AS BIGINT) AS n_risk FROM t), "
+        + _km_surv_sql("n_event", "n_risk", *run)
+    )
+
+
+def _km_table(d: DataFrame, *run: str) -> DataFrame:
+    """Spark twin of _km_sql: (dur, n_event, n_censored, n_risk, alive,
+    ln_s, *run)."""
+    t = d.groupBy("dur").agg(
+        F.sum("ev").cast("bigint").alias("n_event"),
+        (F.count("*") - F.sum("ev")).cast("bigint").alias("n_censored"),
+    )
+    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(Window.unboundedPreceding, 0)
+    n_risk = F.sum(F.col("n_event") + F.col("n_censored")).over(w_rev)
+    r = t.withColumn("n_risk", n_risk.cast("bigint"))
+    return _km_surv(r, "n_event", "n_risk", *run)
+
+
+# The KM estimate rounded to 6 dp, exact 0 on the extinct tail (Spark's
+# ln(0) is NULL where DuckDB's is -inf; the flag makes both emit 0).
+_KM_S6_SQL = "CASE WHEN alive = 0 THEN 0.0 ELSE " + sql_round("EXP(ln_s)", 6) + " END"
+
+
+def _km_s6() -> Column:
+    return F.when(F.col("alive") == 0, F.lit(0.0)).otherwise(pround(F.exp("ln_s"), 6))
+
+
+def _km_band_sql(op: str) -> str:
+    """Greenwood log-log 95% band limit over ``s`` (op "+": lower,
+    "-": upper): exact 0 on the extinct tail, NULL before the first
+    event."""
+    return (
+        "CASE WHEN alive = 0 THEN 0.0 "
+        "WHEN ln_s = 0 OR gw = 0 THEN NULL ELSE "
+        + sql_round(
+            f"EXP(0.0 - EXP(LN(0.0 - ln_s) {op} 1.959964 * SQRT(gw) / (0.0 - ln_s)))",
+            6,
+        )
+        + " END"
+    )
+
+
+def _km_bands() -> tuple[Column, Column]:
+    """Spark twin of _km_band_sql: (lower, upper)."""
+    th = F.lit(1.959964) * F.sqrt(F.col("gw")) / (F.lit(0.0) - F.col("ln_s"))
+    c = F.log(F.lit(0.0) - F.col("ln_s"))
+    degenerate = (F.col("ln_s") == 0) | (F.col("gw") == 0)
+
+    def limit(x: Column) -> Column:
+        return (
+            F.when(F.col("alive") == 0, F.lit(0.0))
+            .when(degenerate, F.lit(None).cast("double"))
+            .otherwise(pround(F.exp(F.lit(0.0) - F.exp(x)), 6))
+        )
+
+    return limit(c + th), limit(c - th)
+
+
+def _risk2_sql(strat: bool = False, src: str = "d") -> str:
+    """Two-arm at-risk table over ``src`` (0/1 ``arm``, ``dur``,
+    ``ev``): per [stratum,] duration the events de, arm-1 events d1,
+    and the suffix sums n / n1 of all and arm-1 subjects (``t`` + ``r``;
+    ``strat`` keeps risk sets within each stratum)."""
+    by = "stratum, " if strat else ""
+    over = f"OVER ({'PARTITION BY stratum ' if strat else ''}ORDER BY dur DESC)"
+    return (
+        f"t AS (SELECT {by}dur, "
+        "CAST(SUM(ev) AS BIGINT) AS de, "
+        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) AS d1, "
+        "CAST(COUNT(*) AS BIGINT) AS tot, "
+        f"CAST(SUM(arm) AS BIGINT) AS tot1 FROM {src} GROUP BY {by}dur), "
+        f"r AS (SELECT {by}dur, de, d1, "
+        f"CAST(SUM(tot) {over} AS BIGINT) AS n, "
+        f"CAST(SUM(tot1) {over} AS BIGINT) AS n1 FROM t), "
+    )
+
+
+def _risk2(u: DataFrame, strat: bool = False) -> DataFrame:
+    """Spark twin of _risk2_sql: (dur, de, d1, n, n1)."""
+    by = ["stratum"] if strat else []
+    t = u.groupBy(*by, "dur").agg(
+        F.sum("ev").cast("bigint").alias("de"),
+        F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
+        .cast("bigint")
+        .alias("d1"),
+        F.count("*").cast("bigint").alias("tot"),
+        F.sum("arm").cast("bigint").alias("tot1"),
+    )
+    w_rev = (
+        Window.partitionBy(*by)
+        .orderBy(F.desc("dur"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return t.select(
+        "dur",
+        "de",
+        "d1",
+        F.sum("tot").over(w_rev).cast("bigint").alias("n"),
+        F.sum("tot1").over(w_rev).cast("bigint").alias("n1"),
+    )
+
+
+def _arm_sum_sql(
+    labels: tuple[str, str] = ("control", "treat"), src: str = "d"
+) -> str:
+    """``g`` CTE over ``src``: subjects and events per arm, named
+    n_/events_ + the arm-0 / arm-1 label."""
+    a0, a1 = labels
+    return (
+        "g AS (SELECT "
+        f"CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_{a0}, "
+        f"CAST(SUM(arm) AS BIGINT) AS n_{a1}, "
+        "CAST(SUM(CASE WHEN arm = 0 THEN ev ELSE 0 END) AS BIGINT) "
+        f"AS events_{a0}, "
+        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) "
+        f"AS events_{a1} FROM {src}), "
+    )
+
+
+def _arm_summary(
+    u: DataFrame, labels: tuple[str, str] = ("control", "treat")
+) -> DataFrame:
+    """Spark twin of _arm_sum_sql: one row."""
+    a0, a1 = labels
+    arm = F.col("arm")
+    return u.agg(
+        F.sum(F.when(arm == 0, 1).otherwise(0)).cast("bigint").alias(f"n_{a0}"),
+        F.sum("arm").cast("bigint").alias(f"n_{a1}"),
+        F.sum(F.when(arm == 0, F.col("ev")).otherwise(0))
+        .cast("bigint")
+        .alias(f"events_{a0}"),
+        F.sum(F.when(arm == 1, F.col("ev")).otherwise(0))
+        .cast("bigint")
+        .alias(f"events_{a1}"),
+    )
+
+
 @query(
     "q_kaplan_meier",
     oracle=(
         _km_dur_sql()
-        + "t AS (SELECT dur, CAST(SUM(ev) AS BIGINT) AS n_event, "
-        "CAST(COUNT(*) - SUM(ev) AS BIGINT) AS n_censored FROM d GROUP BY dur), "
-        "r AS (SELECT *, CAST(SUM(n_event + n_censored) OVER "
-        "(ORDER BY dur DESC) AS BIGINT) AS n_risk FROM t), "
-        "s AS (SELECT *, "
-        "MIN(CASE WHEN n_event = n_risk THEN 0 ELSE 1 END) OVER (ORDER BY dur)"
-        " AS alive, "
-        "SUM(CASE WHEN n_event < n_risk THEN LN(1 - n_event * 1.0 / n_risk) "
-        "ELSE NULL END) OVER (ORDER BY dur) AS ln_s FROM r) "
-        "SELECT CAST(dur AS BIGINT) AS dur_days, n_risk, n_event, n_censored, "
-        "CASE WHEN alive = 0 THEN 0.0 ELSE "
-        + sql_round("EXP(ln_s)", 6) + " END AS survival FROM s"
+        + _km_sql()
+        + " SELECT CAST(dur AS BIGINT) AS dur_days, n_risk, n_event, n_censored, "
+        + _KM_S6_SQL
+        + " AS survival FROM s"
     ),
     tags=("timeseries", "survival", "agg"),
 )
@@ -437,34 +631,13 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor (d_i=n_i) handled by an explicit extinction flag, because
     Spark's ln(0) is NULL while DuckDB's is -inf - the flag makes both
     engines emit exact 0 from there on."""
-    d = _km_durations(spark, sf_dir)
-    t = d.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("n_event"),
-        (F.count("*") - F.sum("ev")).cast("bigint").alias("n_censored"),
-    )
-    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(Window.unboundedPreceding, 0)
-    w_cum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
-    r = t.withColumn(
-        "n_risk", F.sum(F.col("n_event") + F.col("n_censored")).over(w_rev).cast("bigint")
-    )
-    ratio = F.col("n_event") * 1.0 / F.col("n_risk")
-    s = r.withColumn(
-        "alive",
-        F.min(F.when(F.col("n_event") == F.col("n_risk"), 0).otherwise(1)).over(w_cum),
-    ).withColumn(
-        "ln_s",
-        F.sum(
-            F.when(F.col("n_event") < F.col("n_risk"), F.log(F.lit(1.0) - ratio))
-        ).over(w_cum),
-    )
+    s = _km_table(_km_durations(load_table(spark, sf_dir, "events")))
     return s.select(
         F.col("dur").cast("bigint").alias("dur_days"),
         "n_risk",
         "n_event",
         "n_censored",
-        F.when(F.col("alive") == 0, F.lit(0.0))
-        .otherwise(pround(F.exp("ln_s"), 6))
-        .alias("survival"),
+        _km_s6().alias("survival"),
     )
 
 
@@ -1531,28 +1704,15 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_logrank",
     oracle=(
         _km_dur_sql(arm=True)
-        +        "t AS (SELECT dur, "
-        "CAST(SUM(ev) AS BIGINT) AS de, "
-        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) AS d1, "
-        "CAST(COUNT(*) AS BIGINT) AS tot, "
-        "CAST(SUM(arm) AS BIGINT) AS tot1 FROM d GROUP BY dur), "
-        "r AS (SELECT dur, de, d1, "
-        "CAST(SUM(tot) OVER (ORDER BY dur DESC) AS BIGINT) AS n, "
-        "CAST(SUM(tot1) OVER (ORDER BY dur DESC) AS BIGINT) AS n1 FROM t), "
-        "terms AS (SELECT de, d1, "
+        + _risk2_sql()
+        + "terms AS (SELECT de, d1, "
         "CAST(FLOOR(de * (n1 * 1.0 / n) * 1000000000 + 0.5) AS BIGINT) AS eu, "
         "CASE WHEN n > 1 THEN CAST(FLOOR("
         "de * (n1 * 1.0 / n) * (1 - n1 * 1.0 / n) "
         "* (n - de) * 1.0 / (n - 1) * 1000000000 + 0.5) AS BIGINT) "
         "ELSE 0 END AS vu FROM r WHERE de > 0), "
-        "g AS (SELECT "
-        "CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_control, "
-        "CAST(SUM(arm) AS BIGINT) AS n_treat, "
-        "CAST(SUM(CASE WHEN arm = 0 THEN ev ELSE 0 END) AS BIGINT) "
-        "AS events_control, "
-        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) "
-        "AS events_treat FROM d), "
-        "a AS (SELECT CAST(SUM(d1) AS BIGINT) AS o1, "
+        + _arm_sum_sql()
+        + "a AS (SELECT CAST(SUM(d1) AS BIGINT) AS o1, "
         "CAST(SUM(eu) AS BIGINT) AS eu, CAST(SUM(vu) AS BIGINT) AS vu "
         "FROM terms) "
         "SELECT n_control, n_treat, events_control, events_treat, "
@@ -1599,24 +1759,8 @@ def q_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user rows, one fold to the bounded duration table, two
     windows over that table only, a 1-row aggregate. No fact-scale
     window, no collect."""
-    u = _km_durations(spark, sf_dir, arm=True)
-    t = u.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("de"),
-        F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("d1"),
-        F.count("*").cast("bigint").alias("tot"),
-        F.sum("arm").cast("bigint").alias("tot1"),
-    )
-    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    r = t.select(
-        "de",
-        "d1",
-        F.sum("tot").over(w_rev).cast("bigint").alias("n"),
-        F.sum("tot1").over(w_rev).cast("bigint").alias("n1"),
-    ).filter(F.col("de") > 0)
+    u = _km_durations(load_table(spark, sf_dir, "events"), arm=True)
+    r = _risk2(u).filter(F.col("de") > 0)
     share = F.col("n1") * 1.0 / F.col("n")
     eu = F.floor(F.col("de") * share * 1000000000 + F.lit(0.5)).cast("bigint")
     vu = F.when(
@@ -1637,25 +1781,11 @@ def q_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("eu").cast("bigint").alias("eu"),
         F.sum("vu").cast("bigint").alias("vu"),
     )
-    g = u.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_control"),
-        F.sum("arm").cast("bigint").alias("n_treat"),
-        F.sum(F.when(F.col("arm") == 0, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("events_control"),
-        F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("events_treat"),
-    )
+    g = _arm_summary(u)
     e1 = F.col("eu").cast("double") / 1000000000
     v1 = F.col("vu").cast("double") / 1000000000
     return g.crossJoin(F.broadcast(a)).select(
-        "n_control",
-        "n_treat",
-        "events_control",
-        "events_treat",
+        *g.columns,
         F.col("o1").alias("o_treat"),
         pround(e1, 6).alias("e_treat"),
         pround(v1, 6).alias("var_treat"),
@@ -1681,31 +1811,18 @@ def q_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_gehan",
     oracle=(
         _km_dur_sql(arm=True)
-        +        "t AS (SELECT dur, "
-        "CAST(SUM(ev) AS BIGINT) AS de, "
-        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) AS d1, "
-        "CAST(COUNT(*) AS BIGINT) AS tot, "
-        "CAST(SUM(arm) AS BIGINT) AS tot1 FROM d GROUP BY dur), "
-        "r AS (SELECT dur, de, d1, "
-        "CAST(SUM(tot) OVER (ORDER BY dur DESC) AS BIGINT) AS n, "
-        "CAST(SUM(tot1) OVER (ORDER BY dur DESC) AS BIGINT) AS n1 FROM t), "
+        + _risk2_sql()
         # Gehan weight w = n cancels the 1/n in the hypergeometric
         # mean: weighted O and E terms are EXACT integers n*d1 and
         # de*n1; only the n^2-scaled variance term needs a per-row
         # whole-unit fold (double products of exact integer factors,
         # identical text both engines)
-        "terms AS (SELECT n * d1 AS wo, de * n1 AS we, "
+        + "terms AS (SELECT n * d1 AS wo, de * n1 AS we, "
         "CASE WHEN n > 1 THEN CAST(FLOOR("
         "CAST(de AS DOUBLE) * n1 * (n - n1) * (n - de) / (n - 1) "
         "+ 0.5) AS BIGINT) ELSE 0 END AS vu FROM r WHERE de > 0), "
-        "g AS (SELECT "
-        "CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_control, "
-        "CAST(SUM(arm) AS BIGINT) AS n_treat, "
-        "CAST(SUM(CASE WHEN arm = 0 THEN ev ELSE 0 END) AS BIGINT) "
-        "AS events_control, "
-        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) "
-        "AS events_treat FROM d), "
-        "a AS (SELECT CAST(SUM(wo) AS BIGINT) AS wo, "
+        + _arm_sum_sql()
+        + "a AS (SELECT CAST(SUM(wo) AS BIGINT) AS wo, "
         "CAST(SUM(we) AS BIGINT) AS we, CAST(SUM(vu) AS BIGINT) AS vu "
         "FROM terms) "
         "SELECT n_control, n_treat, events_control, events_treat, "
@@ -1748,24 +1865,8 @@ def q_gehan(spark: SparkSession, sf_dir: str) -> DataFrame:
     duration table, two O(n)-incremental windows over that table only,
     a 1-row aggregate. Ref: the survival A/B completion of
     evaluate_model.py's single-model evaluation, Gehan-Breslow form."""
-    u = _km_durations(spark, sf_dir, arm=True)
-    t = u.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("de"),
-        F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("d1"),
-        F.count("*").cast("bigint").alias("tot"),
-        F.sum("arm").cast("bigint").alias("tot1"),
-    )
-    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    r = t.select(
-        "de",
-        "d1",
-        F.sum("tot").over(w_rev).cast("bigint").alias("n"),
-        F.sum("tot1").over(w_rev).cast("bigint").alias("n1"),
-    ).filter(F.col("de") > 0)
+    u = _km_durations(load_table(spark, sf_dir, "events"), arm=True)
+    r = _risk2(u).filter(F.col("de") > 0)
     vu = F.when(
         F.col("n") > 1,
         F.floor(
@@ -1786,25 +1887,11 @@ def q_gehan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("we").cast("bigint").alias("we"),
         F.sum("vu").cast("bigint").alias("vu"),
     )
-    g = u.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_control"),
-        F.sum("arm").cast("bigint").alias("n_treat"),
-        F.sum(F.when(F.col("arm") == 0, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("events_control"),
-        F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("events_treat"),
-    )
+    g = _arm_summary(u)
     s_g = (F.col("wo") - F.col("we")).cast("bigint")
     vd = F.col("vu").cast("double")
     return g.crossJoin(F.broadcast(a)).select(
-        "n_control",
-        "n_treat",
-        "events_control",
-        "events_treat",
+        *g.columns,
         F.col("wo").alias("w_o_treat"),
         F.col("we").alias("w_e_treat"),
         s_g.alias("s_gehan"),
@@ -1835,43 +1922,27 @@ def q_gehan(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_cox_score",
     oracle=(
-        "WITH u0 AS (SELECT user_id, "
-        "CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) "
-        "AS BIGINT) AS pc, "
-        "MIN(epoch_ns(ts) // 1000000000) AS first_sec, "
-        "MAX(epoch_ns(ts) // 1000000000) AS last_sec, "
-        "MIN(CASE WHEN event_type = 'error' THEN epoch_ns(ts) // 1000000000 "
-        "END) AS err_sec FROM events GROUP BY user_id), "
-        "gl AS (SELECT CAST(COUNT(*) AS BIGINT) AS nu, "
-        "CAST(SUM(pc) AS BIGINT) AS tp FROM u0), "
-        "u AS (SELECT CASE WHEN pc * nu > tp THEN 1 ELSE 0 END AS z, "
-        "first_sec, last_sec, err_sec FROM u0, gl), "
-        "d AS (SELECT z, CASE WHEN err_sec IS NOT NULL "
-        "THEN (err_sec - first_sec) // 86400 "
-        "ELSE (last_sec - first_sec) // 86400 END AS dur, "
-        "CASE WHEN err_sec IS NOT NULL THEN 1 ELSE 0 END AS ev FROM u), "
-        "t AS (SELECT dur, "
-        "CAST(SUM(ev) AS BIGINT) AS de, "
-        "CAST(SUM(CASE WHEN z = 1 THEN ev ELSE 0 END) AS BIGINT) AS d1, "
-        "CAST(COUNT(*) AS BIGINT) AS tot, "
-        "CAST(SUM(z) AS BIGINT) AS tot1 FROM d GROUP BY dur), "
-        "r AS (SELECT dur, de, d1, "
-        "CAST(SUM(tot) OVER (ORDER BY dur DESC) AS BIGINT) AS n, "
-        "CAST(SUM(tot1) OVER (ORDER BY dur DESC) AS BIGINT) AS n1 FROM t), "
-        "terms AS (SELECT de, d1, "
+        _km_dur_sql(
+            extra={
+                "pc": "CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 "
+                "ELSE 0 END) AS BIGINT)"
+            }
+        )
+        + "gl AS (SELECT CAST(COUNT(*) AS BIGINT) AS nu, "
+        "CAST(SUM(pc) AS BIGINT) AS tp FROM d), "
+        # the covariate z, named arm: the 0/1 group column the shared
+        # at-risk and arm-summary tables read
+        "dz AS (SELECT CASE WHEN pc * nu > tp THEN 1 ELSE 0 END AS arm, "
+        "dur, ev FROM d, gl), "
+        + _risk2_sql(src="dz")
+        + "terms AS (SELECT de, d1, "
         "CAST(FLOOR(de * (n1 * 1.0 / n) * 1000000000 + 0.5) AS BIGINT) AS eu, "
         "CASE WHEN n > 1 THEN CAST(FLOOR("
         "de * (n1 * 1.0 / n) * (1 - n1 * 1.0 / n) "
         "* (n - de) * 1.0 / (n - 1) * 1000000000 + 0.5) AS BIGINT) "
         "ELSE 0 END AS iu FROM r WHERE de > 0), "
-        "g AS (SELECT "
-        "CAST(SUM(CASE WHEN z = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_z0, "
-        "CAST(SUM(z) AS BIGINT) AS n_z1, "
-        "CAST(SUM(CASE WHEN z = 0 THEN ev ELSE 0 END) AS BIGINT) "
-        "AS events_z0, "
-        "CAST(SUM(CASE WHEN z = 1 THEN ev ELSE 0 END) AS BIGINT) "
-        "AS events_z1 FROM d), "
-        "a AS (SELECT CAST(SUM(d1) AS BIGINT) AS o1, "
+        + _arm_sum_sql(("z0", "z1"), src="dz")
+        + "a AS (SELECT CAST(SUM(d1) AS BIGINT) AS o1, "
         "CAST(SUM(eu) AS BIGINT) AS eu, CAST(SUM(iu) AS BIGINT) AS iu "
         "FROM terms) "
         "SELECT n_z0, n_z1, events_z0, events_z1, o1 AS o_z1, "
@@ -1915,49 +1986,22 @@ def q_cox_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: q_logrank's — one per-user conditional fold (the
     covariate is one extra MAX flag), one fold to the bounded duration
     table, two O(n)-incremental windows over it, a 1-row aggregate."""
-    ev = load_table(spark, sf_dir, "events")
-    sec = F.expr("ts div 1000000000")
-    u0 = ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("pc"),
-        F.min(sec).alias("first_sec"),
-        F.max(sec).alias("last_sec"),
-        F.min(F.when(F.col("event_type") == "error", sec)).alias("err_sec"),
+    pc = F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+    d = _km_durations(
+        load_table(spark, sf_dir, "events"), extra={"pc": pc.cast("bigint")}
     )
-    glob = u0.agg(
+    glob = d.agg(
         F.count("*").cast("bigint").alias("nu"),
         F.sum("pc").cast("bigint").alias("tp"),
     )
-    u = u0.crossJoin(F.broadcast(glob)).select(
+    u = d.crossJoin(F.broadcast(glob)).select(
         F.when(F.col("pc") * F.col("nu") > F.col("tp"), 1)
         .otherwise(0)
-        .alias("z"),
-        F.when(
-            F.col("err_sec").isNotNull(),
-            F.expr("(err_sec - first_sec) div 86400"),
-        )
-        .otherwise(F.expr("(last_sec - first_sec) div 86400"))
-        .alias("dur"),
-        F.col("err_sec").isNotNull().cast("int").alias("ev"),
+        .alias("arm"),
+        "dur",
+        "ev",
     )
-    t = u.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("de"),
-        F.sum(F.when(F.col("z") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("d1"),
-        F.count("*").cast("bigint").alias("tot"),
-        F.sum("z").cast("bigint").alias("tot1"),
-    )
-    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    r = t.select(
-        "de",
-        "d1",
-        F.sum("tot").over(w_rev).cast("bigint").alias("n"),
-        F.sum("tot1").over(w_rev).cast("bigint").alias("n1"),
-    ).filter(F.col("de") > 0)
+    r = _risk2(u).filter(F.col("de") > 0)
     share = F.col("n1") * 1.0 / F.col("n")
     eu = F.floor(F.col("de") * share * 1000000000 + F.lit(0.5)).cast("bigint")
     iu = F.when(
@@ -1978,26 +2022,12 @@ def q_cox_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("eu").cast("bigint").alias("eu"),
         F.sum("iu").cast("bigint").alias("iu"),
     )
-    g = u.agg(
-        F.sum(F.when(F.col("z") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_z0"),
-        F.sum("z").cast("bigint").alias("n_z1"),
-        F.sum(F.when(F.col("z") == 0, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("events_z0"),
-        F.sum(F.when(F.col("z") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("events_z1"),
-    )
+    g = _arm_summary(u, ("z0", "z1"))
     e1 = F.col("eu").cast("double") / 1000000000
     i1 = F.col("iu").cast("double") / 1000000000
     uscore = F.col("o1").cast("double") - e1
     return g.crossJoin(F.broadcast(a)).select(
-        "n_z0",
-        "n_z1",
-        "events_z0",
-        "events_z1",
+        *g.columns,
         F.col("o1").alias("o_z1"),
         pround(e1, 6).alias("e_z1"),
         pround(uscore, 6).alias("u_score"),
@@ -2022,34 +2052,21 @@ def q_cox_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_tarone_ware",
     oracle=(
         _km_dur_sql(arm=True)
-        +        "t AS (SELECT dur, "
-        "CAST(SUM(ev) AS BIGINT) AS de, "
-        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) AS d1, "
-        "CAST(COUNT(*) AS BIGINT) AS tot, "
-        "CAST(SUM(arm) AS BIGINT) AS tot1 FROM d GROUP BY dur), "
-        "r AS (SELECT dur, de, d1, "
-        "CAST(SUM(tot) OVER (ORDER BY dur DESC) AS BIGINT) AS n, "
-        "CAST(SUM(tot1) OVER (ORDER BY dur DESC) AS BIGINT) AS n1 FROM t), "
+        + _risk2_sql()
         # w = SQRT(n): S and V terms are doubles on exact integers
         # (identical text both engines) folded to 1e-6 fixed-point
         # units per duration row — coarser than q_logrank's 1e-9
         # because the n- and n^2-scaled magnitudes would overflow
         # BIGINT at 1e-9 units on a 10x-user stream
-        "terms AS (SELECT "
+        + "terms AS (SELECT "
         "CAST(FLOOR(SQRT(CAST(n AS DOUBLE)) "
         "* (d1 - de * (n1 * 1.0 / n)) * 1000000 + 0.5) AS BIGINT) AS su, "
         "CASE WHEN n > 1 THEN CAST(FLOOR("
         "n * (de * (n1 * 1.0 / n) * (1 - n1 * 1.0 / n) "
         "* (n - de) * 1.0 / (n - 1)) * 1000000 + 0.5) AS BIGINT) "
         "ELSE 0 END AS vu FROM r WHERE de > 0), "
-        "g AS (SELECT "
-        "CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_control, "
-        "CAST(SUM(arm) AS BIGINT) AS n_treat, "
-        "CAST(SUM(CASE WHEN arm = 0 THEN ev ELSE 0 END) AS BIGINT) "
-        "AS events_control, "
-        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) "
-        "AS events_treat FROM d), "
-        "a AS (SELECT CAST(SUM(su) AS BIGINT) AS su, "
+        + _arm_sum_sql()
+        + "a AS (SELECT CAST(SUM(su) AS BIGINT) AS su, "
         "CAST(SUM(vu) AS BIGINT) AS vu FROM terms) "
         "SELECT n_control, n_treat, events_control, events_treat, "
         + sql_round("CAST(su AS DOUBLE) / 1000000", 6) + " AS s_tw, "
@@ -2089,24 +2106,8 @@ def q_tarone_ware(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to q_logrank/q_gehan — two event folds,
     two O(n)-incremental windows over the bounded duration table, a
     1-row aggregate."""
-    u = _km_durations(spark, sf_dir, arm=True)
-    t = u.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("de"),
-        F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("d1"),
-        F.count("*").cast("bigint").alias("tot"),
-        F.sum("arm").cast("bigint").alias("tot1"),
-    )
-    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    r = t.select(
-        "de",
-        "d1",
-        F.sum("tot").over(w_rev).cast("bigint").alias("n"),
-        F.sum("tot1").over(w_rev).cast("bigint").alias("n1"),
-    ).filter(F.col("de") > 0)
+    u = _km_durations(load_table(spark, sf_dir, "events"), arm=True)
+    r = _risk2(u).filter(F.col("de") > 0)
     share = F.col("n1") * 1.0 / F.col("n")
     su = F.floor(
         F.sqrt(F.col("n").cast("double"))
@@ -2134,25 +2135,11 @@ def q_tarone_ware(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("su").cast("bigint").alias("su"),
         F.sum("vu").cast("bigint").alias("vu"),
     )
-    g = u.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_control"),
-        F.sum("arm").cast("bigint").alias("n_treat"),
-        F.sum(F.when(F.col("arm") == 0, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("events_control"),
-        F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("events_treat"),
-    )
+    g = _arm_summary(u)
     sd = F.col("su").cast("double") / 1000000
     vd = F.col("vu").cast("double") / 1000000
     return g.crossJoin(F.broadcast(a)).select(
-        "n_control",
-        "n_treat",
-        "events_control",
-        "events_treat",
+        *g.columns,
         pround(sd, 6).alias("s_tw"),
         pround(vd, 6).alias("var_tw"),
         # V = 0 -> NULL z (the q_delong degenerate-variance guard)
@@ -2181,18 +2168,13 @@ _CINDEX_SQL = (
     # many users exist, restoring the q_kendall_tau bounded-grid
     # posture. (tu*10) // (n*10000) = FLOOR(mean_value * 10) with zero
     # float ops — engine-identical BIGINTs.
-    "u AS (SELECT user_id % 2 AS _arm, "
-    "CAST((SUM(CAST(FLOOR(value * 10000 + 0.5) AS BIGINT)) * 10) "
-    "// (COUNT(*) * 10000) AS BIGINT) AS pred, "
-    "MIN(epoch_ns(ts) // 1000000000) AS first_sec, "
-    "MAX(epoch_ns(ts) // 1000000000) AS last_sec, "
-    "MIN(CASE WHEN event_type = 'error' THEN epoch_ns(ts) // 1000000000 "
-    "END) AS err_sec FROM events GROUP BY user_id), "
-    "d AS (SELECT pred, CASE WHEN err_sec IS NOT NULL "
-    "THEN (err_sec - first_sec) // 86400 "
-    "ELSE (last_sec - first_sec) // 86400 END AS dur, "
-    "CASE WHEN err_sec IS NOT NULL THEN 1 ELSE 0 END AS ev FROM u), "
-    "g AS (SELECT dur, pred, "
+    _km_dur_sql(
+        extra={
+            "pred": "CAST((SUM(CAST(FLOOR(value * 10000 + 0.5) AS BIGINT)) * 10) "
+            "// (COUNT(*) * 10000) AS BIGINT)"
+        }
+    )
+    + "g AS (SELECT dur, pred, "
     "CAST(SUM(ev) AS BIGINT) AS ne, "
     "CAST(COUNT(*) - SUM(ev) AS BIGINT) AS nc FROM d GROUP BY dur, pred), "
     # dense grid: every (distinct dur) x (distinct pred) cell
@@ -2234,11 +2216,31 @@ _CINDEX_SQL = (
 )
 
 
+def _cindex_durations(ev: DataFrame) -> DataFrame:
+    """Spark twin of _CINDEX_SQL's ``d``: events -> (pred, dur, ev),
+    pred = FLOOR(mean value * 10) by exact integer division — the
+    domain-bounded predictor (see the oracle note above)."""
+    d = _km_durations(
+        ev,
+        extra={
+            "tu": F.sum(
+                F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("bigint")
+            ).cast("bigint"),
+            "nev": F.count("*").cast("bigint"),
+        },
+    )
+    return d.select(
+        F.expr("(tu * 10) div (nev * 10000)").cast("bigint").alias("pred"),
+        "dur",
+        "ev",
+    )
+
+
 @query(
     "q_cindex",
     oracle=(
-        "WITH " + _CINDEX_SQL + " "
-        "SELECT CAST(comp AS BIGINT) AS comparable, "
+        _CINDEX_SQL
+        + " SELECT CAST(comp AS BIGINT) AS comparable, "
         "CAST(conc AS BIGINT) AS concordant, "
         "CAST(tied AS BIGINT) AS tied_pred, "
         + sql_round(
@@ -2271,7 +2273,8 @@ def q_cindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     via two O(n)-incremental window passes (exclusive prefix within
     dur; suffix-as-total-minus-running per pred — never a shrinking
     frame), so conc/tied/comp are engine-identical and C is one
-    6-dp-rounded scalar.
+    6-dp-rounded scalar, NULL when no pair is comparable (a single
+    user, or no 'error' event at all).
 
     Scale: one fact fold to per-user rows, one fold to the
     <=|durs|x|bins| grid where BOTH axes are DOMAIN-bounded — ~hundreds
@@ -2282,28 +2285,7 @@ def q_cindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs join: pair counts are suffix-sum closed forms. The
     user-growth smoke in test_unit_table_scale.py exercises NEW users
     with NEW spend profiles and asserts the grid bound directly."""
-    ev = load_table(spark, sf_dir, "events")
-    sec = F.expr("ts div 1000000000")
-    u = ev.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("bigint"))
-        .cast("bigint")
-        .alias("tu"),
-        F.count("*").cast("bigint").alias("nev"),
-        F.min(sec).alias("first_sec"),
-        F.max(sec).alias("last_sec"),
-        F.min(F.when(F.col("event_type") == "error", sec)).alias("err_sec"),
-    ).select(
-        # FLOOR(mean value * 10) by exact integer division — the
-        # domain-bounded predictor (see the oracle note above)
-        F.expr("(tu * 10) div (nev * 10000)").cast("bigint").alias("pred"),
-        F.when(
-            F.col("err_sec").isNotNull(),
-            F.expr("(err_sec - first_sec) div 86400"),
-        )
-        .otherwise(F.expr("(last_sec - first_sec) div 86400"))
-        .alias("dur"),
-        F.col("err_sec").isNotNull().cast("int").alias("ev"),
-    )
+    u = _cindex_durations(load_table(spark, sf_dir, "events"))
     g = u.groupBy("dur", "pred").agg(
         F.sum("ev").cast("bigint").alias("ne"),
         (F.count("*") - F.sum("ev")).cast("bigint").alias("nc"),
@@ -2382,9 +2364,11 @@ def q_cindex(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("comp").cast("bigint").alias("comparable"),
         F.col("conc").cast("bigint").alias("concordant"),
         F.col("tied").cast("bigint").alias("tied_pred"),
+        # no comparable pair (comp = 0) -> NULL, as DuckDB's x / 0,
+        # instead of ANSI's DIVIDE_BY_ZERO
         pround(
             (2.0 * F.col("conc").cast("double") + F.col("tied").cast("double"))
-            / (2.0 * F.col("comp").cast("double")),
+            / (2.0 * F.nullif(F.col("comp"), F.lit(0)).cast("double")),
             6,
         ).alias("c_index"),
     )
@@ -2404,22 +2388,8 @@ def q_cindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_nelson_aalen",
     oracle=(
         _km_dur_sql()
-        +        "t AS (SELECT dur, CAST(SUM(ev) AS BIGINT) AS n_event, "
-        "CAST(COUNT(*) - SUM(ev) AS BIGINT) AS n_censored FROM d GROUP BY dur), "
-        "r AS (SELECT *, CAST(SUM(n_event + n_censored) OVER "
-        "(ORDER BY dur DESC) AS BIGINT) AS n_risk FROM t), "
-        "s AS (SELECT *, "
-        "MIN(CASE WHEN n_event = n_risk THEN 0 ELSE 1 END) OVER (ORDER BY dur)"
-        " AS alive, "
-        "SUM(CASE WHEN n_event < n_risk THEN LN(1 - n_event * 1.0 / n_risk) "
-        "ELSE NULL END) OVER (ORDER BY dur) AS ln_s, "
-        "SUM(n_event * 1.0 / n_risk) OVER (ORDER BY dur) AS na, "
-        # Greenwood increment written divide-then-divide so no integer
-        # product n_risk*(n_risk-n_event) can overflow at scale
-        "SUM(CASE WHEN n_event < n_risk THEN "
-        "(n_event * 1.0 / n_risk) / (n_risk - n_event) "
-        "ELSE NULL END) OVER (ORDER BY dur) AS gw FROM r) "
-        "SELECT CAST(dur AS BIGINT) AS dur_days, n_risk, n_event, "
+        + _km_sql("na", "gw")
+        + " SELECT CAST(dur AS BIGINT) AS dur_days, n_risk, n_event, "
         + sql_round("na", 6) + " AS na_cumhaz, "
         "CASE WHEN alive = 0 THEN 0.0 ELSE "
         + sql_round("EXP(ln_s) * SQRT(gw)", 6)
@@ -2447,49 +2417,7 @@ def q_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: q_kaplan_meier verbatim — one conditional-MIN/MAX
     fact fold to per-user rows, one fold to the bounded duration
     table, O(n)-incremental windows over that table only."""
-    d = _km_durations(spark, sf_dir)
-    t = d.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("n_event"),
-        (F.count("*") - F.sum("ev")).cast("bigint").alias("n_censored"),
-    )
-    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_cum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
-    r = t.withColumn(
-        "n_risk",
-        F.sum(F.col("n_event") + F.col("n_censored")).over(w_rev).cast(
-            "bigint"
-        ),
-    )
-    ratio = F.col("n_event") * 1.0 / F.col("n_risk")
-    s = (
-        r.withColumn(
-            "alive",
-            F.min(
-                F.when(F.col("n_event") == F.col("n_risk"), 0).otherwise(1)
-            ).over(w_cum),
-        )
-        .withColumn(
-            "ln_s",
-            F.sum(
-                F.when(
-                    F.col("n_event") < F.col("n_risk"),
-                    F.log(F.lit(1.0) - ratio),
-                )
-            ).over(w_cum),
-        )
-        .withColumn("na", F.sum(ratio).over(w_cum))
-        .withColumn(
-            "gw",
-            F.sum(
-                F.when(
-                    F.col("n_event") < F.col("n_risk"),
-                    ratio / (F.col("n_risk") - F.col("n_event")),
-                )
-            ).over(w_cum),
-        )
-    )
+    s = _km_table(_km_durations(load_table(spark, sf_dir, "events")), "na", "gw")
     return s.select(
         F.col("dur").cast("bigint").alias("dur_days"),
         "n_risk",
@@ -2516,22 +2444,13 @@ _RMST_H = 30  # days
     "q_rmst",
     oracle=(
         _km_dur_sql()
-        +        "t AS (SELECT dur, CAST(SUM(ev) AS BIGINT) AS n_event, "
-        "CAST(COUNT(*) - SUM(ev) AS BIGINT) AS n_censored FROM d GROUP BY dur), "
-        "r AS (SELECT *, CAST(SUM(n_event + n_censored) OVER "
-        "(ORDER BY dur DESC) AS BIGINT) AS n_risk FROM t), "
-        "s AS (SELECT dur, "
-        "MIN(CASE WHEN n_event = n_risk THEN 0 ELSE 1 END) OVER (ORDER BY dur)"
-        " AS alive, "
-        "SUM(CASE WHEN n_event < n_risk THEN LN(1 - n_event * 1.0 / n_risk) "
-        "ELSE NULL END) OVER (ORDER BY dur) AS ln_s FROM r), "
+        + _km_sql()
         # 6-dp step heights FIRST (the q_kaplan_meier output column
         # exactly), then exact integer segment widths capped at the
         # horizon; per-row 1e-9-unit fold before the bounded sum
-        "k AS (SELECT dur, "
-        "CASE WHEN alive = 0 THEN 0.0 ELSE "
-        + sql_round("EXP(ln_s)", 6)
-        + " END AS s6, "
+        + ", k AS (SELECT dur, "
+        + _KM_S6_SQL
+        + " AS s6, "
         "LEAD(dur) OVER (ORDER BY dur) AS next_dur FROM s), "
         "seg AS (SELECT CAST(FLOOR(s6 * "
         f"(LEAST(COALESCE(next_dur, {_RMST_H}), {_RMST_H}) "
@@ -2569,44 +2488,12 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: q_kaplan_meier verbatim plus one LEAD window over the
     bounded duration table and a 1-row fold."""
-    d = _km_durations(spark, sf_dir)
-    t = d.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("n_event"),
-        (F.count("*") - F.sum("ev")).cast("bigint").alias("n_censored"),
-    )
-    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_cum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
-    w_lead = Window.orderBy("dur")
-    r = t.withColumn(
-        "n_risk",
-        F.sum(F.col("n_event") + F.col("n_censored")).over(w_rev).cast(
-            "bigint"
-        ),
-    )
-    ratio = F.col("n_event") * 1.0 / F.col("n_risk")
-    s = r.withColumn(
-        "alive",
-        F.min(
-            F.when(F.col("n_event") == F.col("n_risk"), 0).otherwise(1)
-        ).over(w_cum),
-    ).withColumn(
-        "ln_s",
-        F.sum(
-            F.when(
-                F.col("n_event") < F.col("n_risk"),
-                F.log(F.lit(1.0) - ratio),
-            )
-        ).over(w_cum),
-    )
+    s = _km_table(_km_durations(load_table(spark, sf_dir, "events")))
     H = F.lit(_RMST_H)
     k = s.select(
         "dur",
-        F.when(F.col("alive") == 0, F.lit(0.0))
-        .otherwise(pround(F.exp("ln_s"), 6))
-        .alias("s6"),
-        F.lead("dur").over(w_lead).alias("next_dur"),
+        _km_s6().alias("s6"),
+        F.lead("dur").over(Window.orderBy("dur")).alias("next_dur"),
     )
     seg = k.select(
         F.floor(
@@ -2621,7 +2508,7 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("su")
     )
-    head = t.agg(
+    head = s.agg(
         F.least(F.min("dur"), H).cast("bigint").alias("h0"),
         F.sum(F.col("n_event") + F.col("n_censored"))
         .cast("bigint")
@@ -2653,25 +2540,13 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_fleming_harrington",
     oracle=(
         _km_dur_sql(arm=True)
-        +        "t AS (SELECT dur, "
-        "CAST(SUM(ev) AS BIGINT) AS de, "
-        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) AS d1, "
-        "CAST(COUNT(*) AS BIGINT) AS tot, "
-        "CAST(SUM(arm) AS BIGINT) AS tot1 FROM d GROUP BY dur), "
-        "r AS (SELECT dur, de, d1, "
-        "CAST(SUM(tot) OVER (ORDER BY dur DESC) AS BIGINT) AS n, "
-        "CAST(SUM(tot1) OVER (ORDER BY dur DESC) AS BIGINT) AS n1 FROM t), "
+        + _risk2_sql()
         # pooled KM at each duration (the q_kaplan_meier text), then
         # the LEFT-CONTINUOUS weight = survival lagged one duration
-        "s AS (SELECT *, "
-        "MIN(CASE WHEN de = n THEN 0 ELSE 1 END) OVER (ORDER BY dur) "
-        "AS alive, "
-        "SUM(CASE WHEN de < n THEN LN(1 - de * 1.0 / n) ELSE NULL END) "
-        "OVER (ORDER BY dur) AS ln_s FROM r), "
-        "k AS (SELECT dur, de, d1, n, n1, "
-        "COALESCE(LAG(CASE WHEN alive = 0 THEN 0.0 ELSE "
-        + sql_round("EXP(ln_s)", 6)
-        + " END) OVER (ORDER BY dur), 1.0) AS w FROM s), "
+        + _km_surv_sql("de", "n")
+        + ", k AS (SELECT dur, de, d1, n, n1, COALESCE(LAG("
+        + _KM_S6_SQL
+        + ") OVER (ORDER BY dur), 1.0) AS w FROM s), "
         "terms AS (SELECT "
         "CAST(FLOOR(w * (d1 - de * (n1 * 1.0 / n)) * 1000000000 + 0.5) "
         "AS BIGINT) AS su, "
@@ -2679,14 +2554,8 @@ def q_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
         "* (de * (n1 * 1.0 / n) * (1 - n1 * 1.0 / n) "
         "* (n - de) * 1.0 / (n - 1)) * 1000000000 + 0.5) AS BIGINT) "
         "ELSE 0 END AS vu FROM k WHERE de > 0), "
-        "g AS (SELECT "
-        "CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_control, "
-        "CAST(SUM(arm) AS BIGINT) AS n_treat, "
-        "CAST(SUM(CASE WHEN arm = 0 THEN ev ELSE 0 END) AS BIGINT) "
-        "AS events_control, "
-        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) "
-        "AS events_treat FROM d), "
-        "a AS (SELECT CAST(SUM(su) AS BIGINT) AS su, "
+        + _arm_sum_sql()
+        + "a AS (SELECT CAST(SUM(su) AS BIGINT) AS su, "
         "CAST(SUM(vu) AS BIGINT) AS vu FROM terms) "
         "SELECT n_control, n_treat, events_control, events_treat, "
         + sql_round("CAST(su AS DOUBLE) / 1000000000", 6) + " AS s_fh, "
@@ -2724,53 +2593,11 @@ def q_fleming_harrington(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: q_logrank + one LAG window over the bounded duration
     table — two fact folds, O(n)-incremental windows over <=|durs|
     rows, a 1-row aggregate."""
-    u = _km_durations(spark, sf_dir, arm=True)
-    t = u.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("de"),
-        F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("d1"),
-        F.count("*").cast("bigint").alias("tot"),
-        F.sum("arm").cast("bigint").alias("tot1"),
-    )
-    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_cum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
-    w_lag = Window.orderBy("dur")
-    r = t.select(
-        "dur",
-        "de",
-        "d1",
-        F.sum("tot").over(w_rev).cast("bigint").alias("n"),
-        F.sum("tot1").over(w_rev).cast("bigint").alias("n1"),
-    )
-    pooled_ratio = F.col("de") * 1.0 / F.col("n")
-    s = r.withColumn(
-        "alive",
-        F.min(F.when(F.col("de") == F.col("n"), 0).otherwise(1)).over(
-            w_cum
-        ),
-    ).withColumn(
-        "ln_s",
-        F.sum(
-            F.when(
-                F.col("de") < F.col("n"),
-                F.log(F.lit(1.0) - pooled_ratio),
-            )
-        ).over(w_cum),
-    )
-    s6 = F.when(F.col("alive") == 0, F.lit(0.0)).otherwise(
-        pround(F.exp("ln_s"), 6)
-    )
-    k = s.select(
-        "dur",
-        "de",
-        "d1",
-        "n",
-        "n1",
-        F.coalesce(F.lag(s6).over(w_lag), F.lit(1.0)).alias("w"),
-    )
+    u = _km_durations(load_table(spark, sf_dir, "events"), arm=True)
+    # pooled KM over the joint risk sets, lagged one duration
+    s = _km_surv(_risk2(u), "de", "n")
+    w = F.coalesce(F.lag(_km_s6()).over(Window.orderBy("dur")), F.lit(1.0))
+    k = s.select("dur", "de", "d1", "n", "n1", w.alias("w"))
     share = F.col("n1") * 1.0 / F.col("n")
     su = F.floor(
         F.col("w") * (F.col("d1") - F.col("de") * share) * 1000000000
@@ -2799,25 +2626,11 @@ def q_fleming_harrington(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("su").cast("bigint").alias("su"),
         F.sum("vu").cast("bigint").alias("vu"),
     )
-    g = u.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_control"),
-        F.sum("arm").cast("bigint").alias("n_treat"),
-        F.sum(F.when(F.col("arm") == 0, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("events_control"),
-        F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("events_treat"),
-    )
+    g = _arm_summary(u)
     sd = F.col("su").cast("double") / 1000000000
     vd = F.col("vu").cast("double") / 1000000000
     return g.crossJoin(F.broadcast(a)).select(
-        "n_control",
-        "n_treat",
-        "events_control",
-        "events_treat",
+        *g.columns,
         pround(sd, 6).alias("s_fh"),
         pround(vd, 6).alias("var_fh"),
         F.when(F.col("vu") == 0, F.lit(None).cast("double"))
@@ -2841,17 +2654,8 @@ def q_fleming_harrington(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_logrank_strat",
     oracle=(
         _km_dur_sql(arm=True, strat=True)
-        + "t AS (SELECT stratum, dur, "
-        "CAST(SUM(ev) AS BIGINT) AS de, "
-        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) AS d1, "
-        "CAST(COUNT(*) AS BIGINT) AS tot, "
-        "CAST(SUM(arm) AS BIGINT) AS tot1 FROM d GROUP BY stratum, dur), "
-        "r AS (SELECT stratum, dur, de, d1, "
-        "CAST(SUM(tot) OVER (PARTITION BY stratum ORDER BY dur DESC) "
-        "AS BIGINT) AS n, "
-        "CAST(SUM(tot1) OVER (PARTITION BY stratum ORDER BY dur DESC) "
-        "AS BIGINT) AS n1 FROM t), "
-        "terms AS (SELECT de, d1, "
+        + _risk2_sql(strat=True)
+        + "terms AS (SELECT de, d1, "
         "CAST(FLOOR(de * (n1 * 1.0 / n) * 1000000000 + 0.5) AS BIGINT) AS eu, "
         "CASE WHEN n > 1 THEN CAST(FLOOR("
         "de * (n1 * 1.0 / n) * (1 - n1 * 1.0 / n) "
@@ -2902,26 +2706,8 @@ def q_logrank_strat(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded (stratum, duration) table, two PARTITIONed windows over
     that table only, a 1-row aggregate. No fact-scale window, no
     collect."""
-    u = _km_durations(spark, sf_dir, arm=True, strat=True)
-    t = u.groupBy("stratum", "dur").agg(
-        F.sum("ev").cast("bigint").alias("de"),
-        F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("d1"),
-        F.count("*").cast("bigint").alias("tot"),
-        F.sum("arm").cast("bigint").alias("tot1"),
-    )
-    w_rev = (
-        Window.partitionBy("stratum")
-        .orderBy(F.desc("dur"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    r = t.select(
-        "de",
-        "d1",
-        F.sum("tot").over(w_rev).cast("bigint").alias("n"),
-        F.sum("tot1").over(w_rev).cast("bigint").alias("n1"),
-    ).filter(F.col("de") > 0)
+    u = _km_durations(load_table(spark, sf_dir, "events"), arm=True, strat=True)
+    r = _risk2(u, strat=True).filter(F.col("de") > 0)
     share = F.col("n1") * 1.0 / F.col("n")
     eu = F.floor(F.col("de") * share * 1000000000 + F.lit(0.5)).cast("bigint")
     vu = F.when(
@@ -2980,17 +2766,10 @@ def q_logrank_strat(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_schoenfeld_trend",
     oracle=(
         _km_dur_sql(arm=True)
-        + "t AS (SELECT dur, "
-        "CAST(SUM(ev) AS BIGINT) AS de, "
-        "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) AS d1, "
-        "CAST(COUNT(*) AS BIGINT) AS tot, "
-        "CAST(SUM(arm) AS BIGINT) AS tot1 FROM d GROUP BY dur), "
-        "r AS (SELECT dur, de, d1, "
-        "CAST(SUM(tot) OVER (ORDER BY dur DESC) AS BIGINT) AS n, "
-        "CAST(SUM(tot1) OVER (ORDER BY dur DESC) AS BIGINT) AS n1 FROM t), "
+        + _risk2_sql()
         # s_t in exact 1e-9 units: d1*1e9 - round(de*n1/n*1e9) — the
         # q_logrank eu integer reused as the expectation term
-        "terms AS (SELECT dur, "
+        + "terms AS (SELECT dur, "
         "d1 * 1000000000 - CAST(FLOOR(de * (n1 * 1.0 / n) * 1000000000 "
         "+ 0.5) AS BIGINT) AS su FROM r WHERE de > 0), "
         "m AS (SELECT CAST(COUNT(*) AS BIGINT) AS k, "
@@ -3036,26 +2815,9 @@ def q_schoenfeld_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the shared _km_durations per-user fold, one fold to
     the bounded duration table, ONE O(n)-incremental window over that
     table, a 1-row moment fold. No fact-scale window, no collect."""
-    u = _km_durations(spark, sf_dir, arm=True)
+    u = _km_durations(load_table(spark, sf_dir, "events"), arm=True)
     dec = "decimal(38,0)"
-    t = u.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("de"),
-        F.sum(F.when(F.col("arm") == 1, F.col("ev")).otherwise(0))
-        .cast("bigint")
-        .alias("d1"),
-        F.count("*").cast("bigint").alias("tot"),
-        F.sum("arm").cast("bigint").alias("tot1"),
-    )
-    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    r = t.select(
-        "dur",
-        "de",
-        "d1",
-        F.sum("tot").over(w_rev).cast("bigint").alias("n"),
-        F.sum("tot1").over(w_rev).cast("bigint").alias("n1"),
-    ).filter(F.col("de") > 0)
+    r = _risk2(u).filter(F.col("de") > 0)
     share = F.col("n1") * 1.0 / F.col("n")
     eu = F.floor(F.col("de") * share * 1000000000 + F.lit(0.5)).cast("bigint")
     terms = r.select(
@@ -3110,37 +2872,14 @@ def q_schoenfeld_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_km_bands",
     oracle=(
         _km_dur_sql()
-        + "t AS (SELECT dur, CAST(SUM(ev) AS BIGINT) AS n_event, "
-        "CAST(COUNT(*) - SUM(ev) AS BIGINT) AS n_censored FROM d GROUP BY dur), "
-        "r AS (SELECT *, CAST(SUM(n_event + n_censored) OVER "
-        "(ORDER BY dur DESC) AS BIGINT) AS n_risk FROM t), "
-        "s AS (SELECT *, "
-        "MIN(CASE WHEN n_event = n_risk THEN 0 ELSE 1 END) OVER (ORDER BY dur)"
-        " AS alive, "
-        "SUM(CASE WHEN n_event < n_risk THEN LN(1 - n_event * 1.0 / n_risk) "
-        "ELSE NULL END) OVER (ORDER BY dur) AS ln_s, "
-        "SUM(CASE WHEN n_event < n_risk THEN "
-        "(n_event * 1.0 / n_risk) / (n_risk - n_event) "
-        "ELSE NULL END) OVER (ORDER BY dur) AS gw FROM r) "
-        "SELECT CAST(dur AS BIGINT) AS dur_days, n_risk, n_event, "
-        "CASE WHEN alive = 0 THEN 0.0 ELSE "
-        + sql_round("EXP(ln_s)", 6) + " END AS survival, "
-        "CASE WHEN alive = 0 THEN 0.0 "
-        "WHEN ln_s = 0 OR gw = 0 THEN NULL ELSE "
-        + sql_round(
-            "EXP(0.0 - EXP(LN(0.0 - ln_s) "
-            "+ 1.959964 * SQRT(gw) / (0.0 - ln_s)))",
-            6,
-        )
-        + " END AS ci_lo, "
-        "CASE WHEN alive = 0 THEN 0.0 "
-        "WHEN ln_s = 0 OR gw = 0 THEN NULL ELSE "
-        + sql_round(
-            "EXP(0.0 - EXP(LN(0.0 - ln_s) "
-            "- 1.959964 * SQRT(gw) / (0.0 - ln_s)))",
-            6,
-        )
-        + " END AS ci_hi FROM s"
+        + _km_sql("gw")
+        + " SELECT CAST(dur AS BIGINT) AS dur_days, n_risk, n_event, "
+        + _KM_S6_SQL
+        + " AS survival, "
+        + _km_band_sql("+")
+        + " AS ci_lo, "
+        + _km_band_sql("-")
+        + " AS ci_hi FROM s"
     ),
     tags=("timeseries", "survival", "agg"),
 )
@@ -3176,70 +2915,15 @@ def q_km_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold to per-user rows, one fold to the bounded duration table
     (<= observed span in days), O(n)-incremental windows over that
     bounded table only; the band adds pure per-row column math."""
-    d = _km_durations(spark, sf_dir)
-    t = d.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("n_event"),
-        (F.count("*") - F.sum("ev")).cast("bigint").alias("n_censored"),
-    )
-    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_cum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
-    r = t.withColumn(
-        "n_risk",
-        F.sum(F.col("n_event") + F.col("n_censored")).over(w_rev).cast(
-            "bigint"
-        ),
-    )
-    ratio = F.col("n_event") * 1.0 / F.col("n_risk")
-    s = (
-        r.withColumn(
-            "alive",
-            F.min(
-                F.when(F.col("n_event") == F.col("n_risk"), 0).otherwise(1)
-            ).over(w_cum),
-        )
-        .withColumn(
-            "ln_s",
-            F.sum(
-                F.when(
-                    F.col("n_event") < F.col("n_risk"),
-                    F.log(F.lit(1.0) - ratio),
-                )
-            ).over(w_cum),
-        )
-        .withColumn(
-            "gw",
-            F.sum(
-                F.when(
-                    F.col("n_event") < F.col("n_risk"),
-                    ratio / (F.col("n_risk") - F.col("n_event")),
-                )
-            ).over(w_cum),
-        )
-    )
-    th = (
-        F.lit(1.959964)
-        * F.sqrt(F.col("gw"))
-        / (F.lit(0.0) - F.col("ln_s"))
-    )
-    c = F.log(F.lit(0.0) - F.col("ln_s"))
-    degenerate = (F.col("ln_s") == 0) | (F.col("gw") == 0)
+    s = _km_table(_km_durations(load_table(spark, sf_dir, "events")), "gw")
+    lo, hi = _km_bands()
     return s.select(
         F.col("dur").cast("bigint").alias("dur_days"),
         "n_risk",
         "n_event",
-        F.when(F.col("alive") == 0, F.lit(0.0))
-        .otherwise(pround(F.exp("ln_s"), 6))
-        .alias("survival"),
-        F.when(F.col("alive") == 0, F.lit(0.0))
-        .when(degenerate, F.lit(None).cast("double"))
-        .otherwise(pround(F.exp(F.lit(0.0) - F.exp(c + th)), 6))
-        .alias("ci_lo"),
-        F.when(F.col("alive") == 0, F.lit(0.0))
-        .when(degenerate, F.lit(None).cast("double"))
-        .otherwise(pround(F.exp(F.lit(0.0) - F.exp(c - th)), 6))
-        .alias("ci_hi"),
+        _km_s6().alias("survival"),
+        lo.alias("ci_lo"),
+        hi.alias("ci_hi"),
     )
 
 
@@ -3258,37 +2942,14 @@ def q_km_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_km_median",
     oracle=(
         _km_dur_sql()
-        + "t AS (SELECT dur, CAST(SUM(ev) AS BIGINT) AS n_event, "
-        "CAST(COUNT(*) - SUM(ev) AS BIGINT) AS n_censored FROM d GROUP BY dur), "
-        "r AS (SELECT *, CAST(SUM(n_event + n_censored) OVER "
-        "(ORDER BY dur DESC) AS BIGINT) AS n_risk FROM t), "
-        "s AS (SELECT *, "
-        "MIN(CASE WHEN n_event = n_risk THEN 0 ELSE 1 END) OVER (ORDER BY dur)"
-        " AS alive, "
-        "SUM(CASE WHEN n_event < n_risk THEN LN(1 - n_event * 1.0 / n_risk) "
-        "ELSE NULL END) OVER (ORDER BY dur) AS ln_s, "
-        "SUM(CASE WHEN n_event < n_risk THEN "
-        "(n_event * 1.0 / n_risk) / (n_risk - n_event) "
-        "ELSE NULL END) OVER (ORDER BY dur) AS gw FROM r), "
-        "b AS (SELECT dur, n_event, n_censored, "
-        "CASE WHEN alive = 0 THEN 0.0 ELSE "
-        + sql_round("EXP(ln_s)", 6) + " END AS s6, "
-        "CASE WHEN alive = 0 THEN 0.0 "
-        "WHEN ln_s = 0 OR gw = 0 THEN NULL ELSE "
-        + sql_round(
-            "EXP(0.0 - EXP(LN(0.0 - ln_s) "
-            "+ 1.959964 * SQRT(gw) / (0.0 - ln_s)))",
-            6,
-        )
-        + " END AS lo6, "
-        "CASE WHEN alive = 0 THEN 0.0 "
-        "WHEN ln_s = 0 OR gw = 0 THEN NULL ELSE "
-        + sql_round(
-            "EXP(0.0 - EXP(LN(0.0 - ln_s) "
-            "- 1.959964 * SQRT(gw) / (0.0 - ln_s)))",
-            6,
-        )
-        + " END AS hi6 FROM s) "
+        + _km_sql("gw")
+        + ", b AS (SELECT dur, n_event, n_censored, "
+        + _KM_S6_SQL
+        + " AS s6, "
+        + _km_band_sql("+")
+        + " AS lo6, "
+        + _km_band_sql("-")
+        + " AS hi6 FROM s) "
         "SELECT CAST(SUM(n_event + n_censored) AS BIGINT) AS n, "
         "CAST(MIN(CASE WHEN s6 <= 0.5 THEN dur END) AS BIGINT) "
         "AS median_days, "
@@ -3323,70 +2984,15 @@ def q_km_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold, one fold to the bounded duration table, the shared
     O(n)-incremental windows over it, then ONE 4-scalar aggregate.
     Nothing touches fact rows twice."""
-    d = _km_durations(spark, sf_dir)
-    t = d.groupBy("dur").agg(
-        F.sum("ev").cast("bigint").alias("n_event"),
-        (F.count("*") - F.sum("ev")).cast("bigint").alias("n_censored"),
-    )
-    w_rev = Window.orderBy(F.desc("dur")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_cum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
-    r = t.withColumn(
-        "n_risk",
-        F.sum(F.col("n_event") + F.col("n_censored")).over(w_rev).cast(
-            "bigint"
-        ),
-    )
-    ratio = F.col("n_event") * 1.0 / F.col("n_risk")
-    s = (
-        r.withColumn(
-            "alive",
-            F.min(
-                F.when(F.col("n_event") == F.col("n_risk"), 0).otherwise(1)
-            ).over(w_cum),
-        )
-        .withColumn(
-            "ln_s",
-            F.sum(
-                F.when(
-                    F.col("n_event") < F.col("n_risk"),
-                    F.log(F.lit(1.0) - ratio),
-                )
-            ).over(w_cum),
-        )
-        .withColumn(
-            "gw",
-            F.sum(
-                F.when(
-                    F.col("n_event") < F.col("n_risk"),
-                    ratio / (F.col("n_risk") - F.col("n_event")),
-                )
-            ).over(w_cum),
-        )
-    )
-    th = (
-        F.lit(1.959964)
-        * F.sqrt(F.col("gw"))
-        / (F.lit(0.0) - F.col("ln_s"))
-    )
-    c = F.log(F.lit(0.0) - F.col("ln_s"))
-    degenerate = (F.col("ln_s") == 0) | (F.col("gw") == 0)
+    s = _km_table(_km_durations(load_table(spark, sf_dir, "events")), "gw")
+    lo, hi = _km_bands()
     b = s.select(
         "dur",
         "n_event",
         "n_censored",
-        F.when(F.col("alive") == 0, F.lit(0.0))
-        .otherwise(pround(F.exp("ln_s"), 6))
-        .alias("s6"),
-        F.when(F.col("alive") == 0, F.lit(0.0))
-        .when(degenerate, F.lit(None).cast("double"))
-        .otherwise(pround(F.exp(F.lit(0.0) - F.exp(c + th)), 6))
-        .alias("lo6"),
-        F.when(F.col("alive") == 0, F.lit(0.0))
-        .when(degenerate, F.lit(None).cast("double"))
-        .otherwise(pround(F.exp(F.lit(0.0) - F.exp(c - th)), 6))
-        .alias("hi6"),
+        _km_s6().alias("s6"),
+        lo.alias("lo6"),
+        hi.alias("hi6"),
     )
     return b.agg(
         F.sum(F.col("n_event") + F.col("n_censored"))

@@ -133,10 +133,11 @@ def test_xgb_round_gain_positive_and_weights_signed(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Shared KM duration-fold helper (VERDICT r14 #5): the 7 survival
-# oracles are generated from _km_dur_sql; pin the generated text to
-# the exact pre-refactor per-query bytes so the extraction can never
-# silently change a hash-green oracle.
+# Shared KM duration-fold helper (VERDICT r14 #5): the 13 survival
+# oracles open with _km_dur_sql; pin the generated text to the exact
+# pre-refactor per-query bytes so the extraction can never silently
+# change a hash-green oracle. The risk-set tables built on the fold
+# (_km_sql, _risk2_sql, _arm_sum_sql) are pinned the same way.
 
 _KM_PREFIX_PLAIN = (
     "WITH u AS (SELECT user_id, "
@@ -162,15 +163,66 @@ _KM_PREFIX_ARM = (
     "CASE WHEN err_sec IS NOT NULL THEN 1 ELSE 0 END AS ev FROM u), "
 )
 
+_KM_PREFIX_STRAT = (
+    "WITH u AS (SELECT user_id % 2 AS arm, (user_id // 2) % 3 AS stratum, "
+    "MIN(epoch_ns(ts) // 1000000000) AS first_sec, "
+    "MAX(epoch_ns(ts) // 1000000000) AS last_sec, "
+    "MIN(CASE WHEN event_type = 'error' THEN epoch_ns(ts) // 1000000000 "
+    "END) AS err_sec FROM events GROUP BY user_id), "
+    "d AS (SELECT arm, stratum, CASE WHEN err_sec IS NOT NULL "
+    "THEN (err_sec - first_sec) // 86400 "
+    "ELSE (last_sec - first_sec) // 86400 END AS dur, "
+    "CASE WHEN err_sec IS NOT NULL THEN 1 ELSE 0 END AS ev FROM u), "
+)
+
 _KM_FAMILY = {
-    "q_kaplan_meier": False,
-    "q_nelson_aalen": False,
-    "q_rmst": False,
-    "q_logrank": True,
-    "q_gehan": True,
-    "q_tarone_ware": True,
-    "q_fleming_harrington": True,
+    "q_kaplan_meier": _KM_PREFIX_PLAIN,
+    "q_nelson_aalen": _KM_PREFIX_PLAIN,
+    "q_rmst": _KM_PREFIX_PLAIN,
+    "q_km_bands": _KM_PREFIX_PLAIN,
+    "q_km_median": _KM_PREFIX_PLAIN,
+    "q_logrank": _KM_PREFIX_ARM,
+    "q_gehan": _KM_PREFIX_ARM,
+    "q_tarone_ware": _KM_PREFIX_ARM,
+    "q_fleming_harrington": _KM_PREFIX_ARM,
+    "q_schoenfeld_trend": _KM_PREFIX_ARM,
+    "q_logrank_strat": _KM_PREFIX_STRAT,
 }
+
+# the pre-refactor bytes of the product-limit table (through ln_s),
+# the two-arm at-risk table and the arm summary
+_KM_TABLE = (
+    "t AS (SELECT dur, CAST(SUM(ev) AS BIGINT) AS n_event, "
+    "CAST(COUNT(*) - SUM(ev) AS BIGINT) AS n_censored FROM d GROUP BY dur), "
+    "r AS (SELECT *, CAST(SUM(n_event + n_censored) OVER "
+    "(ORDER BY dur DESC) AS BIGINT) AS n_risk FROM t), "
+    "s AS (SELECT *, "
+    "MIN(CASE WHEN n_event = n_risk THEN 0 ELSE 1 END) OVER (ORDER BY dur)"
+    " AS alive, "
+    "SUM(CASE WHEN n_event < n_risk THEN LN(1 - n_event * 1.0 / n_risk) "
+    "ELSE NULL END) OVER (ORDER BY dur) AS ln_s"
+)
+
+_RISK2_TABLE = (
+    "t AS (SELECT dur, "
+    "CAST(SUM(ev) AS BIGINT) AS de, "
+    "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) AS d1, "
+    "CAST(COUNT(*) AS BIGINT) AS tot, "
+    "CAST(SUM(arm) AS BIGINT) AS tot1 FROM d GROUP BY dur), "
+    "r AS (SELECT dur, de, d1, "
+    "CAST(SUM(tot) OVER (ORDER BY dur DESC) AS BIGINT) AS n, "
+    "CAST(SUM(tot1) OVER (ORDER BY dur DESC) AS BIGINT) AS n1 FROM t), "
+)
+
+_ARM_SUMMARY = (
+    "g AS (SELECT "
+    "CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_control, "
+    "CAST(SUM(arm) AS BIGINT) AS n_treat, "
+    "CAST(SUM(CASE WHEN arm = 0 THEN ev ELSE 0 END) AS BIGINT) "
+    "AS events_control, "
+    "CAST(SUM(CASE WHEN arm = 1 THEN ev ELSE 0 END) AS BIGINT) "
+    "AS events_treat FROM d), "
+)
 
 
 def test_km_fold_sql_generation():
@@ -178,18 +230,86 @@ def test_km_fold_sql_generation():
 
     assert _km_dur_sql() == _KM_PREFIX_PLAIN
     assert _km_dur_sql(arm=True) == _KM_PREFIX_ARM
-    for name, arm in _KM_FAMILY.items():
-        assert REGISTRY[name].oracle.startswith(
-            _KM_PREFIX_ARM if arm else _KM_PREFIX_PLAIN
-        ), name
+    assert _km_dur_sql(arm=True, strat=True) == _KM_PREFIX_STRAT
+    for name, prefix in _KM_FAMILY.items():
+        assert REGISTRY[name].oracle.startswith(prefix), name
+
+
+def test_km_table_sql_in_oracles():
+    """Each risk-set table's SQL helper text appears verbatim in every
+    oracle built on it, and the default forms keep the pre-refactor
+    bytes."""
+    from fraud_detection_spark.operators import timeseries as ts
+
+    assert ts._km_sql() == _KM_TABLE + " FROM r)"
+    assert ts._risk2_sql() == _RISK2_TABLE
+    assert ts._arm_sum_sql() == _ARM_SUMMARY
+    members = {
+        ts._km_sql(): ("q_kaplan_meier", "q_rmst"),
+        ts._km_sql("na", "gw"): ("q_nelson_aalen",),
+        ts._km_sql("gw"): ("q_km_bands", "q_km_median"),
+        ts._km_surv_sql("de", "n"): ("q_fleming_harrington",),
+        ts._KM_S6_SQL: (
+            "q_kaplan_meier",
+            "q_rmst",
+            "q_fleming_harrington",
+            "q_km_bands",
+            "q_km_median",
+        ),
+        ts._risk2_sql(): (
+            "q_logrank",
+            "q_gehan",
+            "q_tarone_ware",
+            "q_fleming_harrington",
+            "q_schoenfeld_trend",
+        ),
+        ts._risk2_sql(strat=True): ("q_logrank_strat",),
+        ts._risk2_sql(src="dz"): ("q_cox_score",),
+        ts._arm_sum_sql(): (
+            "q_logrank",
+            "q_gehan",
+            "q_tarone_ware",
+            "q_fleming_harrington",
+        ),
+        ts._arm_sum_sql(("z0", "z1"), src="dz"): ("q_cox_score",),
+    }
+    for text, names in members.items():
+        for name in names:
+            assert text in REGISTRY[name].oracle, name
+    for name in ("q_km_bands", "q_km_median"):
+        for op in "+-":
+            assert ts._km_band_sql(op) in REGISTRY[name].oracle, (name, op)
+    # the two covariate members open with the fold carrying their
+    # per-user aggregate
+    covariates = {
+        "q_cox_score": (
+            "pc",
+            "CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) "
+            "AS BIGINT)",
+        ),
+        "q_cindex": (
+            "pred",
+            "CAST((SUM(CAST(FLOOR(value * 10000 + 0.5) AS BIGINT)) * 10) "
+            "// (COUNT(*) * 10000) AS BIGINT)",
+        ),
+    }
+    for name, (col, agg) in covariates.items():
+        prefix = _KM_PREFIX_PLAIN.replace(
+            "user_id, ", f"user_id, {agg} AS {col}, ", 1
+        ).replace("d AS (SELECT ", f"d AS (SELECT {col}, ", 1)
+        assert ts._km_dur_sql(extra={col: agg}) == prefix, name
+        assert REGISTRY[name].oracle.startswith(prefix), name
 
 
 def test_km_fold_spark_columns(spark, sf_dir):
     from fraud_detection_spark.operators.timeseries import _km_durations
 
-    d = _km_durations(spark, sf_dir)
+    from fraud_detection_spark.sources import load_table
+
+    ev = load_table(spark, sf_dir, "events")
+    d = _km_durations(ev)
     assert d.columns == ["dur", "ev"]
-    a = _km_durations(spark, sf_dir, arm=True)
+    a = _km_durations(ev, arm=True)
     assert a.columns == ["arm", "dur", "ev"]
     # the arm split partitions the same duration multiset
     tot = d.groupBy().count().collect()[0][0]

@@ -3,7 +3,9 @@ oracle's rows exactly (the test_partition_stress rule) on inputs the
 fixtures never hold. The trainer family runs with lineitem empty,
 holding a single row, or holding one class only (no
 l_returnflag = 'R'); the queries that divide by a fact count run with
-lineitem and events both empty. The inputs derive from the test SF's
+lineitem and events both empty; the survival family runs with events
+empty, holding a single user, holding no 'error' event, or holding one
+parity arm only (even user ids). The inputs derive from the test SF's
 parquet under a pytest tmp dir: each rewritten table is a DuckDB COPY
 of a SELECT tail over the shipped one, and every other table is
 symlinked."""
@@ -54,6 +56,30 @@ CASES = {
 # queries that divide by a fact-table count
 EMPTY_FACTS_QUERIES = ("q_funnel_steps", "q_pagerank", "q_hits")
 
+SURVIVAL = (
+    "q_kaplan_meier",
+    "q_nelson_aalen",
+    "q_rmst",
+    "q_km_bands",
+    "q_km_median",
+    "q_logrank",
+    "q_gehan",
+    "q_tarone_ware",
+    "q_fleming_harrington",
+    "q_logrank_strat",
+    "q_schoenfeld_trend",
+    "q_cox_score",
+    "q_cindex",
+)
+
+# events rewrite per case
+EVENT_CASES = {
+    "empty": "WHERE FALSE",
+    "one_user": "QUALIFY user_id = MIN(user_id) OVER ()",
+    "no_errors": "WHERE event_type <> 'error'",
+    "one_arm": "WHERE user_id % 2 = 0",
+}
+
 
 def _rewrite(d, sf_dir: str, tails: dict[str, str]):
     """A DuckDB connection with views over ``d``, where each table of
@@ -95,6 +121,18 @@ def empty_facts(tmp_path_factory, sf_dir):
     con.close()
 
 
+@pytest.fixture(scope="module")
+def degenerate_events(tmp_path_factory, sf_dir):
+    """case -> (sf dir, DuckDB connection) with events rewritten."""
+    out = {}
+    for case, tail in EVENT_CASES.items():
+        d = tmp_path_factory.mktemp(f"degenerate_events_{case}")
+        out[case] = (str(d), _rewrite(d, sf_dir, {"events": tail}))
+    yield out
+    for _, con in out.values():
+        con.close()
+
+
 @pytest.mark.parametrize("case", sorted(CASES))
 @pytest.mark.parametrize("name", TRAINERS)
 def test_trainer_degenerate_input_matches_oracle(spark, degenerate, name, case):
@@ -112,3 +150,15 @@ def test_empty_facts_matches_oracle(spark, empty_facts, name):
     want = con.execute(q.oracle).df()
     got = q.fn(spark, d).toPandas()
     assert_exact(got, want, f"{name}@empty_facts")
+
+
+@pytest.mark.parametrize("case", sorted(EVENT_CASES))
+@pytest.mark.parametrize("name", SURVIVAL)
+def test_survival_degenerate_input_matches_oracle(
+    spark, degenerate_events, name, case
+):
+    d, con = degenerate_events[case]
+    q = REGISTRY[name]
+    want = con.execute(q.oracle).df()
+    got = q.fn(spark, d).toPandas()
+    assert_exact(got, want, f"{name}@{case}")

@@ -19,9 +19,10 @@ row count while their integer contents scale in closed form:
 
 Timing is recorded, never asserted (ADVICE r12 #2). The timed runs
 are gated behind SPARK_GRAFT_SCALE_TESTS=1; measured numbers live in
-SCALE.md. The tree_cum_table and multi-feature fold closed forms also
-run ungated at the test SF, so a reshaped kernel fails the normal
-suite instead of rotting behind the gate.
+SCALE.md. The tree_cum_table and multi-feature fold closed forms, and
+q_cindex's user-growth bounds, also run ungated at the test SF, so a
+reshaped kernel fails the normal suite instead of rotting behind the
+gate.
 """
 
 from __future__ import annotations
@@ -297,17 +298,17 @@ def test_kendall_grid_bounded_under_domain_growth(spark):
           f"cells (facts {facts10}); 10x {w10:.2f}s")
 
 
-@scale
-def test_cindex_grid_bounded_under_user_growth(spark):
-    """q_cindex's fix for VERDICT r13 #1, exercised where the old
-    design failed: grow the USER axis 10x with genuinely NEW users
+def _cindex_user_growth(spark, sf_dir):
+    """q_cindex's per-user fold (the shipped _cindex_durations) over the
+    events grown 10x along the USER axis with genuinely NEW users
     (fresh ids, jittered per-replica values => new spend profiles).
-    The r13 total-spend predictor's distinct count tracked n_users
-    ~1:1; the reworked 0.1-unit mean-spend bins must stay within the
-    value-domain bound and grow sublinearly vs users."""
+    Asserts the timing-free bounds that hold at any SF — exactly 10x
+    users, pred bins within the value-domain bound — and returns the
+    1x/10x per-user tables, user counts and domain bins."""
+    from fraud_detection_spark.operators.timeseries import _cindex_durations
     from fraud_detection_spark.sources import load_table
 
-    ev = load_table(spark, SCALE_SF_DIR, "events")
+    ev = load_table(spark, sf_dir, "events")
     max_uid = ev.agg(F.max("user_id")).collect()[0][0]
     ev10 = (
         ev.crossJoin(F.broadcast(spark_range(ev, REPLICAS)))
@@ -320,36 +321,35 @@ def test_cindex_grid_bounded_under_user_growth(spark):
         .drop("_rep")
     )
 
-    def per_user(e):
-        sec = F.expr("ts div 1000000000")
-        return e.groupBy("user_id").agg(
-            F.sum(F.floor(F.col("value") * 10000 + F.lit(0.5)).cast("bigint"))
-            .cast("bigint")
-            .alias("tu"),
-            F.count("*").cast("bigint").alias("nev"),
-            F.min(sec).alias("first_sec"),
-            F.max(sec).alias("last_sec"),
-            F.min(F.when(F.col("event_type") == "error", sec)).alias("err_sec"),
-        ).select(
-            F.expr("(tu * 10) div (nev * 10000)").cast("bigint").alias("pred"),
-            F.when(
-                F.col("err_sec").isNotNull(),
-                F.expr("(err_sec - first_sec) div 86400"),
-            )
-            .otherwise(F.expr("(last_sec - first_sec) div 86400"))
-            .alias("dur"),
-        )
-
-    u1, u10 = per_user(ev), per_user(ev10)
+    u1, u10 = _cindex_durations(ev), _cindex_durations(ev10)
     users1, users10 = u1.count(), u10.count()
     assert users10 == REPLICAS * users1
-    p1 = u1.select("pred").distinct().count()
     p10 = u10.select("pred").distinct().count()
-    durs10 = u10.select("dur").distinct().count()
     maxv10 = ev10.agg(F.max("value")).collect()[0][0]
     domain_bins = int(maxv10 * 10) + 2
     # the bound that binds: pred bins <= value-domain bins, NOT users
     assert p10 <= domain_bins
+    return u1, u10, users1, users10, p10, domain_bins
+
+
+def test_cindex_user_growth_test_sf(spark, sf_dir):
+    """The user-growth bounds at the test SF, ungated: pins
+    _cindex_durations' signature and the domain bound in tier-1."""
+    _cindex_user_growth(spark, sf_dir)
+
+
+@scale
+def test_cindex_grid_bounded_under_user_growth(spark):
+    """q_cindex's fix for VERDICT r13 #1, exercised where the old
+    design failed: grow the USER axis 10x with genuinely NEW users.
+    The r13 total-spend predictor's distinct count tracked n_users
+    ~1:1; the reworked 0.1-unit mean-spend bins must stay within the
+    value-domain bound and grow sublinearly vs users."""
+    u1, u10, users1, users10, p10, domain_bins = _cindex_user_growth(
+        spark, SCALE_SF_DIR
+    )
+    p1 = u1.select("pred").distinct().count()
+    durs10 = u10.select("dur").distinct().count()
     assert p10 < users10 / 5  # 10x users did NOT drag the axis along
     grid1, grid10 = p1 * u1.select("dur").distinct().count(), p10 * durs10
     # measured 1.36x (3,892 -> 5,278 cells) under 10x users; 2x is the
