@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fraud_detection_spark.functions import prefix_sums
+
 _HASH = 2654435761  # Knuth multiplicative hash constant
 # Bucket count for the LSH path's distributed 0..m-1 indexing — bounds
 # the broadcast offset table (rows) while keeping per-bucket windows at
@@ -221,11 +223,10 @@ def smote_oversample_lsh(
 ) -> DataFrame:
     """SMOTE scale path: nothing is collected to the driver.
 
-    1. index minority rows 0..m-1 WITHOUT a global window (the q_auc
-       shape, operators/ml_metrics.py q_auc): bucket by a hash of the
-       order key, per-bucket counts → tiny broadcast cumulative-offset
-       join → ``offset + row_number`` over a window PARTITIONED by
-       bucket. No stage ever moves the whole minority set to one task;
+    1. index minority rows 0..m-1 WITHOUT a global window: the
+       running count − 1 from functions.prefix_sums over hash buckets
+       of the order key. No stage ever moves the whole minority set to
+       one task;
     2. approximate kNN via BucketedRandomProjectionLSH self-join
        (candidate pairs from hash-bucket equality, not a cross join);
        keep each row's k nearest, slot-numbered 0..k-1;
@@ -264,27 +265,17 @@ def smote_oversample_lsh(
         order_key.alias("_ok"),
         *[F.col(c).cast("double").alias(c) for c in feature_cols],
     )
-    # Dense 0..m-1 index with no unpartitioned window: _bkt is a pure
-    # function of the order key (hash mod _IDX_BUCKETS), so midx stays
-    # deterministic under any partitioning/retry; the effective global
-    # order is (bucket, _ok) — as arbitrary-but-stable as _ok itself.
-    # Offsets come from a broadcast self-join over ≤_IDX_BUCKETS rows.
-    keyed = keyed.withColumn(
-        "_bkt", F.pmod(F.xxhash64(F.col("_ok")), F.lit(_IDX_BUCKETS)).cast("int")
-    )
-    bcnt = keyed.groupBy("_bkt").agg(F.count("*").alias("_bcnt"))
-    lower = bcnt.select(F.col("_bkt").alias("_lb"), F.col("_bcnt").alias("_lcnt"))
-    offs = (
-        bcnt.join(F.broadcast(lower), F.col("_lb") < F.col("_bkt"), "left")
-        .groupBy("_bkt")
-        .agg(F.coalesce(F.sum("_lcnt"), F.lit(0)).alias("_off"))
-    )
-    w_idx = Window.partitionBy("_bkt").orderBy("_ok")
-    minority = (
-        keyed.join(F.broadcast(offs), "_bkt")
-        .withColumn("midx", F.col("_off") + F.row_number().over(w_idx) - 1)
-        .drop("_bkt", "_off")
-    ).cache()
+    # Dense 0..m-1 index with no unpartitioned window: the bucket is a
+    # pure function of the order key (hash mod _IDX_BUCKETS), so midx
+    # stays deterministic under any partitioning/retry; the effective
+    # global order is (bucket, _ok) — as arbitrary-but-stable as _ok
+    # itself.
+    minority = prefix_sums(
+        keyed,
+        F.pmod(F.xxhash64(F.col("_ok")), F.lit(_IDX_BUCKETS)).cast("int"),
+        "_ok",
+        [(F.lit(1), "midx")],
+    ).withColumn("midx", F.col("midx") - 1).cache()
 
     assembler = VectorAssembler(inputCols=feature_cols, outputCol="fvec")
     mv = assembler.transform(minority).select("midx", "fvec", *feature_cols)

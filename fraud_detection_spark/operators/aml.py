@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from fraud_detection_spark.functions import pround
+from fraud_detection_spark.functions import fp_units, prefix_sums, pround
 from fraud_detection_spark.operators.dedup import label_propagation
 from fraud_detection_spark.operators.graph import _EDGE_SQL, RING_FACTOR, edges
 from fraud_detection_spark.registry import query, sql_round
@@ -722,38 +722,22 @@ def q_gini_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     on exact integers — identical on both engines, rounded at 6 dp.
 
     Scale: per-customer totals are ONE map-side-combinable fact fold.
-    The rank does NOT use a global window: totals bucket by the
-    integer bit length of x (exactly monotone in x — unlike float
-    log2 — so buckets are contiguous ranges of the sort order),
-    cross-bucket offsets come from a <=64-row
-    broadcast self-join, and row_number runs in PARTITIONED windows —
-    the q_auc distributed-rank machinery, correct for any bucketing
-    that respects the sort order. One more one-row aggregate finishes."""
-    from fraud_detection_spark.functions import fp_units
-    from fraud_detection_spark.sources import load_table
-
+    The rank i is the running count of customers in (x, custkey)
+    order — prefix_sums over <=64 bit-length buckets, no global
+    window. One more one-row aggregate finishes."""
     orders = load_table(spark, sf_dir, "orders")
     ct = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.sum(fp_units(F.col("o_totalprice"), 2)).cast("bigint").alias("x")
     )
     # bucket by the integer bit length of x (length of the binary
-    # string), not floor(log2(x)): the distributed-rank machinery needs
-    # the bucket to be exactly monotone in x, and floating-point LOG2
-    # (~1-ulp error) is not provably monotone across power-of-two
-    # boundaries — an ulp inversion at an integer floor boundary would
-    # silently corrupt ranks. bin() is exact integer work (ADVICE r10).
-    b = ct.withColumn("bucket", F.length(F.bin("x")).cast("bigint"))
-    btot = b.groupBy("bucket").agg(F.count("*").alias("bc"))
-    lower = btot.select(F.col("bucket").alias("lb"), F.col("bc").alias("lc"))
-    offs = (
-        btot.join(F.broadcast(lower), F.col("lb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(F.coalesce(F.sum("lc"), F.lit(0)).cast("bigint").alias("off"))
-    )
-    w_in = Window.partitionBy("bucket").orderBy("x", "custkey")
-    r = b.join(F.broadcast(offs), "bucket").select(
-        "x",
-        (F.col("off") + F.row_number().over(w_in)).cast("bigint").alias("i"),
+    # string), not floor(log2(x)): prefix_sums needs the bucket to be
+    # exactly monotone in x, and floating-point LOG2 (~1-ulp error) is
+    # not provably monotone across power-of-two boundaries — an ulp
+    # inversion at an integer floor boundary would silently corrupt
+    # ranks. bin() is exact integer work (ADVICE r10).
+    r = prefix_sums(
+        ct, F.length(F.bin("x")).cast("bigint"), ["x", "custkey"],
+        [(F.lit(1), "i")],
     )
     a = r.agg(
         F.count("*").cast("bigint").alias("n"),

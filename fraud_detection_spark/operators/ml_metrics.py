@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from fraud_detection_spark.functions import fp_units, pround
+from fraud_detection_spark.functions import fp_units, prefix_sums, pround
 from fraud_detection_spark.registry import query, sql_round
 from fraud_detection_spark.sources import load_table
 
@@ -285,20 +285,13 @@ def q_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     score ties (scores pre-rounded so tie structure matches the oracle).
     Ref: roc_auc_score train_model.py:83 / evaluate_model.py:50.
 
-    Scale-safe exact form (no single-partition window anywhere):
-    scores are pre-rounded to 6 dp, so the distinct-score table is
-    bounded at ~10⁶ rows regardless of input size. Ranks come from a
-    distributed prefix sum over that table:
-
-      1. one shuffle agg: (score -> pos, cnt);
-      2. coarse buckets (floor(score·1000), ≤1001 rows): cross-bucket
-         offsets via a tiny broadcast self-join — no window at all;
-      3. within-bucket running count via a PARTITIONED window
-         (partitionBy bucket), so no "move all data to one partition".
-
-    arank(score) = rows_below + (cnt+1)/2, and Σ over positive rows of
-    arank = Σ_groups pos·arank — identical math to the global RANK()
-    oracle, exact in IEEE double (all terms integer or half-integer)."""
+    Scale: scores are pre-rounded to 6 dp, so the distinct-score table
+    is bounded at ~10⁶ rows regardless of input size; one shuffle agg
+    (score -> pos, cnt), then ranks from prefix_sums over that table.
+    arank(score) = rows_below + (cnt+1)/2 with rows_below = cum − cnt,
+    and Σ over positive rows of arank = Σ_groups pos·arank — identical
+    math to the global RANK() oracle, exact in IEEE double (all terms
+    integer or half-integer)."""
     s = scored(spark, sf_dir)
     # NOT cached, deliberately (round 4 A/B): the distinct-score table
     # feeds both the bucket-offset branch and the ranked join with no
@@ -306,40 +299,48 @@ def q_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # but in a run-once query the duplicated map work overlaps across
     # cores, while cache() serializes a 347k-row materialization onto
     # the critical path (measured consistently slower end-to-end).
-    per = (
-        s.groupBy("score")
-        .agg(F.sum("label").alias("pos"), F.count("*").alias("cnt"))
-        .withColumn("bucket", F.floor(F.col("score") * 1000).cast("bigint"))
+    per = s.groupBy("score").agg(
+        F.sum("label").alias("pos"), F.count("*").alias("cnt")
     )
-    btot = per.groupBy("bucket").agg(F.sum("cnt").alias("bcnt"))
-    lower = btot.select(F.col("bucket").alias("lb"), F.col("bcnt").alias("lcnt"))
-    offs = (
-        btot.join(F.broadcast(lower), F.col("lb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(F.coalesce(F.sum("lcnt"), F.lit(0)).alias("offset"))
-    )
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("score")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = (
-        per.join(F.broadcast(offs), "bucket")
-        .withColumn(
-            "arank",
-            F.col("offset")
-            + F.coalesce(F.sum("cnt").over(w_in), F.lit(0))
-            + (F.col("cnt") + 1) / 2.0,
-        )
+    ranked = prefix_sums(
+        per, F.floor(F.col("score") * 1000).cast("bigint"), "score",
+        [("cnt", "cum")],
+    ).withColumn(
+        "arank",
+        F.col("cum") - F.col("cnt") + (F.col("cnt") + 1) / 2.0,
     )
     n_pos = F.sum("pos")
     n_all = F.sum("cnt")
     return ranked.agg(
         pround(
             (F.sum(F.col("pos") * F.col("arank")) - n_pos * (n_pos + 1) / 2.0)
-            / (n_pos * (n_all - n_pos)),
+            / F.nullif(n_pos * (n_all - n_pos), F.lit(0)),
             6,
         ).alias("auc")
+    )
+
+
+def _curve_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 50-bucket score histogram of q_roc_points, q_pr_points and
+    q_avg_precision with descending cumulative (cum_pos, cum_neg) and
+    the class totals (tot_pos, tot_neg) — NULL, not 0, when a class is
+    absent, so the curve's ratios are NULL as the oracle's x/0 is.
+    Bounded: <=51 buckets by construction, so the windows sort a
+    <=51-row table."""
+    b = scored(spark, sf_dir).groupBy(
+        F.floor(F.col("score") * 50).cast("bigint").alias("bucket")
+    ).agg(
+        F.sum("label").alias("pos"),
+        (F.count("*") - F.sum("label")).alias("neg"),
+    )
+    w_cum = Window.orderBy(F.desc("bucket")).rowsBetween(Window.unboundedPreceding, 0)
+    w_all = Window.partitionBy()
+    return b.select(
+        "bucket",
+        F.sum("pos").over(w_cum).alias("cum_pos"),
+        F.sum("neg").over(w_cum).alias("cum_neg"),
+        F.nullif(F.sum("pos").over(w_all), F.lit(0)).alias("tot_pos"),
+        F.nullif(F.sum("neg").over(w_all), F.lit(0)).alias("tot_neg"),
     )
 
 
@@ -362,24 +363,7 @@ def q_roc_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binned ROC curve — the scale-safe two-pass form: histogram scores
     into 50 buckets (one aggregate), then a cumulative window over the
     ~50-row bucket table only. Ref: roc_curve evaluate_model.py:49."""
-    s = scored(spark, sf_dir)
-    b = (
-        s.groupBy(F.floor(F.col("score") * 50).cast("bigint").alias("bucket"))
-        .agg(
-            F.sum("label").alias("pos"),
-            (F.count("*") - F.sum("label")).alias("neg"),
-        )
-    )
-    w_cum = Window.orderBy(F.desc("bucket")).rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.partitionBy()
-    c = b.select(
-        "bucket",
-        F.sum("pos").over(w_cum).alias("cum_pos"),
-        F.sum("neg").over(w_cum).alias("cum_neg"),
-        F.sum("pos").over(w_all).alias("tot_pos"),
-        F.sum("neg").over(w_all).alias("tot_neg"),
-    )
-    return c.select(
+    return _curve_cum(spark, sf_dir).select(
         "bucket",
         pround(F.col("cum_pos") * 1.0 / F.col("tot_pos"), 6).alias("tpr"),
         pround(F.col("cum_neg") * 1.0 / F.col("tot_neg"), 6).alias("fpr"),
@@ -478,20 +462,7 @@ def q_pr_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to q_roc_points — one histogram aggregate
     (map-side combinable), cumulative windows over the ≤51-row bucket
     table only."""
-    s = scored(spark, sf_dir)
-    b = s.groupBy(F.floor(F.col("score") * 50).cast("bigint").alias("bucket")).agg(
-        F.sum("label").alias("pos"),
-        (F.count("*") - F.sum("label")).alias("neg"),
-    )
-    # bounded: ≤51 buckets by construction
-    w_cum = Window.orderBy(F.desc("bucket")).rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.partitionBy()
-    c = b.select(
-        "bucket",
-        F.sum("pos").over(w_cum).alias("cum_pos"),
-        F.sum("neg").over(w_cum).alias("cum_neg"),
-        F.sum("pos").over(w_all).alias("tot_pos"),
-    )
+    c = _curve_cum(spark, sf_dir)
     return c.select(
         "bucket",
         pround(F.col("cum_pos") * 1.0 / (F.col("cum_pos") + F.col("cum_neg")), 6).alias(
@@ -524,19 +495,7 @@ def q_avg_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     never optimistically interpolates. Same bounded bucket-table plan
     as q_pr_points; each ΔR·P step folds to 1e-9 fixed-point units so
     the final sum over the ≤51 rows is an exact integer sum."""
-    s = scored(spark, sf_dir)
-    b = s.groupBy(F.floor(F.col("score") * 50).cast("bigint").alias("bucket")).agg(
-        F.sum("label").alias("pos"),
-        (F.count("*") - F.sum("label")).alias("neg"),
-    )
-    w_cum = Window.orderBy(F.desc("bucket")).rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.partitionBy()
-    c = b.select(
-        "bucket",
-        F.sum("pos").over(w_cum).alias("cum_pos"),
-        F.sum("neg").over(w_cum).alias("cum_neg"),
-        F.sum("pos").over(w_all).alias("tot_pos"),
-    )
+    c = _curve_cum(spark, sf_dir)
     w_lag = Window.orderBy(F.desc("bucket"))
     r = c.select(
         (F.col("cum_pos") * 1.0 / (F.col("cum_pos") + F.col("cum_neg"))).alias("prec"),
@@ -741,20 +700,26 @@ def q_parity_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nl").alias("tnl"),
         F.sum("tp").alias("ttp"),
     )
+    # a segment (or the book) without positives or negatives has NULL
+    # rates, as the oracle's x/0
+    nl = F.nullif(F.col("nl"), F.lit(0))
     return (
         g.crossJoin(F.broadcast(t))
         .select(
             "segment",
             "n",
             pround(F.col("np") * 1.0 / F.col("n"), 6).alias("flag_rate"),
-            pround(F.col("tp") * 1.0 / F.col("nl"), 6).alias("tpr"),
-            pround(F.col("fp") * 1.0 / (F.col("n") - F.col("nl")), 6).alias("fpr"),
+            pround(F.col("tp") * 1.0 / nl, 6).alias("tpr"),
+            pround(
+                F.col("fp") * 1.0 / F.nullif(F.col("n") - F.col("nl"), F.lit(0)), 6
+            ).alias("fpr"),
             pround(
                 F.col("np") * 1.0 / F.col("n") - F.col("tnp") * 1.0 / F.col("tn_"),
                 6,
             ).alias("flag_rate_gap"),
             pround(
-                F.col("tp") * 1.0 / F.col("nl") - F.col("ttp") * 1.0 / F.col("tnl"),
+                F.col("tp") * 1.0 / nl
+                - F.col("ttp") * 1.0 / F.nullif(F.col("tnl"), F.lit(0)),
                 6,
             ).alias("tpr_gap"),
         )
@@ -815,7 +780,9 @@ def q_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         n.cast("bigint").alias("n"),
         pround(po, 6).alias("accuracy"),
         pround(pe, 6).alias("expected_accuracy"),
-        pround((po - pe) / (1 - pe), 6).alias("kappa"),
+        # NULL when chance agreement is certain (p_e = 1), as the
+        # oracle's x/0
+        pround((po - pe) / F.nullif(1 - pe, F.lit(0.0)), 6).alias("kappa"),
     )
 
 
@@ -893,55 +860,11 @@ def q_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmin stays parity-safe; document-scale drift of the DISPLAYED
     6-dp gini would need n ≈ 1e9+.
 
-    Scale: the q_auc machinery verbatim — one map-side-combinable
-    (score → cnt, pos) fold bounded by the 6-dp score domain (NOT row
-    count), coarse-bucket offsets via a ≤1001-row broadcast self-join,
-    within-bucket running sums under a PARTITIONED window (no global
-    single-partition sort anywhere), and a top-1 ordered take. One
-    shuffle agg + bounded-table ops."""
-    s = scored(spark, sf_dir)
-    per = (
-        s.groupBy("score")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.sum("label").cast("bigint").alias("pos"),
-        )
-        .withColumn("bucket", F.floor(F.col("score") * 1000).cast("bigint"))
-    )
-    btot = per.groupBy("bucket").agg(
-        F.sum("cnt").alias("bcnt"), F.sum("pos").alias("bpos")
-    )
-    lower = btot.select(
-        F.col("bucket").alias("lb"),
-        F.col("bcnt").alias("lcnt"),
-        F.col("bpos").alias("lpos"),
-    )
-    offs = (
-        btot.join(F.broadcast(lower), F.col("lb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(
-            F.coalesce(F.sum("lcnt"), F.lit(0)).alias("off_n"),
-            F.coalesce(F.sum("lpos"), F.lit(0)).alias("off_p"),
-        )
-    )
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("score")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    tot = per.agg(
-        F.sum("cnt").cast("bigint").alias("n"), F.sum("pos").cast("bigint").alias("p")
-    )
-    c = (
-        per.join(F.broadcast(offs), "bucket")
-        .select(
-            "score",
-            (F.col("off_n") + F.sum("cnt").over(w_in)).cast("bigint").alias("cum_n"),
-            (F.col("off_p") + F.sum("pos").over(w_in)).cast("bigint").alias("cum_p"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .filter(F.col("cum_n") < F.col("n"))
-    )
+    Scale: tree_cum_table's lazy kernel (_tree_cum: one
+    map-side-combinable (score → cnt, pos) fold bounded by the 6-dp
+    score domain, NOT row count, and its prefix sums) and a top-1
+    ordered take. One shuffle agg + bounded-table ops."""
+    c = _tree_cum(scored(spark, sf_dir)).filter(F.col("cum_n") < F.col("n"))
     nl = F.col("cum_n").cast("double")
     pl = F.col("cum_p").cast("double")
     nr = (F.col("n") - F.col("cum_n")).cast("double")
@@ -1264,10 +1187,8 @@ def q_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt/nn between engines; displayed scalars round at 6 dp).
 
     Scale: ONE fact fold to the distinct-score table (bounded by the
-    6-dp score domain, the q_auc/q_stump discipline) and ONE raw
-    prefix-count pass over it (coarse 1e-3-bucket offsets via a
-    <=1001-row broadcast self-join plus a PARTITIONED within-bucket
-    window — never a global single-partition sort), checkpointed once.
+    6-dp score domain) and ONE raw prefix-count pass over it
+    (prefix_sums), checkpointed once.
     Every round's WEIGHTED prefix sums are then CLOSED FORMS over the
     raw counts: the weight of a point after round j is piecewise
     constant with a breakpoint at t_j, so cum_w(t) is a linear
@@ -1287,43 +1208,15 @@ def q_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("label").cast("bigint").alias("pos"),
     )
 
-    # raw prefix counts over score — computed ONCE, bucket-offset form
-    b = per.withColumn("bucket", F.floor(F.col("score") * 1000).cast("bigint"))
-    btot = b.groupBy("bucket").agg(
-        F.sum("cnt").alias("bc"), F.sum("pos").alias("bp")
-    )
-    lower = btot.select(
-        F.col("bucket").alias("lb"),
-        F.col("bc").alias("lc"),
-        F.col("bp").alias("lp"),
-    )
-    offs = (
-        btot.join(F.broadcast(lower), F.col("lb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(
-            F.coalesce(F.sum("lc"), F.lit(0)).alias("oc"),
-            F.coalesce(F.sum("lp"), F.lit(0)).alias("op"),
-        )
-    )
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("score")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    # raw prefix counts over score — computed ONCE
     cum0 = (
-        b.join(F.broadcast(offs), "bucket")
+        prefix_sums(
+            per, F.floor(F.col("score") * 1000).cast("bigint"), "score",
+            [("cnt", "cum_n"), ("pos", "cp")],
+        )
         .select(
-            "score",
-            "cnt",
-            "pos",
-            (F.col("op") + F.sum("pos").over(w_in)).cast("bigint").alias("cp"),
-            (
-                F.col("oc")
-                - F.col("op")
-                + F.sum(F.col("cnt") - F.col("pos")).over(w_in)
-            )
-            .cast("bigint")
-            .alias("cn"),
+            "score", "cnt", "pos", "cp",
+            (F.col("cum_n") - F.col("cp")).alias("cn"),
         )
         .localCheckpoint()
     )
@@ -1682,68 +1575,39 @@ def q_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _tree_cum_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE fact fold to the distinct-score table (bounded by the 6-dp
-    score domain) + ONE prefix-count pass over it (coarse 1e-3-bucket
-    offsets via a <=1001-row broadcast self-join + PARTITIONED
-    within-bucket windows — never a global single-partition sort),
-    checkpointed once. Shared by the Gini tree ladder: every level's
-    argmin at any depth is a bounded scan of this table."""
+    score domain) + ONE prefix-count pass over it, checkpointed once.
+    Shared by the Gini tree ladder: every level's argmin at any depth
+    is a bounded scan of this table."""
     return tree_cum_table(scored(spark, sf_dir))
 
 
-def tree_cum_table(s: DataFrame) -> DataFrame:
-    """The _tree_cum_table kernel on a (label, score) DataFrame —
-    module-level so the env-gated 10x scale smoke
-    (tests/test_unit_table_scale.py) can drive it on a replicated fact
-    set and assert the distinct-score table stays FIXED while fact
-    rows grow (the q_auc bucket-offset prefix's 100 TB claim)."""
-    per = (
-        s.groupBy("score")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.sum("label").cast("bigint").alias("pos"),
-        )
-        .withColumn("bucket", F.floor(F.col("score") * 1000).cast("bigint"))
-    )
-    btot = per.groupBy("bucket").agg(
-        F.sum("cnt").alias("bcnt"), F.sum("pos").alias("bpos")
-    )
-    lower = btot.select(
-        F.col("bucket").alias("lb"),
-        F.col("bcnt").alias("lcnt"),
-        F.col("bpos").alias("lpos"),
-    )
-    offs = (
-        btot.join(F.broadcast(lower), F.col("lb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(
-            F.coalesce(F.sum("lcnt"), F.lit(0)).alias("off_n"),
-            F.coalesce(F.sum("lpos"), F.lit(0)).alias("off_p"),
-        )
-    )
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy("score")
-        .rowsBetween(Window.unboundedPreceding, 0)
+def _tree_cum(s: DataFrame) -> DataFrame:
+    """Per distinct score of a (label, score) DataFrame: (cnt, pos),
+    their prefix sums (cum_n, cum_p) and the totals (n, p). Lazy, for
+    q_stump; tree_cum_table checkpoints it."""
+    per = s.groupBy("score").agg(
+        F.count("*").cast("bigint").alias("cnt"),
+        F.sum("label").cast("bigint").alias("pos"),
     )
     tot = per.agg(
         F.sum("cnt").cast("bigint").alias("n"),
         F.sum("pos").cast("bigint").alias("p"),
     )
-    return (
-        per.join(F.broadcast(offs), "bucket")
-        .select(
-            "score",
-            # per-score counts ride along for consumers that fold over
-            # score groups (q_boosted_tree2's accuracy pass); Catalyst
-            # prunes them everywhere else
-            "cnt",
-            "pos",
-            (F.col("off_n") + F.sum("cnt").over(w_in)).cast("bigint").alias("cum_n"),
-            (F.col("off_p") + F.sum("pos").over(w_in)).cast("bigint").alias("cum_p"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .localCheckpoint()
-    )
+    # per-score counts ride along for consumers that fold over score
+    # groups (q_boosted_tree2's accuracy pass); Catalyst prunes them
+    # everywhere else
+    return prefix_sums(
+        per, F.floor(F.col("score") * 1000).cast("bigint"), "score",
+        [("cnt", "cum_n"), ("pos", "cum_p")],
+    ).crossJoin(F.broadcast(tot))
+
+
+def tree_cum_table(s: DataFrame) -> DataFrame:
+    """_tree_cum, checkpointed — module-level so the scale tests
+    (tests/test_unit_table_scale.py) can drive it on a replicated fact
+    set and assert the distinct-score table stays FIXED while fact
+    rows grow."""
+    return _tree_cum(s).localCheckpoint()
 
 
 def _tree_key(n0, p0, nb, pb):
@@ -1876,30 +1740,34 @@ def _delong_final_sql() -> dict[str, str]:
         "np", "nn", "sua", "suaa", "sub", "subb", "suab",
         "sva", "svaa", "svb", "svbb", "svab",
     )}
-    auc_a = f"({d['sua']} / (2.0 * {d['nn']} * {d['np']}))"
-    auc_b = f"({d['sub']} / (2.0 * {d['nn']} * {d['np']}))"
+    # NULLIF: with a class absent (or a single positive/negative for
+    # the variances) each term is NULL on both engines, not an ANSI
+    # DIVIDE_BY_ZERO on the Spark side
+    auc_a = f"({d['sua']} / NULLIF(2.0 * {d['nn']} * {d['np']}, 0))"
+    auc_b = f"({d['sub']} / NULLIF(2.0 * {d['nn']} * {d['np']}, 0))"
     # sample-covariance combination S_AA + S_BB - 2*S_AB per class,
     # numerators as (n*Sxy - Sx*Sy) over exact integer sums
     d10 = (
         f"(({d['np']} * {d['suaa']} - {d['sua']} * {d['sua']} "
         f"+ {d['np']} * {d['subb']} - {d['sub']} * {d['sub']} "
         f"- 2.0 * ({d['np']} * {d['suab']} - {d['sua']} * {d['sub']})) "
-        f"/ ({d['np']} * {d['np']} * ({d['np']} - 1.0) "
-        f"* (2.0 * {d['nn']}) * (2.0 * {d['nn']})))"
+        f"/ NULLIF({d['np']} * {d['np']} * ({d['np']} - 1.0) "
+        f"* (2.0 * {d['nn']}) * (2.0 * {d['nn']}), 0))"
     )
     d01 = (
         f"(({d['nn']} * {d['svaa']} - {d['sva']} * {d['sva']} "
         f"+ {d['nn']} * {d['svbb']} - {d['svb']} * {d['svb']} "
         f"- 2.0 * ({d['nn']} * {d['svab']} - {d['sva']} * {d['svb']})) "
-        f"/ ({d['nn']} * {d['nn']} * ({d['nn']} - 1.0) "
-        f"* (2.0 * {d['np']}) * (2.0 * {d['np']})))"
+        f"/ NULLIF({d['nn']} * {d['nn']} * ({d['nn']} - 1.0) "
+        f"* (2.0 * {d['np']}) * (2.0 * {d['np']}), 0))"
     )
     # GREATEST guards the tiny-negative cancellation case so SQRT
-    # never sees a negative (DuckDB errors where Spark returns NaN);
-    # the var = 0 degenerate case (identical scorers / degenerate
-    # class counts) emits NULL z explicitly so both engines agree —
-    # bare division yields inf whose 6-dp rounding diverges across
-    # engines (ADVICE r12 #3)
+    # never sees a negative (DuckDB errors where Spark returns NaN).
+    # Both engines' GREATEST skips NULL, so a class with < 2 rows (a
+    # NULL variance term) reads var = 0. The var = 0 case (that, or
+    # identical scorers) emits NULL z explicitly so both engines
+    # agree — bare division yields inf whose 6-dp rounding diverges
+    # across engines (ADVICE r12 #3)
     var = f"GREATEST({d10} + {d01}, 0.0)"
     return {
         "auc_a": auc_a,
@@ -1961,48 +1829,25 @@ def _rank_units(rows: DataFrame, scol: str) -> DataFrame:
     component units — uval = 2·(negatives strictly below) + (negative
     ties) for positive rows at that score, vval = 2·(positives
     strictly above) + (positive ties) for negative rows. Prefix sums
-    via the q_auc bucket-offset machinery (<=1001-row broadcast
-    self-join + PARTITIONED within-bucket windows — no global
-    single-partition sort; the distinct-score table is bounded by the
-    6-dp domain regardless of input size)."""
+    by prefix_sums over the distinct-score table, bounded by the 6-dp
+    domain regardless of input size."""
     per = rows.groupBy(scol).agg(
         F.sum("label").cast("bigint").alias("pos"),
         (F.count("*") - F.sum("label")).cast("bigint").alias("neg"),
-    ).withColumn("bucket", F.floor(F.col(scol) * 1000).cast("bigint"))
-    btot = per.groupBy("bucket").agg(
-        F.sum("pos").alias("bpos"), F.sum("neg").alias("bneg")
-    )
-    lower = btot.select(
-        F.col("bucket").alias("lb"),
-        F.col("bpos").alias("lpos"),
-        F.col("bneg").alias("lneg"),
-    )
-    offs = (
-        btot.join(F.broadcast(lower), F.col("lb") < F.col("bucket"), "left")
-        .groupBy("bucket")
-        .agg(
-            F.coalesce(F.sum("lpos"), F.lit(0)).alias("off_pos"),
-            F.coalesce(F.sum("lneg"), F.lit(0)).alias("off_neg"),
-        )
-    )
-    w_in = (
-        Window.partitionBy("bucket")
-        .orderBy(scol)
-        .rowsBetween(Window.unboundedPreceding, 0)
     )
     tot = per.agg(F.sum("pos").cast("bigint").alias("tp"))
     return (
-        per.join(F.broadcast(offs), "bucket")
+        prefix_sums(
+            per, F.floor(F.col(scol) * 1000).cast("bigint"), scol,
+            [("pos", "cum_pos"), ("neg", "cum_neg")],
+        )
         .crossJoin(F.broadcast(tot))
         .select(
             F.col(scol).alias("s"),
-            (
-                2 * (F.col("off_neg") + F.sum("neg").over(w_in)) - F.col("neg")
-            ).cast("bigint").alias("uval"),
-            (
-                2 * (F.col("tp") - (F.col("off_pos") + F.sum("pos").over(w_in)))
-                + F.col("pos")
-            ).cast("bigint").alias("vval"),
+            (2 * F.col("cum_neg") - F.col("neg")).cast("bigint").alias("uval"),
+            (2 * (F.col("tp") - F.col("cum_pos")) + F.col("pos"))
+            .cast("bigint")
+            .alias("vval"),
         )
     )
 
@@ -2038,8 +1883,8 @@ def q_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact to DECIMAL(38,0) — the (2·n·N)² < 10³⁸ headroom holds to
     ~4-billion-row eval sets, far beyond any single eval split).
 
-    Scale: two bounded distinct-score tables (6-dp domain, the q_auc
-    bucket-offset prefix — no global sort), two shuffle joins of the
+    Scale: two bounded distinct-score tables (6-dp domain, prefix
+    sums by _rank_units — no global sort), two shuffle joins of the
     fact rows against those <=1e6-row tables on the score key, ONE
     map-side-combinable 12-expression aggregate. No window over fact
     rows, no driver collection."""
@@ -2581,58 +2426,17 @@ def _mf_cum(
         ("pos", "cum_p"),
     ),
 ) -> DataFrame:
-    """Per-key prefix sums over the bounded distinct-(feat,val)
-    table — the _tree_cum_table bucket-offset machinery generalized to
-    composite keys: coarse floor(val*1000) buckets, offsets via a
-    broadcast self-join of the <=~1.5k-row bucket-total table,
-    PARTITIONED within-bucket windows; never a global single-partition
-    sort even when one feature (price) has ~1e5 distinct values.
-    ``out_cast`` lets the boosted rounds' DECIMAL(38,0) weighted
-    counts ride the same machinery without narrowing to bigint;
-    ``measures`` names the summed columns, so the grower's weighted
-    (wp, wn) and q_xgb_round's Newton (cnt, g, h) sufficient
-    statistics ride it too — the generated plan is measure-count-
-    parametric but node-shape identical (same groupBys, same broadcast
-    joins, same window)."""
-    b = grouped.withColumn(
-        "bucket", F.floor(F.col("val") * 1000).cast("bigint")
-    )
-    btot = b.groupBy(*keys, "bucket").agg(
-        *[F.sum(src).alias(f"b_{src}") for src, _ in measures]
-    )
-    lower = btot.select(
-        *[F.col(k).alias(f"l_{k}") for k in keys],
-        F.col("bucket").alias("lb"),
-        *[F.col(f"b_{src}").alias(f"lo_{src}") for src, _ in measures],
-    )
-    cond = F.col("lb") < F.col("bucket")
-    for k in keys:
-        cond = cond & (F.col(f"l_{k}") == F.col(k))
-    offs = (
-        btot.join(F.broadcast(lower), cond, "left")
-        .groupBy(*keys, "bucket")
-        .agg(
-            *[
-                F.coalesce(F.sum(f"lo_{src}"), F.lit(0)).alias(f"off_{src}")
-                for src, _ in measures
-            ]
-        )
-    )
-    w_in = (
-        Window.partitionBy(*keys, "bucket")
-        .orderBy("val")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return b.join(F.broadcast(offs), [*keys, "bucket"]).select(
-        *keys,
-        "val",
-        *[
-            (F.col(f"off_{src}") + F.sum(src).over(w_in))
-            .cast(out_cast)
-            .alias(out)
-            for src, out in measures
-        ],
-    )
+    """Per-key prefix sums over val of the bounded distinct-(feat,val)
+    table (prefix_sums on floor(val*1000) buckets): one feature
+    (price) has ~1e5 distinct values, and no key group is ever sorted
+    in one task. ``measures`` names the summed columns, so the
+    grower's weighted (wp, wn) and q_xgb_round's Newton (cnt, g, h)
+    sufficient statistics ride it too; ``out_cast`` keeps the boosted
+    rounds' DECIMAL(38,0) weighted counts unnarrowed."""
+    return prefix_sums(
+        grouped, F.floor(F.col("val") * 1000).cast("bigint"), "val",
+        measures, keys, out_cast,
+    ).select(*keys, "val", *[out for _, out in measures])
 
 
 def _feat_val(fcol: str) -> F.Column:
@@ -2967,9 +2771,8 @@ def q_tree_multifeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch, so branch folds cannot be closed forms over root-level
     prefix tables). Each pass is one stack-explode (3x rows,
     map-side-combined before the only shuffle on (br, feat, val)),
-    then the bucket-offset prefix machinery per (branch, feature) —
-    broadcast <=~1.5k-row offset tables + partitioned windows, never a
-    global sort — and one per-branch argmin job. At depth d this costs
+    then _mf_cum's prefix sums per (branch, feature) and one
+    per-branch argmin job. At depth d this costs
     d fact passes — the level-synchronous multi-feature trainer shape
     (each level's branch assignment rides ONE pass), exactly how a
     distributed tree trainer scales to 100 TB. Eager by construction
@@ -3581,11 +3384,9 @@ def q_boosted_multifeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     must condition on the previous stumps' branch bits, which no
     closed form over round-1 prefix tables can express for feat !=
     f1). Each pass is one stack-explode map-side-combined fold;
-    prefix cums ride the bucket-offset _mf_cum machinery
-    (DECIMAL-preserving) — broadcast <=~1.5k-row offset tables +
-    partitioned windows, never a global sort; picks are top-1 takes;
-    all model state moves as broadcast 1-row tables, checkpointed once
-    per round. The ensemble-accuracy fold costs NO extra fact scan (see
+    prefix cums ride _mf_cum (DECIMAL-preserving); picks are top-1
+    takes; all model state moves as broadcast 1-row tables,
+    checkpointed once per round. The ensemble-accuracy fold costs NO extra fact scan (see
     _mf_boost).
     Eager by construction (the checkpointed model chain)."""
     return _mf_boost(spark, sf_dir, *_BMF_SPEC)
@@ -4060,11 +3861,10 @@ def q_xgb_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE stack-explode fact pass (3x rows, map-side-combined
     before the only shuffle on (feat, val)) + one 3-scalar fact fold
-    for the totals; prefix cums ride the bucket-offset _mf_cum
-    machinery (broadcast <=~1.5k-row offset tables + partitioned
-    windows, never a global sort); the pick is TakeOrdered(1) over the
-    bounded distinct-value table. Adding rounds costs one such pass
-    each with the margin updated by the compiled leaf CASE — the exact
+    for the totals; prefix cums ride _mf_cum; the pick is
+    TakeOrdered(1) over the bounded distinct-value table. Adding rounds
+    costs one such pass each with the margin updated by the compiled
+    leaf CASE — the exact
     distributed-XGBoost histogram shape at 100 TB."""
     return _xgb_newton_pick(_xgb_gh(_xgb_base(spark, sf_dir)))
 
@@ -4439,8 +4239,8 @@ def q_xgb_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: TWO stack-explode fact passes (root + children — the
     q_tree_multifeat d+1 schedule with Newton statistics) + one
-    3-scalar totals fold; per-(branch, feature) prefix cums on the
-    bucket-offset machinery; both child picks ride ONE per-branch
+    3-scalar totals fold; per-(branch, feature) prefix cums by
+    _mf_cum; both child picks ride ONE per-branch
     struct-argmin job (the q_boosted_mf_tree2 pattern). Depth d costs
     d+1 passes — the distributed XGBoost histogram schedule."""
     base = _xgb_base(spark, sf_dir)

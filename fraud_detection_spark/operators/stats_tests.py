@@ -1866,7 +1866,7 @@ def q_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
     DOMAIN (≤4e6 cells regardless of row count); the per-group prefix
     windows are GROWING frames over the ≤1e6-row distinct-value table
     (the q_kruskal_wallis/_rank2_tables pattern — domain-bounded, and
-    the bucket-offset machinery is the documented scale-up if the
+    functions.prefix_sums is the documented scale-up if the
     domain widens); everything after is 1-row scalar math."""
     ev = events_with_time(spark, sf_dir)
     gp = (

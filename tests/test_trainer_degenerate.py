@@ -1,11 +1,13 @@
 """Degenerate-input parity: each query below must return its DuckDB
 oracle's rows exactly (the test_partition_stress rule) on inputs the
-fixtures never hold. The trainer family runs with lineitem empty,
-holding a single row, or holding one class only (no
-l_returnflag = 'R'); the queries that divide by a fact count run with
-lineitem and events both empty; the survival family runs with events
-empty, holding a single user, holding no 'error' event, or holding one
-parity arm only (even user ids). The inputs derive from the test SF's
+fixtures never hold. The trainer family and the other oracle-checked
+ML metrics run with lineitem empty, holding a single row, or holding
+one class only (no l_returnflag = 'R'); the queries that divide by a
+fact count run with lineitem and events both empty; the survival
+family runs with events empty, holding a single user, holding no
+'error' event, or holding one parity arm only (even user ids);
+q_gini_index runs with orders empty, holding a single row, or
+holding a single customer. The inputs derive from the test SF's
 parquet under a pytest tmp dir: each rewritten table is a DuckDB COPY
 of a SELECT tail over the shipped one, and every other table is
 symlinked."""
@@ -45,6 +47,29 @@ TRAINERS = (
     "q_xgb_hist",
 )
 
+# the oracle-checked ml_metrics queries outside the trainer family
+METRICS = (
+    "q_lr_proba",
+    "q_lr_predict",
+    "q_standard_scale",
+    "q_shap_linear",
+    "q_linear_attr",
+    "q_confusion",
+    "q_prf",
+    "q_auc",
+    "q_roc_points",
+    "q_fold_assign",
+    "q_split",
+    "q_pr_points",
+    "q_avg_precision",
+    "q_mcc",
+    "q_logloss",
+    "q_parity_gap",
+    "q_cohen_kappa",
+    "q_ridge",
+    "q_delong",
+)
+
 # lineitem rewrite per case (a SELECT tail over the shipped table)
 CASES = {
     "empty": "WHERE FALSE",
@@ -81,6 +106,14 @@ EVENT_CASES = {
 }
 
 
+# orders rewrite per case, for q_gini_index
+ORDER_CASES = {
+    "empty": "WHERE FALSE",
+    "one_row": "ORDER BY o_orderkey LIMIT 1",
+    "one_customer": "QUALIFY o_custkey = MIN(o_custkey) OVER ()",
+}
+
+
 def _rewrite(d, sf_dir: str, tails: dict[str, str]):
     """A DuckDB connection with views over ``d``, where each table of
     ``tails`` is the shipped one filtered by its SELECT tail and every
@@ -100,16 +133,21 @@ def _rewrite(d, sf_dir: str, tails: dict[str, str]):
     return con
 
 
-@pytest.fixture(scope="module")
-def degenerate(tmp_path_factory, sf_dir):
-    """case -> (sf dir, DuckDB connection with views over it)."""
+def _case_dirs(tmp_path_factory, sf_dir, table: str, cases: dict[str, str]):
+    """case -> (sf dir, DuckDB connection) with ``table`` rewritten by
+    the case's SELECT tail; closes the connections on teardown."""
     out = {}
-    for case, tail in CASES.items():
-        d = tmp_path_factory.mktemp(f"degenerate_{case}")
-        out[case] = (str(d), _rewrite(d, sf_dir, {"lineitem": tail}))
+    for case, tail in cases.items():
+        d = tmp_path_factory.mktemp(f"degenerate_{table}_{case}")
+        out[case] = (str(d), _rewrite(d, sf_dir, {table: tail}))
     yield out
     for _, con in out.values():
         con.close()
+
+
+@pytest.fixture(scope="module")
+def degenerate(tmp_path_factory, sf_dir):
+    yield from _case_dirs(tmp_path_factory, sf_dir, "lineitem", CASES)
 
 
 @pytest.fixture(scope="module")
@@ -123,33 +161,31 @@ def empty_facts(tmp_path_factory, sf_dir):
 
 @pytest.fixture(scope="module")
 def degenerate_events(tmp_path_factory, sf_dir):
-    """case -> (sf dir, DuckDB connection) with events rewritten."""
-    out = {}
-    for case, tail in EVENT_CASES.items():
-        d = tmp_path_factory.mktemp(f"degenerate_events_{case}")
-        out[case] = (str(d), _rewrite(d, sf_dir, {"events": tail}))
-    yield out
-    for _, con in out.values():
-        con.close()
+    yield from _case_dirs(tmp_path_factory, sf_dir, "events", EVENT_CASES)
 
 
-@pytest.mark.parametrize("case", sorted(CASES))
-@pytest.mark.parametrize("name", TRAINERS)
-def test_trainer_degenerate_input_matches_oracle(spark, degenerate, name, case):
-    d, con = degenerate[case]
+@pytest.fixture(scope="module")
+def degenerate_orders(tmp_path_factory, sf_dir):
+    yield from _case_dirs(tmp_path_factory, sf_dir, "orders", ORDER_CASES)
+
+
+def _assert_matches(spark, dir_con, name, case):
+    d, con = dir_con
     q = REGISTRY[name]
     want = con.execute(q.oracle).df()
     got = q.fn(spark, d).toPandas()
     assert_exact(got, want, f"{name}@{case}")
 
 
+@pytest.mark.parametrize("case", sorted(CASES))
+@pytest.mark.parametrize("name", TRAINERS + METRICS)
+def test_trainer_degenerate_input_matches_oracle(spark, degenerate, name, case):
+    _assert_matches(spark, degenerate[case], name, case)
+
+
 @pytest.mark.parametrize("name", EMPTY_FACTS_QUERIES)
 def test_empty_facts_matches_oracle(spark, empty_facts, name):
-    d, con = empty_facts
-    q = REGISTRY[name]
-    want = con.execute(q.oracle).df()
-    got = q.fn(spark, d).toPandas()
-    assert_exact(got, want, f"{name}@empty_facts")
+    _assert_matches(spark, empty_facts, name, "empty_facts")
 
 
 @pytest.mark.parametrize("case", sorted(EVENT_CASES))
@@ -157,8 +193,9 @@ def test_empty_facts_matches_oracle(spark, empty_facts, name):
 def test_survival_degenerate_input_matches_oracle(
     spark, degenerate_events, name, case
 ):
-    d, con = degenerate_events[case]
-    q = REGISTRY[name]
-    want = con.execute(q.oracle).df()
-    got = q.fn(spark, d).toPandas()
-    assert_exact(got, want, f"{name}@{case}")
+    _assert_matches(spark, degenerate_events[case], name, case)
+
+
+@pytest.mark.parametrize("case", sorted(ORDER_CASES))
+def test_gini_index_degenerate_orders_matches_oracle(spark, degenerate_orders, case):
+    _assert_matches(spark, degenerate_orders[case], "q_gini_index", case)

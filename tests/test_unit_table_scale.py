@@ -1,8 +1,8 @@
 """10x fact-replication scale smoke for the 6-dp UNIT-TABLE kernels
 (VERDICT r12 #5): the rank-statistics family's 100 TB argument is that
 every expensive structure — q_delong's broadcast structural-component
-tables, the tree ladder's prefix-count table (q_auc's bucket-offset
-machinery), q_kendall_tau's dense contingency grid — is bounded by the
+tables, the tree ladder's prefix-count table (functions.prefix_sums),
+q_kendall_tau's dense contingency grid — is bounded by the
 6-dp VALUE DOMAIN, not by fact rows. test_stats_scale.py (r9) grows
 the grid; this file proves the complement: replicate the FACT rows 10x
 with identical values and the unit tables must stay EXACTLY fixed in
@@ -98,7 +98,7 @@ def test_delong_unit_tables_fixed_under_fact_replication(spark):
 
 
 def _tree_cum_replicated(spark, sf_dir):
-    """The q_auc/q_stump/q_tree* bucket-offset prefix table is bounded
+    """The q_stump/q_tree* prefix-count table is bounded
     by the distinct 6-dp score domain: 10x fact rows -> identical row
     count, cum counts and totals exactly 10x. Returns the 1x/10x row
     counts and count seconds."""
