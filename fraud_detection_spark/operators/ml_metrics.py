@@ -1761,14 +1761,17 @@ def _delong_final_sql() -> dict[str, str]:
         f"/ NULLIF({d['nn']} * {d['nn']} * ({d['nn']} - 1.0) "
         f"* (2.0 * {d['np']}) * (2.0 * {d['np']}), 0))"
     )
-    # GREATEST guards the tiny-negative cancellation case so SQRT
+    # The CASE clamps the tiny-negative cancellation case to 0 so SQRT
     # never sees a negative (DuckDB errors where Spark returns NaN).
-    # Both engines' GREATEST skips NULL, so a class with < 2 rows (a
-    # NULL variance term) reads var = 0. The var = 0 case (that, or
-    # identical scorers) emits NULL z explicitly so both engines
-    # agree — bare division yields inf whose 6-dp rounding diverges
-    # across engines (ADVICE r12 #3)
-    var = f"GREATEST({d10} + {d01}, 0.0)"
+    # It keeps a NULL sum NULL (GREATEST would skip it and read 0), so
+    # a class with < 2 rows (a NULL variance term) gives NULL se and
+    # z. The var = 0 case (identical scorers) emits NULL z explicitly
+    # so both engines agree — bare division yields inf whose 6-dp
+    # rounding diverges across engines (ADVICE r12 #3)
+    var = (
+        f"(CASE WHEN {d10} + {d01} < 0.0 THEN 0.0 "
+        f"ELSE {d10} + {d01} END)"
+    )
     return {
         "auc_a": auc_a,
         "auc_b": auc_b,

@@ -54,6 +54,23 @@ def get_spark(app_name: str = "fraud_detection_spark") -> SparkSession:
         # BIGINT sums (ml_metrics._sum_gu_dec/_sum_hu_dec) rely on an
         # overflow raising ARITHMETIC_OVERFLOW instead of wrapping.
         .config("spark.sql.ansi.enabled", "true")
+        # Generated-class cache: one LRU per JVM, sized at the first
+        # codegen, so this static conf applies only when this builder
+        # creates the context. Spark's default of 100 entries is below
+        # the engine's working set: the LRU evicted every class before
+        # its next use, so each re-run recompiled all of them and ran
+        # code the JIT had not warmed. Measured at sf0.01, local[4]:
+        # two passes of the 18 eager HEADLINE queries compile 889 then
+        # 896 classes at 100 entries, 731 then 24 at 1,000; one cold
+        # pass of all 178 HEADLINE queries compiles 2,756 distinct
+        # classes (3,783 at 100 entries). The cached classes cost no
+        # measurable memory: after two eager passes metaspace reads 182
+        # vs 178 MB and the JIT code cache 101 vs 98 MB at 100 vs 1,000
+        # entries (the process tree's RSS, 2.7 vs 3.0 GB, moves with
+        # the committed G1 heap, not with the cache). Bounded, not 0
+        # (unbounded): the serving stream compiles ~2 new classes per
+        # micro-batch at either cap, for as long as it runs.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -16,10 +16,13 @@ and ``project_pairs`` (bipartite counterparty self-join — the shared
 front end of q_triangle_count / q_neighbor_jaccard /
 q_shared_counterparties).
 
-Gated behind SPARK_GRAFT_SCALE_TESTS=1 (~1-2 min at sf0.1): scale-
-exercise budget, not unit-suite budget. Measured numbers live in
-SCALE.md ("Graph family, 10x smoke") — re-measure here when the
-kernels change.
+The timed runs are gated behind SPARK_GRAFT_SCALE_TESTS=1 (~1-2 min
+at sf0.1): scale-exercise budget, not unit-suite budget. Measured
+numbers live in SCALE.md ("Graph family, 10x smoke") — re-measure here
+when the kernels change. The exact 10x closed forms of
+triangle_counts, project_pairs and two_core_delta_peel also run
+ungated at the test SF, so a reshaped kernel fails the normal suite
+instead of rotting behind the gate.
 """
 
 from __future__ import annotations
@@ -33,7 +36,7 @@ from pyspark.sql import functions as F
 SCALE_SF_DIR = os.environ.get("SPARK_GRAFT_SCALE_SF_DIR", "/root/testdata/sf0.1")
 REPLICAS = 10
 
-pytestmark = pytest.mark.skipif(
+scale = pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_SCALE_TESTS") != "1",
     reason="scale exercise; run with SPARK_GRAFT_SCALE_TESTS=1",
 )
@@ -56,13 +59,15 @@ def _timed_count(df):
     return n, time.time() - t0
 
 
-def test_triangle_counts_scales_linearly(spark):
+def _triangles_replicated(spark, sf_dir):
+    """Ten isomorphic copies close exactly 10x the triangles. Returns
+    the 1x/10x counts and count seconds."""
     from fraud_detection_spark.operators.graph import (
         _heavy_pairs,
         triangle_counts,
     )
 
-    pe1 = _heavy_pairs(spark, SCALE_SF_DIR).localCheckpoint()
+    pe1 = _heavy_pairs(spark, sf_dir).localCheckpoint()
     pe10 = _replicate(pe1, ["ca", "cb"]).localCheckpoint()
     # warm the JVM/codegen paths once so t1 is not charged for startup
     triangle_counts(pe1).count()
@@ -70,19 +75,34 @@ def test_triangle_counts_scales_linearly(spark):
     tri1, t1 = _timed_count(triangle_counts(pe1))
     tri10, t10 = _timed_count(triangle_counts(pe10))
     assert tri10 == REPLICAS * tri1, (tri1, tri10)
+    return tri1, t1, tri10, t10
+
+
+def test_triangle_counts_replication_closed_form(spark, sf_dir):
+    """The 10x closed form at the test SF, ungated: pins
+    triangle_counts' signature and semantics in tier-1."""
+    tri1, _, _, _ = _triangles_replicated(spark, sf_dir)
+    assert tri1 > 0
+
+
+@scale
+def test_triangle_counts_scales_linearly(spark):
+    tri1, t1, tri10, t10 = _triangles_replicated(spark, SCALE_SF_DIR)
     # linear bound with generous local-mode slack; quadratic would be ~100x
     assert t10 <= 2.5 * REPLICAS * t1 + 5.0, (t1, t10)
     print(f"SCALE triangle_counts: 1x={t1:.2f}s 10x={t10:.2f}s ratio={t10 / t1:.1f}")
 
 
-def test_project_pairs_scales_linearly(spark):
+def _pairs_replicated(spark, sf_dir):
+    """Ten isomorphic copies project exactly 10x the counterparty
+    pairs. Returns the 1x/10x counts and count seconds."""
     from fraud_detection_spark.operators.graph import (
         RING_FACTOR,
         edges,
         project_pairs,
     )
 
-    e = edges(spark, SCALE_SF_DIR)
+    e = edges(spark, sf_dir)
     thr = e.agg(F.ceil(F.lit(RING_FACTOR) * F.avg("n")).alias("k"))
     heavy1 = (
         e.crossJoin(F.broadcast(thr))
@@ -96,10 +116,24 @@ def test_project_pairs_scales_linearly(spark):
     p1, t1 = _timed_count(project_pairs(heavy1))
     p10, t10 = _timed_count(project_pairs(heavy10))
     assert p10 == REPLICAS * p1, (p1, p10)
+    return p1, t1, p10, t10
+
+
+def test_project_pairs_replication_closed_form(spark, sf_dir):
+    """The 10x closed form at the test SF, ungated: pins
+    project_pairs' signature and semantics in tier-1."""
+    p1, _, _, _ = _pairs_replicated(spark, sf_dir)
+    assert p1 > 0
+
+
+@scale
+def test_project_pairs_scales_linearly(spark):
+    p1, t1, p10, t10 = _pairs_replicated(spark, SCALE_SF_DIR)
     assert t10 <= 2.5 * REPLICAS * t1 + 5.0, (t1, t10)
     print(f"SCALE project_pairs: 1x={t1:.2f}s 10x={t10:.2f}s ratio={t10 / t1:.1f}")
 
 
+@scale
 def test_hits_vectors_scales_linearly(spark):
     """Round 9: the HITS kernel is 2*iters sequential broadcast-join
     folds over the edge list — linear in |E| by construction; this
@@ -169,18 +203,18 @@ def test_hits_vectors_scales_linearly(spark):
     print(f"SCALE hits_vectors: 1x={t1:.2f}s 10x={t10:.2f}s ratio={t10 / t1:.1f}")
 
 
-def test_two_core_delta_peel_scales_linearly(spark):
-    """VERDICT r8 #6: the delta-peel kernel's per-round work is
-    proportional to edges incident to the frontier, so ten disjoint
-    isomorphic copies must peel in ~10x the time with exactly 10x
-    the survivors (each replica peels identically)."""
+def _two_core_replicated(spark, sf_dir):
+    """The delta-peel kernel's per-round work is proportional to edges
+    incident to the frontier, and each of ten disjoint isomorphic
+    copies peels identically: exactly 10x the survivors. Returns the
+    1x/10x survivor counts and seconds."""
     from fraud_detection_spark.operators.graph import (
         _CORE_ROUNDS,
         _heavy_pairs,
         two_core_delta_peel,
     )
 
-    pe1 = _heavy_pairs(spark, SCALE_SF_DIR).localCheckpoint()
+    pe1 = _heavy_pairs(spark, sf_dir).localCheckpoint()
 
     def sym(pe):
         return pe.select(
@@ -200,5 +234,19 @@ def test_two_core_delta_peel_scales_linearly(spark):
     n1, t1 = timed(pe1)
     n10, t10 = timed(pe10)
     assert n10 == REPLICAS * n1, (n1, n10)
+    return n1, t1, n10, t10
+
+
+def test_two_core_delta_peel_replication_closed_form(spark, sf_dir):
+    """The 10x closed form at the test SF, ungated: pins
+    two_core_delta_peel (q_graph_2core's kernel) in tier-1."""
+    n1, _, _, _ = _two_core_replicated(spark, sf_dir)
+    assert n1 > 0
+
+
+@scale
+def test_two_core_delta_peel_scales_linearly(spark):
+    """VERDICT r8 #6: ~10x the time for 10x the edges."""
+    n1, t1, n10, t10 = _two_core_replicated(spark, SCALE_SF_DIR)
     assert t10 <= 2.5 * REPLICAS * t1 + 5.0, (t1, t10)
     print(f"SCALE two_core_delta_peel: 1x={t1:.2f}s 10x={t10:.2f}s ratio={t10 / t1:.1f}")

@@ -199,3 +199,14 @@ def test_survival_degenerate_input_matches_oracle(
 @pytest.mark.parametrize("case", sorted(ORDER_CASES))
 def test_gini_index_degenerate_orders_matches_oracle(spark, degenerate_orders, case):
     _assert_matches(spark, degenerate_orders[case], "q_gini_index", case)
+
+
+@pytest.mark.parametrize("case", ["one_row", "one_class"])
+def test_delong_se_null_without_both_classes(spark, degenerate, case):
+    """A class with < 2 rows has no DeLong variance term: se is NULL on
+    both engines (like auc_a and z), not the 0.0 a NULL-skipping clamp
+    would read."""
+    d, con = degenerate[case]
+    q = REGISTRY["q_delong"]
+    assert con.execute(f"SELECT se FROM ({q.oracle})").fetchall() == [(None,)]
+    assert [r.se for r in q.fn(spark, d).collect()] == [None]

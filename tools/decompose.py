@@ -5,6 +5,9 @@ For every HEADLINE query, in one warm tuned session, measures
   construct = wall of fn(spark, SF_DIR)   (driver-side plan building;
               for eager=True queries this includes their Spark jobs)
   execute   = wall of the noop-sink write (the distributed compute)
+  compiles  = generated classes Janino compiled over both, the delta of
+              CodegenMetrics' exact compile count (a cache hit compiles
+              nothing; in local mode the count covers the executors too)
 and, when PY4J_COUNT=1, the number of py4j commands issued during
 construction (the round-trip chatter the construction fixes target).
 
@@ -57,23 +60,31 @@ def main() -> None:
             return orig(*a, **kw)
 
         client.send_command = counted
+    compile_time = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
 
     rows = []
     for name in names:
         q = registry[name]
+        c0 = compile_time.getCount()
         counter["n"] = 0
         t0 = time.perf_counter()
         df = q.fn(spark, SF_DIR)
         t1 = time.perf_counter()
+        py4j = counter["n"]
         df.write.format("noop").mode("overwrite").save()
         t2 = time.perf_counter()
+        compiles = compile_time.getCount() - c0
         rows.append(
             {
                 "name": name,
                 "construct": round(t1 - t0, 3),
                 "execute": round(t2 - t1, 3),
+                "compiles": compiles,
                 "eager": q.eager,
-                "py4j": counter["n"] if count_py4j else None,
+                "py4j": py4j if count_py4j else None,
             }
         )
 
@@ -83,7 +94,8 @@ def main() -> None:
         eager = " EAGER" if r["eager"] else ""
         print(
             f"{r['name']}: construct {r['construct']:7.3f}  "
-            f"execute {r['execute']:7.3f}{py}{eager}"
+            f"execute {r['execute']:7.3f}  "
+            f"compiles {r['compiles']:4d}{py}{eager}"
         )
     tc = sum(r["construct"] for r in rows)
     te = sum(r["execute"] for r in rows)
@@ -94,6 +106,7 @@ def main() -> None:
                 "construct_total": round(tc, 1),
                 "execute_total": round(te, 1),
                 "total": round(tc + te, 1),
+                "compiles_total": sum(r["compiles"] for r in rows),
             }
         )
     )
