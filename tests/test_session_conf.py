@@ -7,12 +7,24 @@
 - The generated-class cache holds the eager ladders' working set, so a
   re-run reuses its compiled classes instead of recompiling them all
   (at Spark's default 100 entries the LRU evicted every class of a
-  suite-eager pass before its next use)."""
+  suite-eager pass before its next use).
+- Python tasks run under the engine's worker daemon (pyworker.py), so a
+  task no longer re-reads the directory of every zip on its path.
+- get_spark works on a process whose session it did not build."""
 
 from __future__ import annotations
 
+import importlib.util
+import os
+import subprocess
+import sys
+import zipfile
+import zipimport
+
 import pytest
 from pyspark.sql import functions as F
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # the perfbench suite-eager queries: ~145 generated classes per pass
 EAGER_PASS = ("q_tree5", "q_graph_2core", "q_knn_ivf_pq")
@@ -56,3 +68,128 @@ def test_rerun_reuses_generated_classes(spark, sf_dir):
     # a first pass that found its classes cached by an earlier test
     # compiles little itself; the residual bound covers that case
     assert second <= max(RESIDUAL_COMPILES, first // 10), (first, second)
+
+
+def test_get_spark_starts_worker_daemon(spark):
+    assert spark.conf.get("spark.python.daemon.module") == (
+        "fraud_detection_spark.pyworker"
+    )
+    assert spark.conf.get("spark.executorEnv.PYTHONPATH") == REPO
+
+
+def _zip_reads_per_task(spark):
+    """Per task of a 4-partition job: the zip directory reads during one
+    importlib.invalidate_caches() (pyspark's worker calls it at the start
+    of every task), the worker's zip importers, and where its pyspark
+    came from."""
+
+    def probe(_):
+        import importlib
+        import sys
+        import zipimport
+
+        import pyspark
+
+        reads = [0]
+        read_directory = zipimport._read_directory
+
+        def counting(archive):
+            reads[0] += 1
+            return read_directory(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        importers = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        yield reads[0], importers, pyspark.__file__
+
+    rdd = spark.sparkContext.parallelize(range(4), 4)
+    return rdd.mapPartitions(probe).collect()
+
+
+def test_python_tasks_skip_unchanged_zip_rereads(spark):
+    _zip_reads_per_task(spark)
+    second = _zip_reads_per_task(spark)
+    assert len(second) == 4
+    for reads, importers, pyspark_file in second:
+        # a worker without zip importers would count 0 for nothing
+        assert importers > 0, second
+        assert reads == 0, second
+        # pyspark still comes from the zip Spark ships with the JVM
+        assert "pyspark.zip" in pyspark_file, pyspark_file
+
+
+def _write_zip(path, members):
+    with zipfile.ZipFile(path, "w") as z:
+        for name, text in members.items():
+            z.writestr(name, text)
+
+
+def test_zip_directory_reread_only_when_changed(tmp_path, monkeypatch):
+    from fraud_detection_spark import pyworker
+
+    archive = tmp_path / "mods.zip"
+    _write_zip(archive, {"fds_zip_a.py": "X = 1\n"})
+    importer = zipimport.zipimporter(str(archive))
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting(path):
+        reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    monkeypatch.setattr(pyworker, "_read_stamps", {})
+
+    pyworker.invalidate_caches(importer)  # not stamped yet: read
+    assert len(reads) == 1
+    pyworker.invalidate_caches(importer)  # unchanged: kept
+    assert len(reads) == 1
+    assert importer.find_spec("fds_zip_b") is None
+
+    # rewritten in place: a new member, a new size
+    _write_zip(archive, {"fds_zip_a.py": "X = 1\n", "fds_zip_b.py": "Y = 2\n"})
+    pyworker.invalidate_caches(importer)
+    assert len(reads) == 2
+    spec = importer.find_spec("fds_zip_b")
+    assert spec is not None
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert mod.Y == 2
+
+    # gone (cannot be stat'ed): re-read as the stdlib does, nothing left
+    archive.unlink()
+    pyworker.invalidate_caches(importer)
+    assert len(reads) == 3
+    assert importer._files == {}
+    assert str(archive) not in pyworker._read_stamps
+
+
+_PREEXISTING_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+spark.sparkContext.setLogLevel("ERROR")
+from fraud_detection_spark.session import get_spark
+s = get_spark("x")
+print("ROWS", s.range(3).count(), flush=True)
+spark.stop()
+"""
+
+
+def test_get_spark_on_preexisting_session(tmp_path):
+    proc = subprocess.run(
+        [sys.executable, "-c", _PREEXISTING_SCRIPT.format(repo=REPO)],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "ROWS 3" in proc.stdout, (proc.stdout, proc.stderr[-2000:])
