@@ -464,6 +464,17 @@ def sf_from_dir(path: str) -> float:
         return -1.0
 
 
+def warmup(spark) -> None:
+    """Warm the JVM/session AND the python-worker fleet so the first
+    timed query isn't paying process startup (the Arrow stages spawn
+    one python worker per core on first use — a fixed per-session
+    cost, not per-query compute). Shared by the tools/ timing scripts."""
+    spark.range(1000).summary().collect()
+    spark.range(64).repartition(32).mapInPandas(
+        lambda batches: batches, schema="id bigint"
+    ).write.format("noop").mode("overwrite").save()
+
+
 def main() -> None:
     from fraud_detection_spark.registry import load_all
     from fraud_detection_spark.session import get_spark
@@ -472,14 +483,7 @@ def main() -> None:
     spark = get_spark("fds-bench")
     explain = os.environ.get("BENCH_EXPLAIN") == "1"
 
-    # warm the JVM/session AND the python-worker fleet so the first
-    # timed query isn't paying process startup (the Arrow stages spawn
-    # one python worker per core on first use — a fixed per-session
-    # cost, not per-query compute)
-    spark.range(1000).summary().collect()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda batches: batches, schema="id bigint"
-    ).write.format("noop").mode("overwrite").save()
+    warmup(spark)
 
     timings: dict[str, float] = {}
     for name in HEADLINE:

@@ -786,6 +786,63 @@ def q_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The Gini split formulas, one text per formula: the DuckDB oracles
+# embed it and the Spark side evaluates the same text with F.expr /
+# selectExpr, so both engines run one IEEE expression tree. A bare
+# decimal literal (1.0) parses as DECIMAL in Spark SQL; these texts use
+# one only where it meets a DOUBLE operand.
+
+
+def _gini_key_sql(n0: str, p0: str, nb: str, pb: str) -> str:
+    """Branch-offset Gini split key at a candidate threshold: the
+    branch starts at absolute cums (n0, p0) and holds (nb, pb). Exact
+    integer counts cast once to DOUBLE."""
+    nl = f"CAST(cum_n - {n0} AS DOUBLE)"
+    pl = f"CAST(cum_p - {p0} AS DOUBLE)"
+    nr = f"CAST({nb} - (cum_n - {n0}) AS DOUBLE)"
+    pr = f"CAST({pb} - (cum_p - {p0}) AS DOUBLE)"
+    return (
+        f"({nl} - ({pl} * {pl} + ({nl} - {pl}) * ({nl} - {pl})) / {nl}) "
+        f"+ ({nr} - ({pr} * {pr} + ({nr} - {pr}) * ({nr} - {pr})) / {nr})"
+    )
+
+
+def _gini_base_sql(nb: str, pb: str) -> str:
+    p_ = f"(CAST({pb} AS DOUBLE) / {nb})"
+    q_ = f"(CAST({nb} - {pb} AS DOUBLE) / {nb})"
+    return f"(1.0 - {p_} * {p_} - {q_} * {q_})"
+
+
+def _wgini_sql(lp: str, ln: str, P: str, N: str) -> str:
+    """Weighted Gini split key: left weighted (pos, neg) = (lp, ln)
+    against branch weighted totals (P, N). Exact integer arithmetic up
+    to ONE cast per factor, then a fixed double expression."""
+    nl = f"CAST({lp} + {ln} AS DOUBLE)"
+    pl = f"CAST({lp} AS DOUBLE)"
+    nr = f"CAST(({P} + {N}) - (({lp}) + ({ln})) AS DOUBLE)"
+    pr = f"CAST(({P}) - ({lp}) AS DOUBLE)"
+    return (
+        f"({nl} - ({pl} * {pl} + ({nl} - {pl}) * ({nl} - {pl})) / {nl}) "
+        f"+ ({nr} - ({pr} * {pr} + ({nr} - {pr}) * ({nr} - {pr})) / {nr})"
+    )
+
+
+def _split_cols_sql(nl: str, pl: str, nb: str, pb: str) -> list[str]:
+    """A Gini split's published select items from its left (n, pos)
+    ``nl``, ``pl``, its branch's (n, pos) ``nb``, ``pb`` and the split
+    key column ``key``: branch counts, then 6-dp impurity scalars."""
+    gb = _gini_base_sql(nb, pb)
+    return [
+        f"CAST({nl} AS BIGINT) AS n_left",
+        f"CAST({pl} AS BIGINT) AS pos_left",
+        f"CAST({nb} - ({nl}) AS BIGINT) AS n_right",
+        f"CAST({pb} - ({pl}) AS BIGINT) AS pos_right",
+        sql_round(f"(key) / {nb}", 6) + " AS gini_split",
+        sql_round(gb, 6) + " AS gini_base",
+        sql_round(f"{gb} - (key) / {nb}", 6) + " AS gain",
+    ]
+
+
 # ---------------------------------------------------------------------------
 # Decision-stump training (round 9 batch 4): EXACT optimal Gini split
 # on the published model score — the one training operator with a full
@@ -805,31 +862,13 @@ def q_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c AS (SELECT score, "
         "CAST(SUM(cnt) OVER (ORDER BY score) AS BIGINT) AS cum_n, "
         "CAST(SUM(pos) OVER (ORDER BY score) AS BIGINT) AS cum_p FROM g), "
-        "e AS (SELECT score, cum_n, cum_p, n, p, "
-        "CAST(cum_n AS DOUBLE) AS nl, CAST(cum_p AS DOUBLE) AS pl, "
-        "CAST(n - cum_n AS DOUBLE) AS nr, CAST(p - cum_p AS DOUBLE) AS pr "
-        "FROM c, t WHERE cum_n < n), "
         "k AS (SELECT score, cum_n, cum_p, n, p, "
-        "(nl - (pl * pl + (nl - pl) * (nl - pl)) / nl) "
-        "+ (nr - (pr * pr + (nr - pr) * (nr - pr)) / nr) AS key FROM e), "
+        + _gini_key_sql("0", "0", "n", "p")
+        + " AS key FROM c, t WHERE cum_n < n), "
         "b AS (SELECT * FROM k ORDER BY key, score LIMIT 1) "
-        "SELECT score AS threshold, cum_n AS n_left, cum_p AS pos_left, "
-        "CAST(n - cum_n AS BIGINT) AS n_right, "
-        "CAST(p - cum_p AS BIGINT) AS pos_right, "
-        + sql_round("key / n", 6) + " AS gini_split, "
-        + sql_round(
-            "1.0 - (CAST(p AS DOUBLE) / n) * (CAST(p AS DOUBLE) / n) "
-            "- (CAST(n - p AS DOUBLE) / n) * (CAST(n - p AS DOUBLE) / n)",
-            6,
-        )
-        + " AS gini_base, "
-        + sql_round(
-            "(1.0 - (CAST(p AS DOUBLE) / n) * (CAST(p AS DOUBLE) / n) "
-            "- (CAST(n - p AS DOUBLE) / n) * (CAST(n - p AS DOUBLE) / n)) "
-            "- key / n",
-            6,
-        )
-        + " AS gain FROM b"
+        "SELECT score AS threshold, "
+        + ", ".join(_split_cols_sql("cum_n", "cum_p", "n", "p"))
+        + " FROM b"
     ),
     tags=("ml", "train", "split"),
 )
@@ -865,30 +904,13 @@ def q_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     score domain, NOT row count, and its prefix sums) and a top-1
     ordered take. One shuffle agg + bounded-table ops."""
     c = _tree_cum(scored(spark, sf_dir)).filter(F.col("cum_n") < F.col("n"))
-    nl = F.col("cum_n").cast("double")
-    pl = F.col("cum_p").cast("double")
-    nr = (F.col("n") - F.col("cum_n")).cast("double")
-    pr = (F.col("p") - F.col("cum_p")).cast("double")
-    key = (nl - (pl * pl + (nl - pl) * (nl - pl)) / nl) + (
-        nr - (pr * pr + (nr - pr) * (nr - pr)) / nr
-    )
     best = (
-        c.withColumn("key", key)
+        c.withColumn("key", F.expr(_gini_key_sql("0", "0", "n", "p")))
         .orderBy("key", "score")
         .limit(1)
     )
-    nd = F.col("n").cast("double")
-    pd_ = F.col("p").cast("double")
-    base = 1.0 - (pd_ / nd) * (pd_ / nd) - ((nd - pd_) / nd) * ((nd - pd_) / nd)
-    return best.select(
-        F.col("score").alias("threshold"),
-        F.col("cum_n").alias("n_left"),
-        F.col("cum_p").alias("pos_left"),
-        (F.col("n") - F.col("cum_n")).cast("bigint").alias("n_right"),
-        (F.col("p") - F.col("cum_p")).cast("bigint").alias("pos_right"),
-        pround(F.col("key") / nd, 6).alias("gini_split"),
-        pround(base, 6).alias("gini_base"),
-        pround(base - F.col("key") / nd, 6).alias("gain"),
+    return best.selectExpr(
+        "score AS threshold", *_split_cols_sql("cum_n", "cum_p", "n", "p")
     )
 
 
@@ -904,140 +926,95 @@ def q_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BOOST_ROUNDS = 3
 
 
-# AdaBoost round pieces, one copy per engine, shared by every q_boosted_*
-# trainer: alpha, the model row (leaf signs, error, next-round
-# multipliers), the ensemble-accuracy fold and the published round row.
-
-
-def _ada_alpha(e, d) -> F.Column:
-    """alpha = 0.5·ln((d − e)/e) for weighted error e out of d. A
-    perfect learner (e = 0) gets NULL, as DuckDB's x/0 does, instead of
-    ANSI's DIVIDE_BY_ZERO."""
-    return F.lit(0.5) * F.log(
-        (d - e).cast("double") / F.nullif(e, F.lit(0)).cast("double")
-    )
+# AdaBoost round pieces, one text per formula, shared by every
+# q_boosted_* trainer and its oracle: alpha, the model row (leaf signs,
+# error, next-round multipliers), the ensemble-accuracy fold and the
+# published round row.
 
 
 def _ada_alpha_sql(e: str, d: str) -> str:
-    """SQL twin of _ada_alpha."""
+    """alpha = 0.5·ln((d − e)/e) for weighted error e out of d. A
+    perfect learner (e = 0) gets NULL, as DuckDB's x/0 does, instead of
+    ANSI's DIVIDE_BY_ZERO."""
     return (
         f"(0.5 * LN(CAST({d} - {e} AS DOUBLE) / "
         f"CAST(NULLIF({e}, 0) AS DOUBLE)))"
     )
 
 
-def _ada_model(df: DataFrame, leaves, d, r: int, t: str, mults: bool):
-    """``df`` plus round ``r``'s AdaBoost model columns, given the exact
-    per-leaf weighted (pos, neg) ``leaves`` and denominator ``d``: leaf
-    signs pr{r}_{i} (weighted majority, ties negative) and error e{r}
-    (the minority weight summed over leaves) and d{r}, typed ``t``.
-    With ``mults``, also the next round's rational reweighting: per-leaf
-    multipliers mp{i}/mn{i} for positive/negative rows (a correctly
-    classified row x e, a misclassified one x d − e) and the reweighted
-    totals wpt/wnt, all DECIMAL(38,0)."""
-    m = df.select(
-        "*",
-        *[
-            F.when(p > n, F.lit(1)).otherwise(F.lit(-1)).alias(f"pr{r}_{i}")
-            for i, (p, n) in enumerate(leaves)
-        ],
-        sum(F.when(p > n, n).otherwise(p) for p, n in leaves)
-        .cast(t)
-        .alias(f"e{r}"),
-        d.cast(t).alias(f"d{r}"),
-    )
-    if not mults:
-        return m
-    dec = "decimal(38,0)"
-    hit = F.col(f"e{r}").cast(dec)
-    miss = (F.col(f"d{r}") - F.col(f"e{r}")).cast(dec)
-    mp = [
-        F.when(F.col(f"pr{r}_{i}") == 1, hit).otherwise(miss)
-        for i in range(len(leaves))
+def _ada_model_sql(
+    leaves, d: str, r: int, t: str, wide: str | None = None
+) -> list[list[str]]:
+    """Round ``r``'s AdaBoost model columns as the select items of one
+    or two stacked projections, given the exact per-leaf weighted
+    (pos, neg) ``leaves`` and denominator ``d``: leaf signs pr{r}_{i}
+    (weighted majority, ties negative) and error e{r} (the minority
+    weight summed over leaves) and d{r}, typed ``t``. With ``wide``, the
+    exact-integer type (DECIMAL(38,0) on Spark, HUGEINT on DuckDB), a
+    second projection adds the next round's rational reweighting:
+    per-leaf multipliers mp{i}/mn{i} for positive/negative rows (a
+    correctly classified row x e, a misclassified one x d − e) and the
+    reweighted totals wpt/wnt."""
+    model = [
+        f"CASE WHEN {p} > {n} THEN 1 ELSE -1 END AS pr{r}_{i}"
+        for i, (p, n) in enumerate(leaves)
+    ] + [
+        "CAST("
+        + " + ".join(f"CASE WHEN {p} > {n} THEN {n} ELSE {p} END" for p, n in leaves)
+        + f" AS {t}) AS e{r}",
+        f"CAST({d} AS {t}) AS d{r}",
     ]
-    mn = [
-        F.when(F.col(f"pr{r}_{i}") == -1, hit).otherwise(miss)
-        for i in range(len(leaves))
-    ]
-    return m.select(
-        "*",
-        *[x.alias(f"mp{i}") for i, x in enumerate(mp)],
-        *[x.alias(f"mn{i}") for i, x in enumerate(mn)],
-        sum(p.cast(dec) * x for (p, _), x in zip(leaves, mp)).alias("wpt"),
-        sum(n.cast(dec) * x for (_, n), x in zip(leaves, mn)).alias("wnt"),
-    )
-
-
-def _ada_model_sql(src: str, leaves, d: str, r: int, t: str, mults: bool) -> str:
-    """SQL twin of _ada_model over the FROM list ``src``; HUGEINT
-    mirrors DECIMAL(38,0)."""
-    cols = ", ".join(
-        [
-            f"CASE WHEN {p} > {n} THEN 1 ELSE -1 END AS pr{r}_{i}"
-            for i, (p, n) in enumerate(leaves)
-        ]
-        + [
-            "CAST("
-            + " + ".join(
-                f"CASE WHEN {p} > {n} THEN {n} ELSE {p} END" for p, n in leaves
-            )
-            + f" AS {t}) AS e{r}",
-            f"CAST({d} AS {t}) AS d{r}",
-        ]
-    )
-    m = f"SELECT *, {cols} FROM {src}"
-    if not mults:
-        return m
+    if wide is None:
+        return [model]
 
     def mult(i: int, sign: int) -> str:
         return (
             f"CAST(CASE WHEN pr{r}_{i} = {sign} THEN e{r} "
-            f"ELSE d{r} - e{r} END AS HUGEINT)"
+            f"ELSE d{r} - e{r} END AS {wide})"
         )
 
     n_leaves = range(len(leaves))
-    return (
-        "SELECT *, "
-        + ", ".join(f"{mult(i, 1)} AS mp{i}" for i in n_leaves)
-        + ", "
-        + ", ".join(f"{mult(i, -1)} AS mn{i}" for i in n_leaves)
-        + ", "
-        + " + ".join(
-            f"CAST({p} AS HUGEINT) * {mult(i, 1)}" for i, (p, _) in enumerate(leaves)
-        )
-        + " AS wpt, "
-        + " + ".join(
-            f"CAST({n} AS HUGEINT) * {mult(i, -1)}"
-            for i, (_, n) in enumerate(leaves)
-        )
-        + f" AS wnt FROM ({m})"
-    )
-
-
-def _ada_acc(cells: DataFrame, terms) -> DataFrame:
-    """The ensemble-accuracy fold over (cnt, pos) cells: nn = rows, and
-    per round prefix r the rows whose margin Σ_{j<=r} alpha_j·h_j has
-    the label's sign (margin > 0 predicts positive). ``terms`` holds
-    (alpha_j, h_j) per round; the margin sign inherits the LN house
-    1-ulp risk documented on q_boosted_stumps."""
-    aggs = [F.sum("cnt").cast("bigint").alias("nn")]
-    margin = None
-    for r, (a, h) in enumerate(terms, 1):
-        margin = a * h if margin is None else margin + a * h
-        aggs.append(
-            F.sum(
-                F.when(margin > 0, F.col("pos")).otherwise(
-                    F.col("cnt") - F.col("pos")
-                )
+    return [
+        model,
+        [f"{mult(i, 1)} AS mp{i}" for i in n_leaves]
+        + [f"{mult(i, -1)} AS mn{i}" for i in n_leaves]
+        + [
+            " + ".join(
+                f"CAST({p} AS {wide}) * {mult(i, 1)}"
+                for i, (p, _) in enumerate(leaves)
             )
-            .cast("bigint")
-            .alias(f"u{r}")
-        )
-    return cells.agg(*aggs)
+            + " AS wpt",
+            " + ".join(
+                f"CAST({n} AS {wide}) * {mult(i, -1)}"
+                for i, (_, n) in enumerate(leaves)
+            )
+            + " AS wnt",
+        ],
+    ]
 
 
-def _ada_acc_sql(terms, cnt: str = "cnt", pos: str = "pos") -> str:
-    """SQL twin of _ada_acc: its select list (nn, u1..uR)."""
+def _ada_model(df: DataFrame, leaves, d: str, r: int, t: str, wide=None):
+    """``df`` plus round ``r``'s _ada_model_sql columns."""
+    for cols in _ada_model_sql(leaves, d, r, t, wide):
+        df = df.selectExpr("*", *cols)
+    return df
+
+
+def _ada_model_oracle(src: str, leaves, d: str, r: int, t: str, wide=None):
+    """Round ``r``'s _ada_model_sql columns over the FROM list ``src``."""
+    first, *rest = _ada_model_sql(leaves, d, r, t, wide)
+    q = f"SELECT *, {', '.join(first)} FROM {src}"
+    for cols in rest:
+        q = f"SELECT *, {', '.join(cols)} FROM ({q})"
+    return q
+
+
+def _ada_acc_sql(terms, cnt: str = "cnt", pos: str = "pos") -> list[str]:
+    """The ensemble-accuracy fold's select items over (cnt, pos) cells:
+    nn = rows, and per round prefix r the rows u{r} whose margin
+    Σ_{j<=r} alpha_j·h_j has the label's sign (margin > 0 predicts
+    positive). ``terms`` holds (alpha_j, h_j) per round; the margin sign
+    inherits the LN house 1-ulp risk documented on q_boosted_stumps."""
     out = [f"CAST(SUM({cnt}) AS BIGINT) AS nn"]
     margin = ""
     for r, (a, h) in enumerate(terms, 1):
@@ -1046,32 +1023,31 @@ def _ada_acc_sql(terms, cnt: str = "cnt", pos: str = "pos") -> str:
             f"CAST(SUM(CASE WHEN {margin} > 0 THEN {pos} "
             f"ELSE {cnt} - {pos} END) AS BIGINT) AS u{r}"
         )
-    return ", ".join(out)
+    return out
 
 
-def _ada_round(r: int, sfx: str = "") -> list[F.Column]:
+def _ada_round_sql(r: int, sfx: str = "") -> list[str]:
     """Round ``r``'s published scalars from e{r}, d{r}, u{r} and nn:
     weighted error, alpha and ensemble train accuracy, 6-dp."""
-    e, d = F.col(f"e{r}"), F.col(f"d{r}")
     return [
-        pround(e.cast("double") / d.cast("double"), 6).alias(f"w_err{sfx}"),
-        pround(_ada_alpha(e, d), 6).alias(f"alpha{sfx}"),
-        pround(
-            F.col(f"u{r}").cast("double") / F.col("nn").cast("double"), 6
-        ).alias(f"acc{sfx}"),
+        sql_round(f"CAST(e{r} AS DOUBLE) / CAST(d{r} AS DOUBLE)", 6)
+        + f" AS w_err{sfx}",
+        sql_round(_ada_alpha_sql(f"e{r}", f"d{r}"), 6) + f" AS alpha{sfx}",
+        sql_round(f"CAST(u{r} AS DOUBLE) / CAST(nn AS DOUBLE)", 6)
+        + f" AS acc{sfx}",
     ]
 
 
-def _ada_round_sql(r: int) -> str:
-    """SQL twin of _ada_round."""
-    return (
-        sql_round(f"CAST(e{r} AS DOUBLE) / CAST(d{r} AS DOUBLE)", 6)
-        + " AS w_err, "
-        + sql_round(_ada_alpha_sql(f"e{r}", f"d{r}"), 6)
-        + " AS alpha, "
-        + sql_round(f"CAST(u{r} AS DOUBLE) / CAST(nn AS DOUBLE)", 6)
-        + " AS acc"
-    )
+def _boost_terms() -> list[tuple[str, str]]:
+    """q_boosted_stumps' (alpha_j, h_j) per round over the per-score
+    rows p: stump j votes pol_j right of t_j and −pol_j at or left."""
+    return [
+        (
+            _ada_alpha_sql(f"e{j}", f"d{j}"),
+            f"(CASE WHEN p.score > t{j} THEN pol{j} ELSE -pol{j} END)",
+        )
+        for j in range(1, _BOOST_ROUNDS + 1)
+    ]
 
 
 def _boost_oracle() -> str:
@@ -1133,18 +1109,12 @@ def _boost_oracle() -> str:
             f"ORDER BY e{r}, t{r} LIMIT 1), "
         )
 
-    def h(j: int) -> str:
-        return f"(CASE WHEN p.score > t{j} THEN pol{j} ELSE -pol{j} END)"
-
-    terms = [(_ada_alpha_sql(f"e{j}", f"d{j}"), h(j)) for j in range(1, R + 1)]
     allb = ", ".join(f"b{j}" for j in range(1, R + 1))
-    parts.append(
-        f"acc AS (SELECT {_ada_acc_sql(terms, 'p.cnt', 'p.pos')} "
-        f"FROM per p, {allb}) "
-    )
+    acc = ", ".join(_ada_acc_sql(_boost_terms(), "p.cnt", "p.pos"))
+    parts.append(f"acc AS (SELECT {acc} FROM per p, {allb}) ")
     selects = " UNION ALL ".join(
         f"SELECT CAST({r} AS INT) AS round, t{r} AS threshold, "
-        f"CAST(pol{r} AS BIGINT) AS polarity, {_ada_round_sql(r)} "
+        f"CAST(pol{r} AS BIGINT) AS polarity, {', '.join(_ada_round_sql(r))} "
         f"FROM {allb}, acc"
         for r in range(1, R + 1)
     )
@@ -1363,26 +1333,17 @@ def q_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     for bb in bests:
         wide = wide.crossJoin(F.broadcast(bb))
 
-    def hj(j: int):
-        return F.when(
-            F.col("score") > F.col(f"t{j}"), F.col(f"pol{j}")
-        ).otherwise(-F.col(f"pol{j}"))
-
-    accrow = _ada_acc(
-        wide,
-        [
-            (_ada_alpha(F.col(f"e{j}"), F.col(f"d{j}")), hj(j))
-            for j in range(1, _BOOST_ROUNDS + 1)
-        ],
+    accrow = wide.alias("p").selectExpr(
+        *_ada_acc_sql(_boost_terms(), "p.cnt", "p.pos")
     )
 
     out = accrow
     for bb in bests:
         out = out.crossJoin(F.broadcast(bb))
-    wide2 = out.select(
-        *[F.col(f"t{r}") for r in range(1, _BOOST_ROUNDS + 1)],
-        *[F.col(f"pol{r}") for r in range(1, _BOOST_ROUNDS + 1)],
-        *[c for r in range(1, _BOOST_ROUNDS + 1) for c in _ada_round(r, str(r))],
+    wide2 = out.selectExpr(
+        *[f"t{r}" for r in range(1, _BOOST_ROUNDS + 1)],
+        *[f"pol{r}" for r in range(1, _BOOST_ROUNDS + 1)],
+        *[c for r in range(1, _BOOST_ROUNDS + 1) for c in _ada_round_sql(r, str(r))],
     )
     stack_args = ", ".join(
         f"cast({r} as int), t{r}, cast(pol{r} as bigint), "
@@ -1608,98 +1569,6 @@ def tree_cum_table(s: DataFrame) -> DataFrame:
     set and assert the distinct-score table stays FIXED while fact
     rows grow."""
     return _tree_cum(s).localCheckpoint()
-
-
-def _tree_key(n0, p0, nb, pb):
-    """Branch-offset Gini split key (Spark twin of _gini_key_sql)."""
-    nl = (F.col("cum_n") - n0).cast("double")
-    pl = (F.col("cum_p") - p0).cast("double")
-    nr = (nb - (F.col("cum_n") - n0)).cast("double")
-    pr = (pb - (F.col("cum_p") - p0)).cast("double")
-    return (nl - (pl * pl + (nl - pl) * (nl - pl)) / nl) + (
-        nr - (pr * pr + (nr - pr) * (nr - pr)) / nr
-    )
-
-
-def _gini_key_sql(n0: str, p0: str, nb: str, pb: str) -> str:
-    """Branch-offset Gini split key at a candidate threshold (exact
-    integer counts cast once to DOUBLE — identical IEEE expression on
-    both engines). Shared by the Gini tree oracles."""
-    nl = f"CAST(cum_n - {n0} AS DOUBLE)"
-    pl = f"CAST(cum_p - {p0} AS DOUBLE)"
-    nr = f"CAST({nb} - (cum_n - {n0}) AS DOUBLE)"
-    pr = f"CAST({pb} - (cum_p - {p0}) AS DOUBLE)"
-    return (
-        f"({nl} - ({pl} * {pl} + ({nl} - {pl}) * ({nl} - {pl})) / {nl}) "
-        f"+ ({nr} - ({pr} * {pr} + ({nr} - {pr}) * ({nr} - {pr})) / {nr})"
-    )
-
-
-def _gini_base_sql(nb: str, pb: str) -> str:
-    p_ = f"(CAST({pb} AS DOUBLE) / {nb})"
-    q_ = f"(CAST({nb} - {pb} AS DOUBLE) / {nb})"
-    return f"(1.0 - {p_} * {p_} - {q_} * {q_})"
-
-
-def _wgini_sql(lp: str, ln: str, P: str, N: str) -> str:
-    """Weighted Gini split key: left weighted (pos, neg) = (lp, ln)
-    against branch weighted totals (P, N). Exact integer arithmetic up
-    to ONE cast per factor, then a fixed double expression — identical
-    text on both engines (the _gini_key_sql discipline)."""
-    nl = f"CAST({lp} + {ln} AS DOUBLE)"
-    pl = f"CAST({lp} AS DOUBLE)"
-    nr = f"CAST(({P} + {N}) - (({lp}) + ({ln})) AS DOUBLE)"
-    pr = f"CAST(({P}) - ({lp}) AS DOUBLE)"
-    return (
-        f"({nl} - ({pl} * {pl} + ({nl} - {pl}) * ({nl} - {pl})) / {nl}) "
-        f"+ ({nr} - ({pr} * {pr} + ({nr} - {pr}) * ({nr} - {pr})) / {nr})"
-    )
-
-
-def _wgini(lp, ln, P, N):
-    """Spark twin of _wgini_sql: same integer-then-one-cast shape."""
-    nl = (lp + ln).cast("double")
-    pl = lp.cast("double")
-    nr = ((P + N) - (lp + ln)).cast("double")
-    pr = (P - lp).cast("double")
-    return (nl - (pl * pl + (nl - pl) * (nl - pl)) / nl) + (
-        nr - (pr * pr + (nr - pr) * (nr - pr)) / nr
-    )
-
-
-def _split_cols(nl, pl, nb, pb) -> list[F.Column]:
-    """A Gini split's published columns from its left (n, pos) ``nl``,
-    ``pl``, its branch's (n, pos) ``nb``, ``pb`` and the split key
-    column ``key``: branch counts, then 6-dp impurity scalars."""
-    nbd = nb.cast("double")
-    pbd = pb.cast("double")
-    gbase = (
-        F.lit(1.0)
-        - (pbd / nbd) * (pbd / nbd)
-        - ((nbd - pbd) / nbd) * ((nbd - pbd) / nbd)
-    )
-    return [
-        nl.cast("bigint").alias("n_left"),
-        pl.cast("bigint").alias("pos_left"),
-        (nb - nl).cast("bigint").alias("n_right"),
-        (pb - pl).cast("bigint").alias("pos_right"),
-        pround(F.col("key") / nbd, 6).alias("gini_split"),
-        pround(gbase, 6).alias("gini_base"),
-        pround(gbase - F.col("key") / nbd, 6).alias("gain"),
-    ]
-
-
-def _split_cols_sql(nl: str, pl: str, nb: str, pb: str) -> str:
-    """SQL twin of _split_cols."""
-    gb = _gini_base_sql(nb, pb)
-    return (
-        f"CAST({nl} AS BIGINT) AS n_left, CAST({pl} AS BIGINT) AS pos_left, "
-        f"CAST({nb} - ({nl}) AS BIGINT) AS n_right, "
-        f"CAST({pb} - ({pl}) AS BIGINT) AS pos_right, "
-        + sql_round(f"(key) / {nb}", 6) + " AS gini_split, "
-        + sql_round(gb, 6) + " AS gini_base, "
-        + sql_round(f"{gb} - (key) / {nb}", 6) + " AS gain"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2016,7 +1885,7 @@ def _tree5_chain_sql(
 def _tree5_oracle(depth: int = _TREE5_DEPTH) -> str:
     """DuckDB twin of the ladder's level frames: the shared chain + the
     per-level pick projections."""
-    cols = _split_cols_sql("cum_n - n0", "cum_p - p0", "nb", "pb")
+    cols = ", ".join(_split_cols_sql("cum_n - n0", "cum_p - p0", "nb", "pb"))
     return _tree5_chain_sql(depth) + " " + " UNION ALL ".join(
         f"SELECT {k} AS level, CAST(branch AS BIGINT) AS branch, "
         f"score AS threshold, {cols} FROM pick{k}"
@@ -2057,10 +1926,7 @@ def _tree5_ladder(
                 & (F.col("score") < F.col("hi"))
                 & (F.col("cum_n") - F.col("n0") < F.col("nb"))
             )
-            .withColumn(
-                "key",
-                _tree_key(F.col("n0"), F.col("p0"), F.col("nb"), F.col("pb")),
-            )
+            .withColumn("key", F.expr(_gini_key_sql("n0", "p0", "nb", "pb")))
         )
         payload = F.struct(
             "key", "score", "cum_n", "cum_p", "lo", "hi", "n0", "p0", "nb", "pb"
@@ -2077,16 +1943,11 @@ def _tree5_ladder(
             )
         )
         levels.append(
-            pick.select(
-                F.lit(k).cast("int").alias("level"),
-                F.col("branch").cast("bigint").alias("branch"),
-                F.col("score").alias("threshold"),
-                *_split_cols(
-                    F.col("cum_n") - F.col("n0"),
-                    F.col("cum_p") - F.col("p0"),
-                    F.col("nb"),
-                    F.col("pb"),
-                ),
+            pick.selectExpr(
+                f"{k} AS level",
+                "CAST(branch AS BIGINT) AS branch",
+                "score AS threshold",
+                *_split_cols_sql("cum_n - n0", "cum_p - p0", "nb", "pb"),
             )
         )
         left = pick.select(
@@ -2442,60 +2303,54 @@ def _mf_cum(
     ).select(*keys, "val", *[out for _, out in measures])
 
 
-def _feat_val(fcol: str) -> F.Column:
-    """The row's value of the feature named in column ``fcol``."""
+def _mf_val_case(fcol: str, q: str = "f.") -> str:
+    """The value of the feature named in column ``fcol`` of the fact
+    row qualified by ``q`` (empty for an unaliased Spark row)."""
     return (
-        F.when(F.col(fcol) == "disc", F.col("disc"))
-        .when(F.col(fcol) == "price", F.col("price"))
-        .otherwise(F.col("qty"))
+        f"CASE {fcol} WHEN 'disc' THEN {q}disc "
+        f"WHEN 'price' THEN {q}price ELSE {q}qty END"
     )
 
 
-def _mf_val_case(fcol: str) -> str:
-    """SQL twin of _feat_val over the fact alias f."""
-    return (
-        f"CASE {fcol} WHEN 'disc' THEN f.disc "
-        "WHEN 'price' THEN f.price ELSE f.qty END"
-    )
-
-
-def _case(col: F.Column, names: list[str]) -> F.Column:
-    """Column names[i] for col = i (the last name otherwise)."""
-    out = F.col(names[-1])
-    for i in reversed(range(len(names) - 1)):
-        out = F.when(col == i, F.col(names[i])).otherwise(out)
-    return out
+def _mf_split_sql(fcol: str, t: str, left: str, right: str, q: str = "f.") -> str:
+    """``left`` where the row's value of feature ``fcol`` is <= the
+    threshold ``t`` (the row goes left), else ``right``."""
+    return f"CASE WHEN ({_mf_val_case(fcol, q)}) <= {t} THEN {left} ELSE {right} END"
 
 
 def _case_sql(col: str, names: list[str]) -> str:
-    """SQL twin of _case."""
+    """Column names[i] for col = i (the last name otherwise)."""
     if len(names) == 1:
         return names[0]
     whens = " ".join(f"WHEN {i} THEN {n}" for i, n in enumerate(names[:-1]))
     return f"CASE {col} {whens} ELSE {names[-1]} END"
 
 
-def _mf_leaf(depth: int, k: int = 0, b: int = 0) -> F.Column:
+def _mf_leaf_sql(depth: int, q: str = "f.", k: int = 0, b: int = 0) -> str:
     """Bit-path leaf of a fact row under the first ``depth`` levels of
     a tree row (split columns f{k}_{b}/t{k}_{b}): a row at branch b of
     level k goes left (value <= threshold) to 2b, else to 2b+1."""
     if k == depth:
-        return F.lit(b)
-    return F.when(
-        _feat_val(f"f{k}_{b}") <= F.col(f"t{k}_{b}"),
-        _mf_leaf(depth, k + 1, 2 * b),
-    ).otherwise(_mf_leaf(depth, k + 1, 2 * b + 1))
-
-
-def _mf_leaf_sql(depth: int, k: int = 0, b: int = 0) -> str:
-    """SQL twin of _mf_leaf."""
-    if k == depth:
         return str(b)
-    return (
-        f"CASE WHEN ({_mf_val_case(f'f{k}_{b}')}) <= t{k}_{b} "
-        f"THEN {_mf_leaf_sql(depth, k + 1, 2 * b)} "
-        f"ELSE {_mf_leaf_sql(depth, k + 1, 2 * b + 1)} END"
+    return _mf_split_sql(
+        f"f{k}_{b}",
+        f"t{k}_{b}",
+        _mf_leaf_sql(depth, q, k + 1, 2 * b),
+        _mf_leaf_sql(depth, q, k + 1, 2 * b + 1),
+        q,
     )
+
+
+def _mf_weights_sql(depth: int, wide: str) -> list[str]:
+    """A fold cell's weighted (pos, neg) under the previous round's
+    model row: its counts times the mp/mn multiplier of its leaf lf,
+    exact in the integer type ``wide``."""
+    return [
+        f"CAST({x} AS {wide}) * ("
+        + _case_sql("lf", [f"{m}{i}" for i in range(2**depth)])
+        + ")"
+        for x, m in (("pos", "mp"), ("cnt - pos", "mn"))
+    ]
 
 
 def _mf_pivot_cols(k: int, b: int, last: bool) -> list[tuple[str, str]]:
@@ -2545,8 +2400,8 @@ def _mf_grow(
         )
     else:
         keys = ["lf"]
-        rows = base.crossJoin(F.broadcast(prev)).select(
-            *base.columns, _mf_leaf(depth).alias("lf")
+        rows = base.crossJoin(F.broadcast(prev)).selectExpr(
+            *base.columns, _mf_leaf_sql(depth, "") + " AS lf"
         )
         branches = prev.select(F.col("wpt").alias("bp"), F.col("wnt").alias("bn"))
     branches = branches.select(F.lit(0).alias("br"), "bp", "bn")
@@ -2559,8 +2414,8 @@ def _mf_grow(
         # partitioning (a folded literal key costs one more exchange)
         kb = ["br"] if k else []
         if k:
-            rows_k = rows.crossJoin(F.broadcast(tree)).select(
-                *rows.columns, _mf_leaf(k).alias("br")
+            rows_k = rows.crossJoin(F.broadcast(tree)).selectExpr(
+                *rows.columns, _mf_leaf_sql(k, "") + " AS br"
             )
         else:
             rows_k = rows
@@ -2576,21 +2431,11 @@ def _mf_grow(
                 (F.col("cnt") - F.col("pos")).alias("wn"),
             )
         else:
-            leaves = range(2**depth)
-            mp = [f"mp{i}" for i in leaves]
-            mn = [f"mn{i}" for i in leaves]
+            mults = [f"{m}{i}" for m in ("mp", "mn") for i in range(2**depth)]
+            wp, wn = _mf_weights_sql(depth, dec)
             w = (
-                g.crossJoin(F.broadcast(prev.select(*mp, *mn)))
-                .select(
-                    *kb,
-                    "feat",
-                    "val",
-                    (F.col("pos").cast(dec) * _case(F.col("lf"), mp)).alias("wp"),
-                    (
-                        (F.col("cnt") - F.col("pos")).cast(dec)
-                        * _case(F.col("lf"), mn)
-                    ).alias("wn"),
-                )
+                g.crossJoin(F.broadcast(prev.select(*mults)))
+                .selectExpr(*kb, "feat", "val", f"{wp} AS wp", f"{wn} AS wn")
                 .groupBy(*kb, "feat", "val")
                 .agg(
                     F.sum("wp").cast(dec).alias("wp"),
@@ -2606,9 +2451,8 @@ def _mf_grow(
         cj = c.join(F.broadcast(branches), "br") if k else c.crossJoin(
             F.broadcast(branches)
         )
-        cand = (
-            cj.filter(cwp + cwn < bp + bn)
-            .withColumn("key", _wgini(cwp, cwn, bp, bn))
+        cand = cj.filter(cwp + cwn < bp + bn).withColumn(
+            "key", F.expr(_wgini_sql("cwp", "cwn", "bp", "bn"))
         )
         pay = ("key", "feat", "val", "cwp", "cwn", "bp", "bn")
         if k:
@@ -2670,15 +2514,11 @@ def _mf_grow_sql(depth: int, r: int) -> str:
             for f in _MF_FEATS
         )
         if weighted:
-            mults = [
-                _case_sql("lf", [f"{m}{i}" for i in range(2**depth)])
-                for m in ("mp", "mn")
-            ]
+            wp, wn = _mf_weights_sql(depth, "HUGEINT")
             weigh = (
-                f"SELECT br, feat, val, CAST(SUM(CAST(pos AS HUGEINT) * "
-                f"({mults[0]})) AS HUGEINT) AS wp, "
-                f"CAST(SUM(CAST(cnt - pos AS HUGEINT) * ({mults[1]})) "
-                f"AS HUGEINT) AS wn FROM g{s}, m{r - 1} GROUP BY br, feat, val"
+                f"SELECT br, feat, val, CAST(SUM({wp}) AS HUGEINT) AS wp, "
+                f"CAST(SUM({wn}) AS HUGEINT) AS wn "
+                f"FROM g{s}, m{r - 1} GROUP BY br, feat, val"
             )
         else:
             weigh = f"SELECT br, feat, val, pos AS wp, cnt - pos AS wn FROM g{s}"
@@ -2729,7 +2569,7 @@ def _mf_grow_sql(depth: int, r: int) -> str:
 def _tree_mf_oracle() -> str:
     """DuckDB twin of q_tree_multifeat: round 1 of the depth-2 chain,
     the two levels' picks relabelled by _TREE_NODE_SQL."""
-    cols = _split_cols_sql("cwp + cwn", "cwp", "(bp + bn)", "bp")
+    cols = ", ".join(_split_cols_sql("cwp + cwn", "cwp", "(bp + bn)", "bp"))
     lv = " UNION ALL ".join(
         f"SELECT {k} AS level, br AS branch, feat, val AS threshold, {cols} "
         f"FROM p1{k}"
@@ -2762,7 +2602,7 @@ def q_tree_multifeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the q_tree2 node mapping.
 
     Exactness: per-(branch, feature) prefix counts are exact integers;
-    the split key is the weighted Gini expression (_wgini) on those
+    the split key is the weighted Gini expression (_wgini_sql) on those
     integers — the same doubles as q_tree2's branch-offset key, one
     cast per factor — and the argmin order (key, feat, val) compares
     exact doubles then strings — engine-identical. Feature values are
@@ -2781,15 +2621,14 @@ def q_tree_multifeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed tree trainer scales to 100 TB. Eager by construction
     (the checkpointed picks); the registry eager contract applies."""
     picks, _tree, _fold = _mf_grow(_mf_base(spark, sf_dir), 2)
-    cwp, cwn = F.col("cwp"), F.col("cwn")
     lv = None
     for k, pick in enumerate(picks):
-        part = pick.select(
-            F.lit(k).alias("level"),
-            F.col("br").alias("branch"),
+        part = pick.selectExpr(
+            f"{k} AS level",
+            "br AS branch",
             "feat",
-            F.col("val").alias("threshold"),
-            *_split_cols(cwp + cwn, cwp, F.col("bp") + F.col("bn"), F.col("bp")),
+            "val AS threshold",
+            *_split_cols_sql("cwp + cwn", "cwp", "(bp + bn)", "bp"),
         )
         lv = part if lv is None else lv.unionAll(part)
     return lv.select(F.expr(_TREE_NODE_SQL).alias("node"), "feat", *_TREE_NODE_COLS)
@@ -2805,6 +2644,38 @@ def q_tree_multifeat(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _bt2_leaves(p: str, n: str, tp: str, tn: str) -> list[tuple[str, str]]:
+    """Per-leaf (pos, neg) of a depth-2 score tree from its left cums
+    ({p}, {n} suffixed l/0/r at the sorted thresholds) and totals."""
+    return [
+        (f"{p}l", f"{n}l"),
+        (f"{p}0 - {p}l", f"{n}0 - {n}l"),
+        (f"{p}r - {p}0", f"{n}r - {n}0"),
+        (f"{tp} - {p}r", f"{tn} - {n}r"),
+    ]
+
+
+def _bt2_leaf_case(u: str, vals: list[str]) -> str:
+    """vals[k] for the leaf index 0..3 of row p's score over the
+    sorted thresholds {u}l < {u}0 < {u}r."""
+    return (
+        f"CASE WHEN p.score <= {u}l THEN {vals[0]} "
+        f"WHEN p.score <= {u}0 THEN {vals[1]} "
+        f"WHEN p.score <= {u}r THEN {vals[2]} ELSE {vals[3]} END"
+    )
+
+
+def _bt2_terms() -> list[tuple[str, str]]:
+    """The two trees' (alpha_r, h_r) over the per-score rows p."""
+    return [
+        (
+            _ada_alpha_sql(f"e{r}", f"d{r}"),
+            f"({_bt2_leaf_case(u, [f'pr{r}_{i}' for i in range(4)])})",
+        )
+        for r, u in ((1, "t"), (2, "u"))
+    ]
+
+
 def _btree2_oracle() -> str:
     """DuckDB twin. The oracle recomputes each round's weighted
     per-score table directly (region-CASE multipliers x raw counts,
@@ -2814,6 +2685,7 @@ def _btree2_oracle() -> str:
     thresholds tl < t0 < tr; AdaBoost multiplier for a correct row is
     e, for a misclassified row d - e (the q_boosted_stumps rational
     trick), so round-2 weighted counts are exact HUGEINTs."""
+    acc = _ada_acc_sql(_bt2_terms(), "p.cnt", "p.pos")
     key_root1 = _wgini_sql("cp", "cn", "tp", "tn")
     key_l1 = _wgini_sql("cp", "cn", "cp0", "cn0")
     key_r1 = _wgini_sql("(cp - cp0)", "(cn - cn0)", "(tp - cp0)", "(tn - cn0)")
@@ -2823,55 +2695,23 @@ def _btree2_oracle() -> str:
         "(cwp - wp0)", "(cwn - wn0)", "(wpt - wp0)", "(wnt - wn0)"
     )
 
-    def leaf_cases(u: str, vals: list[str]) -> str:
-        # leaf index 0..3 over the sorted thresholds {u}l < {u}0 < {u}r
-        return (
-            f"CASE WHEN p.score <= {u}l THEN {vals[0]} "
-            f"WHEN p.score <= {u}0 THEN {vals[1]} "
-            f"WHEN p.score <= {u}r THEN {vals[2]} ELSE {vals[3]} END"
-        )
-
-    mp = leaf_cases("t", [f"mp{i}" for i in range(4)])
-    mn = leaf_cases("t", [f"mn{i}" for i in range(4)])
-    h1 = leaf_cases("t", [f"pr1_{i}" for i in range(4)])
-    h2 = leaf_cases("u", [f"pr2_{i}" for i in range(4)])
-    m1 = _ada_model_sql(
-        "root1, l1, r1, t",
-        [
-            ("cpl", "cnl"),
-            ("cp0 - cpl", "cn0 - cnl"),
-            ("cpr - cp0", "cnr - cn0"),
-            ("tp - cpr", "tn - cnr"),
-        ],
-        "tp + tn",
-        1,
-        "BIGINT",
-        True,
+    m1 = _ada_model_oracle(
+        "root1, l1, r1, t", _bt2_leaves("cp", "cn", "tp", "tn"), "tp + tn", 1,
+        "BIGINT", "HUGEINT",
     )
-    m2 = _ada_model_sql(
-        "root2, l2, r2, tw2",
-        [
-            ("wpl", "wnl"),
-            ("wp0 - wpl", "wn0 - wnl"),
-            ("wpr - wp0", "wnr - wn0"),
-            ("wpt - wpr", "wnt - wnr"),
-        ],
-        "wpt + wnt",
-        2,
-        "HUGEINT",
-        False,
+    m2 = _ada_model_oracle(
+        "root2, l2, r2, tw2", _bt2_leaves("wp", "wn", "wpt", "wnt"),
+        "wpt + wnt", 2, "HUGEINT",
     )
-    terms = [
-        (_ada_alpha_sql("e1", "d1"), f"({h1})"),
-        (_ada_alpha_sql("e2", "d2"), f"({h2})"),
-    ]
+    mp = _bt2_leaf_case("t", [f"mp{i}" for i in range(4)])
+    mn = _bt2_leaf_case("t", [f"mn{i}" for i in range(4)])
     rows = " UNION ALL ".join(
         f"SELECT CAST({r} AS INT) AS round, {u}0 AS t_root, {u}l AS t_left, "
         f"{u}r AS t_right, "
         + "".join(
             f"CAST(pr{r}_{i} AS BIGINT) AS pred_l{i + 1}, " for i in range(4)
         )
-        + f"{_ada_round_sql(r)} FROM m{r}, acc"
+        + f"{', '.join(_ada_round_sql(r))} FROM m{r}, acc"
         for r, u in ((1, "t"), (2, "u"))
     )
     return (
@@ -2911,7 +2751,7 @@ def _btree2_oracle() -> str:
         "FROM c2, root2, tw2, t WHERE score > u0 AND score < smax "
         f"ORDER BY {key_r2}, score LIMIT 1), "
         f"m2 AS MATERIALIZED ({m2}), "
-        f"acc AS MATERIALIZED (SELECT {_ada_acc_sql(terms, 'p.cnt', 'p.pos')} "
+        f"acc AS MATERIALIZED (SELECT {', '.join(acc)} "
         "FROM per p, m1, m2) " + rows
     )
 
@@ -2939,7 +2779,7 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-2 candidate's weighted (pos, neg) cums are exact
     DECIMAL(38,0)/HUGEINT integers. Split keys are the weighted Gini
     expression on exact integers with ONE cast per factor
-    (_wgini/_wgini_sql — identical text both engines); argmins ORDER
+    (_wgini_sql — one text, both engines); argmins ORDER
     BY (key, score). Assumes the weak learner is imperfect and better
     than chance (1 <= e < d — true on any non-separable stream; a
     perfect tree would make alpha infinite in ANY AdaBoost).
@@ -2965,32 +2805,42 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n") - F.col("p")).alias("tn"),
     )
 
-    def _bt2_pick(cands, xp, xn, bp, bn, BP, BN, names):
-        key = _wgini(xp - bp, xn - bn, BP, BN)
+    def _bt2_pick(cands, key, xp, xn, names):
         return (
-            cands.withColumn("key", key)
+            cands.withColumn("key", F.expr(key))
             .orderBy("key", "score")
             .limit(1)
             .select(
                 F.col("score").alias(names[0]),
-                xp.alias(names[1]),
-                xn.alias(names[2]),
+                F.col(xp).alias(names[1]),
+                F.col(xn).alias(names[2]),
                 *names[3:],
             )
             .localCheckpoint()
         )
 
-    def _bt2_branch_picks(cands, xp, xn, bp, bn, BP, BN, names):
+    def _bt2_branch_picks(cands, xp, xn, p0, n0, tp, tn, names):
         """BOTH branch argmins in ONE job (the q_tree5 per-level
         struct-argmin: groupBy branch + min(struct(key, score, ...))
         is the (key, score) order because key/score lead and score is
-        unique per branch) — vs two sequential TakeOrdered jobs."""
-        key = _wgini(xp - bp, xn - bn, BP, BN)
+        unique per branch) — vs two sequential TakeOrdered jobs. The
+        right branch (br = 1) starts at the root pick's cums
+        (``p0``, ``n0``) and ends at the totals (``tp``, ``tn``)."""
+
+        def side(left: str, right: str) -> str:
+            return f"CASE WHEN br = 0 THEN {left} ELSE {right} END"
+
+        key = _wgini_sql(
+            f"({xp} - {side('0', p0)})",
+            f"({xn} - {side('0', n0)})",
+            side(p0, f"{tp} - {p0}"),
+            side(n0, f"{tn} - {n0}"),
+        )
         payload = F.struct(
-            key.alias("key"),
+            F.expr(key).alias("key"),
             F.col("score"),
-            xp.alias("_xp"),
-            xn.alias("_xn"),
+            F.col(xp).alias("_xp"),
+            F.col(xn).alias("_xn"),
         )
         pick = (
             cands.groupBy("br")
@@ -2999,20 +2849,19 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-        def side(b, nm):
+        def side_pick(b, nm):
             return pick.filter(F.col("br") == b).select(
                 F.col("score").alias(nm[0]),
                 F.col("_xp").alias(nm[1]),
                 F.col("_xn").alias(nm[2]),
             )
 
-        return side(0, names[0]), side(1, names[1])
+        return side_pick(0, names[0]), side_pick(1, names[1])
 
-    zero = F.lit(0)
     cp, cn = F.col("cp"), F.col("cn")
     cands1 = cc.filter(cp + cn < F.col("tp") + F.col("tn"))
     root1 = _bt2_pick(
-        cands1, cp, cn, zero, zero, F.col("tp"), F.col("tn"),
+        cands1, _wgini_sql("cp", "cn", "tp", "tn"), "cp", "cn",
         ("t0", "cp0", "cn0"),
     )
     b1 = (
@@ -3031,43 +2880,30 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    is_l = F.col("br") == 0
     l1, r1 = _bt2_branch_picks(
-        b1,
-        cp,
-        cn,
-        F.when(is_l, zero).otherwise(F.col("cp0")),
-        F.when(is_l, zero).otherwise(F.col("cn0")),
-        F.when(is_l, F.col("cp0")).otherwise(F.col("tp") - F.col("cp0")),
-        F.when(is_l, F.col("cn0")).otherwise(F.col("tn") - F.col("cn0")),
+        b1, "cp", "cn", "cp0", "cn0", "tp", "tn",
         (("tl", "cpl", "cnl"), ("tr", "cpr", "cnr")),
     )
     tot = c.select(
         F.col("p").alias("tp"), (F.col("n") - F.col("p")).alias("tn")
     ).limit(1)
 
-    lv = [
-        (F.col("cpl"), F.col("cnl")),
-        (F.col("cp0") - F.col("cpl"), F.col("cn0") - F.col("cnl")),
-        (F.col("cpr") - F.col("cp0"), F.col("cnr") - F.col("cn0")),
-        (F.col("tp") - F.col("cpr"), F.col("tn") - F.col("cnr")),
-    ]
     # the round-1 model row carries the per-region multipliers and the
     # weighted TOTALS as scalars: leaving them as per-row when()/product
     # expressions tripled the c2 expression tree (measured on the first
     # cut — cold plan compile dominated). ONE materialization covers
     # the picks' join and the model columns.
-    dec = "decimal(38,0)"
+    dec = "DECIMAL(38,0)"
     m1w = (
         _ada_model(
             root1.crossJoin(F.broadcast(l1))
             .crossJoin(F.broadcast(r1))
             .crossJoin(F.broadcast(tot)),
-            lv,
-            F.col("tp") + F.col("tn"),
+            _bt2_leaves("cp", "cn", "tp", "tn"),
+            "tp + tn",
             1,
-            "bigint",
-            mults=True,
+            "BIGINT",
+            dec,
         )
         # tp/tn are NOT carried out: cc already has them, and the
         # round-2 crossJoin would make the reference ambiguous
@@ -3109,10 +2945,8 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint()
     )
-    xwp, xwn = F.col("cwp"), F.col("cwn")
-    dzero = F.lit(0).cast(dec)
     root2 = _bt2_pick(
-        c2, xwp, xwn, dzero, dzero, F.col("wpt"), F.col("wnt"),
+        c2, _wgini_sql("cwp", "cwn", "wpt", "wnt"), "cwp", "cwn",
         ("u0", "wp0", "wn0", "wpt", "wnt"),
     )
     b2 = (
@@ -3126,35 +2960,17 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    is_l2 = F.col("br") == 0
     l2, r2 = _bt2_branch_picks(
-        b2,
-        xwp,
-        xwn,
-        F.when(is_l2, dzero).otherwise(F.col("wp0")),
-        F.when(is_l2, dzero).otherwise(F.col("wn0")),
-        F.when(is_l2, F.col("wp0")).otherwise(
-            F.col("wpt") - F.col("wp0")
-        ),
-        F.when(is_l2, F.col("wn0")).otherwise(
-            F.col("wnt") - F.col("wn0")
-        ),
+        b2, "cwp", "cwn", "wp0", "wn0", "wpt", "wnt",
         (("ul", "wpl", "wnl"), ("ur", "wpr", "wnr")),
     )
-    wv = [
-        (F.col("wpl"), F.col("wnl")),
-        (F.col("wp0") - F.col("wpl"), F.col("wn0") - F.col("wnl")),
-        (F.col("wpr") - F.col("wp0"), F.col("wnr") - F.col("wn0")),
-        (F.col("wpt") - F.col("wpr"), F.col("wnt") - F.col("wnr")),
-    ]
     m2 = (
         _ada_model(
             root2.crossJoin(F.broadcast(l2)).crossJoin(F.broadcast(r2)),
-            wv,
-            F.col("wpt") + F.col("wnt"),
+            _bt2_leaves("wp", "wn", "wpt", "wnt"),
+            "wpt + wnt",
             2,
             dec,
-            mults=False,
         )
         .select("u0", "ul", "ur", *[f"pr2_{k}" for k in range(4)], "e2", "d2")
         .localCheckpoint()
@@ -3167,33 +2983,16 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = cc.crossJoin(F.broadcast(m1s)).crossJoin(F.broadcast(m2))
 
-    def leaf_pred(u, r):
-        return (
-            F.when(F.col("score") <= F.col(f"{u}l"), F.col(f"pr{r}_0"))
-            .when(F.col("score") <= F.col(f"{u}0"), F.col(f"pr{r}_1"))
-            .when(F.col("score") <= F.col(f"{u}r"), F.col(f"pr{r}_2"))
-            .otherwise(F.col(f"pr{r}_3"))
-        )
-
-    accrow = _ada_acc(
-        w,
-        [
-            (_ada_alpha(F.col(f"e{r}"), F.col(f"d{r}")), leaf_pred(u, r))
-            for r, u in ((1, "t"), (2, "u"))
-        ],
-    )
+    accrow = w.alias("p").selectExpr(*_ada_acc_sql(_bt2_terms(), "p.cnt", "p.pos"))
     wide = accrow.crossJoin(F.broadcast(m1s)).crossJoin(F.broadcast(m2))
     row1, row2 = (
-        wide.select(
-            F.lit(r).cast("int").alias("round"),
-            F.col(f"{u}0").alias("t_root"),
-            F.col(f"{u}l").alias("t_left"),
-            F.col(f"{u}r").alias("t_right"),
-            *[
-                F.col(f"pr{r}_{k}").cast("bigint").alias(f"pred_l{k + 1}")
-                for k in range(4)
-            ],
-            *_ada_round(r),
+        wide.selectExpr(
+            f"CAST({r} AS INT) AS round",
+            f"{u}0 AS t_root",
+            f"{u}l AS t_left",
+            f"{u}r AS t_right",
+            *[f"CAST(pr{r}_{k} AS BIGINT) AS pred_l{k + 1}" for k in range(4)],
+            *_ada_round_sql(r),
         )
         for r, u in ((1, "t"), (2, "u"))
     )
@@ -3215,42 +3014,60 @@ def _mf_split_names(depth: int) -> list[tuple[int, int]]:
     return [(k, b) for k in range(depth) for b in range(2**k)]
 
 
+def _mf_boost_sql(depth: int, br: str = "br") -> tuple[list, str, str]:
+    """The boosting texts both engines share at ``depth``: the model
+    row's leaves (lp{i}, ln{i}), and the accuracy cells' filter and
+    round-2 leaf k2 over round 2's last fold keyed by branch ``br`` — a
+    (branch, feat, val) row belongs to its branch's winning feature and
+    goes left at its threshold."""
+    k = depth - 1
+    fs = [f"f{k}_{b}" for b in range(2**k)]
+    ts = [f"t{k}_{b}" for b in range(2**k)]
+    leaves = [(f"lp{i}", f"ln{i}") for i in range(2**depth)]
+    return (
+        leaves,
+        f"feat = {_case_sql(br, fs)}",
+        f"{br} * 2 + CASE WHEN val <= {_case_sql(br, ts)} THEN 0 ELSE 1 END",
+    )
+
+
+def _mf_terms(nleaf: int) -> list[tuple[str, str]]:
+    """The two rounds' (alpha_j, h_j) over cells keyed by the rows'
+    round-j leaf k{j}."""
+    return [
+        (
+            _ada_alpha_sql(f"e{j}", f"d{j}"),
+            "(" + _case_sql(f"k{j}", [f"pr{j}_{i}" for i in range(nleaf)]) + ")",
+        )
+        for j in (1, 2)
+    ]
+
+
 def _mf_boost_oracle(depth: int, splits, preds) -> str:
     """DuckDB twin of _mf_boost: two rounds of the grower's SQL chain,
     each closed by its model row m{r}; the (round-1 leaf, round-2 leaf)
     accuracy cells read off the last fold restricted to each branch's
     winning feature."""
-    k = depth - 1
-    fs = [f"f{k}_{b}" for b in range(2**k)]
-    ts = [f"t{k}_{b}" for b in range(2**k)]
-    leaves = [(f"lp{i}", f"ln{i}") for i in range(2**depth)]
+    leaves, where, k2 = _mf_boost_sql(depth)
     parts = [f"WITH f AS ({_MF_BASE_SQL} FROM lineitem)"]
     for r in (1, 2):
         parts.append(_mf_grow_sql(depth, r))
-        model = _ada_model_sql(
+        model = _ada_model_oracle(
             ", ".join(f"s{r}{j}" for j in range(depth)),
             leaves,
             "rp + rn",
             r,
             "BIGINT" if r == 1 else "HUGEINT",
-            r == 1,
+            "HUGEINT" if r == 1 else None,
         )
         parts.append(f"m{r} AS MATERIALIZED ({model})")
-    terms = [
-        (
-            _ada_alpha_sql(f"e{j}", f"d{j}"),
-            "(" + _case_sql(f"k{j}", [f"pr{j}_{i}" for i, _ in enumerate(leaves)])
-            + ")",
-        )
-        for j in (1, 2)
-    ]
     parts.append(
-        "cells AS (SELECT lf AS k1, br * 2 + CASE WHEN val <= "
-        f"{_case_sql('br', ts)} THEN 0 ELSE 1 END AS k2, "
+        f"cells AS (SELECT lf AS k1, {k2} AS k2, "
         "CAST(SUM(cnt) AS BIGINT) AS cnt, CAST(SUM(pos) AS BIGINT) AS pos "
-        f"FROM g2{k}, m2 WHERE feat = {_case_sql('br', fs)} GROUP BY 1, 2)"
+        f"FROM g2{depth - 1}, m2 WHERE {where} GROUP BY 1, 2)"
     )
-    parts.append(f"acc AS (SELECT {_ada_acc_sql(terms)} FROM cells, m1, m2)")
+    acc = ", ".join(_ada_acc_sql(_mf_terms(len(leaves))))
+    parts.append(f"acc AS (SELECT {acc} FROM cells, m1, m2)")
     rows = " UNION ALL ".join(
         f"SELECT CAST({r} AS INT) AS round, "
         + "".join(
@@ -3258,7 +3075,7 @@ def _mf_boost_oracle(depth: int, splits, preds) -> str:
             for (lk, b), (fn, tn) in zip(_mf_split_names(depth), splits)
         )
         + "".join(f"CAST(pr{r}_{i} AS BIGINT) AS {p}, " for i, p in enumerate(preds))
-        + f"{_ada_round_sql(r)} FROM m{r}, acc"
+        + f"{', '.join(_ada_round_sql(r))} FROM m{r}, acc"
         for r in (1, 2)
     )
     return ", ".join(parts) + " " + rows
@@ -3279,10 +3096,10 @@ def _mf_boost(
     leaf — so accuracy costs no extra fact scan. A round with no model
     row (some branch did not pick) publishes no row; its successors
     publish none and the accuracies read NULL."""
-    dec = "decimal(38,0)"
+    dec = "DECIMAL(38,0)"
     base = _mf_base(spark, sf_dir)
-    nleaf = 2**depth
-    leaves = [(F.col(f"lp{i}"), F.col(f"ln{i}")) for i in range(nleaf)]
+    # the depth-1 fold has no branch key: its one branch is 0
+    leaves, where, k2 = _mf_boost_sql(depth, "br" if depth > 1 else "0")
     models = []
     for r in (1, 2):
         prev = models[-1] if models else None
@@ -3291,54 +3108,38 @@ def _mf_boost(
             _ada_model(
                 tree,
                 leaves,
-                F.col("rp") + F.col("rn"),
+                "rp + rn",
                 r,
-                "bigint" if r == 1 else dec,
-                mults=r == 1,
+                "BIGINT" if r == 1 else dec,
+                dec if r == 1 else None,
             ).localCheckpoint()
         )
     k = depth - 1
-    fs = [f"f{k}_{b}" for b in range(2**k)]
-    ts = [f"t{k}_{b}" for b in range(2**k)]
-    # the depth-1 fold has no branch key: its one branch is 0
-    br = F.col("br") if depth > 1 else F.lit(0)
+    splits2 = [f"{x}{k}_{b}" for x in "ft" for b in range(2**k)]
     cells = (
-        fold.crossJoin(F.broadcast(models[1].select(*fs, *ts)))
-        .filter(F.col("feat") == _case(br, fs))
-        .groupBy(
-            F.col("lf").alias("k1"),
-            (
-                br * 2
-                + F.when(F.col("val") <= _case(br, ts), F.lit(0)).otherwise(F.lit(1))
-            ).alias("k2"),
-        )
+        fold.crossJoin(F.broadcast(models[1].select(*splits2)))
+        .filter(F.expr(where))
+        .groupBy(F.col("lf").alias("k1"), F.expr(k2).alias("k2"))
         .agg(
             F.sum("cnt").cast("bigint").alias("cnt"),
             F.sum("pos").cast("bigint").alias("pos"),
         )
     )
-    terms = []
     for j, m in enumerate(models, 1):
-        pr = [f"pr{j}_{i}" for i in range(nleaf)]
+        pr = [f"pr{j}_{i}" for i in range(len(leaves))]
         cells = cells.crossJoin(F.broadcast(m.select(*pr, f"e{j}", f"d{j}")))
-        terms.append(
-            (_ada_alpha(F.col(f"e{j}"), F.col(f"d{j}")), _case(F.col(f"k{j}"), pr))
-        )
-    acc = _ada_acc(cells, terms)
+    acc = cells.selectExpr(*_ada_acc_sql(_mf_terms(len(leaves))))
     out = None
     for r, m in enumerate(models, 1):
-        row = acc.crossJoin(F.broadcast(m)).select(
-            F.lit(r).cast("int").alias("round"),
+        row = acc.crossJoin(F.broadcast(m)).selectExpr(
+            f"CAST({r} AS INT) AS round",
             *[
                 c
                 for (lk, b), (fn, tn) in zip(_mf_split_names(depth), splits)
-                for c in (
-                    F.col(f"f{lk}_{b}").alias(fn),
-                    F.col(f"t{lk}_{b}").alias(tn),
-                )
+                for c in (f"f{lk}_{b} AS {fn}", f"t{lk}_{b} AS {tn}")
             ],
-            *[F.col(f"pr{r}_{i}").cast("bigint").alias(p) for i, p in enumerate(preds)],
-            *_ada_round(r),
+            *[f"CAST(pr{r}_{i} AS BIGINT) AS {p}" for i, p in enumerate(preds)],
+            *_ada_round_sql(r),
         )
         out = row if out is None else out.unionAll(row)
     return out
@@ -3373,7 +3174,7 @@ def q_boosted_multifeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     e1 (correct) or d1-e1 (misclassified) — the q_boosted_stumps
     rational trick — so every weighted cell, cum, total, and error is
     an exact DECIMAL(38,0)/HUGEINT integer (max magnitude d1^2 = n^2:
-    headroom to n ~ 1e19). Split keys are the shared _wgini/_wgini_sql
+    headroom to n ~ 1e19). Split keys are the shared _wgini_sql
     text; argmins order by (key, feat, val); alphas are the documented
     LN house class (rounded, never compared to a threshold across
     engines except through the sign tests both engines evaluate on the
@@ -3419,7 +3220,7 @@ def q_boosted_mf_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers; round-2 weights are one of eight per-(leaf, class)
     integer multipliers, so every weighted cell, cum, total and error
     is an exact DECIMAL(38,0)/HUGEINT integer (magnitudes <= d1² = n²,
-    headroom to n ~ 1e19). Split keys are the shared _wgini text;
+    headroom to n ~ 1e19). Split keys are the shared _wgini_sql text;
     argmins order by (key, feat, val); alphas are the LN house class
     (q_boosted_tree2 precedent); a perfect round 1 publishes as in
     q_boosted_multifeat.
@@ -3473,7 +3274,7 @@ def _xgb_fold_sql(
     the totals attached). ``src`` carries (label, disc, price, qty,
     ``key``, ``u``); without one the chain opens with the shared base
     CTE f: lineitem -> label, the 6-dp feature grid and the 6-dp score
-    integer u. SQL twin of _xgb_fold/_xgb_branch_hist."""
+    integer u. The oracle form of _xgb_fold/_xgb_branch_hist."""
     head = ""
     if src is None:
         src = "f"
@@ -3509,8 +3310,7 @@ def _xgb_fold_sql(
     return (
         head
         + f"r{sfx} AS (SELECT {k}label, disc, price, qty, "
-        f"{u} - label * 1000000 AS gu, {u} * (1000000 - {u}) AS hu "
-        f"FROM {src}), "
+        f"{', '.join(_xgb_gh_sql(u))} FROM {src}), "
         f"up{sfx} AS ({unpivot}), "
         f"g{sfx} AS (SELECT {k}feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
         "CAST(SUM(gu) AS HUGEINT) AS g, "
@@ -3518,6 +3318,66 @@ def _xgb_fold_sql(
         f"t{sfx} AS ({tot}), "
         f"c{sfx} AS (SELECT {k}feat, val, {cums}, n, gt, ht FROM {gt_join})"
     )
+
+
+def _xgb_gh_sql(u: str) -> list[str]:
+    """The exact integer gradient gu = p − y in 1e-6 units and hessian
+    hu = p(1 − p) in 1e-12 units of a row with 6-dp margin integer
+    ``u`` (p = u/1e6) and 0/1 ``label``."""
+    return [f"{u} - label * 1000000 AS gu", f"{u} * (1000000 - {u}) AS hu"]
+
+
+def _newton_sql(
+    cg: str = "cum_g", ch: str = "cum_h", gt: str = "gt", ht: str = "ht",
+    grad=None,
+) -> dict[str, str]:
+    """The Newton split terms off exact integer sums — left cums
+    ``cg``/``ch`` and totals ``gt``/``ht`` (g in 1e-6, h in 1e-12
+    units): branch sums gl/hl/gr/hr as doubles, the argmin key
+    −(GL²/(HL+λ) + GR²/(HR+λ)), the structure gain
+    ½(GL²/(HL+λ) + GR²/(HR+λ) − G²/(H+λ)) and the shrunken leaf
+    weights −G/(H+λ)·η (λ = 1, η = 0.1). ``grad`` maps each integer
+    gradient sum (left, right, total) first — q_xgb_alpha's soft
+    threshold."""
+    g = grad or (lambda x: x)
+    gl = f"CAST({g(cg)} AS DOUBLE) / 1000000"
+    hl = f"CAST({ch} AS DOUBLE) / 1000000000000"
+    gr = f"CAST({g(f'{gt} - {cg}')} AS DOUBLE) / 1000000"
+    hr = f"CAST({ht} - {ch} AS DOUBLE) / 1000000000000"
+    gtd = f"CAST({g(gt)} AS DOUBLE) / 1000000"
+    htd = f"CAST({ht} AS DOUBLE) / 1000000000000"
+    kl = f"(({gl}) * ({gl}) / (({hl}) + 1.0))"
+    kr = f"(({gr}) * ({gr}) / (({hr}) + 1.0))"
+    return {
+        "gl": gl,
+        "hl": hl,
+        "gr": gr,
+        "hr": hr,
+        "key": f"(0.0 - ({kl} + {kr}))",
+        "gain": f"0.5 * (({kl} + {kr}) - ({gtd}) * ({gtd}) / (({htd}) + 1.0))",
+        "w_left": f"0.0 - 0.1 * ({gl}) / (({hl}) + 1.0)",
+        "w_right": f"0.0 - 0.1 * ({gr}) / (({hr}) + 1.0)",
+    }
+
+
+def _newton_cols_sql(
+    t: dict[str, str], g_names: tuple[str, str] = ("g_left", "g_right")
+) -> list[str]:
+    """The published 6-dp pick items of Newton terms ``t``."""
+    names = (g_names[0], "h_left", g_names[1], "h_right", "gain", "w_left", "w_right")
+    terms = ("gl", "hl", "gr", "hr", "gain", "w_left", "w_right")
+    return [sql_round(t[k], 6) + f" AS {n}" for k, n in zip(terms, names)]
+
+
+def _newton_pick_cols_sql(grad=None, g_names=("g_left", "g_right")) -> list[str]:
+    """A Newton pick's select items over a cum row (val, cum_n, n and
+    the g/h sums): threshold, branch counts and the 6-dp terms."""
+    return [
+        "val AS threshold",
+        "CAST(cum_n AS BIGINT) AS n_left",
+        "CAST(n - cum_n AS BIGINT) AS n_right",
+        *_newton_cols_sql(_newton_sql(grad=grad), g_names),
+    ]
 
 
 def _xgb_pick_sql(
@@ -3534,45 +3394,23 @@ def _xgb_pick_sql(
     over the candidates with cum_n < n (and ``where``), tie-broken by
     (key, feat, val). ``node``/``rnd`` label tree-node and
     boosting-round outputs; ``feat`` may add columns after feat;
-    ``grad`` maps each integer gradient sum (left, right, total) before
-    the terms, published as ``g_names`` (q_xgb_alpha's soft threshold).
-    SQL twin of _newton_terms/_newton_take."""
-    g = grad or (lambda x: x)
-    gl = f"CAST({g('cum_g')} AS DOUBLE) / 1000000"
-    hl = "CAST(cum_h AS DOUBLE) / 1000000000000"
-    gr = f"CAST({g('gt - cum_g')} AS DOUBLE) / 1000000"
-    hr = "CAST(ht - cum_h AS DOUBLE) / 1000000000000"
-    gt = f"CAST({g('gt')} AS DOUBLE) / 1000000"
-    ht = "CAST(ht AS DOUBLE) / 1000000000000"
-    kl = f"(({gl}) * ({gl}) / (({hl}) + 1.0))"
-    kr = f"(({gr}) * ({gr}) / (({hr}) + 1.0))"
-    key = f"(0.0 - ({kl} + {kr}))"
+    ``grad``/``g_names`` as in _newton_sql/_newton_cols_sql. The
+    oracle form of _newton_take."""
     head = (f"'{node}' AS node, " if node is not None else "") + (
         f"CAST({rnd} AS INT) AS round, " if rnd is not None else ""
     )
     cond = "cum_n < n" + (f" AND ({where})" if where else "")
     return (
-        f"SELECT {head}{feat}, val AS threshold, "
-        "CAST(cum_n AS BIGINT) AS n_left, "
-        "CAST(n - cum_n AS BIGINT) AS n_right, "
-        + sql_round(gl, 6) + f" AS {g_names[0]}, "
-        + sql_round(hl, 6) + " AS h_left, "
-        + sql_round(gr, 6) + f" AS {g_names[1]}, "
-        + sql_round(hr, 6) + " AS h_right, "
-        + sql_round(
-            f"0.5 * (({kl} + {kr}) - ({gt}) * ({gt}) / (({ht}) + 1.0))", 6
-        )
-        + " AS gain, "
-        + sql_round(f"0.0 - 0.1 * ({gl}) / (({hl}) + 1.0)", 6)
-        + " AS w_left, "
-        + sql_round(f"0.0 - 0.1 * ({gr}) / (({hr}) + 1.0)", 6)
-        + " AS w_right "
-        f"FROM {src} WHERE {cond} ORDER BY {key}, feat, val LIMIT 1"
+        f"SELECT {head}{feat}, "
+        + ", ".join(_newton_pick_cols_sql(grad, g_names))
+        + f" FROM {src} WHERE {cond} ORDER BY {_newton_sql(grad=grad)['key']}, "
+        "feat, val LIMIT 1"
     )
 
 
 def _xgb_step_sql(u: str, w: str) -> str:
-    """SQL twin of _xgb_step."""
+    """One margin step on the 6-dp margin integer ``u``:
+    round(sigmoid(logit(u/1e6) + w)·1e6)."""
     return (
         f"CAST(FLOOR((1.0 / (1.0 + EXP(-(LN(CAST({u} AS DOUBLE) "
         f"/ (1000000 - {u})) + ({w}))))) * 1000000 + 0.5) AS BIGINT)"
@@ -3580,7 +3418,8 @@ def _xgb_step_sql(u: str, w: str) -> str:
 
 
 def _xgb_update_sql(u: str, w: str) -> str:
-    """SQL twin of _xgb_update."""
+    """_xgb_step_sql with saturated margins (u = 0 or 1e6) kept as they
+    are."""
     return (
         f"CASE WHEN {u} = 0 OR {u} = 1000000 THEN {u} "
         f"ELSE {_xgb_step_sql(u, w)} END"
@@ -3673,14 +3512,7 @@ def _xgb_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _xgb_gh(base: DataFrame, ucol: str = "u") -> DataFrame:
     """(label, feats, u*) -> (label, feats, gu, hu): the exact integer
     gradient/hessian encodings off the 6-dp margin integer."""
-    return base.select(
-        "label",
-        "disc",
-        "price",
-        "qty",
-        (F.col(ucol) - F.col("label") * 1000000).alias("gu"),
-        (F.col(ucol) * (F.lit(1000000) - F.col(ucol))).alias("hu"),
-    )
+    return base.selectExpr("label", "disc", "price", "qty", *_xgb_gh_sql(ucol))
 
 
 def _xgb_fold(base: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -3711,54 +3543,6 @@ def _xgb_fold(base: DataFrame) -> tuple[DataFrame, DataFrame]:
     return c, tot
 
 
-def _newton_terms(
-    cg: str = "cum_g", ch: str = "cum_h", gt: str = "gt", ht: str = "ht",
-    grad=None,
-) -> dict[str, F.Column]:
-    """The Newton split terms off exact integer sums — left cums
-    ``cg``/``ch`` and totals ``gt``/``ht`` (g in 1e-6, h in 1e-12
-    units): branch sums gl/hl/gr/hr as doubles, the argmin key
-    −(GL²/(HL+λ) + GR²/(HR+λ)), the structure gain
-    ½(GL²/(HL+λ) + GR²/(HR+λ) − G²/(H+λ)) and the shrunken leaf
-    weights −G/(H+λ)·η (λ = 1, η = 0.1). ``grad`` maps each integer
-    gradient sum (left, right, total) first — q_xgb_alpha's soft
-    threshold. Spark twin of _xgb_pick_sql's text."""
-    g = grad or (lambda x: x)
-    gl = g(F.col(cg)).cast("double") / 1000000
-    hl = F.col(ch).cast("double") / 1000000000000
-    gr = g(F.col(gt) - F.col(cg)).cast("double") / 1000000
-    hr = (F.col(ht) - F.col(ch)).cast("double") / 1000000000000
-    gtd = g(F.col(gt)).cast("double") / 1000000
-    htd = F.col(ht).cast("double") / 1000000000000
-    kl = (gl * gl) / (hl + F.lit(1.0))
-    kr = (gr * gr) / (hr + F.lit(1.0))
-    return {
-        "gl": gl,
-        "hl": hl,
-        "gr": gr,
-        "hr": hr,
-        "key": F.lit(0.0) - (kl + kr),
-        "gain": F.lit(0.5) * ((kl + kr) - (gtd * gtd) / (htd + F.lit(1.0))),
-        "w_left": F.lit(0.0) - F.lit(0.1) * gl / (hl + F.lit(1.0)),
-        "w_right": F.lit(0.0) - F.lit(0.1) * gr / (hr + F.lit(1.0)),
-    }
-
-
-def _newton_cols(
-    t: dict[str, F.Column], g_names: tuple[str, str] = ("g_left", "g_right")
-) -> list[F.Column]:
-    """The published 6-dp pick columns of Newton terms ``t``."""
-    return [
-        pround(t["gl"], 6).alias(g_names[0]),
-        pround(t["hl"], 6).alias("h_left"),
-        pround(t["gr"], 6).alias(g_names[1]),
-        pround(t["hr"], 6).alias("h_right"),
-        pround(t["gain"], 6).alias("gain"),
-        pround(t["w_left"], 6).alias("w_left"),
-        pround(t["w_right"], 6).alias("w_right"),
-    ]
-
-
 def _newton_take(
     cand: DataFrame,
     head: tuple = (),
@@ -3768,21 +3552,13 @@ def _newton_take(
 ) -> DataFrame:
     """The gain-key TakeOrdered(1) over candidate cum rows by the
     (key, feat, val) tie-break, projected to the pick schema: ``head``
-    columns, ``feat`` columns, threshold, branch counts and the Newton
-    terms (``grad``/``g_names`` as in _newton_terms/_newton_cols)."""
-    t = _newton_terms(grad=grad)
+    items, ``feat`` items, then _newton_pick_cols_sql's (``grad``/``g_names``
+    as there) — _xgb_pick_sql's text."""
     return (
-        cand.withColumn("key", t["key"])
+        cand.withColumn("key", F.expr(_newton_sql(grad=grad)["key"]))
         .orderBy("key", "feat", "val")
         .limit(1)
-        .select(
-            *head,
-            *feat,
-            F.col("val").alias("threshold"),
-            F.col("cum_n").cast("bigint").alias("n_left"),
-            (F.col("n") - F.col("cum_n")).cast("bigint").alias("n_right"),
-            *_newton_cols(t, g_names),
-        )
+        .selectExpr(*head, *feat, *_newton_pick_cols_sql(grad, g_names))
     )
 
 
@@ -3792,40 +3568,8 @@ def _xgb_newton_pick(base: DataFrame, rnd: int | None = None) -> DataFrame:
     a round column (q_xgb_round2's 2-row output); None emits
     q_xgb_round's 1-row shape."""
     c, _tot = _xgb_fold(base)
-    head = () if rnd is None else (F.lit(rnd).cast("int").alias("round"),)
+    head = () if rnd is None else (f"CAST({rnd} AS INT) AS round",)
     return _newton_take(c.filter(F.col("cum_n") < F.col("n")), head)
-
-
-def _xgb_step(ucol: str, w: F.Column) -> F.Column:
-    """One margin step on the 6-dp margin integer ``ucol``:
-    round(sigmoid(logit(u/1e6) + w)·1e6)."""
-    return F.floor(
-        (
-            F.lit(1.0)
-            / (
-                F.lit(1.0)
-                + F.exp(
-                    -(
-                        F.log(
-                            F.col(ucol).cast("double")
-                            / (F.lit(1000000) - F.col(ucol))
-                        )
-                        + w
-                    )
-                )
-            )
-        )
-        * 1000000
-        + F.lit(0.5)
-    ).cast("bigint")
-
-
-def _xgb_update(ucol: str, w: F.Column) -> F.Column:
-    """_xgb_step with saturated margins (u = 0 or 1e6) kept as they
-    are."""
-    return F.when(
-        (F.col(ucol) == 0) | (F.col(ucol) == 1000000), F.col(ucol)
-    ).otherwise(_xgb_step(ucol, w))
 
 
 @query(
@@ -3889,10 +3633,7 @@ def _xgb_round2_chain_sql() -> str:
     update f2; round 2 repeats the fold on u2 into the pick p2."""
     # the new 6-dp margin integer: sigmoid(logit(u/1e6) + picked leaf
     # weight), saturated rows (u = 0 or 1e6) stay saturated
-    leaf_w = (
-        "CASE WHEN (" + _mf_val_case("p1.feat") + ") <= p1.threshold "
-        "THEN p1.w_left ELSE p1.w_right END"
-    )
+    leaf_w = _mf_split_sql("p1.feat", "p1.threshold", "p1.w_left", "p1.w_right")
     return (
         _xgb_fold_sql("1")
         + ", p1 AS MATERIALIZED (" + _xgb_pick_sql(1, "c1") + "), "
@@ -3925,11 +3666,9 @@ def _xgb_round2_picks(base: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.col("w_left").alias("bwl"),
         F.col("w_right").alias("bwr"),
     )
-    leaf_w = F.when(_feat_val("bfeat") <= F.col("bt"), F.col("bwl")).otherwise(
-        F.col("bwr")
-    )
-    f2 = base.crossJoin(F.broadcast(pick)).select(
-        "label", "disc", "price", "qty", _xgb_update("u", leaf_w).alias("u2")
+    leaf_w = _mf_split_sql("bfeat", "bt", "bwl", "bwr", "")
+    f2 = base.crossJoin(F.broadcast(pick)).selectExpr(
+        "label", "disc", "price", "qty", _xgb_update_sql("u", leaf_w) + " AS u2"
     )
     return p1, _xgb_newton_pick(_xgb_gh(f2, ucol="u2"), rnd=2)
 
@@ -3984,19 +3723,41 @@ def q_xgb_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _xgb_ll_sql(u: str) -> str:
+    """A (cnt, pos) cell's Bernoulli log-likelihood at the 6-dp margin
+    integer ``u``, in 1e-9 fixed-point units."""
+    return (
+        "CAST(FLOOR((CAST(pos AS DOUBLE) "
+        f"* LN(CAST({u} AS DOUBLE) / 1000000) "
+        "+ CAST(cnt - pos AS DOUBLE) "
+        f"* LN(CAST(1000000 - {u} AS DOUBLE) / 1000000)) "
+        "* 1000000000 + 0.5) AS BIGINT)"
+    )
+
+
+# (margin column, LL sum) of the base margin and the two rounds
+_XGB_LL_COLS = (("u", "llb"), ("u2", "ll1"), ("u3", "ll2"))
+
+
+def _xgb_fit_cols_sql() -> list[str]:
+    """q_xgb_fit's published items off the exact LL sums."""
+    ll = {o: f"CAST({o} AS DOUBLE) / 1000000000" for _, o in _XGB_LL_COLS}
+    return ["n"] + [
+        sql_round(x, 6) + f" AS {name}"
+        for x, name in (
+            (ll["llb"], "ll_base"),
+            (ll["ll1"], "ll_round1"),
+            (ll["ll2"], "ll_round2"),
+            (f"{ll['ll1']} - {ll['llb']}", "delta_round1"),
+            (f"{ll['ll2']} - {ll['ll1']}", "delta_round2"),
+        )
+    ]
+
+
 def _xgb_fit_oracle() -> str:
     """DuckDB twin: the q_xgb_round2 pick chain (p1, p2 MATERIALIZED),
     then ONE fact fold to the bounded (u, b1, b2) cell table; u2/u3
     and the three LL terms are closed forms per cell."""
-
-    def ll(ucol):
-        return (
-            "CAST(FLOOR((CAST(pos AS DOUBLE) "
-            f"* LN(CAST({ucol} AS DOUBLE) / 1000000) "
-            "+ CAST(cnt - pos AS DOUBLE) "
-            f"* LN(CAST(1000000 - {ucol} AS DOUBLE) / 1000000)) "
-            "* 1000000000 + 0.5) AS BIGINT)"
-        )
 
     # per-cell closed forms off the (u, b1, b2) cell table
     u2c = _xgb_step_sql(
@@ -4011,10 +3772,9 @@ def _xgb_fit_oracle() -> str:
         # bits evaluated on the original features (trees split on
         # features); u must be LN-safe before anything downstream
         "v AS (SELECT CAST(f.u AS BIGINT) AS u, "
-        "CASE WHEN (" + _mf_val_case("p1.feat") + ") <= p1.threshold "
-        "THEN 1 ELSE 0 END AS b1, "
-        "CASE WHEN (" + _mf_val_case("p2.feat") + ") <= p2.threshold "
-        "THEN 1 ELSE 0 END AS b2, label FROM f, p1, p2 "
+        + _mf_split_sql("p1.feat", "p1.threshold", "1", "0") + " AS b1, "
+        + _mf_split_sql("p2.feat", "p2.threshold", "1", "0") + " AS b2, "
+        "label FROM f, p1, p2 "
         "WHERE f.u > 0 AND f.u < 1000000), "
         "cells AS (SELECT u, b1, b2, CAST(COUNT(*) AS BIGINT) AS cnt, "
         "CAST(SUM(label) AS BIGINT) AS pos FROM v GROUP BY u, b1, b2), "
@@ -4024,25 +3784,12 @@ def _xgb_fit_oracle() -> str:
         f"s3 AS (SELECT s2v.*, {u3c} AS u3 FROM s2v AS s2v, p2), "
         "s3v AS (SELECT * FROM s3 WHERE u3 > 0 AND u3 < 1000000), "
         "m AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
-        "CAST(SUM(" + ll("u") + ") AS HUGEINT) AS llb, "
-        "CAST(SUM(" + ll("u2") + ") AS HUGEINT) AS ll1, "
-        "CAST(SUM(" + ll("u3") + ") AS HUGEINT) AS ll2 FROM s3v) "
-        "SELECT n, "
-        + sql_round("CAST(llb AS DOUBLE) / 1000000000", 6) + " AS ll_base, "
-        + sql_round("CAST(ll1 AS DOUBLE) / 1000000000", 6) + " AS ll_round1, "
-        + sql_round("CAST(ll2 AS DOUBLE) / 1000000000", 6) + " AS ll_round2, "
-        + sql_round(
-            "CAST(ll1 AS DOUBLE) / 1000000000 "
-            "- CAST(llb AS DOUBLE) / 1000000000",
-            6,
+        + ", ".join(
+            f"CAST(SUM({_xgb_ll_sql(u)}) AS HUGEINT) AS {o}"
+            for u, o in _XGB_LL_COLS
         )
-        + " AS delta_round1, "
-        + sql_round(
-            "CAST(ll2 AS DOUBLE) / 1000000000 "
-            "- CAST(ll1 AS DOUBLE) / 1000000000",
-            6,
-        )
-        + " AS delta_round2 FROM m"
+        + " FROM s3v) "
+        f"SELECT {', '.join(_xgb_fit_cols_sql())} FROM m"
     )
 
 
@@ -4100,14 +3847,10 @@ def q_xgb_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.crossJoin(F.broadcast(pk1))
         .crossJoin(F.broadcast(pk2))
         .filter((F.col("u") > 0) & (F.col("u") < 1000000))
-        .select(
-            F.col("u").cast("bigint").alias("u"),
-            F.when(_feat_val("f1") <= F.col("t1"), 1)
-            .otherwise(0)
-            .alias("b1"),
-            F.when(_feat_val("f2c") <= F.col("t2"), 1)
-            .otherwise(0)
-            .alias("b2"),
+        .selectExpr(
+            "CAST(u AS BIGINT) AS u",
+            _mf_split_sql("f1", "t1", "1", "0", "") + " AS b1",
+            _mf_split_sql("f2c", "t2", "1", "0", "") + " AS b2",
             "label",
         )
     )
@@ -4116,53 +3859,28 @@ def q_xgb_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("label").cast("bigint").alias("pos"),
     )
 
-    def stepcol(src, b, wl, wr):
-        return _xgb_step(
-            src, F.when(F.col(b) == 1, F.col(wl)).otherwise(F.col(wr))
-        )
+    def step(src, b, wl, wr):
+        w = f"CASE WHEN {b} = 1 THEN {wl} ELSE {wr} END"
+        return _xgb_step_sql(src, w)
 
-    s2 = cells.crossJoin(F.broadcast(pk1)).select(
-        "u", "b1", "b2", "cnt", "pos",
-        stepcol("u", "b1", "wl1", "wr1").alias("u2"),
+    s2 = cells.crossJoin(F.broadcast(pk1)).selectExpr(
+        "u", "b1", "b2", "cnt", "pos", step("u", "b1", "wl1", "wr1") + " AS u2"
     )
     s2v = s2.filter((F.col("u2") > 0) & (F.col("u2") < 1000000))
-    s3 = s2v.crossJoin(F.broadcast(pk2)).select(
+    s3 = s2v.crossJoin(F.broadcast(pk2)).selectExpr(
         "u", "b1", "b2", "cnt", "pos", "u2",
-        stepcol("u2", "b2", "wl2", "wr2").alias("u3"),
+        step("u2", "b2", "wl2", "wr2") + " AS u3",
     )
     s3v = s3.filter((F.col("u3") > 0) & (F.col("u3") < 1000000))
-
-    def llcol(ucol):
-        return F.floor(
-            (
-                F.col("pos").cast("double")
-                * F.log(F.col(ucol).cast("double") / 1000000)
-                + (F.col("cnt") - F.col("pos")).cast("double")
-                * F.log(
-                    (F.lit(1000000) - F.col(ucol)).cast("double") / 1000000
-                )
-            )
-            * 1000000000
-            + F.lit(0.5)
-        ).cast("bigint")
-
-    m = s3v.agg(
-        F.sum("cnt").cast("bigint").alias("n"),
-        F.sum(llcol("u").cast(dec)).cast(dec).alias("llb"),
-        F.sum(llcol("u2").cast(dec)).cast(dec).alias("ll1"),
-        F.sum(llcol("u3").cast(dec)).cast(dec).alias("ll2"),
+    # the per-cell 1e-9 units sum in DECIMAL(38,0), the oracle's HUGEINT
+    m = s3v.selectExpr(
+        "CAST(SUM(cnt) AS BIGINT) AS n",
+        *[
+            f"CAST(SUM(CAST({_xgb_ll_sql(u)} AS {dec})) AS {dec}) AS {o}"
+            for u, o in _XGB_LL_COLS
+        ],
     )
-    llb = F.col("llb").cast("double") / 1000000000
-    ll1 = F.col("ll1").cast("double") / 1000000000
-    ll2 = F.col("ll2").cast("double") / 1000000000
-    return m.select(
-        "n",
-        pround(llb, 6).alias("ll_base"),
-        pround(ll1, 6).alias("ll_round1"),
-        pround(ll2, 6).alias("ll_round2"),
-        pround(ll1 - llb, 6).alias("delta_round1"),
-        pround(ll2 - ll1, 6).alias("delta_round2"),
-    )
+    return m.selectExpr(*_xgb_fit_cols_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -4189,10 +3907,9 @@ def _xgb_tree2_sql(
         _xgb_fold_sql(sfx, src, u)
         + f", pr{p} AS MATERIALIZED ("
         + _xgb_pick_sql(rnd, f"c{sfx}", node="root")
-        + f"), rb{p} AS (SELECT f.*, CASE WHEN ("
-        + _mf_val_case(f"pr{p}.feat")
-        + f") <= pr{p}.threshold THEN 0 ELSE 1 END AS br "
-        f"FROM {src or 'f'} AS f, pr{p}), "
+        + f"), rb{p} AS (SELECT f.*, "
+        + _mf_split_sql(f"pr{p}.feat", f"pr{p}.threshold", "0", "1")
+        + f" AS br FROM {src or 'f'} AS f, pr{p}), "
         + _xgb_fold_sql(f"{sfx}b", f"rb{p}", u, key="br")
         + f", lp{p} AS MATERIALIZED ("
         + _xgb_pick_sql(rnd, f"c{sfx}b", node="left", where="br = 0")
@@ -4274,10 +3991,7 @@ def _xgb_route(base: DataFrame, rinfo: DataFrame) -> DataFrame:
     """Rows with their branch br (0 = left) under the broadcast 1-row
     root split ``rinfo`` (rfeat, rt)."""
     return base.crossJoin(F.broadcast(rinfo)).withColumn(
-        "br",
-        F.when(_feat_val("rfeat") <= F.col("rt"), F.lit(0)).otherwise(
-            F.lit(1)
-        ),
+        "br", F.expr(_mf_split_sql("rfeat", "rt", "0", "1", ""))
     )
 
 
@@ -4286,14 +4000,8 @@ def _xgb_branch_rows(
 ) -> DataFrame:
     """(label, feats, br, gu, hu): _xgb_route'd rows with the exact
     integer g/h off the 6-dp margin integer ``ucol``."""
-    return _xgb_route(base, rinfo).select(
-        "label",
-        "disc",
-        "price",
-        "qty",
-        "br",
-        (F.col(ucol) - F.col("label") * 1000000).alias("gu"),
-        (F.col(ucol) * (F.lit(1000000) - F.col(ucol))).alias("hu"),
+    return _xgb_route(base, rinfo).selectExpr(
+        "label", "disc", "price", "qty", "br", *_xgb_gh_sql(ucol)
     )
 
 
@@ -4339,7 +4047,7 @@ def _xgb_branch_picks(g2: DataFrame, bt: DataFrame) -> DataFrame:
         .agg(
             F.min(
                 F.struct(
-                    _newton_terms()["key"].alias("key"),
+                    F.expr(_newton_sql()["key"]).alias("key"),
                     F.col("feat"),
                     F.col("val"),
                     F.col("cum_n").alias("cn"),
@@ -4357,17 +4065,20 @@ def _xgb_branch_picks(g2: DataFrame, bt: DataFrame) -> DataFrame:
 
 def _xgb_children(picks: DataFrame, head: tuple = ()) -> DataFrame:
     """The _xgb_branch_picks rows in the pick schema, node left/right."""
-    return picks.select(
+    return picks.selectExpr(
         *head,
-        F.when(F.col("br") == 0, F.lit("left"))
-        .otherwise(F.lit("right"))
-        .alias("node"),
+        "CASE WHEN br = 0 THEN 'left' ELSE 'right' END AS node",
         "feat",
-        F.col("val").alias("threshold"),
-        F.col("cn").cast("bigint").alias("n_left"),
-        (F.col("nb") - F.col("cn")).cast("bigint").alias("n_right"),
-        *_newton_cols(_newton_terms("cg", "ch", "gb", "hb")),
+        "val AS threshold",
+        "CAST(cn AS BIGINT) AS n_left",
+        "CAST(nb - cn AS BIGINT) AS n_right",
+        *_newton_cols_sql(_newton_sql("cg", "ch", "gb", "hb")),
     )
+
+
+# a branch's own Newton weight off its totals (gt, ht): the left weight
+# of a split that keeps the whole branch on its left
+_XGB_BRANCH_W_SQL = sql_round(_newton_sql("gt", "ht")["w_left"], 6)
 
 
 def _xgbt_tree(base: DataFrame, ucol: str, rnd: int):
@@ -4380,28 +4091,24 @@ def _xgbt_tree(base: DataFrame, ucol: str, rnd: int):
     behaviorally by tests/test_round16_ops.py. The bounded pick
     tables (<=2 rows) are localCheckpoint'd so the round-2 pass can
     chain off them without replaying round 1."""
-    head = (F.lit(rnd).cast("int").alias("round"),)
+    head = (f"CAST({rnd} AS INT) AS round",)
     root = _xgb_newton_pick(_xgb_gh(base, ucol=ucol)).localCheckpoint()
-    root_row = root.select(*head, F.lit("root").alias("node"), "*")
+    root_row = root.selectExpr(*head, "'root' AS node", "*")
     rinfo = root.select(
         F.col("feat").alias("rfeat"), F.col("threshold").alias("rt")
     )
     g2, bt = _xgb_branch_hist(_xgb_branch_rows(base, rinfo, ucol))
     bt = bt.localCheckpoint()
     picks = _xgb_branch_picks(g2, bt).localCheckpoint()
-    pt = _newton_terms("cg", "ch", "gb", "hb")
-    cp = picks.select(
+    pt = _newton_sql("cg", "ch", "gb", "hb")
+    cp = picks.selectExpr(
         "br",
-        F.col("feat").alias("cfeat"),
-        F.col("val").alias("ct"),
-        pround(pt["w_left"], 6).alias("cwl"),
-        pround(pt["w_right"], 6).alias("cwr"),
+        "feat AS cfeat",
+        "val AS ct",
+        sql_round(pt["w_left"], 6) + " AS cwl",
+        sql_round(pt["w_right"], 6) + " AS cwr",
     )
-    # the branch's own Newton weight: the left weight of a split that
-    # keeps the whole branch on its left
-    fbw = bt.select(
-        "br", pround(_newton_terms("gt", "ht")["w_left"], 6).alias("wb")
-    )
+    fbw = bt.selectExpr("br", _XGB_BRANCH_W_SQL + " AS wb")
     return root_row.unionAll(_xgb_children(picks, head)), rinfo, cp, fbw
 
 
@@ -4418,13 +4125,13 @@ def _xgbt_update(
         .join(F.broadcast(cp), "br", "left")
         .join(F.broadcast(fbw), "br", "left")
     )
-    w = F.when(F.col("cfeat").isNull(), F.col("wb")).otherwise(
-        F.when(_feat_val("cfeat") <= F.col("ct"), F.col("cwl")).otherwise(
-            F.col("cwr")
-        )
+    w = (
+        "CASE WHEN cfeat IS NULL THEN wb ELSE "
+        + _mf_split_sql("cfeat", "ct", "cwl", "cwr", "")
+        + " END"
     )
-    return fx.select(
-        "label", "disc", "price", "qty", _xgb_update(ucol, w).alias("u2")
+    return fx.selectExpr(
+        "label", "disc", "price", "qty", _xgb_update_sql(ucol, w) + " AS u2"
     )
 
 
@@ -4443,16 +4150,10 @@ def _xgb_boosted_tree2_oracle() -> str:
         "cpa AS (SELECT 0 AS br, feat, threshold, w_left, w_right FROM lpa "
         "UNION ALL SELECT 1 AS br, feat, threshold, w_left, w_right "
         "FROM rpa), "
-        "fba AS (SELECT br, "
-        + sql_round(
-            "0.0 - 0.1 * (CAST(gt AS DOUBLE) / 1000000) "
-            "/ ((CAST(ht AS DOUBLE) / 1000000000000) + 1.0)",
-            6,
-        )
-        + " AS wb FROM t1b), "
-        "fwa AS (SELECT f.*, CASE WHEN cpa.br IS NULL THEN fba.wb "
-        "ELSE CASE WHEN (" + _mf_val_case("cpa.feat") + ") <= cpa.threshold "
-        "THEN cpa.w_left ELSE cpa.w_right END END AS w "
+        f"fba AS (SELECT br, {_XGB_BRANCH_W_SQL} AS wb FROM t1b), "
+        "fwa AS (SELECT f.*, CASE WHEN cpa.br IS NULL THEN fba.wb ELSE "
+        + _mf_split_sql("cpa.feat", "cpa.threshold", "cpa.w_left", "cpa.w_right")
+        + " END AS w "
         "FROM rba AS f LEFT JOIN cpa ON f.br = cpa.br "
         "LEFT JOIN fba ON f.br = fba.br), "
         "f2 AS (SELECT label, disc, price, qty, "
@@ -4721,20 +4422,21 @@ def q_xgb_monotone(spark: SparkSession, sf_dir: str) -> DataFrame:
 _XGB_ALPHA_UNITS = 20 * 1000000  # alpha = 20.0 in 1e-6 gradient units
 
 
+def _xgb_soft_sql(x: str) -> str:
+    """The L1 soft threshold T(x) of an exact integer gradient sum."""
+    A = _XGB_ALPHA_UNITS
+    return (
+        f"(CASE WHEN {x} > {A} THEN {x} - {A} "
+        f"WHEN {x} < -{A} THEN {x} + {A} ELSE 0 END)"
+    )
+
+
 def _xgb_alpha_oracle() -> str:
     """DuckDB twin: the q_xgb_round fold with both branch gradients
     soft-thresholded by the EXACT integer alpha before the gain key,
     the emitted weights, and the gain."""
-    A = _XGB_ALPHA_UNITS
-
-    def soft(x):
-        return (
-            f"(CASE WHEN {x} > {A} THEN {x} - {A} "
-            f"WHEN {x} < -{A} THEN {x} + {A} ELSE 0 END)"
-        )
-
     return _xgb_fold_sql("1") + " " + _xgb_pick_sql(
-        None, "c1", grad=soft, g_names=("tg_left", "tg_right")
+        None, "c1", grad=_xgb_soft_sql, g_names=("tg_left", "tg_right")
     )
 
 
@@ -4770,19 +4472,10 @@ def q_xgb_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     column math on the bounded cell table. α at 100 TB costs
     nothing — it is a CASE on already-exact histogram sums, exactly
     where distributed XGBoost applies it."""
-    A = _XGB_ALPHA_UNITS
     c, _tot = _xgb_fold(_xgb_gh(_xgb_base(spark, sf_dir)))
-
-    def soft(col):
-        return (
-            F.when(col > A, col - A)
-            .when(col < -A, col + A)
-            .otherwise(F.lit(0).cast("decimal(38,0)"))
-        )
-
     return _newton_take(
         c.filter(F.col("cum_n") < F.col("n")),
-        grad=soft,
+        grad=_xgb_soft_sql,
         g_names=("tg_left", "tg_right"),
     )
 
@@ -4890,7 +4583,5 @@ def q_xgb_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cum_n") < F.col("n"))
     )
     cnts = cand.agg(F.count("*").cast("bigint").alias("cand_bins"))
-    p = _newton_take(
-        cand, feat=("feat", F.col("bin").cast("bigint").alias("bin"))
-    )
+    p = _newton_take(cand, feat=("feat", "CAST(bin AS BIGINT) AS bin"))
     return p.crossJoin(F.broadcast(cnts))

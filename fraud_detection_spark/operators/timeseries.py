@@ -601,6 +601,57 @@ def _arm_summary(
     )
 
 
+def _lr_terms_sql(v: str = "vu") -> str:
+    """``terms`` CTE over the at-risk table ``r``: per duration with
+    events, the arm-1 events d1 and the unweighted hypergeometric
+    expectation de·n1/n and variance de·(n1/n)(1−n1/n)(n−de)/(n−1)
+    (named ``v``), each in 1e-9 fixed-point units."""
+    return (
+        "terms AS (SELECT de, d1, "
+        "CAST(FLOOR(de * (n1 * 1.0 / n) * 1000000000 + 0.5) AS BIGINT) AS eu, "
+        "CASE WHEN n > 1 THEN CAST(FLOOR("
+        "de * (n1 * 1.0 / n) * (1 - n1 * 1.0 / n) "
+        "* (n - de) * 1.0 / (n - 1) * 1000000000 + 0.5) AS BIGINT) "
+        f"ELSE 0 END AS {v} FROM r WHERE de > 0), "
+    )
+
+
+def _lr_fold_sql(v: str = "vu") -> str:
+    """``a`` CTE: the 1-row exact sums (o1, eu, ``v``) of ``terms``."""
+    return (
+        "a AS (SELECT CAST(SUM(d1) AS BIGINT) AS o1, "
+        f"CAST(SUM(eu) AS BIGINT) AS eu, CAST(SUM({v}) AS BIGINT) AS {v} "
+        "FROM terms) "
+    )
+
+
+def _lr_fold(r: DataFrame, v: str = "vu") -> DataFrame:
+    """Spark twin of _lr_terms_sql + _lr_fold_sql over a _risk2 table.
+    The share n1/n is DOUBLE here, where the oracle's bare ``1.0`` would
+    parse as a DECIMAL literal in Spark SQL, so the text is not shared."""
+    r = r.filter(F.col("de") > 0)
+    share = F.col("n1") * 1.0 / F.col("n")
+    eu = F.floor(F.col("de") * share * 1000000000 + F.lit(0.5)).cast("bigint")
+    vu = F.when(
+        F.col("n") > 1,
+        F.floor(
+            F.col("de")
+            * share
+            * (F.lit(1) - share)
+            * (F.col("n") - F.col("de"))
+            * 1.0
+            / (F.col("n") - 1)
+            * 1000000000
+            + F.lit(0.5)
+        ).cast("bigint"),
+    ).otherwise(F.lit(0))
+    return r.select("d1", eu.alias("eu"), vu.alias(v)).agg(
+        F.sum("d1").cast("bigint").alias("o1"),
+        F.sum("eu").cast("bigint").alias("eu"),
+        F.sum(v).cast("bigint").alias(v),
+    )
+
+
 @query(
     "q_kaplan_meier",
     oracle=(
@@ -1705,17 +1756,10 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=(
         _km_dur_sql(arm=True)
         + _risk2_sql()
-        + "terms AS (SELECT de, d1, "
-        "CAST(FLOOR(de * (n1 * 1.0 / n) * 1000000000 + 0.5) AS BIGINT) AS eu, "
-        "CASE WHEN n > 1 THEN CAST(FLOOR("
-        "de * (n1 * 1.0 / n) * (1 - n1 * 1.0 / n) "
-        "* (n - de) * 1.0 / (n - 1) * 1000000000 + 0.5) AS BIGINT) "
-        "ELSE 0 END AS vu FROM r WHERE de > 0), "
+        + _lr_terms_sql()
         + _arm_sum_sql()
-        + "a AS (SELECT CAST(SUM(d1) AS BIGINT) AS o1, "
-        "CAST(SUM(eu) AS BIGINT) AS eu, CAST(SUM(vu) AS BIGINT) AS vu "
-        "FROM terms) "
-        "SELECT n_control, n_treat, events_control, events_treat, "
+        + _lr_fold_sql()
+        + "SELECT n_control, n_treat, events_control, events_treat, "
         "o1 AS o_treat, "
         + sql_round("CAST(eu AS DOUBLE) / 1000000000", 6) + " AS e_treat, "
         + sql_round("CAST(vu AS DOUBLE) / 1000000000", 6) + " AS var_treat, "
@@ -1760,27 +1804,7 @@ def q_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over that table only, a 1-row aggregate. No fact-scale
     window, no collect."""
     u = _km_durations(load_table(spark, sf_dir, "events"), arm=True)
-    r = _risk2(u).filter(F.col("de") > 0)
-    share = F.col("n1") * 1.0 / F.col("n")
-    eu = F.floor(F.col("de") * share * 1000000000 + F.lit(0.5)).cast("bigint")
-    vu = F.when(
-        F.col("n") > 1,
-        F.floor(
-            F.col("de")
-            * share
-            * (F.lit(1) - share)
-            * (F.col("n") - F.col("de"))
-            * 1.0
-            / (F.col("n") - 1)
-            * 1000000000
-            + F.lit(0.5)
-        ).cast("bigint"),
-    ).otherwise(F.lit(0))
-    a = r.select("d1", eu.alias("eu"), vu.alias("vu")).agg(
-        F.sum("d1").cast("bigint").alias("o1"),
-        F.sum("eu").cast("bigint").alias("eu"),
-        F.sum("vu").cast("bigint").alias("vu"),
-    )
+    a = _lr_fold(_risk2(u))
     g = _arm_summary(u)
     e1 = F.col("eu").cast("double") / 1000000000
     v1 = F.col("vu").cast("double") / 1000000000
@@ -1935,17 +1959,10 @@ def q_gehan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dz AS (SELECT CASE WHEN pc * nu > tp THEN 1 ELSE 0 END AS arm, "
         "dur, ev FROM d, gl), "
         + _risk2_sql(src="dz")
-        + "terms AS (SELECT de, d1, "
-        "CAST(FLOOR(de * (n1 * 1.0 / n) * 1000000000 + 0.5) AS BIGINT) AS eu, "
-        "CASE WHEN n > 1 THEN CAST(FLOOR("
-        "de * (n1 * 1.0 / n) * (1 - n1 * 1.0 / n) "
-        "* (n - de) * 1.0 / (n - 1) * 1000000000 + 0.5) AS BIGINT) "
-        "ELSE 0 END AS iu FROM r WHERE de > 0), "
+        + _lr_terms_sql("iu")
         + _arm_sum_sql(("z0", "z1"), src="dz")
-        + "a AS (SELECT CAST(SUM(d1) AS BIGINT) AS o1, "
-        "CAST(SUM(eu) AS BIGINT) AS eu, CAST(SUM(iu) AS BIGINT) AS iu "
-        "FROM terms) "
-        "SELECT n_z0, n_z1, events_z0, events_z1, o1 AS o_z1, "
+        + _lr_fold_sql("iu")
+        + "SELECT n_z0, n_z1, events_z0, events_z1, o1 AS o_z1, "
         + sql_round("CAST(eu AS DOUBLE) / 1000000000", 6) + " AS e_z1, "
         + sql_round(
             "CAST(o1 AS DOUBLE) - CAST(eu AS DOUBLE) / 1000000000", 6
@@ -2001,27 +2018,7 @@ def q_cox_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dur",
         "ev",
     )
-    r = _risk2(u).filter(F.col("de") > 0)
-    share = F.col("n1") * 1.0 / F.col("n")
-    eu = F.floor(F.col("de") * share * 1000000000 + F.lit(0.5)).cast("bigint")
-    iu = F.when(
-        F.col("n") > 1,
-        F.floor(
-            F.col("de")
-            * share
-            * (F.lit(1) - share)
-            * (F.col("n") - F.col("de"))
-            * 1.0
-            / (F.col("n") - 1)
-            * 1000000000
-            + F.lit(0.5)
-        ).cast("bigint"),
-    ).otherwise(F.lit(0))
-    a = r.select("d1", eu.alias("eu"), iu.alias("iu")).agg(
-        F.sum("d1").cast("bigint").alias("o1"),
-        F.sum("eu").cast("bigint").alias("eu"),
-        F.sum("iu").cast("bigint").alias("iu"),
-    )
+    a = _lr_fold(_risk2(u), "iu")
     g = _arm_summary(u, ("z0", "z1"))
     e1 = F.col("eu").cast("double") / 1000000000
     i1 = F.col("iu").cast("double") / 1000000000
@@ -2655,20 +2652,13 @@ def q_fleming_harrington(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=(
         _km_dur_sql(arm=True, strat=True)
         + _risk2_sql(strat=True)
-        + "terms AS (SELECT de, d1, "
-        "CAST(FLOOR(de * (n1 * 1.0 / n) * 1000000000 + 0.5) AS BIGINT) AS eu, "
-        "CASE WHEN n > 1 THEN CAST(FLOOR("
-        "de * (n1 * 1.0 / n) * (1 - n1 * 1.0 / n) "
-        "* (n - de) * 1.0 / (n - 1) * 1000000000 + 0.5) AS BIGINT) "
-        "ELSE 0 END AS vu FROM r WHERE de > 0), "
-        "g AS (SELECT "
+        + _lr_terms_sql()
+        + "g AS (SELECT "
         "CAST(COUNT(DISTINCT stratum) AS BIGINT) AS n_strata, "
         "CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_control, "
         "CAST(SUM(arm) AS BIGINT) AS n_treat FROM d), "
-        "a AS (SELECT CAST(SUM(d1) AS BIGINT) AS o1, "
-        "CAST(SUM(eu) AS BIGINT) AS eu, CAST(SUM(vu) AS BIGINT) AS vu "
-        "FROM terms) "
-        "SELECT n_strata, n_control, n_treat, o1 AS o_treat, "
+        + _lr_fold_sql()
+        + "SELECT n_strata, n_control, n_treat, o1 AS o_treat, "
         + sql_round("CAST(eu AS DOUBLE) / 1000000000", 6) + " AS e_treat, "
         + sql_round("CAST(vu AS DOUBLE) / 1000000000", 6) + " AS var_treat, "
         "CASE WHEN vu = 0 THEN NULL ELSE "
@@ -2707,27 +2697,7 @@ def q_logrank_strat(spark: SparkSession, sf_dir: str) -> DataFrame:
     that table only, a 1-row aggregate. No fact-scale window, no
     collect."""
     u = _km_durations(load_table(spark, sf_dir, "events"), arm=True, strat=True)
-    r = _risk2(u, strat=True).filter(F.col("de") > 0)
-    share = F.col("n1") * 1.0 / F.col("n")
-    eu = F.floor(F.col("de") * share * 1000000000 + F.lit(0.5)).cast("bigint")
-    vu = F.when(
-        F.col("n") > 1,
-        F.floor(
-            F.col("de")
-            * share
-            * (F.lit(1) - share)
-            * (F.col("n") - F.col("de"))
-            * 1.0
-            / (F.col("n") - 1)
-            * 1000000000
-            + F.lit(0.5)
-        ).cast("bigint"),
-    ).otherwise(F.lit(0))
-    a = r.select("d1", eu.alias("eu"), vu.alias("vu")).agg(
-        F.sum("d1").cast("bigint").alias("o1"),
-        F.sum("eu").cast("bigint").alias("eu"),
-        F.sum("vu").cast("bigint").alias("vu"),
-    )
+    a = _lr_fold(_risk2(u, strat=True))
     g = u.agg(
         F.countDistinct("stratum").cast("bigint").alias("n_strata"),
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))

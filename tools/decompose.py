@@ -37,17 +37,14 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    from bench import HEADLINE
+    from bench import HEADLINE, warmup
     from fraud_detection_spark.registry import load_all
     from fraud_detection_spark.session import get_spark
 
     names = sys.argv[1:] or HEADLINE
     registry = load_all()
     spark = get_spark("fds-decompose")
-    spark.range(1000).summary().collect()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda batches: batches, schema="id bigint"
-    ).write.format("noop").mode("overwrite").save()
+    warmup(spark)
 
     count_py4j = os.environ.get("PY4J_COUNT") == "1"
     counter = {"n": 0}

@@ -39,16 +39,13 @@ WARM = int(os.environ.get("WARM", "3"))
 
 
 def main() -> None:
+    from bench import warmup
     from fraud_detection_spark.registry import load_all
     from fraud_detection_spark.session import get_spark
 
     registry = load_all()
     spark = get_spark("fds-iso-bench")
-    # same warmup as bench.py: JVM + the python-worker fleet
-    spark.range(1000).summary().collect()
-    spark.range(64).repartition(32).mapInPandas(
-        lambda batches: batches, schema="id bigint"
-    ).write.format("noop").mode("overwrite").save()
+    warmup(spark)
 
     for name in sys.argv[1:]:
         q = registry[name]
