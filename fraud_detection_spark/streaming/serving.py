@@ -20,6 +20,12 @@ crash-safe file MERGE:
 - the target is hash-bucketed on ``transaction_id`` (``pmod(xxhash64)``)
   so a batch reads and rewrites ONLY the buckets its keys fall in —
   cost is O(touched buckets), not O(table), per batch;
+- a warm batch runs three Spark jobs: one fills the batch's cache and
+  observes the touched buckets, one shuffles the batch rows with the
+  touched buckets' committed rows on the bucket id, and one writes.
+  A row_number over (bucket, key), batch rows first, keeps one row
+  per key in that shuffle's sort: the in-batch dedup and the merge
+  need no pass of their own;
 - each commit writes ONE parquet file per touched bucket: the merged
   rows are shuffled on the bucket id before the write, so every
   bucket's rows sit in one write task. Write parallelism is one task
@@ -46,7 +52,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -103,8 +109,6 @@ def observed_scores(df: DataFrame):
     api/app.py:66-68): df.observe attaches named aggregates evaluated
     with the job — read them from the returned Observation without a
     second pass over the data."""
-    from pyspark.sql import Observation
-
     obs = Observation("serving_metrics")
     out = score_requests(df).observe(
         obs,
@@ -190,66 +194,76 @@ def upsert_batch(
     semantics, api/worker.py:90-99). Replayed batches converge.
 
     Only the hash buckets containing incoming keys are read and
-    rewritten (one Spark job stages all of them, hive-partitioned by
-    bucket, one file per bucket); untouched buckets' files are not
-    opened, moved, or rewritten. Per-bucket commit = rename staged
-    version into place, then atomic pointer flip — crash-safe at every
-    step."""
+    rewritten; untouched buckets' files are not opened, moved, or
+    rewritten. A warm batch runs three Spark jobs:
+
+    1. one fill job: a noop write of the bucket-keyed batch fills its
+       cache and observes the set of touched buckets on the way;
+    2. one shuffle: the batch rows and the committed rows of the touched
+       buckets, unioned, are hash-partitioned on the bucket id; a
+       row_number over (bucket, transaction_id), batch rows first,
+       keeps one row per key. The in-batch dedup, the batch-beats-
+       committed merge and the one-file-per-bucket layout share it (the
+       bucket partitioning satisfies the window's distribution, and the
+       window's sort the partitioned writer's);
+    3. one write job stages every touched bucket as a hive partition,
+       one file per bucket.
+
+    Per-bucket commit = rename staged version into place, then atomic
+    pointer flip — crash-safe at every step.
+
+    The batch is persisted and unpersisted, for two reasons. Uncached,
+    the fill and the merge would each re-scan the micro-batch's source
+    files (the stream's input count then doubles). A
+    ``localCheckpoint`` would scan once too, but ``unpersist`` does not
+    free its blocks: a long-running stream would hold one batch per
+    micro-batch until a JVM garbage collection."""
     spark = batch_df.sparkSession
     bucket_of = F.pmod(F.xxhash64("transaction_id"), F.lit(num_buckets))
-    # persist: the batch feeds the touched-bucket listing, the anti-join
-    # and the staged write — uncached, each would re-scan the
-    # micro-batch's source files (measured 3x input amplification in
-    # the sf0.1 serving exercise, tests/test_streaming_scale.py)
-    incoming = (
-        batch_df.dropDuplicates(["transaction_id"])
-        .withColumn("pbucket", bucket_of)
-        .persist()
-    )
-    touched = sorted(
-        r["pbucket"] for r in incoming.select("pbucket").distinct().collect()
-    )
-    if not touched:
-        incoming.unpersist()
-        return
-    root = _bucket_root(results_dir)
-    os.makedirs(root, exist_ok=True)
-    # sweep stage dirs from crashed prior runs (never referenced by a
-    # pointer, so always safe to drop)
-    for d in os.listdir(results_dir):
-        if d.startswith(".stage-"):
-            shutil.rmtree(os.path.join(results_dir, d), ignore_errors=True)
-
-    existing_paths = []
-    for b in touched:
-        bdir = os.path.join(root, str(b))
-        v = _current_version(bdir)
-        if v is not None:
-            existing_paths.append(os.path.join(bdir, v))
-    if existing_paths:
-        # the committed rows have the batch's own schema: passing it
-        # skips the footer schema-inference job
-        existing = (
-            spark.read.schema(batch_df.schema)
-            .parquet(*existing_paths)
-            .withColumn("pbucket", bucket_of)
-        )
-        keep = existing.join(
-            incoming.select("transaction_id"), "transaction_id", "left_anti"
-        )
-        merged = keep.unionByName(incoming, allowMissingColumns=True)
-    else:
-        merged = incoming
-
-    # one write stages every touched bucket as a hive partition; the
-    # shuffle puts each bucket in one task, so each gets one file
-    stage = os.path.join(results_dir, f".stage-{batch_id}")
+    keyed = batch_df.withColumn("pbucket", bucket_of).persist()
     try:
-        merged.repartition(num_buckets, "pbucket").write.mode(
-            "overwrite"
-        ).partitionBy("pbucket").parquet(stage)
+        obs = Observation()
+        fill = keyed.observe(obs, F.collect_set("pbucket").alias("touched"))
+        fill.write.format("noop").mode("overwrite").save()
+        touched = sorted(obs.get["touched"])
+        if not touched:
+            return
+        root = _bucket_root(results_dir)
+        os.makedirs(root, exist_ok=True)
+        # sweep stage dirs from crashed prior runs (never referenced by a
+        # pointer, so always safe to drop)
+        for d in os.listdir(results_dir):
+            if d.startswith(".stage-"):
+                shutil.rmtree(os.path.join(results_dir, d), ignore_errors=True)
+
+        existing_paths = []
+        for b in touched:
+            bdir = os.path.join(root, str(b))
+            v = _current_version(bdir)
+            if v is not None:
+                existing_paths.append(os.path.join(bdir, v))
+        rows = keyed.withColumn("_src", F.lit(0))
+        if existing_paths:
+            # the committed rows have the batch's own schema: passing it
+            # skips the footer schema-inference job
+            existing = (
+                spark.read.schema(batch_df.schema)
+                .parquet(*existing_paths)
+                .withColumn("pbucket", bucket_of)
+                .withColumn("_src", F.lit(1))
+            )
+            rows = rows.unionByName(existing)
+        first = Window.partitionBy("pbucket", "transaction_id").orderBy("_src")
+        merged = (
+            rows.repartition(num_buckets, "pbucket")
+            .withColumn("_rn", F.row_number().over(first))
+            .where(F.col("_rn") == 1)
+            .drop("_rn", "_src")
+        )
+        stage = os.path.join(results_dir, f".stage-{batch_id}")
+        merged.write.mode("overwrite").partitionBy("pbucket").parquet(stage)
     finally:
-        incoming.unpersist()
+        keyed.unpersist()
 
     for b in touched:
         src = os.path.join(stage, f"pbucket={b}")

@@ -10,7 +10,8 @@
   suite-eager pass before its next use).
 - Python tasks run under the engine's worker daemon (pyworker.py), so a
   task no longer re-reads the directory of every zip on its path.
-- get_spark works on a process whose session it did not build."""
+- get_spark works on a process whose session it did not build.
+- The default driver heap is at most half the machine's memory."""
 
 from __future__ import annotations
 
@@ -42,6 +43,24 @@ def test_bigint_sum_overflow_raises(spark):
     df = spark.createDataFrame([(2**63 - 1,), (1,)], "x bigint")
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
         df.agg(F.sum("x")).collect()
+
+
+def test_driver_memory_default_fits_the_machine(monkeypatch):
+    from fraud_detection_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    page = 4096
+
+    def sysconf_for(gib):
+        sizes = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": gib * 2**30 // page}
+        return lambda name: sizes[name]
+
+    monkeypatch.setattr(os, "sysconf", sysconf_for(15))
+    assert session.driver_memory() == "7680m"  # half of 15 GiB
+    monkeypatch.setattr(os, "sysconf", sysconf_for(64))
+    assert session.driver_memory() == "16384m"  # capped at 16g
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session.driver_memory() == "3g"
 
 
 def test_get_spark_sizes_codegen_cache(spark):

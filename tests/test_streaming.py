@@ -300,10 +300,10 @@ def test_upsert_merges_into_multi_file_versions(spark, tmp_path):
 
 
 # jobs one warm upsert into an existing table runs, measured at local[4]:
-# touched-bucket listing, anti-join and the shuffled staged write (8 also
-# before the one-file-per-bucket write: its shuffle stage took the place
-# of the schema-inference job it removed)
-UPSERT_JOB_CEILING = 8
+# the noop write that fills the batch's cache and observes the touched
+# buckets, the bucket shuffle's map stage (batch + committed rows) and
+# the staged write
+UPSERT_JOB_CEILING = 3
 
 
 def test_warm_upsert_job_budget(spark, tmp_path):
@@ -330,6 +330,46 @@ def test_warm_upsert_job_budget(spark, tmp_path):
     assert 0 < jobs <= UPSERT_JOB_CEILING, (
         f"one warm upsert ran {jobs} Spark jobs (ceiling {UPSERT_JOB_CEILING})"
     )
+
+
+def test_upsert_batch_row_wins_and_in_batch_duplicates(spark, tmp_path):
+    """A key already committed takes the batch's row, and a key the batch
+    holds twice (an identical redelivery) lands once."""
+    from fraud_detection_spark.streaming.serving import read_results, upsert_batch
+
+    res_dir = str(tmp_path / "results")
+    os.makedirs(res_dir)
+    upsert_batch(scored(spark, [("t1", "c0", 10.0, 1.0, 1.0)]), 0, res_dir)
+    redelivered = ("t1", "c1", 20.0, 1.0, 1.0)
+    batch = scored(spark, [redelivered, redelivered, ("t9", "c1", 5.0, 1.0, 1.0)])
+    expected = by_id(batch)
+    upsert_batch(batch, 1, res_dir)
+    out = read_results(spark, res_dir)
+    rows = by_id(out)
+    assert out.count() == len(rows) == 2
+    assert set(rows) == {"t1", "t9"}
+    assert rows["t1"]["f_value"] == 20.0
+    assert rows["t1"]["score"] == expected["t1"]["score"]
+    assert rows["t1"]["correlation_id"] == "c1"
+
+
+def test_upserts_leave_no_cached_blocks(spark, tmp_path):
+    """Each upsert frees the batch it cached: a long-running stream must
+    not hold one batch per micro-batch."""
+    from fraud_detection_spark.streaming.serving import upsert_batch
+
+    res_dir = str(tmp_path / "results")
+    os.makedirs(res_dir)
+    sc = spark.sparkContext
+    # RDD ids grow: anything cached with a larger id came from the upserts
+    # (other tests' cached data is not this test's business)
+    first_id = sc.emptyRDD()._jrdd.id()
+    for k in range(3):
+        rows = [(f"t{i}", "c", float(i), 1.0, 1.0) for i in range(20 * k, 20 * k + 40)]
+        upsert_batch(scored(spark, rows), k, res_dir)
+    infos = sc._jsc.sc().getRDDStorageInfo()
+    left = {i.id(): i.numCachedPartitions() for i in infos if i.id() > first_id}
+    assert sum(left.values()) == 0, left
 
 
 def test_scoring_logic_batch_stream_parity(spark):
