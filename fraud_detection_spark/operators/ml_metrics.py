@@ -35,12 +35,14 @@ test-scale form — q_roc_points is the binned form that survives 100 TB.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from fraud_detection_spark.functions import fp_units, prefix_sums, pround
-from fraud_detection_spark.registry import query, sql_round
+from fraud_detection_spark.functions import prefix_sums, pround
+from fraud_detection_spark.registry import query, sql_double_lit, sql_round
 from fraud_detection_spark.sources import load_table
 
 # Published model coefficients (literals on both engines).
@@ -843,6 +845,29 @@ def _split_cols_sql(nl: str, pl: str, nb: str, pb: str) -> list[str]:
     ]
 
 
+def _union_all(frames) -> DataFrame:
+    """The ``frames``' rows, unioned in order."""
+    return reduce(lambda a, b: a.unionAll(b), frames)
+
+
+# a fold's exact (cnt, pos) class counts per group
+_COUNT_ITEMS = ("CAST(COUNT(*) AS BIGINT) AS cnt", "CAST(SUM(label) AS BIGINT) AS pos")
+_COUNTS_SQL = ", ".join(_COUNT_ITEMS)
+
+
+# the oracle form of _tree_cum over the scored rows s: per-score counts
+# g, totals t (n, p) and prefix sums c (cum_n, cum_p)
+_TREE_CUM_SQL = (
+    f"WITH s AS ({SCORED_SQL}), "
+    f"g AS (SELECT score, {_COUNTS_SQL} FROM s GROUP BY score), "
+    "t AS MATERIALIZED (SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
+    "CAST(SUM(pos) AS BIGINT) AS p FROM g), "
+    "c AS MATERIALIZED (SELECT score, "
+    "CAST(SUM(cnt) OVER (ORDER BY score) AS BIGINT) AS cum_n, "
+    "CAST(SUM(pos) OVER (ORDER BY score) AS BIGINT) AS cum_p FROM g)"
+)
+
+
 # ---------------------------------------------------------------------------
 # Decision-stump training (round 9 batch 4): EXACT optimal Gini split
 # on the published model score — the one training operator with a full
@@ -854,14 +879,7 @@ def _split_cols_sql(nl: str, pl: str, nb: str, pb: str) -> list[str]:
 @query(
     "q_stump",
     oracle=(
-        f"WITH s AS ({SCORED_SQL}), "
-        "g AS (SELECT score, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(label) AS BIGINT) AS pos FROM s GROUP BY score), "
-        "t AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
-        "CAST(SUM(pos) AS BIGINT) AS p FROM g), "
-        "c AS (SELECT score, "
-        "CAST(SUM(cnt) OVER (ORDER BY score) AS BIGINT) AS cum_n, "
-        "CAST(SUM(pos) OVER (ORDER BY score) AS BIGINT) AS cum_p FROM g), "
+        f"{_TREE_CUM_SQL}, "
         "k AS (SELECT score, cum_n, cum_p, n, p, "
         + _gini_key_sql("0", "0", "n", "p")
         + " AS key FROM c, t WHERE cum_n < n), "
@@ -903,7 +921,7 @@ def q_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable (score → cnt, pos) fold bounded by the 6-dp
     score domain, NOT row count, and its prefix sums) and a top-1
     ordered take. One shuffle agg + bounded-table ops."""
-    c = _tree_cum(scored(spark, sf_dir)).filter(F.col("cum_n") < F.col("n"))
+    c = _tree_cum(scored(spark, sf_dir)).filter("cum_n < n")
     best = (
         c.withColumn("key", F.expr(_gini_key_sql("0", "0", "n", "p")))
         .orderBy("key", "score")
@@ -1038,6 +1056,17 @@ def _ada_round_sql(r: int, sfx: str = "") -> list[str]:
     ]
 
 
+def _stump_pol_sql(u: str, d: str) -> str:
+    """+1 when the stump voting +1 right of its threshold errs by
+    weight ``u`` <= its flip's ``d`` − ``u``, else −1."""
+    return f"CASE WHEN {u} <= {d} - ({u}) THEN 1 ELSE -1 END"
+
+
+def _stump_err_sql(u: str, d: str) -> str:
+    """The weighted error of the better polarity."""
+    return f"LEAST({u}, {d} - ({u}))"
+
+
 def _boost_terms() -> list[tuple[str, str]]:
     """q_boosted_stumps' (alpha_j, h_j) per round over the per-score
     rows p: stump j votes pol_j right of t_j and −pol_j at or left."""
@@ -1063,10 +1092,11 @@ def _boost_oracle() -> str:
     alpha = 0.5·LN(...), so the sign inherits the LN house 1-ulp
     risk — see the query docstring)."""
     R = _BOOST_ROUNDS
+    # the +1-right stump's weighted error u out of the round's total d
+    u, d = "cwp + (wnt - cwn)", "(wpt + wnt)"
     parts = [
         f"WITH s AS ({SCORED_SQL}), ",
-        "per AS MATERIALIZED (SELECT score, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(label) AS BIGINT) AS pos FROM s GROUP BY score), ",
+        f"per AS MATERIALIZED (SELECT score, {_COUNTS_SQL} FROM s GROUP BY score), ",
         "t AS MATERIALIZED (SELECT MAX(score) AS smax FROM per), ",
     ]
     for r in range(1, R + 1):
@@ -1101,9 +1131,7 @@ def _boost_oracle() -> str:
             f"tw{r} AS (SELECT CAST(SUM(wp) AS HUGEINT) AS wpt, "
             f"CAST(SUM(wn) AS HUGEINT) AS wnt FROM w{r}), "
             f"b{r} AS MATERIALIZED (SELECT score AS t{r}, "
-            "CASE WHEN cwp + (wnt - cwn) <= (wpt + wnt) - (cwp + (wnt - cwn)) "
-            f"THEN 1 ELSE -1 END AS pol{r}, "
-            "LEAST(cwp + (wnt - cwn), (wpt + wnt) - (cwp + (wnt - cwn))) "
+            f"{_stump_pol_sql(u, d)} AS pol{r}, {_stump_err_sql(u, d)} "
             f"AS e{r}, wpt + wnt AS d{r} "
             f"FROM c{r}, tw{r}, t WHERE score < smax "
             f"ORDER BY e{r}, t{r} LIMIT 1), "
@@ -1173,10 +1201,7 @@ def q_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the checkpointed stump chain); the registry eager contract
     applies."""
     s = scored(spark, sf_dir)
-    per = s.groupBy("score").agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.sum("label").cast("bigint").alias("pos"),
-    )
+    per = s.groupBy("score").agg(*map(F.expr, _COUNT_ITEMS))
 
     # raw prefix counts over score — computed ONCE
     cum0 = (
@@ -1184,18 +1209,13 @@ def q_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             per, F.floor(F.col("score") * 1000).cast("bigint"), "score",
             [("cnt", "cum_n"), ("pos", "cp")],
         )
-        .select(
-            "score", "cnt", "pos", "cp",
-            (F.col("cum_n") - F.col("cp")).alias("cn"),
-        )
+        .selectExpr("score", "cnt", "pos", "cp", "cum_n - cp AS cn")
         .localCheckpoint()
     )
-    tot = cum0.agg(
-        F.max("score").alias("smax"),
-        F.max("cp").alias("tp"),
-        F.max("cn").alias("tn"),
+    tot = cum0.selectExpr(
+        "MAX(score) AS smax", "MAX(cp) AS tp", "MAX(cn) AS tn"
     ).localCheckpoint()
-    cand0 = cum0.crossJoin(F.broadcast(tot)).filter(F.col("score") < F.col("smax"))
+    cand0 = cum0.crossJoin(F.broadcast(tot)).filter("score < smax")
     dec = "decimal(38,0)"
 
     def _pick_stump(cands, u, d, r: int):
@@ -1225,20 +1245,15 @@ def q_boosted_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             u.cast(dec).alias("_u"),
             d.cast(dec).alias("_d"),
         )
-        uu, dd = F.col("_u"), F.col("_d")
-        bad = uu.isNull() | dd.isNull()
-        e = F.when(bad, F.lit(None).cast(dec)).otherwise(
-            F.least(uu, dd - uu)
-        )
-        pol_pos = uu <= dd - uu
         picked = (
-            pre.select(
-                F.col("score").alias(f"t{r}"),
-                F.when(pol_pos, F.lit(1)).otherwise(F.lit(-1)).alias(f"pol{r}"),
-                e.alias(f"e{r}"),
-                dd.alias(f"d{r}"),
-                F.col("cp").alias(f"cp{r}"),
-                F.col("cn").alias(f"cn{r}"),
+            pre.selectExpr(
+                f"score AS t{r}",
+                f"{_stump_pol_sql('_u', '_d')} AS pol{r}",
+                "CASE WHEN _u IS NULL OR _d IS NULL THEN NULL "
+                f"ELSE {_stump_err_sql('_u', '_d')} END AS e{r}",
+                f"_d AS d{r}",
+                f"cp AS cp{r}",
+                f"cn AS cn{r}",
             )
             # explicit NULLS FIRST: the loud-failure invariant (an
             # overflowed NULL-e candidate must BE the picked row, so
@@ -1413,36 +1428,64 @@ def _ridge_exprs() -> dict[str, str]:
     }
 
 
-def _ridge_oracle() -> str:
+# per-row fixed-point units: 1e-4 regressor units, cent response units
+_RIDGE_UNITS = {
+    "qu": "CAST(FLOOR(l_quantity * 10000 + 0.5) AS BIGINT)",
+    "du": "CAST(FLOOR(l_discount * 10000 + 0.5) AS BIGINT)",
+    "yc": "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)",
+}
+# the moment sums: name -> the unit products summed
+_RIDGE_MOMENTS = {
+    "squ": ("qu",), "sdu": ("du",), "syc": ("yc",),
+    "squ2": ("qu", "qu"), "squdu": ("qu", "du"), "sdu2": ("du", "du"),
+    "squy": ("qu", "yc"), "sduy": ("du", "yc"),
+}
+# a row's residual against the broadcast solution (w0, w1, w2)
+_RIDGE_RESID_SQL = (
+    "(l_extendedprice / 100000.0 - (w0 + w1 * l_quantity + w2 * l_discount))"
+)
+# per-row squared residual in 1e-6 fixed point (resid*resid, NOT
+# pow(resid, 2): POWER is not guaranteed correctly rounded and could
+# drift 1 ulp between engines at a fixed-point floor boundary — the
+# ADVICE r9 #1 class)
+_RIDGE_SQ_SQL = (
+    f"CAST(FLOOR({_RIDGE_RESID_SQL} * {_RIDGE_RESID_SQL} * 1000000 + 0.5) "
+    "AS BIGINT)"
+)
+_RIDGE_OUT_ITEMS = [
+    "n",
+    sql_round("w0", 6) + " AS w0",
+    sql_round("w1", 6) + " AS w_qty",
+    sql_round("w2", 6) + " AS w_disc",
+    sql_round("SQRT(CAST(ssr AS DOUBLE) / 1000000 / n)", 6) + " AS rmse",
+]
+
+
+def _ridge_sums_sql(wide: str) -> list[str]:
+    """The fact fold's items: n and the exact moment sums, accumulated
+    in the integer type ``wide``."""
+    u, items = _RIDGE_UNITS, ["CAST(COUNT(*) AS BIGINT) AS n"]
+    for name, (x, *ys) in _RIDGE_MOMENTS.items():
+        prod = " * ".join([f"CAST({u[x]} AS {wide})", *(u[y] for y in ys)])
+        items.append(f"CAST(SUM({prod}) AS {wide}) AS {name}")
+    return items
+
+
+def _ridge_solve_sql() -> list[str]:
+    """The solve's items over the moment row: n and the weights."""
     e = _ridge_exprs()
-    u = "CAST(FLOOR({c} * 10000 + 0.5) AS BIGINT)"
-    qu, du = u.format(c="l_quantity"), u.format(c="l_discount")
-    yc = "CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)"
+    return ["n"] + [f"{e[w]} AS {w}" for w in ("w0", "w1", "w2")]
+
+
+def _ridge_oracle() -> str:
     return (
-        "WITH m AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n, "
-        f"CAST(SUM({qu}) AS HUGEINT) AS squ, "
-        f"CAST(SUM({du}) AS HUGEINT) AS sdu, "
-        f"CAST(SUM({yc}) AS HUGEINT) AS syc, "
-        f"CAST(SUM(CAST({qu} AS HUGEINT) * {qu}) AS HUGEINT) AS squ2, "
-        f"CAST(SUM(CAST({qu} AS HUGEINT) * {du}) AS HUGEINT) AS squdu, "
-        f"CAST(SUM(CAST({du} AS HUGEINT) * {du}) AS HUGEINT) AS sdu2, "
-        f"CAST(SUM(CAST({qu} AS HUGEINT) * {yc}) AS HUGEINT) AS squy, "
-        f"CAST(SUM(CAST({du} AS HUGEINT) * {yc}) AS HUGEINT) AS sduy "
+        f"WITH m AS MATERIALIZED (SELECT {', '.join(_ridge_sums_sql('HUGEINT'))} "
         "FROM lineitem), "
-        f"w AS MATERIALIZED (SELECT n, {e['w0']} AS w0, {e['w1']} AS w1, "
-        f"{e['w2']} AS w2 FROM m), "
-        "r AS (SELECT w.n, w.w0, w.w1, w.w2, "
-        "CAST(SUM(CAST(FLOOR("
-        "(l_extendedprice / 100000.0 - (w.w0 + w.w1 * l_quantity + w.w2 * l_discount)) "
-        "* (l_extendedprice / 100000.0 - (w.w0 + w.w1 * l_quantity + w.w2 * l_discount)) "
-        "* 1000000 + 0.5) AS BIGINT)) AS HUGEINT) AS ssr "
-        "FROM lineitem, w GROUP BY w.n, w.w0, w.w1, w.w2) "
-        "SELECT n, "
-        + sql_round("w0", 6) + " AS w0, "
-        + sql_round("w1", 6) + " AS w_qty, "
-        + sql_round("w2", 6) + " AS w_disc, "
-        + sql_round("SQRT(CAST(ssr AS DOUBLE) / 1000000 / n)", 6)
-        + " AS rmse FROM r"
+        f"w AS MATERIALIZED (SELECT {', '.join(_ridge_solve_sql())} FROM m), "
+        "r AS (SELECT n, w0, w1, w2, "
+        f"CAST(SUM({_RIDGE_SQ_SQL}) AS HUGEINT) AS ssr "
+        "FROM lineitem, w GROUP BY n, w0, w1, w2) "
+        f"SELECT {', '.join(_RIDGE_OUT_ITEMS)} FROM r"
     )
 
 
@@ -1476,54 +1519,14 @@ def q_ridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     row. The classic scale story for linear training: the data never
     moves, only the 3x3 moment matrix does."""
     li = load_table(spark, sf_dir, "lineitem")
-    qu = fp_units(F.col("l_quantity"), 4)
-    du = fp_units(F.col("l_discount"), 4)
-    yc = fp_units(F.col("l_extendedprice"), 2)
-    dec = "decimal(38,0)"
-    m = li.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(qu.cast(dec)).alias("squ"),
-        F.sum(du.cast(dec)).alias("sdu"),
-        F.sum(yc.cast(dec)).alias("syc"),
-        F.sum(qu.cast(dec) * qu).alias("squ2"),
-        F.sum(qu.cast(dec) * du).alias("squdu"),
-        F.sum(du.cast(dec) * du).alias("sdu2"),
-        F.sum(qu.cast(dec) * yc).alias("squy"),
-        F.sum(du.cast(dec) * yc).alias("sduy"),
-    )
-    e = _ridge_exprs()
-    w = m.selectExpr(
-        "n", f"{e['w0']} AS w0", f"{e['w1']} AS w1", f"{e['w2']} AS w2"
-    )
-    resid = (
-        F.col("l_extendedprice") / 100000.0
-        - (
-            F.col("w0")
-            + F.col("w1") * F.col("l_quantity")
-            + F.col("w2") * F.col("l_discount")
-        )
-    )
+    dec = "DECIMAL(38,0)"
+    w = li.selectExpr(*_ridge_sums_sql(dec)).selectExpr(*_ridge_solve_sql())
     r = (
         li.crossJoin(F.broadcast(w))
         .groupBy("n", "w0", "w1", "w2")
-        .agg(
-            # resid*resid, NOT pow(resid, 2): POWER is not guaranteed
-            # correctly rounded and could drift 1 ulp between engines
-            # at a fixed-point floor boundary (the ADVICE r9 #1 class)
-            F.sum(
-                F.floor(resid * resid * 1000000 + F.lit(0.5)).cast(dec)
-            ).alias("ssr")
-        )
+        .agg(F.expr(f"CAST(SUM(CAST({_RIDGE_SQ_SQL} AS {dec})) AS {dec})").alias("ssr"))
     )
-    return r.select(
-        "n",
-        pround(F.col("w0"), 6).alias("w0"),
-        pround(F.col("w1"), 6).alias("w_qty"),
-        pround(F.col("w2"), 6).alias("w_disc"),
-        pround(
-            F.sqrt(F.col("ssr").cast("double") / 1000000 / F.col("n")), 6
-        ).alias("rmse"),
-    )
+    return r.selectExpr(*_RIDGE_OUT_ITEMS)
 
 
 # ---------------------------------------------------------------------------
@@ -1546,10 +1549,7 @@ def _tree_cum(s: DataFrame) -> DataFrame:
     """Per distinct score of a (label, score) DataFrame: (cnt, pos),
     their prefix sums (cum_n, cum_p) and the totals (n, p). Lazy, for
     q_stump; tree_cum_table checkpoints it."""
-    per = s.groupBy("score").agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.sum("label").cast("bigint").alias("pos"),
-    )
+    per = s.groupBy("score").agg(*map(F.expr, _COUNT_ITEMS))
     tot = per.agg(
         F.sum("cnt").cast("bigint").alias("n"),
         F.sum("pos").cast("bigint").alias("p"),
@@ -1578,25 +1578,25 @@ def tree_cum_table(s: DataFrame) -> DataFrame:
 # from twin contracts (the q_cochran_armitage precedent).
 # ---------------------------------------------------------------------------
 
-# Challenger model coefficients (literals on both engines) — a weaker
-# scorer to compare against the published model on the SAME rows.
-B0_B, W_QTY_B, W_DISC_B, W_PRICE_B = -1.0, 0.05, 5.0, 0.3
-
-_SCORED2_SQL = (
-    "SELECT CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-    + sql_round(
+# (label, sa, sb) over lineitem: the published model's 6-dp score sa
+# and a weaker challenger's sb (coefficients -1.0, 0.05, 5.0, 0.3 —
+# literals on both engines) to compare against it on the SAME rows
+_SCORED2_ITEMS = [
+    "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label",
+    sql_round(
         "1.0 / (1.0 + EXP(-(-2.0 + 0.03 * l_quantity + 9.0 * l_discount "
         "+ 0.8 * (l_extendedprice / 100000.0))))",
         6,
     )
-    + " AS sa, "
-    + sql_round(
+    + " AS sa",
+    sql_round(
         "1.0 / (1.0 + EXP(-(-1.0 + 0.05 * l_quantity + 5.0 * l_discount "
         "+ 0.3 * (l_extendedprice / 100000.0))))",
         6,
     )
-    + " AS sb FROM lineitem"
-)
+    + " AS sb",
+]
+_SCORED2_SQL = f"SELECT {', '.join(_SCORED2_ITEMS)} FROM lineitem"
 
 
 def _delong_final_sql() -> dict[str, str]:
@@ -1653,15 +1653,45 @@ def _delong_final_sql() -> dict[str, str]:
     }
 
 
-def _delong_oracle() -> str:
+# a distinct score's doubled DeLong units off its (pos, neg) counts,
+# their prefix sums and the positives' total tp
+_DELONG_UNIT_ITEMS = ("2 * cum_neg - neg AS uval", "2 * (tp - cum_pos) + pos AS vval")
+
+
+def _delong_sums_sql(wide: str) -> list[str]:
+    """The exact 1-row aggregate's items over (label, ua, va, ub, vb)
+    rows: class counts np/nn, then per class (positives: u units,
+    negatives: v units) the sums, squares and cross product of its
+    two scorers' units, accumulated in the integer type ``wide``."""
+    items = [
+        "CAST(SUM(label) AS BIGINT) AS np",
+        "CAST(COUNT(*) - SUM(label) AS BIGINT) AS nn",
+    ]
+    for lab, x in ((1, "u"), (0, "v")):
+        for f in ("a", "aa", "b", "bb", "ab"):
+            prod = " * ".join([f"CAST({x}{f[0]} AS {wide})", *(x + c for c in f[1:])])
+            items.append(
+                f"SUM(CASE WHEN label = {lab} THEN {prod} ELSE 0 END) AS s{x}{f}"
+            )
+    return items
+
+
+def _delong_out_sql() -> list[str]:
+    """q_delong's published items off the exact aggregate."""
     fin = _delong_final_sql()
+    return ["np AS n_pos", "nn AS n_neg"] + [
+        sql_round(fin[c], 6) + f" AS {c}"
+        for c in ("auc_a", "auc_b", "delta", "se", "z")
+    ]
+
+
+def _delong_oracle() -> str:
     units = (
-        "SELECT s, 2 * cumneg - neg AS uval, "
-        "2 * (tp - cumpos) + pos AS vval FROM ("
+        f"SELECT s, {', '.join(_DELONG_UNIT_ITEMS)} FROM ("
         "SELECT {col} AS s, SUM(label) AS pos, "
         "COUNT(*) - SUM(label) AS neg, "
-        "SUM(SUM(label)) OVER (ORDER BY {col}) AS cumpos, "
-        "SUM(COUNT(*) - SUM(label)) OVER (ORDER BY {col}) AS cumneg "
+        "SUM(SUM(label)) OVER (ORDER BY {col}) AS cum_pos, "
+        "SUM(COUNT(*) - SUM(label)) OVER (ORDER BY {col}) AS cum_neg "
         "FROM r GROUP BY {col}), tot"
     )
     return (
@@ -1673,26 +1703,8 @@ def _delong_oracle() -> str:
         "j AS (SELECT r.label, ta.uval AS ua, ta.vval AS va, "
         "tb.uval AS ub, tb.vval AS vb "
         "FROM r JOIN ta ON r.sa = ta.s JOIN tb ON r.sb = tb.s), "
-        "agg AS MATERIALIZED (SELECT "
-        "CAST(SUM(label) AS BIGINT) AS np, "
-        "CAST(COUNT(*) - SUM(label) AS BIGINT) AS nn, "
-        "SUM(CASE WHEN label = 1 THEN ua ELSE 0 END) AS sua, "
-        "SUM(CASE WHEN label = 1 THEN ua * ua ELSE 0 END) AS suaa, "
-        "SUM(CASE WHEN label = 1 THEN ub ELSE 0 END) AS sub, "
-        "SUM(CASE WHEN label = 1 THEN ub * ub ELSE 0 END) AS subb, "
-        "SUM(CASE WHEN label = 1 THEN ua * ub ELSE 0 END) AS suab, "
-        "SUM(CASE WHEN label = 0 THEN va ELSE 0 END) AS sva, "
-        "SUM(CASE WHEN label = 0 THEN va * va ELSE 0 END) AS svaa, "
-        "SUM(CASE WHEN label = 0 THEN vb ELSE 0 END) AS svb, "
-        "SUM(CASE WHEN label = 0 THEN vb * vb ELSE 0 END) AS svbb, "
-        "SUM(CASE WHEN label = 0 THEN va * vb ELSE 0 END) AS svab "
-        "FROM j) "
-        "SELECT np AS n_pos, nn AS n_neg, "
-        + ", ".join(
-            sql_round(fin[c], 6) + f" AS {c}"
-            for c in ("auc_a", "auc_b", "delta", "se", "z")
-        )
-        + " FROM agg"
+        f"agg AS MATERIALIZED (SELECT {', '.join(_delong_sums_sql('HUGEINT'))} "
+        f"FROM j) SELECT {', '.join(_delong_out_sql())} FROM agg"
     )
 
 
@@ -1714,13 +1726,7 @@ def _rank_units(rows: DataFrame, scol: str) -> DataFrame:
             [("pos", "cum_pos"), ("neg", "cum_neg")],
         )
         .crossJoin(F.broadcast(tot))
-        .select(
-            F.col(scol).alias("s"),
-            (2 * F.col("cum_neg") - F.col("neg")).cast("bigint").alias("uval"),
-            (2 * (F.col("tp") - F.col("cum_pos")) + F.col("pos"))
-            .cast("bigint")
-            .alias("vval"),
-        )
+        .selectExpr(f"{scol} AS s", *_DELONG_UNIT_ITEMS)
     )
 
 
@@ -1760,24 +1766,7 @@ def q_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact rows against those <=1e6-row tables on the score key, ONE
     map-side-combinable 12-expression aggregate. No window over fact
     rows, no driver collection."""
-    li = load_table(spark, sf_dir, "lineitem")
-    logit_a = (
-        F.lit(B0)
-        + F.lit(W_QTY) * F.col("l_quantity")
-        + F.lit(W_DISC) * F.col("l_discount")
-        + F.lit(W_PRICE) * (F.col("l_extendedprice") / 100000.0)
-    )
-    logit_b = (
-        F.lit(B0_B)
-        + F.lit(W_QTY_B) * F.col("l_quantity")
-        + F.lit(W_DISC_B) * F.col("l_discount")
-        + F.lit(W_PRICE_B) * (F.col("l_extendedprice") / 100000.0)
-    )
-    r = li.select(
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("label"),
-        pround(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit_a)), 6).alias("sa"),
-        pround(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit_b)), 6).alias("sb"),
-    )
+    r = load_table(spark, sf_dir, "lineitem").selectExpr(*_SCORED2_ITEMS)
     ta = _rank_units(r, "sa").select(
         F.col("s").alias("sa"), F.col("uval").alias("ua"), F.col("vval").alias("va")
     )
@@ -1789,35 +1778,8 @@ def q_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fact rows are never shuffled at all: scan -> two broadcast
     # hash joins -> one map-side-combinable aggregate
     j = r.join(F.broadcast(ta), "sa").join(F.broadcast(tb), "sb")
-    dec = "decimal(38,0)"
-    pos = F.col("label") == 1
-
-    def csum(cond, expr, name):
-        return F.sum(F.when(cond, expr).otherwise(F.lit(0).cast(dec))).alias(name)
-
-    agg = j.agg(
-        F.sum("label").cast("bigint").alias("np"),
-        (F.count("*") - F.sum("label")).cast("bigint").alias("nn"),
-        csum(pos, F.col("ua").cast(dec), "sua"),
-        csum(pos, F.col("ua").cast(dec) * F.col("ua"), "suaa"),
-        csum(pos, F.col("ub").cast(dec), "sub"),
-        csum(pos, F.col("ub").cast(dec) * F.col("ub"), "subb"),
-        csum(pos, F.col("ua").cast(dec) * F.col("ub"), "suab"),
-        csum(~pos, F.col("va").cast(dec), "sva"),
-        csum(~pos, F.col("va").cast(dec) * F.col("va"), "svaa"),
-        csum(~pos, F.col("vb").cast(dec), "svb"),
-        csum(~pos, F.col("vb").cast(dec) * F.col("vb"), "svbb"),
-        csum(~pos, F.col("va").cast(dec) * F.col("vb"), "svab"),
-    )
-    fin = _delong_final_sql()
-    return agg.select(
-        F.col("np").alias("n_pos"),
-        F.col("nn").alias("n_neg"),
-        *[
-            pround(F.expr(fin[c]), 6).alias(c)
-            for c in ("auc_a", "auc_b", "delta", "se", "z")
-        ],
-    )
+    agg = j.selectExpr(*_delong_sums_sql("decimal(38,0)"))
+    return agg.selectExpr(*_delong_out_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -1833,6 +1795,44 @@ def q_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TREE5_DEPTH = 5
 
+# the root branch row off the totals (n, p): every score in (-1, 2)
+_TREE5_ROOT_ITEMS = (
+    "CAST(0 AS BIGINT) AS branch", "CAST(-1.0 AS DOUBLE) AS lo",
+    "CAST(2.0 AS DOUBLE) AS hi", "CAST(0 AS BIGINT) AS n0",
+    "CAST(0 AS BIGINT) AS p0", "n AS nb", "p AS pb",
+)
+# a level pick's (left, right) child branch rows: the branch bit path
+# grows by one bit, the pick's score bounds the interval and its cum
+# counts become the right child's offsets
+_TREE5_CHILD_ITEMS = (
+    [
+        "branch * 2 AS branch", "lo", "score AS hi", "n0", "p0",
+        "CAST(cum_n - n0 AS BIGINT) AS nb",
+        "CAST(cum_p - p0 AS BIGINT) AS pb",
+    ],
+    [
+        "branch * 2 + 1 AS branch", "score AS lo", "hi",
+        "cum_n AS n0", "cum_p AS p0",
+        "CAST(nb - (cum_n - n0) AS BIGINT) AS nb",
+        "CAST(pb - (cum_p - p0) AS BIGINT) AS pb",
+    ],
+)
+
+
+def _tree5_live_sql(c: str = "", b: str = "") -> str:
+    """A cum row (qualifier ``c``) is a split candidate of a branch row
+    (qualifier ``b``): its score lies inside the branch interval and
+    leaves at least one branch row on the right."""
+    return (
+        f"{c}score > {b}lo AND {c}score < {b}hi "
+        f"AND {c}cum_n - {b}n0 < {b}nb"
+    )
+
+
+def _tree5_vote_sql(q: str = "") -> str:
+    """A leaf's (qualifier ``q``) exact majority vote 2·pos > n."""
+    return f"CAST(CASE WHEN 2 * {q}pb > {q}nb THEN 1 ELSE 0 END AS INT)"
+
 
 def _tree5_chain_sql(
     depth: int = _TREE5_DEPTH, with_final_children: bool = False
@@ -1844,40 +1844,25 @@ def _tree5_chain_sql(
     Branch ids are bit paths (left=2b, right=2b+1); an empty branch
     emits no pick and therefore no children."""
     key = _gini_key_sql("b.n0", "b.p0", "b.nb", "b.pb")
+    left, right = (", ".join(items) for items in _TREE5_CHILD_ITEMS)
     parts = [
-        "WITH s AS (" + SCORED_SQL + "), "
-        "g AS (SELECT score, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(label) AS BIGINT) AS pos FROM s GROUP BY score), "
-        "t AS MATERIALIZED (SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
-        "CAST(SUM(pos) AS BIGINT) AS p FROM g), "
-        "c AS MATERIALIZED (SELECT score, "
-        "CAST(SUM(cnt) OVER (ORDER BY score) AS BIGINT) AS cum_n, "
-        "CAST(SUM(pos) OVER (ORDER BY score) AS BIGINT) AS cum_p FROM g), "
-        "b0 AS (SELECT CAST(0 AS BIGINT) AS branch, -1.0 AS lo, 2.0 AS hi, "
-        "CAST(0 AS BIGINT) AS n0, CAST(0 AS BIGINT) AS p0, "
-        "n AS nb, p AS pb FROM t)"
+        f"{_TREE_CUM_SQL}, "
+        f"b0 AS (SELECT {', '.join(_TREE5_ROOT_ITEMS)} FROM t)"
     ]
     for k in range(depth):
         parts.append(
             f", cand{k} AS (SELECT b.branch, b.lo, b.hi, b.n0, b.p0, "
             "b.nb, b.pb, c.score, c.cum_n, c.cum_p, "
             f"({key}) AS key FROM c, b{k} b "
-            "WHERE c.score > b.lo AND c.score < b.hi "
-            "AND c.cum_n - b.n0 < b.nb), "
+            f"WHERE {_tree5_live_sql('c.', 'b.')}), "
             f"pick{k} AS MATERIALIZED (SELECT * FROM ("
             f"SELECT *, ROW_NUMBER() OVER (PARTITION BY branch "
             f"ORDER BY key, score) AS rn FROM cand{k}) WHERE rn = 1)"
         )
         if k + 1 < depth or with_final_children:
             parts.append(
-                f", b{k + 1} AS ("
-                f"SELECT branch * 2 AS branch, lo, score AS hi, n0, p0, "
-                f"CAST(cum_n - n0 AS BIGINT) AS nb, "
-                f"CAST(cum_p - p0 AS BIGINT) AS pb FROM pick{k} "
-                f"UNION ALL "
-                f"SELECT branch * 2 + 1, score, hi, cum_n, cum_p, "
-                f"CAST(nb - (cum_n - n0) AS BIGINT), "
-                f"CAST(pb - (cum_p - p0) AS BIGINT) FROM pick{k})"
+                f", b{k + 1} AS (SELECT {left} FROM pick{k} "
+                f"UNION ALL SELECT {right} FROM pick{k})"
             )
     return "".join(parts)
 
@@ -1906,26 +1891,13 @@ def _tree5_ladder(
     materialized (they are set algebra over the already-checkpointed
     picks)."""
     c = _tree_cum_table(spark, sf_dir)
-    tot = c.select("n", "p").limit(1)
-    branches = tot.select(
-        F.lit(0).cast("bigint").alias("branch"),
-        F.lit(-1.0).alias("lo"),
-        F.lit(2.0).alias("hi"),
-        F.lit(0).cast("bigint").alias("n0"),
-        F.lit(0).cast("bigint").alias("p0"),
-        F.col("n").alias("nb"),
-        F.col("p").alias("pb"),
-    )
+    branches = c.select("n", "p").limit(1).selectExpr(*_TREE5_ROOT_ITEMS)
     levels = []
     leaf_parts = []
     for k in range(depth):
         cand = (
             c.crossJoin(F.broadcast(branches))
-            .filter(
-                (F.col("score") > F.col("lo"))
-                & (F.col("score") < F.col("hi"))
-                & (F.col("cum_n") - F.col("n0") < F.col("nb"))
-            )
+            .filter(_tree5_live_sql())
             .withColumn("key", F.expr(_gini_key_sql("n0", "p0", "nb", "pb")))
         )
         payload = F.struct(
@@ -1950,39 +1922,11 @@ def _tree5_ladder(
                 *_split_cols_sql("cum_n - n0", "cum_p - p0", "nb", "pb"),
             )
         )
-        left = pick.select(
-            (F.col("branch") * 2).alias("branch"),
-            "lo",
-            F.col("score").alias("hi"),
-            "n0",
-            "p0",
-            (F.col("cum_n") - F.col("n0")).cast("bigint").alias("nb"),
-            (F.col("cum_p") - F.col("p0")).cast("bigint").alias("pb"),
-        )
-        right = pick.select(
-            (F.col("branch") * 2 + 1).alias("branch"),
-            F.col("score").alias("lo"),
-            "hi",
-            F.col("cum_n").alias("n0"),
-            F.col("cum_p").alias("p0"),
-            (F.col("nb") - (F.col("cum_n") - F.col("n0")))
-            .cast("bigint")
-            .alias("nb"),
-            (F.col("pb") - (F.col("cum_p") - F.col("p0")))
-            .cast("bigint")
-            .alias("pb"),
-        )
-        branches = left.unionAll(right)
+        left, right = _TREE5_CHILD_ITEMS
+        branches = pick.selectExpr(*left).unionAll(pick.selectExpr(*right))
     leaf_parts.append(branches.select("lo", "hi", "nb", "pb"))
-    leaves = leaf_parts[0]
-    for lp in leaf_parts[1:]:
-        leaves = leaves.unionAll(lp)
-    leaves = leaves.select(
-        "lo",
-        "hi",
-        "nb",
-        "pb",
-        (F.lit(2) * F.col("pb") > F.col("nb")).cast("int").alias("pred"),
+    leaves = _union_all(leaf_parts).selectExpr(
+        "lo", "hi", "nb", "pb", _tree5_vote_sql() + " AS pred"
     )
     return levels, leaves
 
@@ -1991,11 +1935,7 @@ def _tree5_levels(
     spark: SparkSession, sf_dir: str, depth: int = _TREE5_DEPTH
 ) -> DataFrame:
     """The ladder's per-level pick frames, unioned level by level."""
-    levels, _leaves = _tree5_ladder(spark, sf_dir, depth)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionAll(lv)
-    return out
+    return _union_all(_tree5_ladder(spark, sf_dir, depth)[0])
 
 
 @query(
@@ -2137,8 +2077,7 @@ def _tree5_confusion_oracle() -> str:
         _tree5_chain_sql(with_final_children=True)
         + f", leaves AS MATERIALIZED ({anti} UNION ALL "
         f"SELECT lo, hi, nb, pb FROM b{_TREE5_DEPTH}) "
-        "SELECT CAST(CASE WHEN 2 * l.pb > l.nb THEN 1 ELSE 0 END AS INT) "
-        "AS prediction, s.label AS label, "
+        f"SELECT {_tree5_vote_sql('l.')} AS prediction, s.label AS label, "
         "CAST(COUNT(*) AS BIGINT) AS n "
         "FROM s JOIN leaves l ON s.score > l.lo AND s.score <= l.hi "
         "GROUP BY 1, 2"
@@ -2181,25 +2120,16 @@ def q_tree5_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed picks."""
     _levels, leaves = _tree5_ladder(spark, sf_dir)
     # bounded collect: <=2^5 * 2 - 1 rows, the compiled model
-    leaf_rows = sorted(leaves.collect(), key=lambda r: r["hi"])
-    pred_col = None
-    for r in leaf_rows:
-        cond = F.col("score") <= F.lit(float(r["hi"]))
-        branch = F.lit(int(r["pred"]))
-        pred_col = (
-            F.when(cond, branch)
-            if pred_col is None
-            else pred_col.when(cond, branch)
-        )
+    whens = "".join(
+        f"WHEN score <= {sql_double_lit(float(r['hi']))} THEN {int(r['pred'])} "
+        for r in sorted(leaves.collect(), key=lambda r: r["hi"])
+    )
     # no leaves only when no row is scored: the grouping then emits no
     # rows, matching the oracle's empty routing join
-    pred = F.lit(-1) if pred_col is None else pred_col.otherwise(F.lit(-1))
-    s = scored(spark, sf_dir)
+    pred = f"CAST(CASE {whens}ELSE -1 END AS INT)" if whens else "CAST(-1 AS INT)"
     return (
-        s.groupBy(
-            pred.cast("int").alias("prediction"),
-            F.col("label").alias("label"),
-        )
+        scored(spark, sf_dir)
+        .groupBy(F.expr(pred).alias("prediction"), "label")
         .agg(F.count("*").cast("bigint").alias("n"))
     )
 
@@ -2225,27 +2155,23 @@ _MF_VAL_SQL = {
     "qty": "CAST(l_quantity AS DOUBLE)",
 }
 
-# SQL twin of _mf_base's select list (callers add FROM lineitem)
-_MF_BASE_SQL = (
-    "SELECT CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-    + ", ".join(sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS)
-)
+# _mf_base's select items over lineitem; the oracles' base CTE f is
+# _MF_BASE_SQL FROM lineitem
+_MF_BASE_ITEMS = [
+    "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label",
+    *(sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS),
+]
+_MF_BASE_SQL = "SELECT " + ", ".join(_MF_BASE_ITEMS)
 
 
-def _mf_base(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem -> (label, disc, price, qty): the reference model's
-    three raw feature columns, 6-dp-rounded BEFORE any grouping so
-    distinct-value/tie structure is identical across engines (the
-    scored() discipline applied to inputs instead of the score)."""
+def _mf_base(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
+    """lineitem -> (label, disc, price, qty, ``extra`` items): the
+    reference model's three raw feature columns, 6-dp-rounded BEFORE
+    any grouping so distinct-value/tie structure is identical across
+    engines (the scored() discipline applied to inputs instead of the
+    score)."""
     li = load_table(spark, sf_dir, "lineitem")
-    return li.select(
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("label"),
-        pround(F.col("l_discount").cast("double"), 6).alias("disc"),
-        pround(F.col("l_extendedprice").cast("double") / 100000.0, 6).alias(
-            "price"
-        ),
-        pround(F.col("l_quantity").cast("double"), 6).alias("qty"),
-    )
+    return li.selectExpr(*_MF_BASE_ITEMS, *extra)
 
 
 def _mf_unpivot(base: DataFrame, extra: list[str]) -> DataFrame:
@@ -2274,10 +2200,7 @@ def _mf_fold(rows: DataFrame, keys: list[str]) -> DataFrame:
     return (
         _mf_unpivot(rows, keys)
         .groupBy(*keys, "feat", "val")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.sum("label").cast("bigint").alias("pos"),
-        )
+        .agg(*map(F.expr, _COUNT_ITEMS))
     )
 
 
@@ -2370,6 +2293,27 @@ def _mf_pivot_cols(k: int, b: int, last: bool) -> list[tuple[str, str]]:
     return cols
 
 
+# a level's root branch totals (br, bp, bn): round 1 counts the fact
+# rows' classes, later rounds read the model row's reweighted totals
+_MF_ROOT_ITEMS = (
+    [
+        "0 AS br",
+        "CAST(SUM(label) AS BIGINT) AS bp",
+        "CAST(COUNT(*) - SUM(label) AS BIGINT) AS bn",
+    ],
+    ["0 AS br", "wpt AS bp", "wnt AS bn"],
+)
+# a round-1 fold cell's (wp, wn): its class counts
+_MF_COUNT_ITEMS = ["pos AS wp", "cnt - pos AS wn"]
+# a cum row is a split candidate: it leaves weight on the right
+_MF_CAND_SQL = "cwp + cwn < bp + bn"
+# a level pick's (left, right) child branch totals
+_MF_CHILD_ITEMS = (
+    ["br * 2 AS br", "cwp AS bp", "cwn AS bn"],
+    ["br * 2 + 1 AS br", "bp - cwp AS bp", "bn - cwn AS bn"],
+)
+
+
 def _mf_grow(
     base: DataFrame,
     depth: int,
@@ -2394,19 +2338,13 @@ def _mf_grow(
     dec = "decimal(38,0)"
     if prev is None:
         keys, rows = [], base
-        branches = base.agg(
-            F.sum("label").cast("bigint").alias("bp"),
-            (F.count("*") - F.sum("label")).cast("bigint").alias("bn"),
-        )
+        branches = base.selectExpr(*_MF_ROOT_ITEMS[0])
     else:
         keys = ["lf"]
         rows = base.crossJoin(F.broadcast(prev)).selectExpr(
             *base.columns, _mf_leaf_sql(depth, "") + " AS lf"
         )
-        branches = prev.select(F.col("wpt").alias("bp"), F.col("wnt").alias("bn"))
-    branches = branches.select(F.lit(0).alias("br"), "bp", "bn")
-    cwp, cwn = F.col("cwp"), F.col("cwn")
-    bp, bn = F.col("bp"), F.col("bn")
+        branches = prev.selectExpr(*_MF_ROOT_ITEMS[1])
     picks, tree = [], None
     for k in range(depth):
         # level 0 has one branch: keeping its literal id out of the fold
@@ -2423,13 +2361,7 @@ def _mf_grow(
         if keep and k == depth - 1:
             g = g.localCheckpoint()
         if prev is None:
-            w = g.select(
-                *kb,
-                "feat",
-                "val",
-                F.col("pos").alias("wp"),
-                (F.col("cnt") - F.col("pos")).alias("wn"),
-            )
+            w = g.selectExpr(*kb, "feat", "val", *_MF_COUNT_ITEMS)
         else:
             mults = [f"{m}{i}" for m in ("mp", "mn") for i in range(2**depth)]
             wp, wn = _mf_weights_sql(depth, dec)
@@ -2451,7 +2383,7 @@ def _mf_grow(
         cj = c.join(F.broadcast(branches), "br") if k else c.crossJoin(
             F.broadcast(branches)
         )
-        cand = cj.filter(cwp + cwn < bp + bn).withColumn(
+        cand = cj.filter(_MF_CAND_SQL).withColumn(
             "key", F.expr(_wgini_sql("cwp", "cwn", "bp", "bn"))
         )
         pay = ("key", "feat", "val", "cwp", "cwn", "bp", "bn")
@@ -2476,15 +2408,8 @@ def _mf_grow(
                 ]
             )
             tree = part if tree is None else tree.crossJoin(F.broadcast(part))
-        branches = pick.select(
-            (F.col("br") * 2).alias("br"), cwp.alias("bp"), cwn.alias("bn")
-        ).unionAll(
-            pick.select(
-                (F.col("br") * 2 + 1).alias("br"),
-                (bp - cwp).alias("bp"),
-                (bn - cwn).alias("bn"),
-            )
-        )
+        left, right = _MF_CHILD_ITEMS
+        branches = pick.selectExpr(*left).unionAll(pick.selectExpr(*right))
     return picks, tree, g
 
 
@@ -2521,20 +2446,14 @@ def _mf_grow_sql(depth: int, r: int) -> str:
                 f"FROM g{s}, m{r - 1} GROUP BY br, feat, val"
             )
         else:
-            weigh = f"SELECT br, feat, val, pos AS wp, cnt - pos AS wn FROM g{s}"
+            weigh = f"SELECT br, feat, val, {', '.join(_MF_COUNT_ITEMS)} FROM g{s}"
         if k > 0:
             p = f"p{r}{k - 1}"
-            branches = (
-                f"SELECT br * 2 AS br, cwp AS bp, cwn AS bn FROM {p} "
-                f"UNION ALL SELECT br * 2 + 1, bp - cwp, bn - cwn FROM {p}"
-            )
-        elif weighted:
-            branches = f"SELECT 0 AS br, wpt AS bp, wnt AS bn FROM m{r - 1}"
+            left, right = (", ".join(items) for items in _MF_CHILD_ITEMS)
+            branches = f"SELECT {left} FROM {p} UNION ALL SELECT {right} FROM {p}"
         else:
-            branches = (
-                "SELECT 0 AS br, CAST(SUM(label) AS BIGINT) AS bp, "
-                "CAST(COUNT(*) - SUM(label) AS BIGINT) AS bn FROM f"
-            )
+            root = ", ".join(_MF_ROOT_ITEMS[weighted])
+            branches = f"SELECT {root} FROM {f'm{r - 1}' if weighted else 'f'}"
         cums = ", ".join(
             f"CAST(SUM({m}) OVER (PARTITION BY br, feat ORDER BY val) "
             f"AS {t}) AS c{m}"
@@ -2551,8 +2470,7 @@ def _mf_grow_sql(depth: int, r: int) -> str:
         tree = "".join(f", s{r}{j}" for j in range(k))
         out.append(
             f"x{s} AS (SELECT f.*, {_mf_leaf_sql(k)} AS br FROM {src} f{tree}), "
-            f"g{s} AS (SELECT {keys}, feat, val, CAST(COUNT(*) AS BIGINT) AS cnt, "
-            f"CAST(SUM(label) AS BIGINT) AS pos FROM ({unpivot}) "
+            f"g{s} AS (SELECT {keys}, feat, val, {_COUNTS_SQL} FROM ({unpivot}) "
             f"GROUP BY {keys}, feat, val), "
             f"w{s} AS ({weigh}), "
             f"c{s} AS (SELECT br, feat, val, {cums} FROM w{s}), "
@@ -2560,7 +2478,7 @@ def _mf_grow_sql(depth: int, r: int) -> str:
             f"p{s} AS MATERIALIZED (SELECT * FROM (SELECT *, {key} AS key, "
             f"ROW_NUMBER() OVER (PARTITION BY br ORDER BY {key}, feat, val) "
             f"AS rn FROM c{s} JOIN b{s} USING (br) "
-            f"WHERE cwp + cwn < bp + bn) WHERE rn = 1), "
+            f"WHERE {_MF_CAND_SQL}) WHERE rn = 1), "
             f"s{s} AS (SELECT * FROM {pivot})"
         )
     return ", ".join(out)
@@ -2621,16 +2539,16 @@ def q_tree_multifeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed tree trainer scales to 100 TB. Eager by construction
     (the checkpointed picks); the registry eager contract applies."""
     picks, _tree, _fold = _mf_grow(_mf_base(spark, sf_dir), 2)
-    lv = None
-    for k, pick in enumerate(picks):
-        part = pick.selectExpr(
+    lv = _union_all(
+        pick.selectExpr(
             f"{k} AS level",
             "br AS branch",
             "feat",
             "val AS threshold",
             *_split_cols_sql("cwp + cwn", "cwp", "(bp + bn)", "bp"),
         )
-        lv = part if lv is None else lv.unionAll(part)
+        for k, pick in enumerate(picks)
+    )
     return lv.select(F.expr(_TREE_NODE_SQL).alias("node"), "feat", *_TREE_NODE_COLS)
 
 
@@ -2642,6 +2560,12 @@ def q_tree_multifeat(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (train_model.py:69-80 boosts depth-5 trees; this is the
 # hash-checkable 2-round/depth-2 form of that loop).
 # ---------------------------------------------------------------------------
+
+
+# the positive/negative totals off the tree_cum_table columns
+_BT2_TOT = ("p AS tp", "n - p AS tn")
+# a prefix row is a split candidate: it leaves a row on the right
+_BT2_LIVE_SQL = "cp + cn < tp + tn"
 
 
 def _bt2_leaves(p: str, n: str, tp: str, tn: str) -> list[tuple[str, str]]:
@@ -2716,8 +2640,7 @@ def _btree2_oracle() -> str:
     )
     return (
         f"WITH s AS ({SCORED_SQL}), "
-        "per AS MATERIALIZED (SELECT score, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(label) AS BIGINT) AS pos FROM s GROUP BY score), "
+        f"per AS MATERIALIZED (SELECT score, {_COUNTS_SQL} FROM s GROUP BY score), "
         "t AS MATERIALIZED (SELECT CAST(SUM(pos) AS BIGINT) AS tp, "
         "CAST(SUM(cnt - pos) AS BIGINT) AS tn, MAX(score) AS smax FROM per), "
         "c AS MATERIALIZED (SELECT score, cnt, pos, "
@@ -2725,12 +2648,12 @@ def _btree2_oracle() -> str:
         "CAST(SUM(cnt - pos) OVER (ORDER BY score) AS BIGINT) AS cn "
         "FROM per), "
         "root1 AS MATERIALIZED (SELECT score AS t0, cp AS cp0, cn AS cn0 "
-        f"FROM c, t WHERE cp + cn < tp + tn ORDER BY {key_root1}, score "
+        f"FROM c, t WHERE {_BT2_LIVE_SQL} ORDER BY {key_root1}, score "
         "LIMIT 1), "
         "l1 AS MATERIALIZED (SELECT score AS tl, cp AS cpl, cn AS cnl "
         f"FROM c, root1 WHERE score < t0 ORDER BY {key_l1}, score LIMIT 1), "
         "r1 AS MATERIALIZED (SELECT score AS tr, cp AS cpr, cn AS cnr "
-        "FROM c, root1, t WHERE score > t0 AND cp + cn < tp + tn "
+        f"FROM c, root1, t WHERE score > t0 AND {_BT2_LIVE_SQL} "
         f"ORDER BY {key_r1}, score LIMIT 1), "
         f"m1 AS MATERIALIZED ({m1}), "
         "w2 AS MATERIALIZED (SELECT p.score, p.cnt, p.pos, "
@@ -2795,14 +2718,8 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
     and never re-windows. Eager by construction (the checkpointed
     model chain); the registry eager contract applies."""
     c = tree_cum_table(scored(spark, sf_dir))
-    cc = c.select(
-        "score",
-        "cnt",
-        "pos",
-        F.col("cum_p").alias("cp"),
-        (F.col("cum_n") - F.col("cum_p")).alias("cn"),
-        F.col("p").alias("tp"),
-        (F.col("n") - F.col("p")).alias("tn"),
+    cc = c.selectExpr(
+        "score", "cnt", "pos", "cum_p AS cp", "cum_n - cum_p AS cn", *_BT2_TOT
     )
 
     def _bt2_pick(cands, key, xp, xn, names):
@@ -2810,11 +2727,9 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
             cands.withColumn("key", F.expr(key))
             .orderBy("key", "score")
             .limit(1)
-            .select(
-                F.col("score").alias(names[0]),
-                F.col(xp).alias(names[1]),
-                F.col(xn).alias(names[2]),
-                *names[3:],
+            .selectExpr(
+                f"score AS {names[0]}", f"{xp} AS {names[1]}",
+                f"{xn} AS {names[2]}", *names[3:],
             )
             .localCheckpoint()
         )
@@ -2836,57 +2751,37 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
             side(p0, f"{tp} - {p0}"),
             side(n0, f"{tn} - {n0}"),
         )
-        payload = F.struct(
-            F.expr(key).alias("key"),
-            F.col("score"),
-            F.col(xp).alias("_xp"),
-            F.col(xn).alias("_xn"),
-        )
+        payload = f"struct({key} AS key, score, {xp} AS _xp, {xn} AS _xn)"
         pick = (
             cands.groupBy("br")
-            .agg(F.min(payload).alias("s"))
+            .agg(F.expr(f"MIN({payload})").alias("s"))
             .select("br", "s.*")
             .localCheckpoint()
         )
 
         def side_pick(b, nm):
-            return pick.filter(F.col("br") == b).select(
-                F.col("score").alias(nm[0]),
-                F.col("_xp").alias(nm[1]),
-                F.col("_xn").alias(nm[2]),
+            return pick.filter(f"br = {b}").selectExpr(
+                f"score AS {nm[0]}", f"_xp AS {nm[1]}", f"_xn AS {nm[2]}"
             )
 
         return side_pick(0, names[0]), side_pick(1, names[1])
 
     cp, cn = F.col("cp"), F.col("cn")
-    cands1 = cc.filter(cp + cn < F.col("tp") + F.col("tn"))
+    cands1 = cc.filter(_BT2_LIVE_SQL)
     root1 = _bt2_pick(
         cands1, _wgini_sql("cp", "cn", "tp", "tn"), "cp", "cn",
         ("t0", "cp0", "cn0"),
     )
     b1 = (
         cc.crossJoin(F.broadcast(root1))
-        .filter(
-            (F.col("score") < F.col("t0"))
-            | (
-                (F.col("score") > F.col("t0"))
-                & (cp + cn < F.col("tp") + F.col("tn"))
-            )
-        )
-        .withColumn(
-            "br",
-            F.when(F.col("score") < F.col("t0"), F.lit(0)).otherwise(
-                F.lit(1)
-            ),
-        )
+        .filter(f"score < t0 OR (score > t0 AND {_BT2_LIVE_SQL})")
+        .withColumn("br", F.expr("CASE WHEN score < t0 THEN 0 ELSE 1 END"))
     )
     l1, r1 = _bt2_branch_picks(
         b1, "cp", "cn", "cp0", "cn0", "tp", "tn",
         (("tl", "cpl", "cnl"), ("tr", "cpr", "cnr")),
     )
-    tot = c.select(
-        F.col("p").alias("tp"), (F.col("n") - F.col("p")).alias("tn")
-    ).limit(1)
+    tot = c.selectExpr(*_BT2_TOT).limit(1)
 
     # the round-1 model row carries the per-region multipliers and the
     # weighted TOTALS as scalars: leaving them as per-row when()/product
@@ -2934,7 +2829,7 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluate the 8 clamp/DECIMAL products per row (measured ~3x
     # the wall)
     c2 = (
-        cand2.filter(cp + cn < F.col("tp") + F.col("tn"))
+        cand2.filter(_BT2_LIVE_SQL)
         .crossJoin(F.broadcast(wtot))
         .select(
             "score",
@@ -2952,13 +2847,8 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = (
         c2.drop("wpt", "wnt")
         .crossJoin(F.broadcast(root2))
-        .filter(F.col("score") != F.col("u0"))
-        .withColumn(
-            "br",
-            F.when(F.col("score") < F.col("u0"), F.lit(0)).otherwise(
-                F.lit(1)
-            ),
-        )
+        .filter("score != u0")
+        .withColumn("br", F.expr("CASE WHEN score < u0 THEN 0 ELSE 1 END"))
     )
     l2, r2 = _bt2_branch_picks(
         b2, "cwp", "cwn", "wp0", "wn0", "wpt", "wnt",
@@ -2985,7 +2875,7 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     accrow = w.alias("p").selectExpr(*_ada_acc_sql(_bt2_terms(), "p.cnt", "p.pos"))
     wide = accrow.crossJoin(F.broadcast(m1s)).crossJoin(F.broadcast(m2))
-    row1, row2 = (
+    return _union_all(
         wide.selectExpr(
             f"CAST({r} AS INT) AS round",
             f"{u}0 AS t_root",
@@ -2996,7 +2886,6 @@ def q_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r, u in ((1, "t"), (2, "u"))
     )
-    return row1.unionAll(row2)
 
 
 # ---------------------------------------------------------------------------
@@ -3129,9 +3018,8 @@ def _mf_boost(
         pr = [f"pr{j}_{i}" for i in range(len(leaves))]
         cells = cells.crossJoin(F.broadcast(m.select(*pr, f"e{j}", f"d{j}")))
     acc = cells.selectExpr(*_ada_acc_sql(_mf_terms(len(leaves))))
-    out = None
-    for r, m in enumerate(models, 1):
-        row = acc.crossJoin(F.broadcast(m)).selectExpr(
+    return _union_all(
+        acc.crossJoin(F.broadcast(m)).selectExpr(
             f"CAST({r} AS INT) AS round",
             *[
                 c
@@ -3141,8 +3029,8 @@ def _mf_boost(
             *[f"CAST(pr{r}_{i} AS BIGINT) AS {p}" for i, p in enumerate(preds)],
             *_ada_round_sql(r),
         )
-        out = row if out is None else out.unionAll(row)
-    return out
+        for r, m in enumerate(models, 1)
+    )
 
 
 _BMF_SPEC = (1, (("feat", "threshold"),), ("pred_left", "pred_right"))
@@ -3260,6 +3148,11 @@ _XGB_SIG_SQL = (
     "+ 0.8 * (l_extendedprice / 100000.0))))"
 )
 
+# the 6-dp published-score integer u = round(score*1e6): the base margin
+_XGB_U_SQL = (
+    "CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") * 1000000 + 0.5) AS BIGINT) AS u"
+)
+
 
 def _xgb_fold_sql(
     sfx: str, src: str | None = None, u: str = "u", key: str = ""
@@ -3274,15 +3167,12 @@ def _xgb_fold_sql(
     the totals attached). ``src`` carries (label, disc, price, qty,
     ``key``, ``u``); without one the chain opens with the shared base
     CTE f: lineitem -> label, the 6-dp feature grid and the 6-dp score
-    integer u. The oracle form of _xgb_fold/_xgb_branch_hist."""
+    integer u (_xgb_base). The oracle form of
+    _xgb_fold/_xgb_hist."""
     head = ""
     if src is None:
         src = "f"
-        head = (
-            f"WITH f AS ({_MF_BASE_SQL}"
-            ", CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") "
-            "* 1000000 + 0.5) AS BIGINT) AS u FROM lineitem), "
-        )
+        head = f"WITH f AS ({_MF_BASE_SQL}, {_XGB_U_SQL} FROM lineitem), "
     k = f"{key}, " if key else ""
     unpivot = " UNION ALL ".join(
         f"SELECT {k}'{f}' AS feat, {f} AS val, gu, hu FROM r{sfx}"
@@ -3360,24 +3250,24 @@ def _newton_sql(
     }
 
 
-def _newton_cols_sql(
-    t: dict[str, str], g_names: tuple[str, str] = ("g_left", "g_right")
-) -> list[str]:
-    """The published 6-dp pick items of Newton terms ``t``."""
-    names = (g_names[0], "h_left", g_names[1], "h_right", "gain", "w_left", "w_right")
-    terms = ("gl", "hl", "gr", "hr", "gain", "w_left", "w_right")
-    return [sql_round(t[k], 6) + f" AS {n}" for k, n in zip(terms, names)]
-
-
 def _newton_pick_cols_sql(grad=None, g_names=("g_left", "g_right")) -> list[str]:
     """A Newton pick's select items over a cum row (val, cum_n, n and
-    the g/h sums): threshold, branch counts and the 6-dp terms."""
+    the g/h sums): threshold, branch counts and the 6-dp terms of
+    _newton_sql (``grad`` as there), the gradient sums published as
+    ``g_names``."""
+    t = _newton_sql(grad=grad)
+    names = (g_names[0], "h_left", g_names[1], "h_right", "gain", "w_left", "w_right")
+    terms = ("gl", "hl", "gr", "hr", "gain", "w_left", "w_right")
     return [
         "val AS threshold",
         "CAST(cum_n AS BIGINT) AS n_left",
         "CAST(n - cum_n AS BIGINT) AS n_right",
-        *_newton_cols_sql(_newton_sql(grad=grad), g_names),
+        *(sql_round(t[k], 6) + f" AS {n}" for k, n in zip(terms, names)),
     ]
+
+
+# a cum row is a split candidate: it leaves a row on the right
+_XGB_CAND_SQL = "cum_n < n"
 
 
 def _xgb_pick_sql(
@@ -3394,12 +3284,12 @@ def _xgb_pick_sql(
     over the candidates with cum_n < n (and ``where``), tie-broken by
     (key, feat, val). ``node``/``rnd`` label tree-node and
     boosting-round outputs; ``feat`` may add columns after feat;
-    ``grad``/``g_names`` as in _newton_sql/_newton_cols_sql. The
+    ``grad``/``g_names`` as in _newton_pick_cols_sql. The
     oracle form of _newton_take."""
     head = (f"'{node}' AS node, " if node is not None else "") + (
         f"CAST({rnd} AS INT) AS round, " if rnd is not None else ""
     )
-    cond = "cum_n < n" + (f" AND ({where})" if where else "")
+    cond = _XGB_CAND_SQL + (f" AND ({where})" if where else "")
     return (
         f"SELECT {head}{feat}, "
         + ", ".join(_newton_pick_cols_sql(grad, g_names))
@@ -3424,12 +3314,6 @@ def _xgb_update_sql(u: str, w: str) -> str:
         f"CASE WHEN {u} = 0 OR {u} = 1000000 THEN {u} "
         f"ELSE {_xgb_step_sql(u, w)} END"
     )
-
-
-def _xgb_round_oracle() -> str:
-    """DuckDB twin: same 6-dp feature/score grid, same exact integer
-    g/h sufficient statistics, same gain argmin text."""
-    return _xgb_fold_sql("1") + " " + _xgb_pick_sql(None, "c1")
 
 
 # Exact integer g/h sums WITHOUT Decimal aggregation (round 17,
@@ -3486,27 +3370,9 @@ def _sum_hu_dec(col: str) -> F.Column:
 def _xgb_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lineitem -> (label, disc, price, qty, u): the _mf_base feature
     grid plus the 6-dp published-score integer u = round(score*1e6) —
-    the shared input of the Newton boosting rounds."""
-    li = load_table(spark, sf_dir, "lineitem")
-    logit = (
-        F.lit(B0)
-        + F.lit(W_QTY) * F.col("l_quantity")
-        + F.lit(W_DISC) * F.col("l_discount")
-        + F.lit(W_PRICE) * (F.col("l_extendedprice") / 100000.0)
-    )
-    u_int = F.floor(
-        pround(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6) * 1000000
-        + F.lit(0.5)
-    ).cast("bigint")
-    return li.select(
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("label"),
-        pround(F.col("l_discount").cast("double"), 6).alias("disc"),
-        pround(F.col("l_extendedprice").cast("double") / 100000.0, 6).alias(
-            "price"
-        ),
-        pround(F.col("l_quantity").cast("double"), 6).alias("qty"),
-        u_int.alias("u"),
-    )
+    the shared input of the Newton boosting rounds (the oracles' base
+    CTE f)."""
+    return _mf_base(spark, sf_dir, _XGB_U_SQL)
 
 
 def _xgb_gh(base: DataFrame, ucol: str = "u") -> DataFrame:
@@ -3515,19 +3381,13 @@ def _xgb_gh(base: DataFrame, ucol: str = "u") -> DataFrame:
     return base.selectExpr("label", "disc", "price", "qty", *_xgb_gh_sql(ucol))
 
 
-def _xgb_fold(base: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(label, feats, gu, hu) -> (c, tot): the 3-scalar totals fold
-    (n, gt, ht) and the stack-explode (feat, val) g/h histogram's
-    _mf_cum prefix sums with the totals broadcast onto every row."""
-    dec = "decimal(38,0)"
-    tot = base.agg(
-        F.count("*").cast("bigint").alias("n"),
-        _sum_gu_dec("gu").alias("gt"),
-        _sum_hu_dec("hu").alias("ht"),
-    )
-    g1 = (
-        _mf_unpivot(base, ["gu", "hu"])
-        .groupBy("feat", "val")
+def _xgb_hist(rows: DataFrame, keys: tuple = ()) -> tuple[DataFrame, DataFrame]:
+    """(g, c) of (keys, label, feats, gu, hu) rows: the stack-explode
+    per-(keys, feat, val) exact g/h histogram and its _mf_cum prefix
+    sums (cum_n, cum_g, cum_h) per (keys, feat)."""
+    g = (
+        _mf_unpivot(rows, [*keys, "gu", "hu"])
+        .groupBy(*keys, "feat", "val")
         .agg(
             F.count("*").cast("bigint").alias("cnt"),
             _sum_gu_dec("gu").alias("g"),
@@ -3535,12 +3395,25 @@ def _xgb_fold(base: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
     )
     c = _mf_cum(
-        g1,
-        ["feat"],
-        out_cast=dec,
+        g,
+        [*keys, "feat"],
+        out_cast="decimal(38,0)",
         measures=(("cnt", "cum_n"), ("g", "cum_g"), ("h", "cum_h")),
-    ).crossJoin(F.broadcast(tot))
-    return c, tot
+    )
+    return g, c
+
+
+def _xgb_fold(base: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(label, feats, gu, hu) -> (c, tot): the 3-scalar totals fold
+    (n, gt, ht) and the _xgb_hist prefix sums with the totals
+    broadcast onto every row."""
+    tot = base.agg(
+        F.count("*").cast("bigint").alias("n"),
+        _sum_gu_dec("gu").alias("gt"),
+        _sum_hu_dec("hu").alias("ht"),
+    )
+    _g, c = _xgb_hist(base)
+    return c.crossJoin(F.broadcast(tot)), tot
 
 
 def _newton_take(
@@ -3562,19 +3435,200 @@ def _newton_take(
     )
 
 
-def _xgb_newton_pick(base: DataFrame, rnd: int | None = None) -> DataFrame:
-    """One exact Newton split pick over (label, feats, gu, hu): the
-    _xgb_fold histogram + the gain-key TakeOrdered(1). ``rnd`` prepends
-    a round column (q_xgb_round2's 2-row output); None emits
-    q_xgb_round's 1-row shape."""
-    c, _tot = _xgb_fold(base)
-    head = () if rnd is None else (f"CAST({rnd} AS INT) AS round",)
-    return _newton_take(c.filter(F.col("cum_n") < F.col("n")), head)
+# ---------------------------------------------------------------------------
+# The Newton grower: one level-wise histogram tree per boosting round
+# (the XGBoost paper's split finding, Chen & Guestrin KDD 2016 §3.3),
+# written once per engine at depth 1 or 2:
+# - q_xgb_round is its (depth 1, 1 round) run, q_xgb_round2 (1, 2);
+# - q_xgb_tree2 is (2, 1), q_xgb_boosted_tree2 (2, 2);
+# - q_xgb_fit reads its two picks from the (1, 2) run.
+# A depth-1 tree is the root pick. A depth-2 tree routes every row
+# through the root split and picks again inside each branch off the
+# per-(branch, feature) histogram, with exact branch totals as the
+# parent terms. Between rounds the tree's leaf text updates the 6-dp
+# margin integer, and the next round re-derives g/h off it.
+# ---------------------------------------------------------------------------
+
+
+def _xgb_branch_picks(c2: DataFrame) -> DataFrame:
+    """Both child picks in ONE per-branch struct-argmin job over the
+    per-(br, feat) cum rows with their branch totals (n, gt, ht):
+    (br, key, feat, val, cum_n, cum_g, cum_h, n, gt, ht)."""
+    key = F.expr(_newton_sql()["key"]).alias("key")
+    return (
+        c2.filter(_XGB_CAND_SQL)
+        .groupBy("br")
+        .agg(
+            F.min(
+                F.struct(key, "feat", "val", "cum_n", "cum_g", "cum_h", "n", "gt", "ht")
+            ).alias("s")
+        )
+        .select("br", "s.*")
+    )
+
+
+def _xgb_children(picks: DataFrame, head: tuple = ()) -> DataFrame:
+    """The _xgb_branch_picks rows in the pick schema, node left/right."""
+    return picks.selectExpr(
+        *head,
+        "CASE WHEN br = 0 THEN 'left' ELSE 'right' END AS node",
+        "feat",
+        *_newton_pick_cols_sql(),
+    )
+
+
+# a branch's own Newton weight off its totals (gt, ht): the left weight
+# of a split that keeps the whole branch on its left
+_XGB_BRANCH_W_SQL = sql_round(_newton_sql("gt", "ht")["w_left"], 6)
+
+# a fact row's branch under the root pick (feat, threshold): 0 = left
+_XGB_ROUTE_SQL = _mf_split_sql("feat", "threshold", "0", "1", "")
+
+# a depth-2 tree's published child row as its branch's leaf split
+_XGB_CHILD_LEAF_ITEMS = (
+    "CASE WHEN node = 'left' THEN 0 ELSE 1 END AS br",
+    "feat AS cfeat", "threshold AS ct", "w_left AS cwl", "w_right AS cwr",
+)
+
+# the leaf weight a fact row takes from a tree: at depth 1 the root
+# pick's (feat, threshold, w_left, w_right); at depth 2 its branch's
+# child pick (cfeat, ct, cwl, cwr), or the branch's own weight wb when
+# the branch has no split (no candidate: never on the shipped data)
+_XGB_LEAF_SQL = {
+    1: _mf_split_sql("feat", "threshold", "w_left", "w_right", ""),
+    2: "CASE WHEN cfeat IS NULL THEN wb ELSE "
+    + _mf_split_sql("cfeat", "ct", "cwl", "cwr", "")
+    + " END",
+}
+
+
+def _xgb_margin_items(u: str, depth: int, out: str) -> list[str]:
+    """A margin step's fact items: label, features and the next 6-dp
+    margin integer ``out`` off ``u`` plus the row's leaf weight in the
+    depth-``depth`` tree — round(sigmoid(logit(u/1e6) + w)·1e6),
+    saturated margins kept."""
+    step = _xgb_update_sql(u, _XGB_LEAF_SQL[depth])
+    return ["label", "disc", "price", "qty", f"{step} AS {out}"]
+
+
+def _xgb_boost(
+    base: DataFrame, depth: int, rounds: int, keep=None
+) -> list[DataFrame]:
+    """Grows one exact Newton tree of ``depth`` (1 or 2) per round over
+    the _xgb_base rows and returns each round's published rows: one
+    pick row per node, labeled with the round when there is more than
+    one, and at depth 2 with the node (root/left/right; a branch with
+    no splittable candidate emits no row). Each round re-derives the
+    exact g/h integers off the current 6-dp margin integer; between
+    rounds _xgb_margin_items steps the margin by the tree's leaf.
+    ``keep`` materializes a pick or branch-total table that a later
+    pass of the same query reads (the eager callers pass
+    localCheckpoint; the one-round depth-1 tree reads none). The
+    oracle form is _xgb_boost_sql."""
+    trees, u = [], "u"
+    for r in range(1, rounds + 1):
+        more = r < rounds
+        kept = keep if more else (lambda t: t)
+        lab = (f"CAST({r} AS INT) AS round",) if rounds > 1 else ()
+        c, _tot = _xgb_fold(_xgb_gh(base, u))
+        pick = _newton_take(c.filter(_XGB_CAND_SQL), lab if depth == 1 else ())
+        if depth == 1:
+            tree = kept(pick)
+        else:
+            root = keep(pick)
+            routed = base.crossJoin(
+                F.broadcast(root.select("feat", "threshold"))
+            ).withColumn("br", F.expr(_XGB_ROUTE_SQL))
+            g2, c2 = _xgb_hist(
+                routed.selectExpr(
+                    "label", "disc", "price", "qty", "br", *_xgb_gh_sql(u)
+                ),
+                ("br",),
+            )
+            # exact branch totals off the 'disc' slice (a closed form —
+            # never the rounded root-row doubles)
+            bt = kept(
+                g2.filter("feat = 'disc'")
+                .groupBy("br")
+                .agg(
+                    F.sum("cnt").cast("bigint").alias("n"),
+                    F.sum("g").cast("decimal(38,0)").alias("gt"),
+                    F.sum("h").cast("decimal(38,0)").alias("ht"),
+                )
+            )
+            children = _xgb_children(
+                kept(_xgb_branch_picks(c2.join(F.broadcast(bt), "br"))), lab
+            )
+            tree = root.selectExpr(*lab, "'root' AS node", "*").unionAll(children)
+        trees.append(tree)
+        if not more:
+            break
+        if depth == 1:
+            cols = ("feat", "threshold", "w_left", "w_right")
+            rows = base.crossJoin(F.broadcast(tree.select(*cols)))
+        else:
+            cp = children.selectExpr(*_XGB_CHILD_LEAF_ITEMS)
+            wb = bt.selectExpr("br", _XGB_BRANCH_W_SQL + " AS wb")
+            rows = routed.join(F.broadcast(cp), "br", "left").join(
+                F.broadcast(wb), "br", "left"
+            )
+        base = rows.selectExpr(*_xgb_margin_items(u, depth, f"u{r + 1}"))
+        u = f"u{r + 1}"
+    return trees
+
+
+def _xgb_boost_sql(depth: int, rounds: int, tail: str = "") -> str:
+    """DuckDB twin of _xgb_boost: round r's fold CTEs carry the suffix
+    r (depth 2 adds the per-(branch, feature) fold rb -> r{r}b..c{r}b,
+    branch totals off its 'disc' slice), its MATERIALIZED picks are
+    p{r} at depth 1 and pr, lp, rp at depth 2, tagged a, b, ... when
+    there is more than one round; the margin update writes f{r+1} with
+    margin u{r+1}
+    (depth 2: LEFT JOIN on the branch's child pick cp and fallback
+    weight fb). The query publishes every pick, or runs ``tail`` after
+    the chain."""
+    parts, pubs, src, u = [], [], None, "u"
+    for r in range(1, rounds + 1):
+        s, t = str(r), "" if rounds == 1 else chr(ord("a") + r - 1)
+        rnd = r if rounds > 1 else None
+        node = "root" if depth == 2 else None
+        root = f"p{r}" if depth == 1 else f"pr{t}"
+        parts += [
+            _xgb_fold_sql(s, src, u),
+            f"{root} AS MATERIALIZED ({_xgb_pick_sql(rnd, f'c{s}', node)})",
+        ]
+        pubs.append(root)
+        rows = f"{src or 'f'}, {root}"
+        if depth == 2:
+            parts += [
+                f"rb{t} AS (SELECT f.*, {_XGB_ROUTE_SQL} AS br "
+                f"FROM {src or 'f'} AS f, pr{t})",
+                _xgb_fold_sql(f"{s}b", f"rb{t}", u, key="br"),
+            ]
+            for b, side in enumerate(("left", "right")):
+                pick = _xgb_pick_sql(rnd, f"c{s}b", side, where=f"br = {b}")
+                parts.append(f"{side[0]}p{t} AS MATERIALIZED ({pick})")
+                pubs.append(f"{side[0]}p{t}")
+            rows = f"rb{t} LEFT JOIN cp{t} USING (br) LEFT JOIN fb{t} USING (br)"
+        if r == rounds:
+            break
+        if depth == 2:
+            parts += [
+                f"cp{t} AS (SELECT {', '.join(_XGB_CHILD_LEAF_ITEMS)} FROM "
+                f"(SELECT * FROM lp{t} UNION ALL SELECT * FROM rp{t}))",
+                f"fb{t} AS (SELECT br, {_XGB_BRANCH_W_SQL} AS wb FROM t{s}b)",
+            ]
+        items = ", ".join(_xgb_margin_items(u, depth, f"u{r + 1}"))
+        parts.append(f"f{r + 1} AS (SELECT {items} FROM {rows})")
+        src, u = f"f{r + 1}", f"u{r + 1}"
+    return ", ".join(parts) + (
+        tail or " SELECT * FROM " + " UNION ALL SELECT * FROM ".join(pubs)
+    )
 
 
 @query(
     "q_xgb_round",
-    oracle=_xgb_round_oracle(),
+    oracle=_xgb_boost_sql(1, 1),
     tags=("ml", "train", "boosting"),
 )
 def q_xgb_round(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3594,7 +3648,7 @@ def q_xgb_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaf weights are the Newton step w = -G/(H+lambda) scaled by the
     reference's learning_rate 0.1. One row out: winning (feat,
     threshold), exact branch counts, the G/H sums, gain, and both
-    shrunken leaf weights.
+    shrunken leaf weights — the grower's one-round depth-1 tree.
 
     Exactness: all sufficient statistics (per-(feat,val) counts and
     g/h sums, their prefix cums, and the totals) are EXACT integers —
@@ -3613,7 +3667,7 @@ def q_xgb_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs one such pass each with the margin updated by the compiled
     leaf CASE — the exact
     distributed-XGBoost histogram shape at 100 TB."""
-    return _xgb_newton_pick(_xgb_gh(_xgb_base(spark, sf_dir)))
+    return _xgb_boost(_xgb_base(spark, sf_dir), 1, 1)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -3627,50 +3681,11 @@ def q_xgb_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _xgb_round2_chain_sql() -> str:
-    """The 2-round pick chain shared by the q_xgb_round2/q_xgb_fit
-    oracles: the round-1 fold and MATERIALIZED pick p1 drive the margin
-    update f2; round 2 repeats the fold on u2 into the pick p2."""
-    # the new 6-dp margin integer: sigmoid(logit(u/1e6) + picked leaf
-    # weight), saturated rows (u = 0 or 1e6) stay saturated
-    leaf_w = _mf_split_sql("p1.feat", "p1.threshold", "p1.w_left", "p1.w_right")
-    return (
-        _xgb_fold_sql("1")
-        + ", p1 AS MATERIALIZED (" + _xgb_pick_sql(1, "c1") + "), "
-        "f2 AS (SELECT f.label, f.disc, f.price, f.qty, "
-        + _xgb_update_sql("u", leaf_w)
-        + " AS u2 FROM f, p1), "
-        + _xgb_fold_sql("2", "f2", "u2")
-        + ", p2 AS MATERIALIZED (" + _xgb_pick_sql(2, "c2") + ")"
-    )
-
-
 def _xgb_round2_oracle() -> str:
     """DuckDB twin of the 2-round chain: round-1 CTEs are the
     q_xgb_round oracle's verbatim; the MATERIALIZED pick drives the
     margin update; round-2 repeats the fold on u2."""
-    return (
-        _xgb_round2_chain_sql()
-        + " SELECT * FROM p1 UNION ALL SELECT * FROM p2"
-    )
-
-
-def _xgb_round2_picks(base: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """The two chained Newton picks over the _xgb_base rows: round 1
-    (localCheckpoint'd — it drives the margin update) and round 2
-    (lazy) off the updated 6-dp margin integer u2."""
-    p1 = _xgb_newton_pick(_xgb_gh(base), rnd=1).localCheckpoint()
-    pick = p1.select(
-        F.col("feat").alias("bfeat"),
-        F.col("threshold").alias("bt"),
-        F.col("w_left").alias("bwl"),
-        F.col("w_right").alias("bwr"),
-    )
-    leaf_w = _mf_split_sql("bfeat", "bt", "bwl", "bwr", "")
-    f2 = base.crossJoin(F.broadcast(pick)).selectExpr(
-        "label", "disc", "price", "qty", _xgb_update_sql("u", leaf_w) + " AS u2"
-    )
-    return p1, _xgb_newton_pick(_xgb_gh(f2, ucol="u2"), rnd=2)
+    return _xgb_boost_sql(1, 2)
 
 
 @query(
@@ -3692,8 +3707,8 @@ def q_xgb_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two rows out (round, feat, threshold, counts, G/H, gain, both leaf
     weights).
 
-    Exactness: the round-1 machinery is q_xgb_round's verbatim
-    (shared _xgb_newton_pick); the margin update uses LN/EXP of exact
+    Exactness: the round-1 machinery is q_xgb_round's verbatim (the
+    grower's depth-1 round); the margin update uses LN/EXP of exact
     integer ratios plus the 6-dp picked weight with IDENTICAL
     expression text on both engines (the documented LN/EXP house
     class — mitigated by the 6-dp re-rounding of u2 and swept at
@@ -3708,8 +3723,9 @@ def q_xgb_round2(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick is a localCheckpoint'd 1-row broadcast (eager by
     construction, the registry eager contract). R more rounds cost
     one pass each."""
-    p1, p2 = _xgb_round2_picks(_xgb_base(spark, sf_dir))
-    return p1.unionAll(p2)
+    return _union_all(
+        _xgb_boost(_xgb_base(spark, sf_dir), 1, 2, lambda t: t.localCheckpoint())
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3739,6 +3755,33 @@ def _xgb_ll_sql(u: str) -> str:
 _XGB_LL_COLS = (("u", "llb"), ("u2", "ll1"), ("u3", "ll2"))
 
 
+def _xgb_live_sql(u: str) -> str:
+    """The 6-dp margin integer ``u`` is not saturated (LN-safe)."""
+    return f"{u} > 0 AND {u} < 1000000"
+
+
+# the per-cell margin steps: (margin, branch bit, round pick, next margin)
+_XGB_FIT_STEPS = (("u", "b1", "p1", "u2"), ("u2", "b2", "p2", "u3"))
+
+# a fact row's (u, b1, b2, label) cell: the branch bits of the two
+# round picks, evaluated on the original features
+_XGB_FIT_CELL_ITEMS = [
+    "CAST(u AS BIGINT) AS u",
+    *(
+        _mf_split_sql(f"{p}.feat", f"{p}.threshold", "1", "0", "") + f" AS {b}"
+        for _u, b, p, _out in _XGB_FIT_STEPS
+    ),
+    "label",
+]
+
+
+def _xgb_fit_step_sql(u: str, b: str, p: str, out: str) -> str:
+    """A cell's next 6-dp margin integer ``out``: ``u`` stepped by the
+    leaf weight of round pick ``p`` on the cell's branch bit ``b``."""
+    w = f"CASE WHEN {b} = 1 THEN {p}.w_left ELSE {p}.w_right END"
+    return f"{_xgb_step_sql(u, w)} AS {out}"
+
+
 def _xgb_fit_cols_sql() -> list[str]:
     """q_xgb_fit's published items off the exact LL sums."""
     ll = {o: f"CAST({o} AS DOUBLE) / 1000000000" for _, o in _XGB_LL_COLS}
@@ -3755,41 +3798,30 @@ def _xgb_fit_cols_sql() -> list[str]:
 
 
 def _xgb_fit_oracle() -> str:
-    """DuckDB twin: the q_xgb_round2 pick chain (p1, p2 MATERIALIZED),
-    then ONE fact fold to the bounded (u, b1, b2) cell table; u2/u3
-    and the three LL terms are closed forms per cell."""
-
-    # per-cell closed forms off the (u, b1, b2) cell table
-    u2c = _xgb_step_sql(
-        "u", "CASE WHEN b1 = 1 THEN p1.w_left ELSE p1.w_right END"
-    )
-    u3c = _xgb_step_sql(
-        "u2", "CASE WHEN b2 = 1 THEN p2.w_left ELSE p2.w_right END"
-    )
-    return (
-        _xgb_round2_chain_sql() + ", "
+    """DuckDB twin: the q_xgb_round2 pick chain (p1, p2
+    MATERIALIZED), then ONE fact fold to the bounded (u, b1, b2) cell
+    table; u2/u3 and the three LL terms are closed forms per cell."""
+    step1, step2 = (_xgb_fit_step_sql(*st) for st in _XGB_FIT_STEPS)
+    return _xgb_boost_sql(
+        1,
+        2,
         # ONE fact fold to the bounded (u, b1, b2) cell table; branch
         # bits evaluated on the original features (trees split on
         # features); u must be LN-safe before anything downstream
-        "v AS (SELECT CAST(f.u AS BIGINT) AS u, "
-        + _mf_split_sql("p1.feat", "p1.threshold", "1", "0") + " AS b1, "
-        + _mf_split_sql("p2.feat", "p2.threshold", "1", "0") + " AS b2, "
-        "label FROM f, p1, p2 "
-        "WHERE f.u > 0 AND f.u < 1000000), "
-        "cells AS (SELECT u, b1, b2, CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(label) AS BIGINT) AS pos FROM v GROUP BY u, b1, b2), "
-        f"s2 AS (SELECT cells.*, {u2c} AS u2 FROM cells, p1 "
-        "WHERE TRUE), "
-        "s2v AS (SELECT * FROM s2 WHERE u2 > 0 AND u2 < 1000000), "
-        f"s3 AS (SELECT s2v.*, {u3c} AS u3 FROM s2v AS s2v, p2), "
-        "s3v AS (SELECT * FROM s3 WHERE u3 > 0 AND u3 < 1000000), "
+        f", v AS (SELECT {', '.join(_XGB_FIT_CELL_ITEMS)} FROM f, p1, p2 "
+        f"WHERE {_xgb_live_sql('u')}), "
+        f"cells AS (SELECT u, b1, b2, {_COUNTS_SQL} FROM v GROUP BY u, b1, b2), "
+        f"s2 AS (SELECT cells.*, {step1} FROM cells, p1 WHERE TRUE), "
+        f"s2v AS (SELECT * FROM s2 WHERE {_xgb_live_sql('u2')}), "
+        f"s3 AS (SELECT s2v.*, {step2} FROM s2v AS s2v, p2), "
+        f"s3v AS (SELECT * FROM s3 WHERE {_xgb_live_sql('u3')}), "
         "m AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
         + ", ".join(
             f"CAST(SUM({_xgb_ll_sql(u)}) AS HUGEINT) AS {o}"
             for u, o in _XGB_LL_COLS
         )
         + " FROM s3v) "
-        f"SELECT {', '.join(_xgb_fit_cols_sql())} FROM m"
+        f"SELECT {', '.join(_xgb_fit_cols_sql())} FROM m",
     )
 
 
@@ -3811,8 +3843,8 @@ def q_xgb_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round deltas — each round MUST increase LL (it Newton-steps
     the same objective), and the deltas quantify by how much.
 
-    Exactness: both picks are the shared _xgb_newton_pick machinery
-    (hash-exact); the fact table folds ONCE to the bounded
+    Exactness: both picks are the grower's (1, 2) run (hash-exact);
+    the fact table folds ONCE to the bounded
     (u, b1, b2) cell table (<=4x the 6-dp score domain — b1/b2 are
     the two branch bits, evaluated on the original features), and
     u2/u3/all three LL terms are closed forms per cell: LN of exact
@@ -3829,51 +3861,29 @@ def q_xgb_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row model tables."""
     base = _xgb_base(spark, sf_dir)
     dec = "decimal(38,0)"
-    p1, p2 = _xgb_round2_picks(base)
-    p2 = p2.localCheckpoint()
-    pk1 = p1.select(
-        F.col("feat").alias("f1"),
-        F.col("threshold").alias("t1"),
-        F.col("w_left").alias("wl1"),
-        F.col("w_right").alias("wr1"),
+    keep = lambda t: t.localCheckpoint()  # noqa: E731
+    p1, p2 = _xgb_boost(base, 1, 2, keep)
+    # the round-2 pick is read by the cell fold below
+    picks = {"p1": p1, "p2": keep(p2)}
+    v = base
+    for name, pick in picks.items():
+        v = v.crossJoin(F.broadcast(pick.alias(name)))
+    s = (
+        v.filter(_xgb_live_sql("u"))
+        .selectExpr(*_XGB_FIT_CELL_ITEMS)
+        .groupBy("u", "b1", "b2")
+        .agg(*map(F.expr, _COUNT_ITEMS))
     )
-    pk2 = p2.select(
-        F.col("feat").alias("f2c"),
-        F.col("threshold").alias("t2"),
-        F.col("w_left").alias("wl2"),
-        F.col("w_right").alias("wr2"),
-    )
-    v = (
-        base.crossJoin(F.broadcast(pk1))
-        .crossJoin(F.broadcast(pk2))
-        .filter((F.col("u") > 0) & (F.col("u") < 1000000))
-        .selectExpr(
-            "CAST(u AS BIGINT) AS u",
-            _mf_split_sql("f1", "t1", "1", "0", "") + " AS b1",
-            _mf_split_sql("f2c", "t2", "1", "0", "") + " AS b2",
-            "label",
+    cols = ["u", "b1", "b2", "cnt", "pos"]
+    for u, b, p, out in _XGB_FIT_STEPS:
+        s = (
+            s.crossJoin(F.broadcast(picks[p].alias(p)))
+            .selectExpr(*cols, _xgb_fit_step_sql(u, b, p, out))
+            .filter(_xgb_live_sql(out))
         )
-    )
-    cells = v.groupBy("u", "b1", "b2").agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.sum("label").cast("bigint").alias("pos"),
-    )
-
-    def step(src, b, wl, wr):
-        w = f"CASE WHEN {b} = 1 THEN {wl} ELSE {wr} END"
-        return _xgb_step_sql(src, w)
-
-    s2 = cells.crossJoin(F.broadcast(pk1)).selectExpr(
-        "u", "b1", "b2", "cnt", "pos", step("u", "b1", "wl1", "wr1") + " AS u2"
-    )
-    s2v = s2.filter((F.col("u2") > 0) & (F.col("u2") < 1000000))
-    s3 = s2v.crossJoin(F.broadcast(pk2)).selectExpr(
-        "u", "b1", "b2", "cnt", "pos", "u2",
-        step("u2", "b2", "wl2", "wr2") + " AS u3",
-    )
-    s3v = s3.filter((F.col("u3") > 0) & (F.col("u3") < 1000000))
+        cols.append(out)
     # the per-cell 1e-9 units sum in DECIMAL(38,0), the oracle's HUGEINT
-    m = s3v.selectExpr(
+    m = s.selectExpr(
         "CAST(SUM(cnt) AS BIGINT) AS n",
         *[
             f"CAST(SUM(CAST({_xgb_ll_sql(u)} AS {dec})) AS {dec}) AS {o}"
@@ -3893,46 +3903,9 @@ def q_xgb_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _xgb_tree2_sql(
-    sfx: str, p: str, rnd: int | None = None, src: str | None = None,
-    u: str = "u",
-) -> str:
-    """CTE text growing one depth-2 Newton tree over fact CTE ``src``
-    (margin integer ``u``; none = the base f): the root fold (suffix
-    ``sfx``) and MATERIALIZED pick pr{p}, branch rows rb{p} routed on
-    the original features, the per-(branch, feature) fold (suffix
-    ``sfx``b — branch totals off its 'disc' slice) and the MATERIALIZED
-    child picks lp{p}/rp{p}, labeled with round ``rnd``."""
-    return (
-        _xgb_fold_sql(sfx, src, u)
-        + f", pr{p} AS MATERIALIZED ("
-        + _xgb_pick_sql(rnd, f"c{sfx}", node="root")
-        + f"), rb{p} AS (SELECT f.*, "
-        + _mf_split_sql(f"pr{p}.feat", f"pr{p}.threshold", "0", "1")
-        + f" AS br FROM {src or 'f'} AS f, pr{p}), "
-        + _xgb_fold_sql(f"{sfx}b", f"rb{p}", u, key="br")
-        + f", lp{p} AS MATERIALIZED ("
-        + _xgb_pick_sql(rnd, f"c{sfx}b", node="left", where="br = 0")
-        + f"), rp{p} AS MATERIALIZED ("
-        + _xgb_pick_sql(rnd, f"c{sfx}b", node="right", where="br = 1")
-        + ")"
-    )
-
-
-def _xgb_tree2_oracle() -> str:
-    """DuckDB twin: root fold + pick (the q_xgb_round text), branch
-    assignment on the original features, per-(branch, feature) fold,
-    per-branch picks with branch totals recomputed exactly from the
-    cell table (feat='disc' slice — same closed form as Spark)."""
-    return _xgb_tree2_sql("1", "") + (
-        " SELECT * FROM pr UNION ALL SELECT * FROM lp "
-        "UNION ALL SELECT * FROM rp"
-    )
-
-
 @query(
     "q_xgb_tree2",
-    oracle=_xgb_tree2_oracle(),
+    oracle=_xgb_boost_sql(2, 1),
     tags=("ml", "train", "boosting", "split"),
     eager=True,
 )
@@ -3963,14 +3936,9 @@ def q_xgb_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
     _mf_cum; both child picks ride ONE per-branch
     struct-argmin job (the q_boosted_mf_tree2 pattern). Depth d costs
     d+1 passes — the distributed XGBoost histogram schedule."""
-    base = _xgb_base(spark, sf_dir)
-    root = _xgb_newton_pick(_xgb_gh(base)).localCheckpoint()
-    rinfo = root.select(
-        F.col("feat").alias("rfeat"), F.col("threshold").alias("rt")
-    )
-    g2, bt = _xgb_branch_hist(_xgb_branch_rows(base, rinfo, "u"))
-    children = _xgb_children(_xgb_branch_picks(g2, bt))
-    return root.select(F.lit("root").alias("node"), "*").unionAll(children)
+    return _xgb_boost(
+        _xgb_base(spark, sf_dir), 2, 1, lambda t: t.localCheckpoint()
+    )[0]
 
 
 # ---------------------------------------------------------------------------
@@ -3987,184 +3955,13 @@ def q_xgb_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _xgb_route(base: DataFrame, rinfo: DataFrame) -> DataFrame:
-    """Rows with their branch br (0 = left) under the broadcast 1-row
-    root split ``rinfo`` (rfeat, rt)."""
-    return base.crossJoin(F.broadcast(rinfo)).withColumn(
-        "br", F.expr(_mf_split_sql("rfeat", "rt", "0", "1", ""))
-    )
-
-
-def _xgb_branch_rows(
-    base: DataFrame, rinfo: DataFrame, ucol: str
-) -> DataFrame:
-    """(label, feats, br, gu, hu): _xgb_route'd rows with the exact
-    integer g/h off the 6-dp margin integer ``ucol``."""
-    return _xgb_route(base, rinfo).selectExpr(
-        "label", "disc", "price", "qty", "br", *_xgb_gh_sql(ucol)
-    )
-
-
-def _xgb_branch_hist(f2: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(g2, bt): the per-(br, feat, val) exact g/h histogram and the
-    exact per-branch totals off its 'disc' slice (a closed form —
-    never the rounded root-row doubles)."""
-    dec = "decimal(38,0)"
-    g2 = (
-        _mf_unpivot(f2, ["br", "gu", "hu"])
-        .groupBy("br", "feat", "val")
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            _sum_gu_dec("gu").alias("g"),
-            _sum_hu_dec("hu").alias("h"),
-        )
-    )
-    bt = (
-        g2.filter(F.col("feat") == "disc")
-        .groupBy("br")
-        .agg(
-            F.sum("cnt").cast("bigint").alias("n"),
-            F.sum("g").cast(dec).alias("gt"),
-            F.sum("h").cast(dec).alias("ht"),
-        )
-    )
-    return g2, bt
-
-
-def _xgb_branch_picks(g2: DataFrame, bt: DataFrame) -> DataFrame:
-    """Both child picks in ONE per-branch struct-argmin job over the
-    per-(br, feat) prefix cums with the branch totals ``bt`` attached:
-    (br, key, feat, val, cn, cg, ch, nb, gb, hb)."""
-    c2 = _mf_cum(
-        g2,
-        ["br", "feat"],
-        out_cast="decimal(38,0)",
-        measures=(("cnt", "cum_n"), ("g", "cum_g"), ("h", "cum_h")),
-    ).join(F.broadcast(bt), "br")
-    return (
-        c2.filter(F.col("cum_n") < F.col("n"))
-        .groupBy("br")
-        .agg(
-            F.min(
-                F.struct(
-                    F.expr(_newton_sql()["key"]).alias("key"),
-                    F.col("feat"),
-                    F.col("val"),
-                    F.col("cum_n").alias("cn"),
-                    F.col("cum_g").alias("cg"),
-                    F.col("cum_h").alias("ch"),
-                    F.col("n").alias("nb"),
-                    F.col("gt").alias("gb"),
-                    F.col("ht").alias("hb"),
-                )
-            ).alias("s")
-        )
-        .select("br", "s.*")
-    )
-
-
-def _xgb_children(picks: DataFrame, head: tuple = ()) -> DataFrame:
-    """The _xgb_branch_picks rows in the pick schema, node left/right."""
-    return picks.selectExpr(
-        *head,
-        "CASE WHEN br = 0 THEN 'left' ELSE 'right' END AS node",
-        "feat",
-        "val AS threshold",
-        "CAST(cn AS BIGINT) AS n_left",
-        "CAST(nb - cn AS BIGINT) AS n_right",
-        *_newton_cols_sql(_newton_sql("cg", "ch", "gb", "hb")),
-    )
-
-
-# a branch's own Newton weight off its totals (gt, ht): the left weight
-# of a split that keeps the whole branch on its left
-_XGB_BRANCH_W_SQL = sql_round(_newton_sql("gt", "ht")["w_left"], 6)
-
-
-def _xgbt_tree(base: DataFrame, ucol: str, rnd: int):
-    """Grow ONE exact Newton depth-2 tree over ``base`` (label, feats,
-    6-dp margin integer ``ucol``). Returns (tree rows labeled with
-    (round, node), broadcastable 1-row root info, 2-row per-branch
-    child picks, 2-row per-branch fallback Newton weights). The body
-    is q_xgb_tree2's pass parameterized by margin column and round
-    label; the round-1 identity with q_xgb_tree2 is pinned
-    behaviorally by tests/test_round16_ops.py. The bounded pick
-    tables (<=2 rows) are localCheckpoint'd so the round-2 pass can
-    chain off them without replaying round 1."""
-    head = (f"CAST({rnd} AS INT) AS round",)
-    root = _xgb_newton_pick(_xgb_gh(base, ucol=ucol)).localCheckpoint()
-    root_row = root.selectExpr(*head, "'root' AS node", "*")
-    rinfo = root.select(
-        F.col("feat").alias("rfeat"), F.col("threshold").alias("rt")
-    )
-    g2, bt = _xgb_branch_hist(_xgb_branch_rows(base, rinfo, ucol))
-    bt = bt.localCheckpoint()
-    picks = _xgb_branch_picks(g2, bt).localCheckpoint()
-    pt = _newton_sql("cg", "ch", "gb", "hb")
-    cp = picks.selectExpr(
-        "br",
-        "feat AS cfeat",
-        "val AS ct",
-        sql_round(pt["w_left"], 6) + " AS cwl",
-        sql_round(pt["w_right"], 6) + " AS cwr",
-    )
-    fbw = bt.selectExpr("br", _XGB_BRANCH_W_SQL + " AS wb")
-    return root_row.unionAll(_xgb_children(picks, head)), rinfo, cp, fbw
-
-
-def _xgbt_update(
-    base: DataFrame, ucol: str, rinfo: DataFrame, cp: DataFrame, fbw: DataFrame
-) -> DataFrame:
-    """Apply one depth-2 tree's compiled 4-leaf CASE to the margin:
-    route each row through the broadcast root split and its branch's
-    broadcast child pick (fallback: the branch's own Newton weight),
-    then u' = round(sigmoid(logit(u/1e6) + w)*1e6), saturation-guarded
-    — the q_xgb_round2 margin-update text with the tree's leaf CASE."""
-    fx = (
-        _xgb_route(base, rinfo)
-        .join(F.broadcast(cp), "br", "left")
-        .join(F.broadcast(fbw), "br", "left")
-    )
-    w = (
-        "CASE WHEN cfeat IS NULL THEN wb ELSE "
-        + _mf_split_sql("cfeat", "ct", "cwl", "cwr", "")
-        + " END"
-    )
-    return fx.selectExpr(
-        "label", "disc", "price", "qty", _xgb_update_sql(ucol, w) + " AS u2"
-    )
-
-
 def _xgb_boosted_tree2_oracle() -> str:
     """DuckDB twin of the 2-round depth-2 chain: tree-1 CTEs are the
     q_xgb_tree2 oracle's text (round/node-labeled picks MATERIALIZED),
     the margin update is the q_xgb_round2 text with the 4-leaf CASE
     (LEFT JOIN on the branch pick, branch-weight fallback), tree 2
     repeats the fold on u2."""
-    return (
-        _xgb_tree2_sql("1", "a", 1)
-        + ", "
-        # compiled 4-leaf CASE: broadcast root + per-branch child pick
-        # (LEFT JOIN; fallback = the branch's own shrunken Newton
-        # weight off the exact branch totals)
-        "cpa AS (SELECT 0 AS br, feat, threshold, w_left, w_right FROM lpa "
-        "UNION ALL SELECT 1 AS br, feat, threshold, w_left, w_right "
-        "FROM rpa), "
-        f"fba AS (SELECT br, {_XGB_BRANCH_W_SQL} AS wb FROM t1b), "
-        "fwa AS (SELECT f.*, CASE WHEN cpa.br IS NULL THEN fba.wb ELSE "
-        + _mf_split_sql("cpa.feat", "cpa.threshold", "cpa.w_left", "cpa.w_right")
-        + " END AS w "
-        "FROM rba AS f LEFT JOIN cpa ON f.br = cpa.br "
-        "LEFT JOIN fba ON f.br = fba.br), "
-        "f2 AS (SELECT label, disc, price, qty, "
-        + _xgb_update_sql("u", "w")
-        + " AS u2 FROM fwa), "
-        + _xgb_tree2_sql("2", "b", 2, "f2", "u2")
-        + " SELECT * FROM pra UNION ALL SELECT * FROM lpa "
-        "UNION ALL SELECT * FROM rpa "
-        "UNION ALL SELECT * FROM prb UNION ALL SELECT * FROM lpb "
-        "UNION ALL SELECT * FROM rpb"
-    )
+    return _xgb_boost_sql(2, 2)
 
 
 @query(
@@ -4202,16 +3999,14 @@ def q_xgb_boosted_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: R·(d+1) = 4 stack-explode fact passes (map-side-combined
     before the only shuffles, on (feat,val) and (br,feat,val)) + two
     3-scalar totals folds + one margin-update fact pass fused into
-    round 2's scan; the bounded pick tables (<=2 rows) are
-    localCheckpoint'd and broadcast. 100 rounds × depth 5 is 600 such
-    passes — the honest distributed-XGBoost histogram schedule, each
-    pass one shuffle of a bounded histogram, no fact-scale joins
-    anywhere."""
-    base = _xgb_base(spark, sf_dir)
-    t1, rinfo, cp, fbw = _xgbt_tree(base, "u", 1)
-    b2 = _xgbt_update(base, "u", rinfo, cp, fbw)
-    t2, _, _, _ = _xgbt_tree(b2, "u2", 2)
-    return t1.unionAll(t2)
+    round 2's scan; the bounded pick tables (<=2 rows) that round 2
+    reads are localCheckpoint'd and broadcast. 100 rounds × depth 5
+    is 600 such passes — the honest distributed-XGBoost histogram
+    schedule, each pass one shuffle of a bounded histogram, no
+    fact-scale joins anywhere."""
+    return _union_all(
+        _xgb_boost(_xgb_base(spark, sf_dir), 2, 2, lambda t: t.localCheckpoint())
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4228,28 +4023,55 @@ _XGB_GAMMA = 50.0
 _XGB_MCW_UNITS = 100 * 1000000000000  # min_child_weight 100.0 in 1e-12 units
 
 
-def _xgb_gamma_oracle() -> str:
-    """DuckDB twin: the q_xgb_round fold, candidate counts before/after
-    the cover gate, the cover-constrained argmin, and the gamma flag
-    off the identical 6-dp-rounded gain."""
-    cover = (
-        f"cum_h >= {_XGB_MCW_UNITS} AND ht - cum_h >= {_XGB_MCW_UNITS}"
+def _xgb_gated_cnts_sql(gate: str, counted: str) -> list[str]:
+    """The candidate counts before (cand_total) and after (``counted``)
+    the SQL ``gate``."""
+    return [
+        "CAST(COUNT(*) AS BIGINT) AS cand_total",
+        f"CAST(SUM(CASE WHEN {gate} THEN 1 ELSE 0 END) AS BIGINT) AS {counted}",
+    ]
+
+
+def _xgb_gated(
+    spark: SparkSession, sf_dir: str, gate: str, counted: str, extra=()
+) -> DataFrame:
+    """The counted gated pick: q_xgb_round's pick over the candidates
+    that pass the SQL ``gate``, then the ``extra`` items over the pick
+    and the candidate counts before/after the gate."""
+    c, _tot = _xgb_fold(_xgb_gh(_xgb_base(spark, sf_dir)))
+    cand = c.filter(_XGB_CAND_SQL)
+    cnts = cand.selectExpr(*_xgb_gated_cnts_sql(gate, counted))
+    p = _newton_take(cand.filter(gate)).alias("p")
+    return p.crossJoin(F.broadcast(cnts)).selectExpr(
+        "p.*", *extra, "cand_total", counted
     )
+
+
+def _xgb_gated_sql(gate: str, counted: str, extra=()) -> str:
+    """DuckDB twin of _xgb_gated."""
     return (
         _xgb_fold_sql("1")
-        + ", cnts AS (SELECT CAST(COUNT(*) AS BIGINT) AS cand_total, "
-        f"CAST(SUM(CASE WHEN {cover} THEN 1 ELSE 0 END) AS BIGINT) "
-        "AS cand_cover FROM c1 WHERE cum_n < n), "
-        "p AS (" + _xgb_pick_sql(None, "c1", where=cover) + ") "
-        "SELECT p.*, "
-        f"CASE WHEN p.gain > {_XGB_GAMMA!r} THEN 1 ELSE 0 END AS gamma_pass, "
-        "cand_total, cand_cover FROM p, cnts"
+        + f", cnts AS (SELECT {', '.join(_xgb_gated_cnts_sql(gate, counted))} "
+        f"FROM c1 WHERE {_XGB_CAND_SQL}), "
+        "p AS (" + _xgb_pick_sql(None, "c1", where=gate) + ") "
+        f"SELECT {', '.join(('p.*', *extra, 'cand_total', counted))} "
+        "FROM p, cnts"
     )
+
+
+# the cover gate (both children carry Σh >= min_child_weight, exact
+# integers) and the gamma flag off the 6-dp gain
+_XGB_COVER_SQL = (
+    f"cum_h >= {_XGB_MCW_UNITS} AND ht - cum_h >= {_XGB_MCW_UNITS}"
+)
+_XGB_GAMMA_ITEMS = (
+    f"CASE WHEN gain > {_XGB_GAMMA!r} THEN 1 ELSE 0 END AS gamma_pass",
+)
 
 
 @query(
     "q_xgb_gamma",
-    oracle=_xgb_gamma_oracle(),
+    oracle=_xgb_gated_sql(_XGB_COVER_SQL, "cand_cover", _XGB_GAMMA_ITEMS),
     tags=("ml", "train", "boosting", "regularization"),
 )
 def q_xgb_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4279,37 +4101,8 @@ def q_xgb_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate table (one extra 2-scalar fold over <=~1.5k rows). The
     gates are WHERE clauses on the bounded cell table, free at any
     scale — exactly how distributed XGBoost evaluates them."""
-    c, _tot = _xgb_fold(_xgb_gh(_xgb_base(spark, sf_dir)))
-    cand = c.filter(F.col("cum_n") < F.col("n"))
-    mcw = F.lit(_XGB_MCW_UNITS).cast("decimal(38,0)")
-    cover = (F.col("cum_h") >= mcw) & (
-        (F.col("ht") - F.col("cum_h")) >= mcw
-    )
-    cnts = cand.agg(
-        F.count("*").cast("bigint").alias("cand_total"),
-        F.sum(F.when(cover, 1).otherwise(0)).cast("bigint").alias(
-            "cand_cover"
-        ),
-    )
-    p = _newton_take(cand.filter(cover))
-    return p.crossJoin(F.broadcast(cnts)).select(
-        "feat",
-        "threshold",
-        "n_left",
-        "n_right",
-        "g_left",
-        "h_left",
-        "g_right",
-        "h_right",
-        "gain",
-        "w_left",
-        "w_right",
-        F.when(F.col("gain") > F.lit(_XGB_GAMMA), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("gamma_pass"),
-        "cand_total",
-        "cand_cover",
+    return _xgb_gated(
+        spark, sf_dir, _XGB_COVER_SQL, "cand_cover", _XGB_GAMMA_ITEMS
     )
 
 
@@ -4339,22 +4132,9 @@ _MONO_GATE_SQL = (
 )
 
 
-def _xgb_monotone_oracle() -> str:
-    """DuckDB twin: the q_xgb_round fold with the integer monotone
-    gate in the candidate WHERE, plus before/after candidate counts."""
-    return (
-        _xgb_fold_sql("1")
-        + ", cnts AS (SELECT CAST(COUNT(*) AS BIGINT) AS cand_total, "
-        f"CAST(SUM(CASE WHEN {_MONO_GATE_SQL} THEN 1 ELSE 0 END) AS BIGINT) "
-        "AS cand_allowed FROM c1 WHERE cum_n < n), "
-        "p AS (" + _xgb_pick_sql(None, "c1", where=_MONO_GATE_SQL) + ") "
-        "SELECT p.*, cand_total, cand_allowed FROM p, cnts"
-    )
-
-
 @query(
     "q_xgb_monotone",
-    oracle=_xgb_monotone_oracle(),
+    oracle=_xgb_gated_sql(_MONO_GATE_SQL, "cand_allowed"),
     tags=("ml", "train", "boosting", "regularization"),
 )
 def q_xgb_monotone(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4386,23 +4166,7 @@ def q_xgb_monotone(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (plus one 2-scalar fold over it), free at any scale —
     exactly how distributed XGBoost enforces the constraint during
     split enumeration."""
-    c, _tot = _xgb_fold(_xgb_gh(_xgb_base(spark, sf_dir)))
-    cand = c.filter(F.col("cum_n") < F.col("n"))
-    lam = F.lit(1000000000000).cast("decimal(38,0)")
-    lhs = F.col("cum_g") * (F.col("ht") - F.col("cum_h") + lam)
-    rhs = (F.col("gt") - F.col("cum_g")) * (F.col("cum_h") + lam)
-    allowed = (
-        (F.col("feat") == "price")
-        | ((F.col("feat") == "qty") & (lhs >= rhs))
-        | ((F.col("feat") == "disc") & (lhs <= rhs))
-    )
-    cnts = cand.agg(
-        F.count("*").cast("bigint").alias("cand_total"),
-        F.sum(F.when(allowed, 1).otherwise(0)).cast("bigint").alias(
-            "cand_allowed"
-        ),
-    )
-    return _newton_take(cand.filter(allowed)).crossJoin(F.broadcast(cnts))
+    return _xgb_gated(spark, sf_dir, _MONO_GATE_SQL, "cand_allowed")
 
 
 # ---------------------------------------------------------------------------
@@ -4474,7 +4238,7 @@ def q_xgb_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     where distributed XGBoost applies it."""
     c, _tot = _xgb_fold(_xgb_gh(_xgb_base(spark, sf_dir)))
     return _newton_take(
-        c.filter(F.col("cum_n") < F.col("n")),
+        c.filter(_XGB_CAND_SQL),
         grad=_xgb_soft_sql,
         g_names=("tg_left", "tg_right"),
     )
@@ -4562,25 +4326,13 @@ def q_xgb_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed XGBoost/LightGBM ship."""
     B = _XGB_HIST_BINS
     c, tot = _xgb_fold(_xgb_gh(_xgb_base(spark, sf_dir)))
-    cb = c.withColumn(
-        "bin",
-        F.expr(f"((CAST(cum_n AS BIGINT) - 1) * {B}) DIV n"),
-    )
+    cb = c.withColumn("bin", F.expr(f"((CAST(cum_n AS BIGINT) - 1) * {B}) DIV n"))
     cand = (
         cb.groupBy("feat", "bin")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("val"),
-                    F.col("cum_n"),
-                    F.col("cum_g"),
-                    F.col("cum_h"),
-                )
-            ).alias("s")
-        )
+        .agg(F.expr("MAX(struct(val, cum_n, cum_g, cum_h))").alias("s"))
         .select("feat", "bin", "s.*")
         .crossJoin(F.broadcast(tot))
-        .filter(F.col("cum_n") < F.col("n"))
+        .filter(_XGB_CAND_SQL)
     )
     cnts = cand.agg(F.count("*").cast("bigint").alias("cand_bins"))
     p = _newton_take(cand, feat=("feat", "CAST(bin AS BIGINT) AS bin"))

@@ -2,7 +2,8 @@
 oracle's rows exactly (the test_partition_stress rule) on inputs the
 fixtures never hold. The trainer family and the other oracle-checked
 ML metrics run with lineitem empty, holding a single row, or holding
-one class only (no l_returnflag = 'R'); the queries that divide by a
+one class only (no l_returnflag = 'R'), and the trainers also with
+lineitem holding two rows; the queries that divide by a
 fact count run with lineitem and events both empty; the survival
 family runs with events empty, holding a single user, holding no
 'error' event, or holding one parity arm only (even user ids);
@@ -78,6 +79,14 @@ CASES = {
 }
 
 
+# lineitem rewrite per case, for the trainers only: with two rows the
+# depth-2 Newton trees split the root and leave one row per branch, so
+# no branch picks a child and q_xgb_boosted_tree2's margin update takes
+# each branch's own weight (the no-split fallback the shipped data
+# never reaches)
+TRAINER_CASES = {"two_rows": "ORDER BY l_orderkey, l_linenumber LIMIT 2"}
+
+
 # queries that divide by a fact-table count
 EMPTY_FACTS_QUERIES = ("q_funnel_steps", "q_pagerank", "q_hits")
 
@@ -151,6 +160,11 @@ def degenerate(tmp_path_factory, sf_dir):
 
 
 @pytest.fixture(scope="module")
+def degenerate_trainers(tmp_path_factory, sf_dir):
+    yield from _case_dirs(tmp_path_factory, sf_dir, "lineitem", TRAINER_CASES)
+
+
+@pytest.fixture(scope="module")
 def empty_facts(tmp_path_factory, sf_dir):
     """(sf dir, DuckDB connection) with lineitem and events empty."""
     d = tmp_path_factory.mktemp("degenerate_empty_facts")
@@ -181,6 +195,23 @@ def _assert_matches(spark, dir_con, name, case):
 @pytest.mark.parametrize("name", TRAINERS + METRICS)
 def test_trainer_degenerate_input_matches_oracle(spark, degenerate, name, case):
     _assert_matches(spark, degenerate[case], name, case)
+
+
+@pytest.mark.parametrize("case", sorted(TRAINER_CASES))
+@pytest.mark.parametrize("name", TRAINERS)
+def test_trainer_only_degenerate_input_matches_oracle(
+    spark, degenerate_trainers, name, case
+):
+    _assert_matches(spark, degenerate_trainers[case], name, case)
+
+
+def test_two_rows_reach_the_newton_no_split_fallback(degenerate_trainers):
+    """The two_rows case is not vacuous: the depth-2 Newton tree picks
+    its root and no child, so both of q_xgb_boosted_tree2's round-1
+    branches update the margin by their own weight."""
+    _d, con = degenerate_trainers["two_rows"]
+    q = REGISTRY["q_xgb_tree2"]
+    assert con.execute(f"SELECT node FROM ({q.oracle})").fetchall() == [("root",)]
 
 
 @pytest.mark.parametrize("name", EMPTY_FACTS_QUERIES)

@@ -11,17 +11,34 @@ For every HEADLINE query, in one warm tuned session, measures
 and, when PY4J_COUNT=1, the number of py4j commands issued during
 construction (the round-trip chatter the construction fixes target).
 
-Prints one line per query sorted by construct desc, then totals.
-This is the round-16/17 optimization instrument: the driver runs each
-query ONCE in one long session, so construction seconds are bench
-seconds at 1:1.
+Prints one line per run sorted by construct desc, then totals. Runs
+are under the exact bench.py conditions (tuned engine session,
+python-worker warmup, full noop-sink materialization), so this is also
+the per-query timing harness behind the BASELINE.md anchors. This is
+the round-16/17 optimization instrument: the driver runs each query
+ONCE in one long session, so construction seconds are bench seconds at
+1:1.
 
 Usage:
     python tools/decompose.py [q_name ...]     # default: all HEADLINE
+    WARM=3 python tools/decompose.py q_tree5 q_logrank   # cold + 3 warm
 
 Env:
     SPARK_GRAFT_SF_DIR   parquet dir (default /root/testdata/sf0.1)
     PY4J_COUNT=1         also count py4j commands per construction
+    WARM                 warm re-runs per query after the first (default
+                         0); each run prints its own line
+
+Methodology notes (the BASELINE.md rules in practice):
+- always run a CONTROL query with a known anchor in the same session
+  (e.g. q_tree5, q_logrank) — this box swings 1.0-1.5x with state, and
+  the control ratio is how a reading is deflated to anchor truth;
+- the driver pays roughly the cold-in-warm-session price (it runs each
+  query once in one long session), so quote driver-equivalents between
+  the cold and warm readings;
+- repeated same-session runs of checkpoint-heavy queries accumulate
+  block-manager state — if warm times RISE run-over-run, restart the
+  session before believing them.
 """
 
 from __future__ import annotations
@@ -34,6 +51,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+WARM = int(os.environ.get("WARM", "0"))
 
 
 def main() -> None:
@@ -65,25 +83,26 @@ def main() -> None:
     rows = []
     for name in names:
         q = registry[name]
-        c0 = compile_time.getCount()
-        counter["n"] = 0
-        t0 = time.perf_counter()
-        df = q.fn(spark, SF_DIR)
-        t1 = time.perf_counter()
-        py4j = counter["n"]
-        df.write.format("noop").mode("overwrite").save()
-        t2 = time.perf_counter()
-        compiles = compile_time.getCount() - c0
-        rows.append(
-            {
-                "name": name,
-                "construct": round(t1 - t0, 3),
-                "execute": round(t2 - t1, 3),
-                "compiles": compiles,
-                "eager": q.eager,
-                "py4j": py4j if count_py4j else None,
-            }
-        )
+        for run in range(1 + WARM):
+            c0 = compile_time.getCount()
+            counter["n"] = 0
+            t0 = time.perf_counter()
+            df = q.fn(spark, SF_DIR)
+            t1 = time.perf_counter()
+            py4j = counter["n"]
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+            compiles = compile_time.getCount() - c0
+            rows.append(
+                {
+                    "name": name if run == 0 else f"{name} warm{run}",
+                    "construct": round(t1 - t0, 3),
+                    "execute": round(t2 - t1, 3),
+                    "compiles": compiles,
+                    "eager": q.eager,
+                    "py4j": py4j if count_py4j else None,
+                }
+            )
 
     rows.sort(key=lambda r: -r["construct"])
     for r in rows:
@@ -99,7 +118,7 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "n_queries": len(rows),
+                "n_queries": len(names),
                 "construct_total": round(tc, 1),
                 "execute_total": round(te, 1),
                 "total": round(tc + te, 1),
