@@ -19,10 +19,11 @@ whole-stage-codegen expressions (zero shuffle before the final top-N);
 the encoders aggregate once into a bounded category/stats table and
 broadcast it back — the fact table never shuffles. No Python UDFs.
 
-Parity trick for the tree: the Spark Column expression AND the DuckDB
-CASE text are generated from ONE python tree spec, so the two engines
-evaluate structurally identical arithmetic — the oracle genuinely
-re-derives the ensemble, not a copy of its output.
+Parity trick for the tree: ONE CASE text is generated from the python
+tree spec, and both engines evaluate it (Spark with selectExpr, the
+DuckDB oracle embedded in its SQL), so the two run identical
+arithmetic; tests/test_feature_timeseries.py re-derives the ensemble
+independently with a python tree walk.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from fraud_detection_spark.functions import pround
-from fraud_detection_spark.registry import query, sql_round
+from fraud_detection_spark.registry import query, sql_round, sql_sigmoid
 from fraud_detection_spark.sources import load_table
 
 # ---------------------------------------------------------------------------
@@ -97,19 +98,11 @@ _TREES = [
 _TREE_BIAS = -0.4
 
 
-def _tree_col(node, pick) -> Column:
-    """Spark expression for one tree: nested F.when from the spec."""
-    if isinstance(node, tuple):
-        return F.lit(pick(node))
-    return F.when(
-        F.col(node["feat"]) < F.lit(node["thr"]), _tree_col(node["left"], pick)
-    ).otherwise(_tree_col(node["right"], pick))
-
-
 def _tree_sql(node, pick) -> str:
-    """DuckDB CASE text for one tree, from the same spec."""
+    """CASE text for one tree, from the spec; both engines evaluate it
+    (``pick`` renders a leaf as SQL text)."""
     if isinstance(node, tuple):
-        return repr(pick(node))
+        return pick(node)
     return (
         f"CASE WHEN {node['feat']} < {node['thr']} "
         f"THEN {_tree_sql(node['left'], pick)} "
@@ -117,30 +110,35 @@ def _tree_sql(node, pick) -> str:
     )
 
 
-def _leaf_margin(leaf):
-    return leaf[1]
+def _dbl(x: float) -> str:
+    # a DOUBLE literal: a bare decimal literal would make Spark SQL sum
+    # the margins in DECIMAL
+    return f"CAST({x!r} AS DOUBLE)"
 
 
-def _leaf_id(leaf):
-    return leaf[0]
+def _leaf_margin(leaf) -> str:
+    return _dbl(leaf[1])
+
+
+def _leaf_id(leaf) -> str:
+    return repr(leaf[0])
 
 
 _MARGIN_SQL = " + ".join(f"({_tree_sql(t, _leaf_margin)})" for t in _TREES)
-_TREE_SCORE_SQL = sql_round(
-    f"1.0 / (1.0 + EXP(-({_TREE_BIAS} + {_MARGIN_SQL})))", 6
-)
+_TREE_SCORE_SQL = sql_round(sql_sigmoid(f"{_dbl(_TREE_BIAS)} + {_MARGIN_SQL}"), 6)
+
+# q_tree_score's select items over lineitem
+_TREE_SCORE_ITEMS = [
+    "l_orderkey",
+    "l_linenumber",
+    *(f"CAST({_tree_sql(t, _leaf_id)} AS INT) AS leaf{i}" for i, t in enumerate(_TREES)),
+    f"{_TREE_SCORE_SQL} AS tree_score",
+]
 
 
 @query(
     "q_tree_score",
-    oracle=(
-        "SELECT l_orderkey, l_linenumber, "
-        + ", ".join(
-            f"CAST({_tree_sql(t, _leaf_id)} AS INT) AS leaf{i}"
-            for i, t in enumerate(_TREES)
-        )
-        + f", {_TREE_SCORE_SQL} AS tree_score FROM lineitem"
-    ),
+    oracle=f"SELECT {', '.join(_TREE_SCORE_ITEMS)} FROM lineitem",
     tags=("ml", "serve", "tree"),
 )
 def q_tree_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,20 +154,7 @@ def q_tree_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     fastest at 100 TB: codegen the trees, never ship the library. The
     leaf ids are emitted per tree so the oracle checks routing, not
     just the blended score."""
-    li = load_table(spark, sf_dir, "lineitem")
-    margin = F.lit(_TREE_BIAS)
-    for t in _TREES:
-        margin = margin + _tree_col(t, _leaf_margin)
-    score = F.lit(1.0) / (F.lit(1.0) + F.exp(-margin))
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        *[
-            _tree_col(t, _leaf_id).cast("int").alias(f"leaf{i}")
-            for i, t in enumerate(_TREES)
-        ],
-        pround(score, 6).alias("tree_score"),
-    )
+    return load_table(spark, sf_dir, "lineitem").selectExpr(*_TREE_SCORE_ITEMS)
 
 
 # ---------------------------------------------------------------------------

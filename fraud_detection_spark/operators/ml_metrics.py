@@ -42,23 +42,36 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from fraud_detection_spark.functions import prefix_sums, pround
-from fraud_detection_spark.registry import query, sql_double_lit, sql_round
+from fraud_detection_spark.registry import query, sql_double_lit, sql_round, sql_sigmoid
 from fraud_detection_spark.sources import load_table
 
 # Published model coefficients (literals on both engines).
 B0, W_QTY, W_DISC, W_PRICE = -2.0, 0.03, 9.0, 0.8
 
-# SQL fragment computing (label, score) from lineitem — shared by oracles.
-SCORED_SQL = (
-    "SELECT l_orderkey, l_linenumber, "
-    "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-    + sql_round(
-        "1.0 / (1.0 + EXP(-(-2.0 + 0.03 * l_quantity + 9.0 * l_discount "
-        "+ 0.8 * (l_extendedprice / 100000.0))))",
-        6,
-    )
-    + " AS score FROM lineitem"
+# The published model as SQL text, evaluated verbatim by both engines:
+# the oracles embed it and Spark runs it with selectExpr. Every DECIMAL
+# literal meets a DOUBLE column, so Spark SQL computes in DOUBLE too.
+LOGIT_SQL = (
+    f"{B0} + {W_QTY} * l_quantity + {W_DISC} * l_discount "
+    f"+ {W_PRICE} * (l_extendedprice / 100000.0)"
 )
+SCORE_SQL = sql_round(sql_sigmoid(LOGIT_SQL), 6)
+LABEL_SQL = "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END"
+# the deterministic ~80/20 train split (Knuth multiplicative hash of
+# the row key, q_split)
+TRAIN_SQL = (
+    "CASE WHEN (l_orderkey * 2654435761 + l_linenumber) % 1000 < 800 "
+    "THEN 1 ELSE 0 END"
+)
+
+# (l_orderkey, l_linenumber, label, score) from lineitem
+_SCORED_ITEMS = [
+    "l_orderkey",
+    "l_linenumber",
+    f"{LABEL_SQL} AS label",
+    f"{SCORE_SQL} AS score",
+]
+SCORED_SQL = f"SELECT {', '.join(_SCORED_ITEMS)} FROM lineitem"
 
 
 def scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -67,19 +80,7 @@ def scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     Score is rounded to 6 decimals *before* any ranking so tie structure
     is identical across engines.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    logit = (
-        F.lit(B0)
-        + F.lit(W_QTY) * F.col("l_quantity")
-        + F.lit(W_DISC) * F.col("l_discount")
-        + F.lit(W_PRICE) * (F.col("l_extendedprice") / 100000.0)
-    )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("label"),
-        pround(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6).alias("score"),
-    )
+    return load_table(spark, sf_dir, "lineitem").selectExpr(*_SCORED_ITEMS)
 
 
 @query(
@@ -372,11 +373,13 @@ def q_roc_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_FOLD_ITEMS = ["(l_orderkey * 9973 + l_linenumber) % 5 AS fold", f"{LABEL_SQL} AS label"]
+
+
 @query(
     "q_fold_assign",
     oracle=(
-        "SELECT (l_orderkey * 9973 + l_linenumber) % 5 AS fold, "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
+        f"SELECT {', '.join(_FOLD_ITEMS)}, "
         "CAST(COUNT(*) AS BIGINT) AS n FROM lineitem GROUP BY fold, label"
     ),
     tags=("ml", "split"),
@@ -387,22 +390,16 @@ def q_fold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike RNG folds. Ref: StratifiedKFold(n_splits=5, random_state=42)
     train_model.py:49."""
     li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.select(
-            ((F.col("l_orderkey") * 9973 + F.col("l_linenumber")) % 5).alias("fold"),
-            F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("label"),
-        )
-        .groupBy("fold", "label")
-        .agg(F.count("*").alias("n"))
-    )
+    return li.selectExpr(*_FOLD_ITEMS).groupBy("fold", "label").agg(F.count("*").alias("n"))
+
+
+_SPLIT_ITEMS = [f"{TRAIN_SQL} AS is_train", f"{LABEL_SQL} AS label"]
 
 
 @query(
     "q_split",
     oracle=(
-        "SELECT CASE WHEN (l_orderkey * 2654435761 + l_linenumber) % 1000 < 800 "
-        "THEN 1 ELSE 0 END AS is_train, "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
+        f"SELECT {', '.join(_SPLIT_ITEMS)}, "
         "CAST(COUNT(*) AS BIGINT) AS n FROM lineitem GROUP BY is_train, label"
     ),
     tags=("ml", "split"),
@@ -414,14 +411,7 @@ def q_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces RNG so the split is reproducible on any cluster layout."""
     li = load_table(spark, sf_dir, "lineitem")
     return (
-        li.select(
-            F.when(
-                (F.col("l_orderkey") * F.lit(2654435761) + F.col("l_linenumber")) % 1000 < 800, 1
-            ).otherwise(0).alias("is_train"),
-            F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("label"),
-        )
-        .groupBy("is_train", "label")
-        .agg(F.count("*").alias("n"))
+        li.selectExpr(*_SPLIT_ITEMS).groupBy("is_train", "label").agg(F.count("*").alias("n"))
     )
 
 
@@ -1582,16 +1572,13 @@ def tree_cum_table(s: DataFrame) -> DataFrame:
 # and a weaker challenger's sb (coefficients -1.0, 0.05, 5.0, 0.3 —
 # literals on both engines) to compare against it on the SAME rows
 _SCORED2_ITEMS = [
-    "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label",
+    f"{LABEL_SQL} AS label",
+    f"{SCORE_SQL} AS sa",
     sql_round(
-        "1.0 / (1.0 + EXP(-(-2.0 + 0.03 * l_quantity + 9.0 * l_discount "
-        "+ 0.8 * (l_extendedprice / 100000.0))))",
-        6,
-    )
-    + " AS sa",
-    sql_round(
-        "1.0 / (1.0 + EXP(-(-1.0 + 0.05 * l_quantity + 5.0 * l_discount "
-        "+ 0.3 * (l_extendedprice / 100000.0))))",
+        sql_sigmoid(
+            "-1.0 + 0.05 * l_quantity + 5.0 * l_discount "
+            "+ 0.3 * (l_extendedprice / 100000.0)"
+        ),
         6,
     )
     + " AS sb",
@@ -2158,7 +2145,7 @@ _MF_VAL_SQL = {
 # _mf_base's select items over lineitem; the oracles' base CTE f is
 # _MF_BASE_SQL FROM lineitem
 _MF_BASE_ITEMS = [
-    "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label",
+    f"{LABEL_SQL} AS label",
     *(sql_round(_MF_VAL_SQL[f], 6) + f" AS {f}" for f in _MF_FEATS),
 ]
 _MF_BASE_SQL = "SELECT " + ", ".join(_MF_BASE_ITEMS)
@@ -3143,15 +3130,9 @@ def q_boosted_mf_tree2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # XGBoost defaults mirrored from the reference config: reg_lambda = 1.0,
 # learning_rate = 0.1 (train_model.py:69-80). Literals on both engines.
-_XGB_SIG_SQL = (
-    "1.0 / (1.0 + EXP(-(-2.0 + 0.03 * l_quantity + 9.0 * l_discount "
-    "+ 0.8 * (l_extendedprice / 100000.0))))"
-)
 
 # the 6-dp published-score integer u = round(score*1e6): the base margin
-_XGB_U_SQL = (
-    "CAST(FLOOR((" + sql_round(_XGB_SIG_SQL, 6) + ") * 1000000 + 0.5) AS BIGINT) AS u"
-)
+_XGB_U_SQL = f"CAST(FLOOR(({SCORE_SQL}) * 1000000 + 0.5) AS BIGINT) AS u"
 
 
 def _xgb_fold_sql(
@@ -3301,10 +3282,8 @@ def _xgb_pick_sql(
 def _xgb_step_sql(u: str, w: str) -> str:
     """One margin step on the 6-dp margin integer ``u``:
     round(sigmoid(logit(u/1e6) + w)·1e6)."""
-    return (
-        f"CAST(FLOOR((1.0 / (1.0 + EXP(-(LN(CAST({u} AS DOUBLE) "
-        f"/ (1000000 - {u})) + ({w}))))) * 1000000 + 0.5) AS BIGINT)"
-    )
+    sig = sql_sigmoid(f"LN(CAST({u} AS DOUBLE) / (1000000 - {u})) + ({w})")
+    return f"CAST(FLOOR(({sig}) * 1000000 + 0.5) AS BIGINT)"
 
 
 def _xgb_update_sql(u: str, w: str) -> str:
@@ -3797,10 +3776,11 @@ def _xgb_fit_cols_sql() -> list[str]:
     ]
 
 
-def _xgb_fit_oracle() -> str:
+def _xgb_fit_oracle(tail: str = "") -> str:
     """DuckDB twin: the q_xgb_round2 pick chain (p1, p2
     MATERIALIZED), then ONE fact fold to the bounded (u, b1, b2) cell
-    table; u2/u3 and the three LL terms are closed forms per cell."""
+    table; u2/u3 and the three LL terms are closed forms per cell.
+    ``tail`` replaces the LL fold after the live cell table s3v."""
     step1, step2 = (_xgb_fit_step_sql(*st) for st in _XGB_FIT_STEPS)
     return _xgb_boost_sql(
         1,
@@ -3814,14 +3794,17 @@ def _xgb_fit_oracle() -> str:
         f"s2 AS (SELECT cells.*, {step1} FROM cells, p1 WHERE TRUE), "
         f"s2v AS (SELECT * FROM s2 WHERE {_xgb_live_sql('u2')}), "
         f"s3 AS (SELECT s2v.*, {step2} FROM s2v AS s2v, p2), "
-        f"s3v AS (SELECT * FROM s3 WHERE {_xgb_live_sql('u3')}), "
-        "m AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
-        + ", ".join(
-            f"CAST(SUM({_xgb_ll_sql(u)}) AS HUGEINT) AS {o}"
-            for u, o in _XGB_LL_COLS
-        )
-        + " FROM s3v) "
-        f"SELECT {', '.join(_xgb_fit_cols_sql())} FROM m",
+        f"s3v AS (SELECT * FROM s3 WHERE {_xgb_live_sql('u3')})"
+        + (
+            tail
+            or ", m AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
+            + ", ".join(
+                f"CAST(SUM({_xgb_ll_sql(u)}) AS HUGEINT) AS {o}"
+                for u, o in _XGB_LL_COLS
+            )
+            + " FROM s3v) "
+            f"SELECT {', '.join(_xgb_fit_cols_sql())} FROM m"
+        ),
     )
 
 

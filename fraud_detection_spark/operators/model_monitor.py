@@ -8,14 +8,44 @@ SQL rollups gesture at. This module adds the canonical monitoring
 battery a fraud team runs on a deployed scorer, each SQL-expressible
 so the DuckDB oracle verifies it bit-exactly:
 
-- q_ks_stat        KS separation of the score distributions
-- q_psi            population-stability index (train vs holdout drift)
-- q_calibration    reliability curve (predicted vs observed rate)
-- q_lift_bands     cumulative gains / lift by score band
-- q_benford        first-significant-digit law on amounts
-- q_target_encode  smoothed mean target encoding (leak-free broadcast)
-- q_woe_iv         weight-of-evidence + information value per category
-- q_velocity       per-user rolling velocity features (range window)
+- q_ks_stat             KS separation of the score distributions
+- q_psi                 population-stability index (train vs holdout drift)
+- q_calibration         reliability curve (predicted vs observed rate)
+- q_lift_bands          cumulative gains / lift by score band
+- q_benford             first-significant-digit law on amounts
+- q_target_encode       smoothed mean target encoding (leak-free broadcast)
+- q_woe_iv              weight-of-evidence + information value per category
+- q_velocity            per-user rolling velocity features (range window)
+- q_ab_test             two-proportion z-test between event variants
+- q_hourly_profile      hour-of-day volume profile and its z-scores
+- q_isotonic            isotonic (PAV) score calibration
+- q_champion_challenger served scorer vs the GBT ensemble on one scan
+- q_brier               Brier score
+- q_ece                 expected calibration error
+- q_drift_profile       per-feature PSI drift over decile bands
+- q_auc_by_segment      binned AUC per l_linestatus segment
+- q_threshold_sweep     precision / recall / F1 / Youden's J per threshold
+- q_spiegelhalter       decile calibration table with Spiegelhalter z
+- q_brier_decomp        Murphy decomposition of the binned Brier score
+- q_hosmer_lemeshow     Hosmer-Lemeshow goodness-of-fit statistic
+- q_calibration_slope   calibration slope / intercept (moment line)
+- q_pseudo_r2           McFadden and Nagelkerke pseudo-R²
+- q_lift_gain           cumulative gains / lift at score deciles
+- q_cal_in_large        calibration-in-the-large + overall Spiegelhalter z
+
+One text per formula: every computed column, aggregate and filter is
+ONE SQL text. The oracle embeds it; the Spark side evaluates the same
+text with ``selectExpr``, ``agg(F.expr(...))`` or ``filter(str)`` and
+keeps its own dataflow (``groupBy``, windows, broadcast cross joins).
+Where the dialects differ, the difference is a parameter of the
+function that writes the text: the exact-integer type (``wide``: DECIMAL(38,0) in Spark,
+HUGEINT in DuckDB), q_drift_profile's percentile call and array-index
+base (``duck``), and the epoch-seconds column (``sec``: ``ts_sec`` of
+``events_with_time`` in Spark, ``_SEC_SQL`` in DuckDB). Spark SQL parses
+a bare decimal literal (``1.0``) as DECIMAL, so a shared text uses one
+only where it meets a DOUBLE operand and writes ``CAST(x AS DOUBLE) / y``
+for a ratio of integers. Divisors that a degenerate input can zero are
+wrapped in NULLIF: DuckDB's x/0 is NULL, Spark's ANSI x/0 raises.
 
 Scale posture: every statistic is a hash aggregate with partial
 (map-side) combine; cumulative passes run over *bounded* band tables
@@ -29,33 +59,96 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from fraud_detection_spark.functions import fp_units, pround
-from fraud_detection_spark.operators.ml_metrics import SCORED_SQL, scored
+from fraud_detection_spark.operators.feature_eng import _TREE_SCORE_SQL
+from fraud_detection_spark.operators.ml_metrics import (
+    LABEL_SQL,
+    SCORE_SQL,
+    SCORED_SQL,
+    TRAIN_SQL,
+    scored,
+)
 from fraud_detection_spark.registry import query, sql_round
 from fraud_detection_spark.sources import events_with_time, load_table
 
+# epoch seconds of events.ts in DuckDB (Spark reads events_with_time's
+# ts_sec)
 _SEC_SQL = "(epoch_ns(ts) // 1000000000)"
+# the exact-integer type of the wide sums: Spark, DuckDB
+_DEC, _HUGE = "DECIMAL(38,0)", "HUGEINT"
+# the growing frame of every cumulative window
+_CUM = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 
-# Label fragment shared with the published model (ml_metrics.SCORED_SQL).
-_LABEL_SQL = "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END"
+
+def _name(item: str) -> str:
+    return item.rsplit(" AS ", 1)[-1]
+
+
+def _grouped(df: DataFrame, keys: list[str], aggs: list[str]) -> DataFrame:
+    """``df`` grouped by the ``keys`` items, folded by the ``aggs`` items."""
+    return df.groupBy(*map(F.expr, keys)).agg(*map(F.expr, aggs))
+
+
+def _group_sql(src: str, keys: list[str], aggs: list[str]) -> str:
+    """The oracle's _grouped: one SELECT over ``src`` (a table name or
+    a FROM tail)."""
+    return (
+        f"SELECT {', '.join([*keys, *aggs])} FROM {src} "
+        f"GROUP BY {', '.join(map(_name, keys))}"
+    )
+
+
+def _sel(src: str, items: list[str]) -> str:
+    return f"SELECT {', '.join(items)} FROM {src}"
+
+
+def _ratio(num: str, den: str) -> str:
+    """num/den in DOUBLE, NULL for a zero ``den`` on both engines."""
+    return f"CAST({num} AS DOUBLE) / NULLIF({den}, 0)"
+
+
+def _units(x: str, k: int = 1000000) -> str:
+    """``x`` in exact 1/``k`` fixed-point units (the fp_units rule):
+    round half up to a BIGINT before any sum, so a sum is exact and
+    layout-free."""
+    return f"CAST(FLOOR({x} * {k} + 0.5) AS BIGINT)"
+
+
+def _fp_mean(col: str = "score") -> str:
+    """Fixed-point mean of the 6-dp column ``col`` per group: an exact
+    BIGINT sum of its 1e-6 units over the group's COUNT."""
+    return f"CAST(SUM({_units(col)}) AS DOUBLE) / 1000000 / COUNT(*)"
+
+
+# score-band fold: positives and negatives per band
+_POS_NEG = ["SUM(label) AS pos", "COUNT(*) - SUM(label) AS neg"]
+
+
+def _band(k: int, name: str = "band", col: str = "score") -> str:
+    return f"CAST(FLOOR({col} * {k}) AS BIGINT) AS {name}"
+
+
+_KS_CUM = [
+    f"SUM(pos) OVER (ORDER BY bucket {_CUM}) AS cum_pos",
+    f"SUM(neg) OVER (ORDER BY bucket {_CUM}) AS cum_neg",
+    "SUM(pos) OVER () AS tot_pos",
+    "SUM(neg) OVER () AS tot_neg",
+]
+_KS = (
+    sql_round(
+        f"MAX(ABS({_ratio('cum_pos', 'tot_pos')} - {_ratio('cum_neg', 'tot_neg')}))", 6
+    )
+    + " AS ks"
+)
 
 
 @query(
     "q_ks_stat",
     oracle=(
-        f"WITH s AS ({SCORED_SQL}), b AS ("
-        "SELECT CAST(FLOOR(score * 1000) AS BIGINT) AS bucket, "
-        "SUM(label) AS pos, COUNT(*) - SUM(label) AS neg FROM s GROUP BY bucket), "
-        "c AS (SELECT "
-        "SUM(pos) OVER (ORDER BY bucket) AS cum_pos, "
-        "SUM(neg) OVER (ORDER BY bucket) AS cum_neg, "
-        "SUM(pos) OVER () AS tot_pos, SUM(neg) OVER () AS tot_neg FROM b) "
-        "SELECT " + sql_round(
-            "MAX(ABS(cum_pos * 1.0 / tot_pos - cum_neg * 1.0 / tot_neg))", 6
-        )
-        + " AS ks FROM c"
+        f"WITH s AS ({SCORED_SQL}), "
+        f"b AS ({_group_sql('s', [_band(1000, 'bucket')], _POS_NEG)}), "
+        f"c AS ({_sel('b', _KS_CUM)}) "
+        f"{_sel('c', [_KS])}"
     ),
     tags=("ml", "monitor"),
 )
@@ -70,53 +163,32 @@ def q_ks_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative window runs over that bounded bucket table only. The
     CDF ratios are integer/integer divisions — deterministic in IEEE
     double on both engines; MAX is order-free."""
-    s = scored(spark, sf_dir)
-    b = (
-        s.groupBy(F.floor(F.col("score") * 1000).cast("bigint").alias("bucket"))
-        .agg(
-            F.sum("label").alias("pos"),
-            (F.count("*") - F.sum("label")).alias("neg"),
-        )
-    )
-    w_cum = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.partitionBy()
-    c = b.select(
-        F.sum("pos").over(w_cum).alias("cum_pos"),
-        F.sum("neg").over(w_cum).alias("cum_neg"),
-        F.sum("pos").over(w_all).alias("tot_pos"),
-        F.sum("neg").over(w_all).alias("tot_neg"),
-    )
-    return c.agg(
-        pround(
-            F.max(
-                F.abs(
-                    F.col("cum_pos") * 1.0 / F.col("tot_pos")
-                    - F.col("cum_neg") * 1.0 / F.col("tot_neg")
-                )
-            ),
-            6,
-        ).alias("ks")
-    )
+    b = _grouped(scored(spark, sf_dir), [_band(1000, "bucket")], _POS_NEG)
+    return b.selectExpr(*_KS_CUM).agg(F.expr(_KS))
+
+
+# q_psi / q_drift_profile: expected (train) vs actual (holdout) counts
+_SPLIT_SUMS = [
+    "CAST(SUM(is_train) AS BIGINT) AS n_expected",
+    "CAST(SUM(1 - is_train) AS BIGINT) AS n_actual",
+]
+_SPLIT_TOT = ["SUM(n_expected) AS tot_e", "SUM(n_actual) AS tot_a"]
+_PSI_ROWS = ["score", f"{TRAIN_SQL} AS is_train"]
+_PSI_A, _PSI_E = _ratio("n_actual", "tot_a"), _ratio("n_expected", "tot_e")
+_PSI_TERM = (
+    sql_round(f"({_PSI_A} - {_PSI_E}) * LN(NULLIF({_PSI_A}, 0) / NULLIF({_PSI_E}, 0))", 6)
+    + " AS psi_term"
+)
 
 
 @query(
     "q_psi",
     oracle=(
-        f"WITH s AS ({SCORED_SQL}), sp AS ("
-        "SELECT score, CASE WHEN (l_orderkey * 2654435761 + l_linenumber) % 1000 < 800 "
-        "THEN 1 ELSE 0 END AS is_train FROM s), "
-        "b AS (SELECT CAST(FLOOR(score * 10) AS BIGINT) AS band, "
-        "SUM(is_train) AS n_expected, SUM(1 - is_train) AS n_actual FROM sp GROUP BY band), "
-        "t AS (SELECT band, n_expected, n_actual, "
-        "SUM(n_expected) OVER () AS tot_e, SUM(n_actual) OVER () AS tot_a FROM b) "
-        "SELECT band, CAST(n_expected AS BIGINT) AS n_expected, "
-        "CAST(n_actual AS BIGINT) AS n_actual, "
-        + sql_round(
-            "(n_actual * 1.0 / tot_a - n_expected * 1.0 / tot_e) "
-            "* LN((n_actual * 1.0 / tot_a) / NULLIF(n_expected * 1.0 / tot_e, 0))",
-            6,
-        )
-        + " AS psi_term FROM t"
+        f"WITH s AS ({SCORED_SQL}), "
+        f"sp AS ({_sel('s', _PSI_ROWS)}), "
+        f"b AS ({_group_sql('sp', [_band(10)], _SPLIT_SUMS)}), "
+        f"t AS ({_sel('b', _SPLIT_TOT)}) "
+        + _sel("b, t", ["band", "n_expected", "n_actual", _PSI_TERM])
     ),
     tags=("ml", "monitor"),
 )
@@ -132,50 +204,24 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One hash aggregate to ≤11 bands; totals broadcast back. Empty
     bands yield NULL terms (NULLIF guard) rather than ±inf."""
-    s = scored(spark, sf_dir)
-    sp = s.select(
-        "score",
-        F.when(
-            (F.col("l_orderkey") * F.lit(2654435761) + F.col("l_linenumber")) % 1000 < 800, 1
-        )
-        .otherwise(0)
-        .alias("is_train"),
+    sp = scored(spark, sf_dir).selectExpr(*_PSI_ROWS)
+    b = _grouped(sp, [_band(10)], _SPLIT_SUMS)
+    tot = b.selectExpr(*_SPLIT_TOT)
+    return b.crossJoin(F.broadcast(tot)).selectExpr(
+        "band", "n_expected", "n_actual", _PSI_TERM
     )
-    b = (
-        sp.groupBy(F.floor(F.col("score") * 10).cast("bigint").alias("band"))
-        .agg(
-            F.sum("is_train").alias("n_expected"),
-            F.sum(1 - F.col("is_train")).alias("n_actual"),
-        )
-    )
-    tot = b.agg(
-        F.sum("n_expected").alias("tot_e"), F.sum("n_actual").alias("tot_a")
-    )
-    p_a = F.col("n_actual") * 1.0 / F.col("tot_a")
-    p_e = F.col("n_expected") * 1.0 / F.col("tot_e")
-    return b.crossJoin(F.broadcast(tot)).select(
-        "band",
-        F.col("n_expected").cast("bigint").alias("n_expected"),
-        F.col("n_actual").cast("bigint").alias("n_actual"),
-        pround((p_a - p_e) * F.log(p_a / F.nullif(p_e, F.lit(0))), 6).alias("psi_term"),
-    )
+
+
+_CALIBRATION = [
+    "CAST(COUNT(*) AS BIGINT) AS n",
+    sql_round(_fp_mean(), 6) + " AS mean_score",
+    sql_round("CAST(SUM(label) AS DOUBLE) / COUNT(*)", 6) + " AS pos_rate",
+]
 
 
 @query(
     "q_calibration",
-    oracle=(
-        f"WITH s AS ({SCORED_SQL}) "
-        "SELECT CAST(FLOOR(score * 20) AS BIGINT) AS band, "
-        "CAST(COUNT(*) AS BIGINT) AS n, "
-        + sql_round(
-            "CAST(SUM(CAST(FLOOR(score * 1000000 + 0.5) AS BIGINT)) AS DOUBLE) "
-            "/ 1000000 / COUNT(*)",
-            6,
-        )
-        + " AS mean_score, "
-        + sql_round("SUM(label) * 1.0 / COUNT(*)", 6)
-        + " AS pos_rate FROM s GROUP BY band"
-    ),
+    oracle=f"WITH s AS ({SCORED_SQL}) " + _group_sql("s", [_band(20)], _CALIBRATION),
     tags=("ml", "monitor"),
 )
 def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -186,33 +232,36 @@ def q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Single hash aggregate (map-side combinable). Mean score uses exact
     fixed-point units (scores are pre-rounded to 6 dp) so the result is
     layout- and engine-independent; pos_rate is integer/integer."""
-    s = scored(spark, sf_dir)
-    return (
-        s.groupBy(F.floor(F.col("score") * 20).cast("bigint").alias("band"))
-        .agg(
-            F.count("*").alias("n"),
-            pround(
-                F.sum(fp_units(F.col("score"), 6)).cast("double") / 1000000 / F.count("*"), 6
-            ).alias("mean_score"),
-            pround(F.sum("label") * 1.0 / F.count("*"), 6).alias("pos_rate"),
-        )
+    return _grouped(scored(spark, sf_dir), [_band(20)], _CALIBRATION)
+
+
+_LIFT_CUM = [
+    "band",
+    "n",
+    f"SUM(n) OVER (ORDER BY band DESC {_CUM}) AS cum_n",
+    f"SUM(pos) OVER (ORDER BY band DESC {_CUM}) AS cum_pos",
+    "SUM(n) OVER () AS tot_n",
+    "SUM(pos) OVER () AS tot_pos",
+]
+_LIFT_OUT = [
+    "band",
+    "CAST(n AS BIGINT) AS n_band",
+    "CAST(cum_n AS BIGINT) AS cum_n",
+    sql_round(_ratio("cum_pos", "tot_pos"), 6) + " AS capture",
+    sql_round(
+        "(CAST(cum_pos AS DOUBLE) / cum_n) / NULLIF(CAST(tot_pos AS DOUBLE) / tot_n, 0)", 6
     )
+    + " AS lift",
+]
 
 
 @query(
     "q_lift_bands",
     oracle=(
-        f"WITH s AS ({SCORED_SQL}), b AS ("
-        "SELECT CAST(FLOOR(score * 10) AS BIGINT) AS band, "
-        "COUNT(*) AS n, SUM(label) AS pos FROM s GROUP BY band), "
-        "c AS (SELECT band, n, "
-        "SUM(n) OVER (ORDER BY band DESC) AS cum_n, "
-        "SUM(pos) OVER (ORDER BY band DESC) AS cum_pos, "
-        "SUM(n) OVER () AS tot_n, SUM(pos) OVER () AS tot_pos FROM b) "
-        "SELECT band, CAST(n AS BIGINT) AS n_band, CAST(cum_n AS BIGINT) AS cum_n, "
-        + sql_round("cum_pos * 1.0 / tot_pos", 6) + " AS capture, "
-        + sql_round("(cum_pos * 1.0 / cum_n) / (tot_pos * 1.0 / tot_n)", 6)
-        + " AS lift FROM c"
+        f"WITH s AS ({SCORED_SQL}), "
+        f"b AS ({_group_sql('s', [_band(10)], ['COUNT(*) AS n', 'SUM(label) AS pos'])}), "
+        f"c AS ({_sel('b', _LIFT_CUM)}) "
+        + _sel("c", _LIFT_OUT)
     ),
     tags=("ml", "monitor"),
 )
@@ -225,46 +274,31 @@ def q_lift_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash aggregate to ≤11 bands, then cumulative windows over that
     bounded band table only (q_roc_points pattern). All emitted ratios
     are integer/integer divisions — engine-exact."""
-    s = scored(spark, sf_dir)
-    b = (
-        s.groupBy(F.floor(F.col("score") * 10).cast("bigint").alias("band"))
-        .agg(F.count("*").alias("n"), F.sum("label").alias("pos"))
-    )
-    w_cum = Window.orderBy(F.desc("band")).rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.partitionBy()
-    c = b.select(
-        "band",
-        F.col("n"),
-        F.sum("n").over(w_cum).alias("cum_n"),
-        F.sum("pos").over(w_cum).alias("cum_pos"),
-        F.sum("n").over(w_all).alias("tot_n"),
-        F.sum("pos").over(w_all).alias("tot_pos"),
-    )
-    return c.select(
-        "band",
-        F.col("n").cast("bigint").alias("n_band"),
-        F.col("cum_n").cast("bigint").alias("cum_n"),
-        pround(F.col("cum_pos") * 1.0 / F.col("tot_pos"), 6).alias("capture"),
-        pround(
-            (F.col("cum_pos") * 1.0 / F.col("cum_n"))
-            / (F.col("tot_pos") * 1.0 / F.col("tot_n")),
-            6,
-        ).alias("lift"),
-    )
+    b = _grouped(scored(spark, sf_dir), [_band(10)], ["COUNT(*) AS n", "SUM(label) AS pos"])
+    return b.selectExpr(*_LIFT_CUM).selectExpr(*_LIFT_OUT)
+
+
+_DIGIT = (
+    f"CAST(SUBSTRING(CAST({_units('l_extendedprice', 100)} AS STRING), 1, 1) AS INT) AS digit"
+)
+_BENFORD_OBS = "CAST(n AS DOUBLE) / tot"
+_BENFORD_LAW = "LOG10(1.0 + 1.0 / CAST(digit AS DOUBLE))"
+_BENFORD_OUT = [
+    "digit",
+    "CAST(n AS BIGINT) AS n",
+    sql_round(_BENFORD_OBS, 6) + " AS obs_frac",
+    sql_round(_BENFORD_LAW, 6) + " AS benford_frac",
+    sql_round(f"{_BENFORD_OBS} - {_BENFORD_LAW}", 6) + " AS delta",
+]
 
 
 @query(
     "q_benford",
     oracle=(
-        "WITH d AS (SELECT CAST(SUBSTRING(CAST(CAST(FLOOR(l_extendedprice * 100 + 0.5) "
-        "AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit FROM lineitem), "
-        "g AS (SELECT digit, COUNT(*) AS n FROM d GROUP BY digit), "
-        "t AS (SELECT digit, n, SUM(n) OVER () AS tot FROM g) "
-        "SELECT digit, CAST(n AS BIGINT) AS n, "
-        + sql_round("n * 1.0 / tot", 6) + " AS obs_frac, "
-        + sql_round("LOG10(1.0 + 1.0 / digit)", 6) + " AS benford_frac, "
-        + sql_round("n * 1.0 / tot - LOG10(1.0 + 1.0 / digit)", 6)
-        + " AS delta FROM t"
+        f"WITH d AS ({_sel('lineitem', [_DIGIT])}), "
+        f"g AS ({_group_sql('d', ['digit'], ['COUNT(*) AS n'])}), "
+        "t AS (SELECT SUM(n) AS tot FROM g) "
+        + _sel("g, t", _BENFORD_OUT)
     ),
     tags=("fraud", "monitor"),
 )
@@ -279,41 +313,29 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     floating log10/power-of-ten division, which disagrees between
     engines at exact powers of ten. One hash aggregate to 9 rows."""
     li = load_table(spark, sf_dir, "lineitem")
-    digit = (
-        F.substring(
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("bigint")
-            .cast("string"),
-            1,
-            1,
-        )
-        .cast("int")
-        .alias("digit")
-    )
-    g = li.select(digit).groupBy("digit").agg(F.count("*").alias("n"))
-    tot = g.agg(F.sum("n").alias("tot"))
-    obs = F.col("n") * 1.0 / F.col("tot")
-    benford = F.log10(F.lit(1.0) + F.lit(1.0) / F.col("digit"))
-    return g.crossJoin(F.broadcast(tot)).select(
-        "digit",
-        F.col("n").cast("bigint").alias("n"),
-        pround(obs, 6).alias("obs_frac"),
-        pround(benford, 6).alias("benford_frac"),
-        pround(obs - benford, 6).alias("delta"),
-    )
+    g = _grouped(li.selectExpr(_DIGIT), ["digit"], ["COUNT(*) AS n"])
+    tot = g.selectExpr("SUM(n) AS tot")
+    return g.crossJoin(F.broadcast(tot)).selectExpr(*_BENFORD_OUT)
+
+
+_TE_ROWS = ["l_orderkey", "l_linenumber", "l_suppkey", f"{LABEL_SQL} AS label"]
+_TE_ENC = ["SUM(label) AS pos_c", "COUNT(*) AS n_c"]
+_TE_PRIOR = "CAST(SUM(pos_c) AS DOUBLE) / SUM(n_c) AS prior"
+_TE_OUT = [
+    "l_orderkey",
+    "l_linenumber",
+    "l_suppkey",
+    sql_round("(pos_c + prior * 100.0) / (CAST(n_c AS DOUBLE) + 100.0)", 6) + " AS te",
+]
 
 
 @query(
     "q_target_encode",
     oracle=(
-        f"WITH l AS (SELECT l_orderkey, l_linenumber, l_suppkey, {_LABEL_SQL} AS label "
-        "FROM lineitem), "
-        "enc AS (SELECT l_suppkey, SUM(label) AS pos_c, COUNT(*) AS n_c FROM l "
-        "GROUP BY l_suppkey), "
-        "pri AS (SELECT SUM(pos_c) * 1.0 / SUM(n_c) AS prior FROM enc) "
-        "SELECT l.l_orderkey, l.l_linenumber, l.l_suppkey, "
-        + sql_round("(enc.pos_c + 100.0 * pri.prior) / (enc.n_c + 100.0)", 6)
-        + " AS te FROM l JOIN enc ON l.l_suppkey = enc.l_suppkey CROSS JOIN pri"
+        f"WITH l AS ({_sel('lineitem', _TE_ROWS)}), "
+        f"enc AS ({_group_sql('l', ['l_suppkey'], _TE_ENC)}), "
+        f"pri AS ({_sel('enc', [_TE_PRIOR])}) "
+        + _sel("l JOIN enc USING (l_suppkey) CROSS JOIN pri", _TE_OUT)
     ),
     tags=("ml", "feature"),
 )
@@ -329,51 +351,37 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto the fact scan — the fact table itself never shuffles. At a
     cardinality too big to broadcast, the same plan degrades to one
     shuffle join on the encode key."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_suppkey",
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("label"),
-    )
-    enc = li.groupBy("l_suppkey").agg(
-        F.sum("label").alias("pos_c"), F.count("*").alias("n_c")
-    )
-    pri = enc.agg((F.sum("pos_c") * 1.0 / F.sum("n_c")).alias("prior"))
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(*_TE_ROWS)
+    enc = _grouped(li, ["l_suppkey"], _TE_ENC)
+    pri = enc.selectExpr(_TE_PRIOR)
     return (
         li.join(F.broadcast(enc), "l_suppkey")
         .crossJoin(F.broadcast(pri))
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_suppkey",
-            pround(
-                (F.col("pos_c") + 100.0 * F.col("prior")) / (F.col("n_c") + 100.0), 6
-            ).alias("te"),
-        )
+        .selectExpr(*_TE_OUT)
     )
+
+
+_WOE_ROWS = ["CAST(FLOOR((l_quantity - 1) / 10) AS BIGINT) AS qty_bin", f"{LABEL_SQL} AS label"]
+_WOE_SUMS = ["SUM(label) AS pos_c", "COUNT(*) - SUM(label) AS neg_c"]
+_WOE_TOT = ["SUM(pos_c) AS pos_tot", "SUM(neg_c) AS neg_tot"]
+_WOE_P, _WOE_Q = _ratio("pos_c", "pos_tot"), _ratio("neg_c", "neg_tot")
+_WOE = f"LN(({_WOE_P}) / NULLIF({_WOE_Q}, 0))"
+_WOE_OUT = [
+    "qty_bin",
+    "CAST(pos_c AS BIGINT) AS pos_c",
+    "CAST(neg_c AS BIGINT) AS neg_c",
+    sql_round(_WOE, 6) + " AS woe",
+    sql_round(f"({_WOE_P} - {_WOE_Q}) * {_WOE}", 6) + " AS iv_term",
+]
 
 
 @query(
     "q_woe_iv",
     oracle=(
-        f"WITH l AS (SELECT CAST(FLOOR((l_quantity - 1) / 10) AS BIGINT) AS qty_bin, "
-        f"{_LABEL_SQL} AS label FROM lineitem), "
-        "g AS (SELECT qty_bin, SUM(label) AS pos_c, COUNT(*) - SUM(label) AS neg_c "
-        "FROM l GROUP BY qty_bin), "
-        "t AS (SELECT qty_bin, pos_c, neg_c, "
-        "SUM(pos_c) OVER () AS pos_tot, SUM(neg_c) OVER () AS neg_tot FROM g) "
-        "SELECT qty_bin, CAST(pos_c AS BIGINT) AS pos_c, "
-        "CAST(neg_c AS BIGINT) AS neg_c, "
-        + sql_round(
-            "LN((pos_c * 1.0 / pos_tot) / NULLIF(neg_c * 1.0 / neg_tot, 0))", 6
-        )
-        + " AS woe, "
-        + sql_round(
-            "(pos_c * 1.0 / pos_tot - neg_c * 1.0 / neg_tot) "
-            "* LN((pos_c * 1.0 / pos_tot) / NULLIF(neg_c * 1.0 / neg_tot, 0))",
-            6,
-        )
-        + " AS iv_term FROM t"
+        f"WITH l AS ({_sel('lineitem', _WOE_ROWS)}), "
+        f"g AS ({_group_sql('l', ['qty_bin'], _WOE_SUMS)}), "
+        f"t AS ({_sel('g', _WOE_TOT)}) "
+        + _sel("g, t", _WOE_OUT)
     ),
     tags=("ml", "feature"),
 )
@@ -386,44 +394,38 @@ def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One hash aggregate; totals broadcast back onto the ≤|bins| row
     table. Zero-count bins yield NULL (NULLIF guard)."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.floor((F.col("l_quantity") - 1) / 10).cast("bigint").alias("qty_bin"),
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("label"),
+    li = load_table(spark, sf_dir, "lineitem").selectExpr(*_WOE_ROWS)
+    g = _grouped(li, ["qty_bin"], _WOE_SUMS)
+    tot = g.selectExpr(*_WOE_TOT)
+    return g.crossJoin(F.broadcast(tot)).selectExpr(*_WOE_OUT)
+
+
+def _velocity_frame(secs: int) -> str:
+    return (
+        f"OVER (PARTITION BY user_id ORDER BY ts_sec "
+        f"RANGE BETWEEN {secs} PRECEDING AND CURRENT ROW)"
     )
-    g = li.groupBy("qty_bin").agg(
-        F.sum("label").alias("pos_c"),
-        (F.count("*") - F.sum("label")).alias("neg_c"),
+
+
+_VELOCITY = [
+    "event_id",
+    "user_id",
+    "CAST(ts_sec AS BIGINT) AS ts_sec",
+    f"CAST(COUNT(*) {_velocity_frame(3600)} AS BIGINT) AS n_1h",
+    f"CAST(COUNT(*) {_velocity_frame(86400)} AS BIGINT) AS n_24h",
+    sql_round(
+        f"CAST(SUM({_units('value', 10000)}) {_velocity_frame(3600)} AS DOUBLE) / 10000",
+        4,
     )
-    tot = g.agg(F.sum("pos_c").alias("pos_tot"), F.sum("neg_c").alias("neg_tot"))
-    p = F.col("pos_c") * 1.0 / F.col("pos_tot")
-    q = F.col("neg_c") * 1.0 / F.col("neg_tot")
-    woe = F.log(p / F.nullif(q, F.lit(0)))
-    return g.crossJoin(F.broadcast(tot)).select(
-        "qty_bin",
-        F.col("pos_c").cast("bigint").alias("pos_c"),
-        F.col("neg_c").cast("bigint").alias("neg_c"),
-        pround(woe, 6).alias("woe"),
-        pround((p - q) * woe, 6).alias("iv_term"),
-    )
+    + " AS amt_1h",
+]
 
 
 @query(
     "q_velocity",
     oracle=(
         f"WITH e AS (SELECT event_id, user_id, {_SEC_SQL} AS ts_sec, value FROM events) "
-        "SELECT event_id, user_id, CAST(ts_sec AS BIGINT) AS ts_sec, "
-        "CAST(COUNT(*) OVER w1 AS BIGINT) AS n_1h, "
-        "CAST(COUNT(*) OVER w24 AS BIGINT) AS n_24h, "
-        + sql_round(
-            "CAST(SUM(CAST(FLOOR(value * 10000 + 0.5) AS BIGINT)) OVER w1 AS DOUBLE) "
-            "/ 10000",
-            4,
-        )
-        + " AS amt_1h FROM e WINDOW "
-        "w1 AS (PARTITION BY user_id ORDER BY ts_sec "
-        "RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW), "
-        "w24 AS (PARTITION BY user_id ORDER BY ts_sec "
-        "RANGE BETWEEN 86400 PRECEDING AND CURRENT ROW)"
+        + _sel("e", _VELOCITY)
     ),
     tags=("fraud", "feature", "window"),
 )
@@ -440,47 +442,37 @@ def q_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot move the result; COUNT frames are integer-exact. This is
     also the batch twin of the streaming stateful form
     (applyInPandasWithState keyed by user_id)."""
-    ev = events_with_time(spark, sf_dir)
-    w1 = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_sec")
-        .rangeBetween(-3600, 0)
+    return events_with_time(spark, sf_dir).selectExpr(*_VELOCITY)
+
+
+_AB_FILTER = "event_type IN ('click', 'purchase')"
+_AB_SUMS = [
+    "CAST(COUNT(*) AS BIGINT) AS n",
+    "CAST(SUM(CASE WHEN value > 100.0 THEN 1 ELSE 0 END) AS BIGINT) AS conv",
+]
+_AB_TOT = ["SUM(n) AS n_all", "SUM(conv) AS conv_all"]
+_AB_P, _AB_P_ALL = "CAST(conv AS DOUBLE) / n", "CAST(conv_all AS DOUBLE) / n_all"
+_AB_OUT = [
+    "variant",
+    "n",
+    "conv",
+    sql_round(_AB_P, 6) + " AS rate",
+    sql_round(
+        f"({_AB_P} - {_AB_P_ALL}) / SQRT({_AB_P_ALL} * (1.0 - {_AB_P_ALL}) "
+        f"* (1.0 / CAST(n AS DOUBLE) + 1.0 / NULLIF(CAST(n_all - n AS DOUBLE), 0)))",
+        6,
     )
-    w24 = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_sec")
-        .rangeBetween(-86400, 0)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.col("ts_sec").cast("bigint").alias("ts_sec"),
-        F.count(F.lit(1)).over(w1).cast("bigint").alias("n_1h"),
-        F.count(F.lit(1)).over(w24).cast("bigint").alias("n_24h"),
-        pround(
-            F.sum(fp_units(F.col("value"), 4)).over(w1).cast("double") / 10000, 4
-        ).alias("amt_1h"),
-    )
+    + " AS z",
+]
 
 
 @query(
     "q_ab_test",
     oracle=(
-        "WITH g AS (SELECT event_type AS variant, "
-        "CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(CASE WHEN value > 100.0 THEN 1 ELSE 0 END) AS BIGINT) AS conv "
-        "FROM events WHERE event_type IN ('click', 'purchase') GROUP BY variant), "
-        "w AS (SELECT variant, n, conv, "
-        "SUM(n) OVER () AS n_all, SUM(conv) OVER () AS conv_all FROM g) "
-        "SELECT variant, n, conv, "
-        + sql_round("conv * 1.0 / n", 6) + " AS rate, "
-        + sql_round(
-            "(conv * 1.0 / n - conv_all * 1.0 / n_all) / "
-            "SQRT((conv_all * 1.0 / n_all) * (1.0 - conv_all * 1.0 / n_all) "
-            "* (1.0 / n + 1.0 / (n_all - n)))",
-            6,
-        )
-        + " AS z FROM w"
+        "WITH g AS ("
+        + _group_sql(f"events WHERE {_AB_FILTER}", ["event_type AS variant"], _AB_SUMS)
+        + f"), w AS ({_sel('g', _AB_TOT)}) "
+        + _sel("g, w", _AB_OUT)
     ),
     tags=("ml", "monitor", "stats"),
 )
@@ -494,44 +486,45 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over that 2-row table. All inputs to the z formula are
     integer counts, so both engines evaluate the identical float
     expression."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("click", "purchase")
-    )
-    g = ev.groupBy(F.col("event_type").alias("variant")).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(F.when(F.col("value") > 100.0, 1).otherwise(0))
-        .cast("bigint")
-        .alias("conv"),
-    )
-    tot = g.agg(F.sum("n").alias("n_all"), F.sum("conv").alias("conv_all"))
-    p = F.col("conv") * 1.0 / F.col("n")
-    p_all = F.col("conv_all") * 1.0 / F.col("n_all")
-    z = (p - p_all) / F.sqrt(
-        p_all * (1.0 - p_all) * (1.0 / F.col("n") + 1.0 / (F.col("n_all") - F.col("n")))
-    )
-    return g.crossJoin(F.broadcast(tot)).select(
-        "variant",
-        "n",
-        "conv",
-        pround(p, 6).alias("rate"),
-        pround(z, 6).alias("z"),
-    )
+    ev = load_table(spark, sf_dir, "events").filter(_AB_FILTER)
+    g = _grouped(ev, ["event_type AS variant"], _AB_SUMS)
+    tot = g.selectExpr(*_AB_TOT)
+    return g.crossJoin(F.broadcast(tot)).selectExpr(*_AB_OUT)
+
+
+def _hod_sql(sec: str) -> str:
+    """Hour of day of the epoch-seconds column ``sec``."""
+    return f"CAST(FLOOR(({sec} % 86400) / 3600) AS BIGINT) AS hod"
+
+
+_HOURLY_SUMS = [
+    "CAST(COUNT(*) AS BIGINT) AS n",
+    f"CAST(SUM({_units('value', 10000)}) AS DOUBLE) / 10000 AS sum_value",
+]
+_HOURLY_BASE = [
+    "hod",
+    "n",
+    "sum_value",
+    "AVG(CAST(n AS DOUBLE)) OVER () AS mu",
+    "STDDEV_SAMP(CAST(n AS DOUBLE)) OVER () AS sd",
+    "SUM(n) OVER () AS n_all",
+]
+_HOURLY_OUT = [
+    "hod",
+    "n",
+    sql_round("CAST(n AS DOUBLE) / n_all", 6) + " AS share",
+    sql_round("sum_value / n", 4) + " AS mean_value",
+    sql_round("(n - mu) / NULLIF(sd, 0)", 6) + " AS volume_z",
+]
 
 
 @query(
     "q_hourly_profile",
     oracle=(
-        f"WITH e AS (SELECT ({_SEC_SQL} % 86400) // 3600 AS hod, value FROM events), "
-        "g AS (SELECT hod, CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(CAST(FLOOR(value * 10000 + 0.5) AS BIGINT)) AS DOUBLE) / 10000 "
-        "AS sum_value FROM e GROUP BY hod), "
-        "w AS (SELECT hod, n, sum_value, "
-        "AVG(n * 1.0) OVER () AS mu, STDDEV_SAMP(n * 1.0) OVER () AS sd, "
-        "SUM(n) OVER () AS n_all FROM g) "
-        "SELECT CAST(hod AS BIGINT) AS hod, n, "
-        + sql_round("n * 1.0 / n_all", 6) + " AS share, "
-        + sql_round("sum_value / n", 4) + " AS mean_value, "
-        + sql_round("(n - mu) / sd", 6) + " AS volume_z FROM w"
+        f"WITH e AS (SELECT {_hod_sql(_SEC_SQL)}, value FROM events), "
+        f"g AS ({_group_sql('e', ['hod'], _HOURLY_SUMS)}), "
+        f"w AS ({_sel('g', _HOURLY_BASE)}) "
+        + _sel("w", _HOURLY_OUT)
     ),
     tags=("fraud", "monitor", "window"),
 )
@@ -546,33 +539,9 @@ def q_hourly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats ride a window over that bounded table. Value sums are exact
     fixed-point units; n is integer; the z division is the only float
     step and is identical in both engines."""
-    ev = events_with_time(spark, sf_dir)
-    g = (
-        ev.select(((F.col("ts_sec") % 86400) / 3600).cast("bigint").alias("hod"), "value")
-        .groupBy("hod")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            (F.sum(fp_units(F.col("value"), 4)).cast("double") / 10000).alias(
-                "sum_value"
-            ),
-        )
-    )
-    w_all = Window.partitionBy()
-    w = g.select(
-        "hod",
-        "n",
-        "sum_value",
-        F.avg(F.col("n") * 1.0).over(w_all).alias("mu"),
-        F.stddev_samp(F.col("n") * 1.0).over(w_all).alias("sd"),
-        F.sum("n").over(w_all).alias("n_all"),
-    )
-    return w.select(
-        "hod",
-        "n",
-        pround(F.col("n") * 1.0 / F.col("n_all"), 6).alias("share"),
-        pround(F.col("sum_value") / F.col("n"), 4).alias("mean_value"),
-        pround((F.col("n") - F.col("mu")) / F.col("sd"), 6).alias("volume_z"),
-    )
+    ev = events_with_time(spark, sf_dir).selectExpr(_hod_sql("ts_sec"), "value")
+    g = _grouped(ev, ["hod"], _HOURLY_SUMS)
+    return g.selectExpr(*_HOURLY_BASE).selectExpr(*_HOURLY_OUT)
 
 
 def _pav(rates: list[float], weights: list[float]) -> list[float]:
@@ -596,38 +565,46 @@ def _pav(rates: list[float], weights: list[float]) -> list[float]:
     return res
 
 
-def _isotonic_oracle() -> str:
-    return (
-        f"WITH s AS ({SCORED_SQL}), "
-        "bands AS (SELECT CAST(FLOOR(score * 50) AS BIGINT) AS band, "
-        "CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(label) AS BIGINT) AS pos, "
-        "CAST(SUM(CAST(FLOOR(score * 1000000 + 0.5) AS BIGINT)) AS BIGINT)"
-        " AS su FROM s GROUP BY band), "
-        "c AS (SELECT band, n, pos, su, "
-        "CAST(SUM(pos) OVER (ORDER BY band) AS BIGINT) AS cp, "
-        "CAST(SUM(n) OVER (ORDER BY band) AS BIGINT) AS cw FROM bands), "
-        # pairs (a <= b): pooled mean over bands [a..b] is a ratio of
-        # integer prefix-sum differences — Σpos/Σn, no float folding
-        "pairs AS (SELECT a.band AS ab, b.band AS bb, "
-        "CAST(b.cp - (a.cp - a.pos) AS DOUBLE) / "
-        "CAST(b.cw - (a.cw - a.n) AS DOUBLE) AS m "
-        "FROM c a JOIN c b ON a.band <= b.band), "
-        "m2 AS (SELECT ab, bb, MIN(m) OVER (PARTITION BY ab ORDER BY bb DESC "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mn FROM pairs), "
-        "fit AS (SELECT ab, bb, MAX(mn) OVER (PARTITION BY bb ORDER BY ab "
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fitted "
-        "FROM m2) "
-        "SELECT bands.band, bands.n, "
-        + sql_round("fit.fitted", 6) + " AS rate_cal, "
-        + sql_round("CAST(bands.su AS DOUBLE) / 1000000 / bands.n", 6)
-        + " AS mean_score "
-        "FROM bands JOIN fit ON bands.band = fit.bb AND fit.ab = fit.bb"
-    )
+_ISO_BANDS = [
+    "CAST(COUNT(*) AS BIGINT) AS n",
+    "CAST(SUM(label) AS BIGINT) AS pos",
+    f"CAST(SUM({_units('score')}) AS BIGINT) AS su",
+]
+_ISO_CUM = [
+    "band",
+    "n",
+    "pos",
+    "su",
+    f"CAST(SUM(pos) OVER (ORDER BY band {_CUM}) AS BIGINT) AS cp",
+    f"CAST(SUM(n) OVER (ORDER BY band {_CUM}) AS BIGINT) AS cw",
+]
+# pairs (a <= b): pooled mean over bands [a..b] is a ratio of integer
+# prefix-sum differences — Σpos/Σn, no float folding
+_ISO_A = ["band AS ab", "cp - pos AS cpm", "cw - n AS cwm"]
+_ISO_B = ["band AS bb", "cp", "cw"]
+_ISO_PAIR = ["ab", "bb", "CAST(cp - cpm AS DOUBLE) / CAST(cw - cwm AS DOUBLE) AS m"]
+_ISO_MIN = ["ab", "bb", f"MIN(m) OVER (PARTITION BY ab ORDER BY bb DESC {_CUM}) AS mn"]
+_ISO_MAX = ["ab", "bb", f"MAX(mn) OVER (PARTITION BY bb ORDER BY ab {_CUM}) AS fitted"]
+_ISO_OUT = [
+    "band",
+    "n",
+    sql_round("fitted", 6) + " AS rate_cal",
+    sql_round("CAST(su AS DOUBLE) / 1000000 / n", 6) + " AS mean_score",
+]
 
 
 @query(
     "q_isotonic",
-    oracle=_isotonic_oracle(),
+    oracle=(
+        f"WITH s AS ({SCORED_SQL}), "
+        f"bands AS ({_group_sql('s', [_band(50)], _ISO_BANDS)}), "
+        f"c AS ({_sel('bands', _ISO_CUM)}), "
+        f"a AS ({_sel('c', _ISO_A)}), b AS ({_sel('c', _ISO_B)}), "
+        f"pairs AS ({_sel('a JOIN b ON ab <= bb', _ISO_PAIR)}), "
+        f"m2 AS ({_sel('pairs', _ISO_MIN)}), "
+        f"fit AS ({_sel('m2', _ISO_MAX)}) "
+        + _sel("bands JOIN (SELECT bb AS band, fitted FROM fit WHERE ab = bb) USING (band)", _ISO_OUT)
+    ),
     tags=("ml", "monitor", "calibration"),
 )
 def q_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,98 +634,38 @@ def q_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(bands^2) pair table is <=1326 rows with two GROWING-frame
     windows over it — bounded metadata, fully lazy/declarative, no
     driver collect."""
-    s = scored(spark, sf_dir)
-    bands = s.groupBy(
-        F.floor(F.col("score") * 50).cast("bigint").alias("band")
-    ).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("label").cast("bigint").alias("pos"),
-        F.sum(fp_units(F.col("score"), 6)).cast("bigint").alias("su"),
-    )
-    w_cum = Window.orderBy("band").rowsBetween(Window.unboundedPreceding, 0)
-    c = bands.select(
-        "band",
-        "n",
-        "pos",
-        "su",
-        F.sum("pos").over(w_cum).cast("bigint").alias("cp"),
-        F.sum("n").over(w_cum).cast("bigint").alias("cw"),
-    )
-    a = c.select(
-        F.col("band").alias("ab"),
-        (F.col("cp") - F.col("pos")).alias("cpm"),
-        (F.col("cw") - F.col("n")).alias("cwm"),
-    )
-    b = c.select(F.col("band").alias("bb"), "cp", "cw")
-    pairs = a.join(b, F.col("ab") <= F.col("bb")).select(
-        "ab",
-        "bb",
-        (
-            (F.col("cp") - F.col("cpm")).cast("double")
-            / (F.col("cw") - F.col("cwm")).cast("double")
-        ).alias("m"),
-    )
-    w_suf = Window.partitionBy("ab").orderBy(F.desc("bb")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    m2 = pairs.select("ab", "bb", F.min("m").over(w_suf).alias("mn"))
-    w_pre = Window.partitionBy("bb").orderBy("ab").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
+    bands = _grouped(scored(spark, sf_dir), [_band(50)], _ISO_BANDS)
+    c = bands.selectExpr(*_ISO_CUM)
+    pairs = c.selectExpr(*_ISO_A).join(c.selectExpr(*_ISO_B), F.expr("ab <= bb"))
     fit = (
-        m2.select("ab", "bb", F.max("mn").over(w_pre).alias("fitted"))
-        .filter(F.col("ab") == F.col("bb"))
-        .select(F.col("bb").alias("band"), "fitted")
+        pairs.selectExpr(*_ISO_PAIR)
+        .selectExpr(*_ISO_MIN)
+        .selectExpr(*_ISO_MAX)
+        .filter("ab = bb")
+        .selectExpr("bb AS band", "fitted")
     )
-    return bands.join(fit, "band").select(
-        "band",
-        "n",
-        pround(F.col("fitted"), 6).alias("rate_cal"),
-        pround(F.col("su").cast("double") / 1000000 / F.col("n"), 6).alias(
-            "mean_score"
-        ),
-    )
+    return bands.join(fit, "band").selectExpr(*_ISO_OUT)
 
 
-def _cc_oracle() -> str:
-    from fraud_detection_spark.operators.feature_eng import _TREE_SCORE_SQL
-
-    champ_sql = sql_round(
-        "1.0 / (1.0 + EXP(-(-2.0 + 0.03 * l_quantity + 9.0 * l_discount "
-        "+ 0.8 * (l_extendedprice / 100000.0))))",
-        6,
-    )
-    return (
-        f"WITH s AS (SELECT {champ_sql} AS champ, {_TREE_SCORE_SQL} AS chall, "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label FROM lineitem) "
-        "SELECT CAST(FLOOR(champ * 10) AS BIGINT) AS decile, "
-        "CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(label) AS BIGINT) AS n_pos, "
-        + sql_round(
-            "CAST(SUM(CAST(FLOOR(champ * 1000000 + 0.5) AS BIGINT)) AS DOUBLE)"
-            " / 1000000 / COUNT(*)",
-            6,
-        )
-        + " AS mean_champ, "
-        + sql_round(
-            "CAST(SUM(CAST(FLOOR(chall * 1000000 + 0.5) AS BIGINT)) AS DOUBLE)"
-            " / 1000000 / COUNT(*)",
-            6,
-        )
-        + " AS mean_chall, "
-        "CAST(SUM(CASE WHEN champ >= 0.5 AND chall < 0.5 THEN 1 ELSE 0 END)"
-        " AS BIGINT) AS mcnemar_b, "
-        "CAST(SUM(CASE WHEN champ < 0.5 AND chall >= 0.5 THEN 1 ELSE 0 END)"
-        " AS BIGINT) AS mcnemar_c, "
-        "CAST(SUM(CASE WHEN (champ >= 0.5) = (chall >= 0.5) THEN 1 ELSE 0 END)"
-        " AS BIGINT) AS n_agree "
-        "FROM s GROUP BY decile"
-    )
+# the served scorer and the GBT ensemble (q_tree_score) on one row
+_CC_ROWS = [f"{SCORE_SQL} AS champ", f"{_TREE_SCORE_SQL} AS chall", f"{LABEL_SQL} AS label"]
+_CC_SUMS = [
+    "CAST(COUNT(*) AS BIGINT) AS n",
+    "CAST(SUM(label) AS BIGINT) AS n_pos",
+    sql_round(_fp_mean("champ"), 6) + " AS mean_champ",
+    sql_round(_fp_mean("chall"), 6) + " AS mean_chall",
+    "CAST(SUM(CAST(champ >= 0.5 AND chall < 0.5 AS INT)) AS BIGINT) AS mcnemar_b",
+    "CAST(SUM(CAST(champ < 0.5 AND chall >= 0.5 AS INT)) AS BIGINT) AS mcnemar_c",
+    "CAST(SUM(CAST((champ >= 0.5) = (chall >= 0.5) AS INT)) AS BIGINT) AS n_agree",
+]
 
 
 @query(
     "q_champion_challenger",
-    oracle=_cc_oracle(),
+    oracle=(
+        f"WITH s AS ({_sel('lineitem', _CC_ROWS)}) "
+        + _group_sql("s", [_band(10, "decile", "champ")], _CC_SUMS)
+    ),
     tags=("ml", "monitor", "compare"),
 )
 def q_champion_challenger(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -767,68 +684,24 @@ def q_champion_challenger(spark: SparkSession, sf_dir: str) -> DataFrame:
     sufficient statistics for the paired significance test, computed
     distributed; the χ² itself is one driver-side division on 10 rows.
     """
-    from fraud_detection_spark.operators.feature_eng import (
-        _TREE_BIAS,
-        _TREES,
-        _tree_col,
-        _leaf_margin,
-    )
+    s = load_table(spark, sf_dir, "lineitem").selectExpr(*_CC_ROWS)
+    return _grouped(s, [_band(10, "decile", "champ")], _CC_SUMS)
 
-    li = load_table(spark, sf_dir, "lineitem")
-    logit = (
-        F.lit(-2.0)
-        + F.lit(0.03) * F.col("l_quantity")
-        + F.lit(9.0) * F.col("l_discount")
-        + F.lit(0.8) * (F.col("l_extendedprice") / 100000.0)
+
+_BRIER = [
+    sql_round(
+        f"CAST(SUM({_units('(score - label) * (score - label)', 100000000)}) AS DOUBLE)"
+        " / 100000000 / COUNT(*)",
+        8,
     )
-    champ = pround(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6)
-    margin = F.lit(_TREE_BIAS)
-    for t in _TREES:
-        margin = margin + _tree_col(t, _leaf_margin)
-    chall = pround(F.lit(1.0) / (F.lit(1.0) + F.exp(-margin)), 6)
-    label = F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-    s = li.select(
-        champ.alias("champ"),
-        chall.alias("chall"),
-        label.alias("label"),
-    )
-    agg = s.groupBy(
-        F.floor(F.col("champ") * 10).cast("bigint").alias("decile")
-    ).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("label").cast("bigint").alias("n_pos"),
-        pround(
-            F.sum(fp_units(F.col("champ"), 6)).cast("double") / 1000000 / F.count("*"),
-            6,
-        ).alias("mean_champ"),
-        pround(
-            F.sum(fp_units(F.col("chall"), 6)).cast("double") / 1000000 / F.count("*"),
-            6,
-        ).alias("mean_chall"),
-        F.sum(
-            ((F.col("champ") >= 0.5) & (F.col("chall") < 0.5)).cast("int")
-        ).cast("bigint").alias("mcnemar_b"),
-        F.sum(
-            ((F.col("champ") < 0.5) & (F.col("chall") >= 0.5)).cast("int")
-        ).cast("bigint").alias("mcnemar_c"),
-        F.sum(
-            ((F.col("champ") >= 0.5) == (F.col("chall") >= 0.5)).cast("int")
-        ).cast("bigint").alias("n_agree"),
-    )
-    return agg
+    + " AS brier",
+    "CAST(COUNT(*) AS BIGINT) AS n",
+]
 
 
 @query(
     "q_brier",
-    oracle=(
-        f"WITH s AS ({SCORED_SQL}) "
-        "SELECT " + sql_round(
-            "CAST(SUM(CAST(FLOOR((score - label) * (score - label) * 100000000 + 0.5)"
-            " AS BIGINT)) AS DOUBLE) / 100000000 / COUNT(*)",
-            8,
-        )
-        + " AS brier, CAST(COUNT(*) AS BIGINT) AS n FROM s"
-    ),
+    oracle=f"WITH s AS ({SCORED_SQL}) " + _sel("s", _BRIER),
     tags=("ml", "metric"),
 )
 def q_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -838,30 +711,26 @@ def q_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     reliability curve only calibration). One map-side-combinable
     aggregate; per-row squared errors go through fixed-point units so
     the mean is layout-exact."""
-    s = scored(spark, sf_dir)
-    sq = (F.col("score") - F.col("label")) * (F.col("score") - F.col("label"))
-    return s.agg(
-        pround(
-            F.sum(fp_units(sq, 8)).cast("double") / 100000000 / F.count("*"), 8
-        ).alias("brier"),
-        F.count("*").cast("bigint").alias("n"),
-    )
+    return scored(spark, sf_dir).agg(*map(F.expr, _BRIER))
+
+
+_ECE_BANDS = [
+    "CAST(COUNT(*) AS BIGINT) AS n",
+    f"{_fp_mean()} AS mean_score",
+    "CAST(SUM(label) AS DOUBLE) / COUNT(*) AS rate",
+]
+_ECE = [
+    sql_round("SUM(n * ABS(mean_score - rate)) / MAX(n_all)", 6) + " AS ece",
+    "CAST(COUNT(*) AS BIGINT) AS n_bands",
+]
 
 
 @query(
     "q_ece",
     oracle=(
-        f"WITH s AS ({SCORED_SQL}), b AS ("
-        "SELECT CAST(FLOOR(score * 20) AS BIGINT) AS band, "
-        "CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(CAST(FLOOR(score * 1000000 + 0.5) AS BIGINT)) AS DOUBLE)"
-        " / 1000000 / COUNT(*) AS mean_score, "
-        "SUM(label) * 1.0 / COUNT(*) AS rate FROM s GROUP BY band), "
+        f"WITH s AS ({SCORED_SQL}), b AS ({_group_sql('s', [_band(20)], _ECE_BANDS)}), "
         "t AS (SELECT SUM(n) AS n_all FROM b) "
-        "SELECT " + sql_round(
-            "SUM(n * ABS(mean_score - rate)) / MAX(n_all)", 6
-        )
-        + " AS ece, CAST(COUNT(*) AS BIGINT) AS n_bands FROM b, t"
+        + _sel("b, t", _ECE)
     ),
     tags=("ml", "monitor", "calibration"),
 )
@@ -871,57 +740,58 @@ def q_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reliability curve (q_calibration), and the quantity isotonic
     recalibration (q_isotonic) exists to shrink. Same bounded-band
     shape: one hash aggregate to ≤21 rows, then a tiny weighted sum."""
-    s = scored(spark, sf_dir)
-    b = s.groupBy(F.floor(F.col("score") * 20).cast("bigint").alias("band")).agg(
-        F.count("*").cast("bigint").alias("n"),
-        (
-            F.sum(fp_units(F.col("score"), 6)).cast("double") / 1000000 / F.count("*")
-        ).alias("mean_score"),
-        (F.sum("label") * 1.0 / F.count("*")).alias("rate"),
-    )
-    t = b.agg(F.sum("n").alias("n_all"))
-    return b.crossJoin(F.broadcast(t)).agg(
-        pround(
-            F.sum(F.col("n") * F.abs(F.col("mean_score") - F.col("rate")))
-            / F.max("n_all"),
-            6,
-        ).alias("ece"),
-        F.count("*").cast("bigint").alias("n_bands"),
-    )
+    b = _grouped(scored(spark, sf_dir), [_band(20)], _ECE_BANDS)
+    t = b.selectExpr("SUM(n) AS n_all")
+    return b.crossJoin(F.broadcast(t)).agg(*map(F.expr, _ECE))
 
 
 _DRIFT_FEATS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 _DRIFT_QS = [i / 10 for i in range(1, 10)]
 
 
-def _drift_profile_sql() -> str:
+def _drift_sql(duck: bool) -> tuple[list[str], dict[str, str]]:
+    """q_drift_profile's decile cutoff items (one aggregate over
+    lineitem, ``cut_<feature>``) and each feature's band text in one
+    dialect: DuckDB's ``quantile_disc`` and 1-based ``[i]`` with
+    ``duck``, else Spark's ``percentile_disc ... WITHIN GROUP`` and
+    0-based ``[i]``. band = 1 + #cutoffs below the value."""
     q_list = ", ".join(str(q) for q in _DRIFT_QS)
-    parts = []
-    for c in _DRIFT_FEATS:
-        cuts = f"(SELECT quantile_disc({c}, [{q_list}]) AS cut FROM lineitem)"
-        band = " + ".join(f"CASE WHEN {c} > cut[{i + 1}] THEN 1 ELSE 0 END"
-                          for i in range(len(_DRIFT_QS)))
-        parts.append(
-            "SELECT "
-            f"'{c}' AS feature, CAST(1 + {band} AS BIGINT) AS band, "
-            "CAST(SUM(CASE WHEN (l_orderkey * 2654435761 + l_linenumber) % 1000 < 800 "
-            "THEN 1 ELSE 0 END) AS BIGINT) AS n_expected, "
-            "CAST(SUM(CASE WHEN (l_orderkey * 2654435761 + l_linenumber) % 1000 < 800 "
-            "THEN 0 ELSE 1 END) AS BIGINT) AS n_actual "
-            f"FROM lineitem, {cuts} GROUP BY band"
+    cuts = [
+        (
+            f"quantile_disc({c}, [{q_list}])"
+            if duck
+            else f"percentile_disc(array({q_list})) WITHIN GROUP (ORDER BY {c})"
         )
+        + f" AS cut_{c}"
+        for c in _DRIFT_FEATS
+    ]
+    bands = {
+        c: "CAST(1 + "
+        + " + ".join(
+            f"CASE WHEN {c} > cut_{c}[{i + duck}] THEN 1 ELSE 0 END"
+            for i in range(len(_DRIFT_QS))
+        )
+        + " AS BIGINT)"
+        for c in _DRIFT_FEATS
+    }
+    return cuts, bands
+
+
+_DRIFT_OUT = ["feature", "band", "n_expected", "n_actual", _PSI_TERM]
+
+
+def _drift_profile_sql() -> str:
+    cuts, bands = _drift_sql(duck=True)
+    x = ", ".join([f"{TRAIN_SQL} AS is_train", *(f"{b} AS b_{c}" for c, b in bands.items())])
+    u = " UNION ALL ".join(
+        _group_sql("x", [f"'{c}' AS feature", f"b_{c} AS band"], _SPLIT_SUMS)
+        for c in _DRIFT_FEATS
+    )
     return (
-        "WITH u AS (" + " UNION ALL ".join(parts) + "), "
-        "t AS (SELECT feature, SUM(n_expected) AS tot_e, SUM(n_actual) AS tot_a "
-        "FROM u GROUP BY feature) "
-        "SELECT u.feature, u.band, u.n_expected, u.n_actual, "
-        + sql_round(
-            "(u.n_actual * 1.0 / t.tot_a - u.n_expected * 1.0 / t.tot_e) "
-            "* LN(NULLIF(u.n_actual * 1.0 / t.tot_a, 0) / "
-            "NULLIF(u.n_expected * 1.0 / t.tot_e, 0))",
-            6,
-        )
-        + " AS psi_term FROM u JOIN t ON u.feature = t.feature"
+        f"WITH cuts AS ({_sel('lineitem', cuts)}), "
+        f"x AS (SELECT {x} FROM lineitem, cuts), u AS ({u}), "
+        f"t AS ({_group_sql('u', ['feature'], _SPLIT_TOT)}) "
+        + _sel("u JOIN t USING (feature)", _DRIFT_OUT)
     )
 
 
@@ -947,89 +817,45 @@ def q_drift_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     training snapshot (at 100 TB: approx_percentile of that snapshot)
     rather than recomputed per run. Value ties share a band by
     construction. Output is bounded at <= 4x10 rows."""
+    cuts, bands = _drift_sql(duck=False)
     li = load_table(spark, sf_dir, "lineitem")
-    split = (
-        (F.col("l_orderkey") * F.lit(2654435761) + F.col("l_linenumber")) % 1000 < 800
-    ).cast("int")
-    q_list = ", ".join(str(q) for q in _DRIFT_QS)
-    cuts = li.agg(
-        *[
-            F.expr(
-                f"percentile_disc(array({q_list})) WITHIN GROUP (ORDER BY {c})"
-            ).alias(f"cut_{c}")
-            for c in _DRIFT_FEATS
-        ]
+    pairs = ", ".join(f"named_struct('feature', '{c}', 'band', {b})" for c, b in bands.items())
+    u = _grouped(
+        li.crossJoin(F.broadcast(li.selectExpr(*cuts)))
+        .selectExpr(f"{TRAIN_SQL} AS is_train", f"explode(array({pairs})) AS p")
+        .selectExpr("is_train", "p.feature AS feature", "p.band AS band"),
+        ["feature", "band"],
+        _SPLIT_SUMS,
     )
+    t = _grouped(u, ["feature"], _SPLIT_TOT)
+    return u.join(F.broadcast(t), "feature").selectExpr(*_DRIFT_OUT)
 
-    def band_for(c: str):
-        b = F.lit(1)
-        for i in range(len(_DRIFT_QS)):
-            b = b + (F.col(c) > F.col(f"cut_{c}")[i]).cast("int")
-        return b.cast("bigint")
 
-    pairs = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(c).alias("feature"), band_for(c).alias("band"))
-                for c in _DRIFT_FEATS
-            ]
-        )
-    )
-    u = (
-        li.crossJoin(F.broadcast(cuts))
-        .select(split.alias("is_train"), pairs.alias("p"))
-        .select("is_train", F.col("p.feature").alias("feature"), F.col("p.band").alias("band"))
-        .groupBy("feature", "band")
-        .agg(
-            F.sum("is_train").cast("bigint").alias("n_expected"),
-            F.sum(1 - F.col("is_train")).cast("bigint").alias("n_actual"),
-        )
-    )
-    t = u.groupBy("feature").agg(
-        F.sum("n_expected").alias("tot_e"), F.sum("n_actual").alias("tot_a")
-    )
-    share_a = F.col("n_actual") * 1.0 / F.col("tot_a")
-    share_e = F.col("n_expected") * 1.0 / F.col("tot_e")
-    return u.join(F.broadcast(t), "feature").select(
-        "feature",
-        "band",
-        "n_expected",
-        "n_actual",
-        pround(
-            (share_a - share_e)
-            * F.log(
-                F.nullif(share_a, F.lit(0.0)) / F.nullif(share_e, F.lit(0.0))
-            ),
-            6,
-        ).alias("psi_term"),
-    )
-
+_SEG_ROWS = ["l_linestatus AS seg", f"{LABEL_SQL} AS label", f"{SCORE_SQL} AS score"]
+_SEG_CUM = f"OVER (PARTITION BY seg ORDER BY bucket DESC {_CUM})"
+_SEG_RATES = [
+    "seg",
+    "bucket",
+    _ratio(f"SUM(pos) {_SEG_CUM}", "SUM(pos) OVER (PARTITION BY seg)") + " AS tpr",
+    _ratio(f"SUM(neg) {_SEG_CUM}", "SUM(neg) OVER (PARTITION BY seg)") + " AS fpr",
+]
+_SEG_LAG = [
+    "seg",
+    "tpr",
+    "fpr",
+    "LAG(tpr, 1, 0.0) OVER (PARTITION BY seg ORDER BY fpr, tpr) AS ptpr",
+    "LAG(fpr, 1, 0.0) OVER (PARTITION BY seg ORDER BY fpr, tpr) AS pfpr",
+]
+_SEG_AUC = sql_round("SUM((fpr - pfpr) * (tpr + ptpr) / 2.0)", 6) + " AS auc"
 
 
 @query(
     "q_auc_by_segment",
     oracle=(
-        "WITH s AS (SELECT l_linestatus AS seg, "
-        "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS label, "
-        + sql_round(
-            "1.0 / (1.0 + EXP(-(-2.0 + 0.03 * l_quantity + 9.0 * l_discount "
-            "+ 0.8 * (l_extendedprice / 100000.0))))",
-            6,
-        )
-        + " AS score FROM lineitem), "
-        "b AS (SELECT seg, CAST(FLOOR(score * 50) AS BIGINT) AS bucket, "
-        "SUM(label) AS pos, COUNT(*) - SUM(label) AS neg FROM s GROUP BY seg, bucket), "
-        "c AS (SELECT seg, bucket, "
-        "SUM(pos) OVER (PARTITION BY seg ORDER BY bucket DESC "
-        "ROWS UNBOUNDED PRECEDING) * 1.0 / SUM(pos) OVER (PARTITION BY seg) AS tpr, "
-        "SUM(neg) OVER (PARTITION BY seg ORDER BY bucket DESC "
-        "ROWS UNBOUNDED PRECEDING) * 1.0 / SUM(neg) OVER (PARTITION BY seg) AS fpr "
-        "FROM b), "
-        "d AS (SELECT seg, tpr, fpr, "
-        "LAG(tpr, 1, 0.0) OVER (PARTITION BY seg ORDER BY fpr, tpr) AS ptpr, "
-        "LAG(fpr, 1, 0.0) OVER (PARTITION BY seg ORDER BY fpr, tpr) AS pfpr FROM c) "
-        "SELECT seg, " + sql_round("SUM((fpr - pfpr) * (tpr + ptpr) / 2.0)", 6)
-        + " AS auc FROM d GROUP BY seg"
+        f"WITH s AS ({_sel('lineitem', _SEG_ROWS)}), "
+        f"b AS ({_group_sql('s', ['seg', _band(50, 'bucket')], _POS_NEG)}), "
+        f"c AS ({_sel('b', _SEG_RATES)}), d AS ({_sel('c', _SEG_LAG)}) "
+        + _group_sql("d", ["seg"], [_SEG_AUC])
     ),
     tags=("ml", "monitor", "metric"),
 )
@@ -1045,71 +871,41 @@ def q_auc_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicate the synthetic duplicate keys); the cumulative windows
     partition BY SEGMENT over bounded <=51-bucket tables — no
     unpartitioned window, no fact-table sort."""
-    li = load_table(spark, sf_dir, "lineitem")
-    logit = (
-        F.lit(-2.0)
-        + F.lit(0.03) * F.col("l_quantity")
-        + F.lit(9.0) * F.col("l_discount")
-        + F.lit(0.8) * (F.col("l_extendedprice") / 100000.0)
+    s = load_table(spark, sf_dir, "lineitem").selectExpr(*_SEG_ROWS)
+    b = _grouped(s, ["seg", _band(50, "bucket")], _POS_NEG)
+    d = b.selectExpr(*_SEG_RATES).selectExpr(*_SEG_LAG)
+    return _grouped(d, ["seg"], [_SEG_AUC])
+
+
+_THR_CUM = [
+    "bucket",
+    f"SUM(pos) OVER (ORDER BY bucket DESC {_CUM}) AS tp",
+    f"SUM(neg) OVER (ORDER BY bucket DESC {_CUM}) AS fp",
+    "SUM(pos) OVER () AS p_all",
+    "SUM(neg) OVER () AS n_all",
+]
+_THR_OUT = [
+    sql_round("CAST(bucket AS DOUBLE) / 50.0", 6) + " AS threshold",
+    "CAST(tp AS BIGINT) AS tp",
+    "CAST(fp AS BIGINT) AS fp",
+    "CAST(p_all - tp AS BIGINT) AS fn",
+    sql_round(_ratio("tp", "tp + fp"), 6) + " AS precision",
+    sql_round(_ratio("tp", "p_all"), 6) + " AS recall",
+    sql_round(
+        "CAST(tp AS DOUBLE) * 2.0 / NULLIF(CAST(tp AS DOUBLE) * 2.0 + fp + (p_all - tp), 0)", 6
     )
-    s = li.select(
-        F.col("l_linestatus").alias("seg"),
-        F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("label"),
-        pround(F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)), 6).alias("score"),
-    )
-    b = s.groupBy(
-        "seg", F.floor(F.col("score") * 50).cast("bigint").alias("bucket")
-    ).agg(
-        F.sum("label").alias("pos"),
-        (F.count("*") - F.sum("label")).alias("neg"),
-    )
-    w_cum = (
-        Window.partitionBy("seg")
-        .orderBy(F.desc("bucket"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_seg = Window.partitionBy("seg")
-    c = b.select(
-        "seg",
-        "bucket",
-        (F.sum("pos").over(w_cum) * 1.0 / F.sum("pos").over(w_seg)).alias("tpr"),
-        (F.sum("neg").over(w_cum) * 1.0 / F.sum("neg").over(w_seg)).alias("fpr"),
-    )
-    w_lag = Window.partitionBy("seg").orderBy("fpr", "tpr")
-    d = c.select(
-        "seg",
-        "tpr",
-        "fpr",
-        F.lag("tpr", 1, 0.0).over(w_lag).alias("ptpr"),
-        F.lag("fpr", 1, 0.0).over(w_lag).alias("pfpr"),
-    )
-    return d.groupBy("seg").agg(
-        pround(
-            F.sum((F.col("fpr") - F.col("pfpr")) * (F.col("tpr") + F.col("ptpr")) / 2.0),
-            6,
-        ).alias("auc")
-    )
+    + " AS f1",
+    sql_round(f"{_ratio('tp', 'p_all')} - {_ratio('fp', 'n_all')}", 6) + " AS youden_j",
+]
 
 
 @query(
     "q_threshold_sweep",
     oracle=(
-        f"WITH s AS ({SCORED_SQL}), b AS ("
-        "SELECT CAST(FLOOR(score * 50) AS BIGINT) AS bucket, "
-        "SUM(label) AS pos, COUNT(*) - SUM(label) AS neg FROM s GROUP BY bucket), "
-        "t AS (SELECT bucket, "
-        "SUM(pos) OVER (ORDER BY bucket DESC ROWS UNBOUNDED PRECEDING) AS tp, "
-        "SUM(neg) OVER (ORDER BY bucket DESC ROWS UNBOUNDED PRECEDING) AS fp, "
-        "SUM(pos) OVER () AS p_all, SUM(neg) OVER () AS n_all FROM b) "
-        "SELECT " + sql_round("bucket / 50.0", 6) + " AS threshold, "
-        "CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp, "
-        "CAST(p_all - tp AS BIGINT) AS fn, "
-        + sql_round("tp * 1.0 / NULLIF(tp + fp, 0)", 6) + " AS precision, "
-        + sql_round("tp * 1.0 / p_all", 6) + " AS recall, "
-        + sql_round("2.0 * tp / NULLIF(2.0 * tp + fp + (p_all - tp), 0)", 6)
-        + " AS f1, "
-        + sql_round("tp * 1.0 / p_all - fp * 1.0 / n_all", 6) + " AS youden_j "
-        "FROM t"
+        f"WITH s AS ({SCORED_SQL}), "
+        f"b AS ({_group_sql('s', [_band(50, 'bucket')], _POS_NEG)}), "
+        f"t AS ({_sel('b', _THR_CUM)}) "
+        + _sel("t", _THR_OUT)
     ),
     tags=("ml", "monitor", "metric"),
 )
@@ -1125,40 +921,53 @@ def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds the facts into 50 score buckets; the threshold-sweep
     cumulative runs over that table only. All ratios are
     integer/integer — engine-exact."""
-    s = scored(spark, sf_dir)
-    b = s.groupBy(F.floor(F.col("score") * 50).cast("bigint").alias("bucket")).agg(
-        F.sum("label").alias("pos"),
-        (F.count("*") - F.sum("label")).alias("neg"),
+    b = _grouped(scored(spark, sf_dir), [_band(50, "bucket")], _POS_NEG)
+    return b.selectExpr(*_THR_CUM).selectExpr(*_THR_OUT)
+
+
+# the calibration family's per-row fold keys and cell sums
+_DECILE = _band(10, "decile")
+_U_KEY = f"{_units('score')} AS u"
+_CELL_SUMS = ["CAST(COUNT(*) AS BIGINT) AS cnt", "CAST(SUM(label) AS BIGINT) AS pos"]
+
+
+def _spieg_sums(wide: str) -> list[str]:
+    """The exact Spiegelhalter moments over the (u, cnt, pos) cells,
+    summed in the integer type ``wide``."""
+    return [
+        f"CAST(SUM(CAST(cnt AS {wide}) * u) AS {wide}) AS su",
+        # numerator in 1e-12 units: (pos·1e6 − cnt·u)·(1e6 − 2u)
+        f"CAST(SUM(CAST(pos * 1000000 - cnt * u AS {wide}) * (1000000 - u * 2)) AS {wide})"
+        " AS num",
+        # variance in 1e-24 units: cnt·(1e6−2u)²·u·(1e6−u)
+        f"CAST(SUM(CAST(cnt AS {wide}) * (1000000 - u * 2) * (1000000 - u * 2) * u "
+        f"* (1000000 - u)) AS {wide}) AS var",
+    ]
+
+
+_SPIEG_NUM = "CAST(num AS DOUBLE) / 1000000000000"
+_SPIEG_Z = [
+    sql_round(_SPIEG_NUM, 6) + " AS num_spieg",
+    "CASE WHEN var = 0 THEN NULL ELSE "
+    + sql_round(
+        f"({_SPIEG_NUM}) / SQRT(CAST(var AS DOUBLE) / 1000000000000000000000000.0)", 6
     )
-    w_cum = Window.orderBy(F.desc("bucket")).rowsBetween(Window.unboundedPreceding, 0)
-    w_all = Window.partitionBy()
-    t = b.select(
-        "bucket",
-        F.sum("pos").over(w_cum).alias("tp"),
-        F.sum("neg").over(w_cum).alias("fp"),
-        F.sum("pos").over(w_all).alias("p_all"),
-        F.sum("neg").over(w_all).alias("n_all"),
-    )
-    fn = F.col("p_all") - F.col("tp")
-    return t.select(
-        pround(F.col("bucket") / 50.0, 6).alias("threshold"),
-        F.col("tp").cast("bigint").alias("tp"),
-        F.col("fp").cast("bigint").alias("fp"),
-        fn.cast("bigint").alias("fn"),
-        pround(
-            F.col("tp") * 1.0 / F.nullif(F.col("tp") + F.col("fp"), F.lit(0)), 6
-        ).alias("precision"),
-        pround(F.col("tp") * 1.0 / F.col("p_all"), 6).alias("recall"),
-        pround(
-            2.0 * F.col("tp")
-            / F.nullif(2.0 * F.col("tp") + F.col("fp") + fn, F.lit(0)),
-            6,
-        ).alias("f1"),
-        pround(
-            F.col("tp") * 1.0 / F.col("p_all") - F.col("fp") * 1.0 / F.col("n_all"),
-            6,
-        ).alias("youden_j"),
-    )
+    + " END AS z_spieg",
+]
+
+
+def _spieg_deciles(wide: str) -> list[str]:
+    return ["CAST(SUM(cnt) AS BIGINT) AS n", "CAST(SUM(pos) AS BIGINT) AS events", *_spieg_sums(wide)]
+
+
+_SPIEG_OUT = [
+    "decile",
+    "n",
+    "events",
+    sql_round("CAST(su AS DOUBLE) / 1000000 / n", 6) + " AS mean_pred",
+    sql_round("CAST(events AS DOUBLE) / n", 6) + " AS obs_rate",
+    *_SPIEG_Z,
+]
 
 
 # ---------------------------------------------------------------------------
@@ -1177,35 +986,9 @@ def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_spiegelhalter",
     oracle=(
         f"WITH s AS ({SCORED_SQL}), "
-        "g AS (SELECT CAST(FLOOR(score * 10) AS BIGINT) AS decile, "
-        "CAST(FLOOR(score * 1000000 + 0.5) AS BIGINT) AS u, "
-        "CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(label) AS BIGINT) AS pos FROM s GROUP BY decile, u), "
-        "d AS (SELECT decile, "
-        "CAST(SUM(cnt) AS BIGINT) AS n, "
-        "CAST(SUM(pos) AS BIGINT) AS events, "
-        "CAST(SUM(CAST(cnt AS HUGEINT) * u) AS HUGEINT) AS su, "
-        # numerator in 1e-12 units: (pos·1e6 − cnt·u)·(1e6 − 2u)
-        "CAST(SUM(CAST(pos * 1000000 - cnt * u AS HUGEINT) "
-        "* (1000000 - 2 * u)) AS HUGEINT) AS num, "
-        # variance in 1e-24 units: cnt·(1e6−2u)²·u·(1e6−u)
-        "CAST(SUM(CAST(cnt AS HUGEINT) * (1000000 - 2 * u) "
-        "* (1000000 - 2 * u) * u * (1000000 - u)) AS HUGEINT) AS var "
-        "FROM g GROUP BY decile) "
-        "SELECT decile, n, events, "
-        + sql_round("CAST(su AS DOUBLE) / 1000000 / n", 6)
-        + " AS mean_pred, "
-        + sql_round("CAST(events AS DOUBLE) / n", 6) + " AS obs_rate, "
-        + sql_round("CAST(num AS DOUBLE) / 1000000000000", 6)
-        + " AS num_spieg, "
-        "CASE WHEN var = 0 THEN NULL ELSE "
-        + sql_round(
-            "(CAST(num AS DOUBLE) / 1000000000000) "
-            "/ SQRT(CAST(var AS DOUBLE) / "
-            "1000000000000000000000000.0)",
-            6,
-        )
-        + " END AS z_spieg FROM d"
+        f"g AS ({_group_sql('s', [_DECILE, _U_KEY], _CELL_SUMS)}), "
+        f"d AS ({_group_sql('g', ['decile'], _spieg_deciles(_HUGE))}) "
+        + _sel("d", _SPIEG_OUT)
     ),
     tags=("ml", "monitor", "calibration"),
 )
@@ -1234,52 +1017,53 @@ def q_spiegelhalter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (decile, 6-dp score) table, one 10-row fold, zero windows, zero
     joins. Ref: the calibration-curve completion of
     evaluate_model.py's scalar metrics, Spiegelhalter (1986) form."""
-    s = scored(spark, sf_dir)
-    dec = "decimal(38,0)"
-    u = F.floor(F.col("score") * 1000000 + F.lit(0.5)).cast("bigint")
-    g = s.groupBy(
-        F.floor(F.col("score") * 10).cast("bigint").alias("decile"),
-        u.alias("u"),
-    ).agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.sum("label").cast("bigint").alias("pos"),
-    )
-    one_m_2u = F.lit(1000000) - 2 * F.col("u")
-    num_row = (
-        (F.col("pos") * 1000000 - F.col("cnt") * F.col("u")).cast(dec)
-        * one_m_2u
-    )
-    var_row = (
-        F.col("cnt").cast(dec)
-        * one_m_2u
-        * one_m_2u
-        * F.col("u")
-        * (F.lit(1000000) - F.col("u"))
-    )
-    d = g.groupBy("decile").agg(
-        F.sum("cnt").cast("bigint").alias("n"),
-        F.sum("pos").cast("bigint").alias("events"),
-        F.sum(F.col("cnt").cast(dec) * F.col("u")).alias("su"),
-        F.sum(num_row).alias("num"),
-        F.sum(var_row).alias("var"),
-    )
-    numd = F.col("num").cast("double") / 1000000000000
-    vard = F.col("var").cast("double") / 1e24
-    return d.select(
-        "decile",
-        "n",
-        "events",
-        pround(F.col("su").cast("double") / 1000000 / F.col("n"), 6).alias(
-            "mean_pred"
-        ),
-        pround(F.col("events").cast("double") / F.col("n"), 6).alias(
-            "obs_rate"
-        ),
-        pround(numd, 6).alias("num_spieg"),
-        F.when(F.col("var") == 0, F.lit(None).cast("double"))
-        .otherwise(pround(numd / F.sqrt(vard), 6))
-        .alias("z_spieg"),
-    )
+    g = _grouped(scored(spark, sf_dir), [_DECILE, _U_KEY], _CELL_SUMS)
+    return _grouped(g, ["decile"], _spieg_deciles(_DEC)).selectExpr(*_SPIEG_OUT)
+
+
+_DECILE_COUNTS = ["CAST(COUNT(*) AS BIGINT) AS n", "CAST(SUM(label) AS BIGINT) AS ev"]
+_DECILE_TOT = ["CAST(SUM(n) AS BIGINT) AS nn", "CAST(SUM(ev) AS BIGINT) AS tev"]
+
+
+def _decile_sums(wide: str) -> list[str]:
+    """Per score decile: n, events and the exact 6-dp score units."""
+    return [
+        *_DECILE_COUNTS,
+        f"CAST(SUM({_units('score')}) AS {wide}) AS su",
+    ]
+
+
+# per-decile doubles from exact integers: pbar_k = su/1e6/n,
+# rate_k = ev/n, rate = tev/nn
+_PBAR, _RATE, _GBAR = (
+    "CAST(su AS DOUBLE) / 1000000 / n",
+    "CAST(ev AS DOUBLE) / n",
+    "CAST(tev AS DOUBLE) / nn",
+)
+
+
+def _fold9(x: str) -> str:
+    """n·x per decile row folded to 1e-9 units BEFORE the sum (the
+    fixed_sum rule), keeping the multiply association n * (x)."""
+    return f"CAST(SUM({_units(f'n * ({x})', 1000000000)}) AS BIGINT)"
+
+
+_MURPHY = [
+    _fold9(f"({_PBAR} - {_RATE}) * ({_PBAR} - {_RATE})") + " AS relu",
+    _fold9(f"({_RATE} - {_GBAR}) * ({_RATE} - {_GBAR})") + " AS resu",
+]
+_REL, _RES, _UNC = (
+    "CAST(relu AS DOUBLE) / 1000000000 / nn",
+    "CAST(resu AS DOUBLE) / 1000000000 / nn",
+    f"({_GBAR}) * (1.0 - {_GBAR})",
+)
+_MURPHY_OUT = [
+    sql_round(_REL, 6) + " AS reliability",
+    sql_round(_RES, 6) + " AS resolution",
+    sql_round(_UNC, 6) + " AS uncertainty",
+    sql_round(f"{_REL} - {_RES} + {_UNC}", 6) + " AS brier_binned",
+    "nn AS n",
+]
 
 
 # ---------------------------------------------------------------------------
@@ -1295,43 +1079,10 @@ def q_spiegelhalter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_brier_decomp",
     oracle=(
         f"WITH s AS ({SCORED_SQL}), "
-        "g AS (SELECT CAST(FLOOR(score * 10) AS BIGINT) AS decile, "
-        "CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(label) AS BIGINT) AS ev, "
-        "CAST(SUM(CAST(FLOOR(score * 1000000 + 0.5) AS BIGINT)) "
-        "AS HUGEINT) AS su FROM s GROUP BY decile), "
-        "t AS (SELECT CAST(SUM(n) AS BIGINT) AS nn, "
-        "CAST(SUM(ev) AS BIGINT) AS tev FROM g), "
-        # per-decile doubles from exact integers, identical text both
-        # engines: pbar_k = su/1e6/n, rate_k = ev/n, rate = tev/nn
-        # fold per decile row BEFORE the sum (fixed_sum rule), and keep
-        # the multiply association n * (gap*gap) — both exactly as the
-        # Spark side writes it (ADVICE r13 #1)
-        "d AS (SELECT "
-        "CAST(SUM(CAST(FLOOR(n * ((CAST(su AS DOUBLE) / 1000000 / n - CAST(ev AS DOUBLE) / n) "
-        "* (CAST(su AS DOUBLE) / 1000000 / n - CAST(ev AS DOUBLE) / n)) * 1000000000 + 0.5) AS BIGINT)) AS BIGINT) "
-        "AS relu, "
-        "CAST(SUM(CAST(FLOOR(n * ((CAST(ev AS DOUBLE) / n - CAST(tev AS DOUBLE) / nn) "
-        "* (CAST(ev AS DOUBLE) / n - CAST(tev AS DOUBLE) / nn)) * 1000000000 + 0.5) AS BIGINT)) AS BIGINT) "
-        "AS resu FROM g, t) "
-        "SELECT "
-        + sql_round("CAST(relu AS DOUBLE) / 1000000000 / nn", 6)
-        + " AS reliability, "
-        + sql_round("CAST(resu AS DOUBLE) / 1000000000 / nn", 6)
-        + " AS resolution, "
-        + sql_round(
-            "(CAST(tev AS DOUBLE) / nn) * (1.0 - CAST(tev AS DOUBLE) / nn)",
-            6,
-        )
-        + " AS uncertainty, "
-        + sql_round(
-            "CAST(relu AS DOUBLE) / 1000000000 / nn "
-            "- CAST(resu AS DOUBLE) / 1000000000 / nn "
-            "+ (CAST(tev AS DOUBLE) / nn) "
-            "* (1.0 - CAST(tev AS DOUBLE) / nn)",
-            6,
-        )
-        + " AS brier_binned, nn AS n FROM d, t"
+        f"g AS ({_group_sql('s', [_DECILE], _decile_sums(_HUGE))}), "
+        f"t AS ({_sel('g', _DECILE_TOT)}), "
+        f"d AS ({_sel('g, t', _MURPHY)}) "
+        + _sel("d, t", _MURPHY_OUT)
     ),
     tags=("ml", "monitor", "calibration"),
 )
@@ -1358,50 +1109,39 @@ def q_brier_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE map-side-combinable fact fold to <=10 decile rows +
     one 1-row total — strictly cheaper than q_spiegelhalter's
     per-score fold; no window, no join."""
-    s = scored(spark, sf_dir)
-    g = s.groupBy(
-        F.floor(F.col("score") * 10).cast("bigint").alias("decile")
-    ).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("label").cast("bigint").alias("ev"),
-        F.sum(F.floor(F.col("score") * 1000000 + F.lit(0.5)).cast("bigint"))
-        .cast("decimal(38,0)")
-        .alias("su"),
-    )
-    t = g.agg(
-        F.sum("n").cast("bigint").alias("nn"),
-        F.sum("ev").cast("bigint").alias("tev"),
-    )
-    gt = g.crossJoin(F.broadcast(t))
-    pbar = F.col("su").cast("double") / 1000000 / F.col("n")
-    rate = F.col("ev").cast("double") / F.col("n")
-    gbar = F.col("tev").cast("double") / F.col("nn")
-    d = gt.agg(
-        F.sum(
-            F.floor(
-                F.col("n") * ((pbar - rate) * (pbar - rate)) * 1000000000
-                + F.lit(0.5)
-            ).cast("bigint")
-        ).cast("bigint").alias("relu"),
-        F.sum(
-            F.floor(
-                F.col("n") * ((rate - gbar) * (rate - gbar)) * 1000000000
-                + F.lit(0.5)
-            ).cast("bigint")
-        ).cast("bigint").alias("resu"),
-    )
-    out = d.crossJoin(F.broadcast(t))
-    rel = F.col("relu").cast("double") / 1000000000 / F.col("nn")
-    res = F.col("resu").cast("double") / 1000000000 / F.col("nn")
-    gb = F.col("tev").cast("double") / F.col("nn")
-    unc = gb * (F.lit(1.0) - gb)
-    return out.select(
-        pround(rel, 6).alias("reliability"),
-        pround(res, 6).alias("resolution"),
-        pround(unc, 6).alias("uncertainty"),
-        pround(rel - res + unc, 6).alias("brier_binned"),
-        F.col("nn").alias("n"),
-    )
+    g = _grouped(scored(spark, sf_dir), [_DECILE], _decile_sums(_DEC))
+    t = g.selectExpr(*_DECILE_TOT)
+    d = g.crossJoin(F.broadcast(t)).agg(*map(F.expr, _MURPHY))
+    return d.crossJoin(F.broadcast(t)).selectExpr(*_MURPHY_OUT)
+
+
+def _hl_sums(wide: str) -> list[str]:
+    """Per-decile HL contribution folded to 1e-9 units BEFORE the <=10-
+    row sum (fixed_sum rule); degenerate deciles (expected events 0 or
+    n) emit NULL and drop out of SUM/COUNT on both engines identically."""
+    deg = f"su = 0 OR su = CAST(n AS {wide}) * 1000000"
+    e1 = "CAST(su AS DOUBLE) / 1000000"
+    gap = f"(CAST(ev AS DOUBLE) - {e1})"
+    term = f"({gap} * {gap}) / ({e1}) + ({gap} * {gap}) / (CAST(n AS DOUBLE) - {e1})"
+    return [
+        f"CAST(SUM(CASE WHEN {deg} THEN NULL ELSE "
+        f"{_units(f'({term})', 1000000000)} END) AS BIGINT) AS hu",
+        f"CAST(COUNT(CASE WHEN {deg} THEN NULL ELSE 1 END) AS BIGINT) AS n_bins",
+        "CAST(SUM(n) AS BIGINT) AS nn",
+    ]
+
+
+# < 3 usable bins -> df <= 0 and a statistic no chi-square consumer can
+# use: NULL out both, identical predicate on both engines (ADVICE r14
+# #4, the q_delong degenerate discipline)
+_HL_OUT = [
+    "n_bins",
+    "CASE WHEN n_bins < 3 THEN NULL ELSE CAST(n_bins - 2 AS BIGINT) END AS df",
+    "nn AS n",
+    "CASE WHEN n_bins < 3 THEN NULL ELSE "
+    + sql_round("CAST(hu AS DOUBLE) / 1000000000", 6)
+    + " END AS hl_stat",
+]
 
 
 # ---------------------------------------------------------------------------
@@ -1417,35 +1157,9 @@ def q_brier_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_hosmer_lemeshow",
     oracle=(
         f"WITH s AS ({SCORED_SQL}), "
-        "g AS (SELECT CAST(FLOOR(score * 10) AS BIGINT) AS decile, "
-        "CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(label) AS BIGINT) AS ev, "
-        "CAST(SUM(CAST(FLOOR(score * 1000000 + 0.5) AS BIGINT)) "
-        "AS HUGEINT) AS su FROM s GROUP BY decile), "
-        # per-decile contribution folded to 1e-9 units BEFORE the
-        # <=10-row sum (fixed_sum rule); degenerate deciles (expected
-        # events 0 or n) emit NULL and drop out of SUM/COUNT on both
-        # engines identically
-        "d AS (SELECT "
-        "CAST(SUM(CASE WHEN su = 0 OR su = n * 1000000 THEN NULL ELSE "
-        "CAST(FLOOR((((CAST(ev AS DOUBLE) - CAST(su AS DOUBLE) / 1000000) "
-        "* (CAST(ev AS DOUBLE) - CAST(su AS DOUBLE) / 1000000)) "
-        "/ (CAST(su AS DOUBLE) / 1000000) "
-        "+ ((CAST(ev AS DOUBLE) - CAST(su AS DOUBLE) / 1000000) "
-        "* (CAST(ev AS DOUBLE) - CAST(su AS DOUBLE) / 1000000)) "
-        "/ (CAST(n AS DOUBLE) - CAST(su AS DOUBLE) / 1000000)) "
-        "* 1000000000 + 0.5) AS BIGINT) END) AS BIGINT) AS hu, "
-        "CAST(COUNT(CASE WHEN su = 0 OR su = n * 1000000 THEN NULL "
-        "ELSE 1 END) AS BIGINT) AS n_bins, "
-        "CAST(SUM(n) AS BIGINT) AS nn FROM g) "
-        # < 3 usable bins -> df <= 0 and a statistic no chi-square
-        # consumer can use: NULL out both, identical predicate on both
-        # engines (ADVICE r14 #4, the q_delong degenerate discipline)
-        "SELECT n_bins, CASE WHEN n_bins < 3 THEN NULL "
-        "ELSE CAST(n_bins - 2 AS BIGINT) END AS df, nn AS n, "
-        "CASE WHEN n_bins < 3 THEN NULL ELSE "
-        + sql_round("CAST(hu AS DOUBLE) / 1000000000", 6)
-        + " END AS hl_stat FROM d"
+        f"g AS ({_group_sql('s', [_DECILE], _decile_sums(_HUGE))}), "
+        f"d AS ({_sel('g', _hl_sums(_HUGE))}) "
+        + _sel("d", _HL_OUT)
     ),
     tags=("ml", "monitor", "calibration"),
 )
@@ -1473,48 +1187,54 @@ def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE map-side-combinable fact fold to <=10 decile rows +
     a 1-row fold — the q_brier_decomp shape exactly."""
-    s = scored(spark, sf_dir)
-    g = s.groupBy(
-        F.floor(F.col("score") * 10).cast("bigint").alias("decile")
-    ).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("label").cast("bigint").alias("ev"),
-        F.sum(F.floor(F.col("score") * 1000000 + F.lit(0.5)).cast("bigint"))
-        .cast("decimal(38,0)")
-        .alias("su"),
-    )
-    e1 = F.col("su").cast("double") / 1000000
-    gap = F.col("ev").cast("double") - e1
-    term = (gap * gap) / e1 + (gap * gap) / (
-        F.col("n").cast("double") - e1
-    )
-    degenerate = (F.col("su") == 0) | (
-        F.col("su") == F.col("n").cast("decimal(38,0)") * 1000000
-    )
-    hu_row = F.when(degenerate, F.lit(None).cast("bigint")).otherwise(
-        F.floor(term * 1000000000 + F.lit(0.5)).cast("bigint")
-    )
-    d = g.agg(
-        F.sum(hu_row).cast("bigint").alias("hu"),
-        F.count(
-            F.when(degenerate, F.lit(None)).otherwise(F.lit(1))
-        )
-        .cast("bigint")
-        .alias("n_bins"),
-        F.sum("n").cast("bigint").alias("nn"),
-    )
-    return d.select(
-        "n_bins",
-        F.when(F.col("n_bins") < 3, F.lit(None).cast("bigint"))
-        .otherwise((F.col("n_bins") - 2).cast("bigint"))
-        .alias("df"),
-        F.col("nn").alias("n"),
-        F.when(F.col("n_bins") < 3, F.lit(None).cast("double"))
-        .otherwise(
-            pround(F.col("hu").cast("double") / 1000000000, 6)
-        )
-        .alias("hl_stat"),
-    )
+    g = _grouped(scored(spark, sf_dir), [_DECILE], _decile_sums(_DEC))
+    return g.agg(*map(F.expr, _hl_sums(_DEC))).selectExpr(*_HL_OUT)
+
+
+# score-0/1 rows have no logit: both engines drop them by this filter
+_SCORE_OPEN = "score > 0 AND score < 1"
+# logit(score) = LN(u/(1e6-u)) of exact integers, folded to 1e-9 units
+# per distinct score BEFORE any sum
+_SLOPE_X = [
+    "cnt",
+    "pos",
+    _units("LN(CAST(u AS DOUBLE) / (1000000 - u))", 1000000000) + " AS xu",
+]
+
+
+def _slope_sums(wide: str) -> list[str]:
+    """The five sufficient sums; the per-row products promote to
+    ``wide`` BEFORE the SUM (the sxx association): |xu| reaches
+    ~1.39e10, so a BIGINT product would overflow at cnt >~6.6e8 per
+    distinct score (ADVICE r14 #1), and a bare BIGINT sum of sx/sxy
+    would wrap silently (non-ANSI) at ~6.6e8 fact rows."""
+    return [
+        "CAST(SUM(cnt) AS BIGINT) AS n",
+        "CAST(SUM(pos) AS BIGINT) AS sy",
+        f"CAST(SUM(CAST(cnt AS {wide}) * xu) AS {wide}) AS sx",
+        f"CAST(SUM(CAST(pos AS {wide}) * xu) AS {wide}) AS sxy",
+        f"CAST(SUM(CAST(cnt AS {wide}) * xu * xu) AS {wide}) AS sxx",
+    ]
+
+
+_SX = "(CAST(sx AS DOUBLE) / 1000000000)"
+_SLOPE_NUM = f"CAST(n AS DOUBLE) * (CAST(sxy AS DOUBLE) / 1000000000) - {_SX} * CAST(sy AS DOUBLE)"
+_SLOPE_DEN = (
+    f"CAST(n AS DOUBLE) * (CAST(sxx AS DOUBLE) / 1000000000000000000) - {_SX} * {_SX}"
+)
+_SLOPE = [
+    "n",
+    "sy",
+    "sx",
+    f"CASE WHEN {_SLOPE_DEN} = 0 THEN NULL ELSE ({_SLOPE_NUM}) / ({_SLOPE_DEN}) END AS slope",
+]
+_SLOPE_OUT = [
+    "n",
+    sql_round("slope", 6) + " AS slope",
+    "CASE WHEN slope IS NULL THEN NULL ELSE "
+    + sql_round(f"(CAST(sy AS DOUBLE) - slope * {_SX}) / n", 6)
+    + " END AS intercept",
+]
 
 
 # ---------------------------------------------------------------------------
@@ -1531,43 +1251,11 @@ def q_hosmer_lemeshow(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_calibration_slope",
     oracle=(
         f"WITH s AS ({SCORED_SQL}), "
-        # fold to the <=1e6-1 distinct-score table first (the q_delong
-        # posture); logit(score) = LN(u/(1e6-u)) of exact integers,
-        # folded to 1e-9 units per distinct score BEFORE any sum
-        "g AS (SELECT CAST(FLOOR(score * 1000000 + 0.5) AS BIGINT) AS u, "
-        "CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(label) AS BIGINT) AS pos FROM s "
-        "WHERE score > 0 AND score < 1 GROUP BY u), "
-        "x AS (SELECT cnt, pos, "
-        "CAST(FLOOR(LN(CAST(u AS DOUBLE) / (1000000 - u)) "
-        "* 1000000000 + 0.5) AS BIGINT) AS xu FROM g), "
-        # the per-row products promote to HUGEINT BEFORE the SUM (the
-        # sxx association): |xu| reaches ~1.39e10, so a BIGINT product
-        # would overflow at cnt >~6.6e8 per distinct score — exactly
-        # the scale the Spark DECIMAL(38,0) side targets (ADVICE r14 #1)
-        "m AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
-        "CAST(SUM(pos) AS BIGINT) AS sy, "
-        "CAST(SUM(CAST(cnt AS HUGEINT) * xu) AS HUGEINT) AS sx, "
-        "CAST(SUM(CAST(pos AS HUGEINT) * xu) AS HUGEINT) AS sxy, "
-        "CAST(SUM(CAST(cnt AS HUGEINT) * xu * xu) AS HUGEINT) AS sxx "
-        "FROM x), "
-        "f AS (SELECT n, sy, sx, "
-        "CAST(n AS DOUBLE) * (CAST(sxy AS DOUBLE) / 1000000000) "
-        "- (CAST(sx AS DOUBLE) / 1000000000) * CAST(sy AS DOUBLE) AS num, "
-        "CAST(n AS DOUBLE) "
-        "* (CAST(sxx AS DOUBLE) / 1000000000000000000) "
-        "- (CAST(sx AS DOUBLE) / 1000000000) "
-        "* (CAST(sx AS DOUBLE) / 1000000000) AS den FROM m), "
-        "o AS (SELECT n, sy, sx, "
-        "CASE WHEN den = 0 THEN NULL ELSE num / den END AS slope FROM f) "
-        "SELECT n, " + sql_round("slope", 6) + " AS slope, "
-        "CASE WHEN slope IS NULL THEN NULL ELSE "
-        + sql_round(
-            "(CAST(sy AS DOUBLE) "
-            "- slope * (CAST(sx AS DOUBLE) / 1000000000)) / n",
-            6,
-        )
-        + " END AS intercept FROM o"
+        f"g AS ({_group_sql(f's WHERE {_SCORE_OPEN}', [_U_KEY], _CELL_SUMS)}), "
+        f"x AS ({_sel('g', _SLOPE_X)}), "
+        f"m AS ({_sel('x', _slope_sums(_HUGE))}), "
+        f"o AS ({_sel('m', _SLOPE)}) "
+        + _sel("o", _SLOPE_OUT)
     ),
     tags=("ml", "monitor", "calibration"),
 )
@@ -1596,73 +1284,52 @@ def q_calibration_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE map-side-combinable fact fold to the domain-bounded
     distinct-score table, one bounded fold to five scalars, zero
     windows, zero joins — strictly cheaper than q_delong."""
-    s = scored(spark, sf_dir)
-    dec = "decimal(38,0)"
-    g = (
-        s.filter((F.col("score") > 0) & (F.col("score") < 1))
-        .groupBy(
-            F.floor(F.col("score") * 1000000 + F.lit(0.5))
-            .cast("bigint")
-            .alias("u")
-        )
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.sum("label").cast("bigint").alias("pos"),
-        )
+    g = _grouped(scored(spark, sf_dir).filter(_SCORE_OPEN), [_U_KEY], _CELL_SUMS)
+    m = g.selectExpr(*_SLOPE_X).agg(*map(F.expr, _slope_sums(_DEC)))
+    return m.selectExpr(*_SLOPE).selectExpr(*_SLOPE_OUT)
+
+
+# per-DISTINCT-SCORE log-likelihood folded to 1e-9 units before any
+# accumulation (fixed_sum rule; LN of exact integer ratios)
+_LL_X = [
+    _units(
+        "(CAST(pos AS DOUBLE) * LN(CAST(u AS DOUBLE) / 1000000) "
+        "+ CAST(cnt - pos AS DOUBLE) * LN(CAST(1000000 - u AS DOUBLE) / 1000000))",
+        1000000000,
     )
-    xu = F.floor(
-        F.log(F.col("u").cast("double") / (F.lit(1000000) - F.col("u")))
-        * 1000000000
-        + F.lit(0.5)
-    ).cast("bigint")
-    x = g.select("cnt", "pos", xu.alias("xu"))
-    m = x.agg(
-        F.sum("cnt").cast("bigint").alias("n"),
-        F.sum("pos").cast("bigint").alias("sy"),
-        # sx/sxy accumulate in DECIMAL(38,0) like sxx — a bare BIGINT
-        # sum would wrap silently (non-ANSI) at ~6.6e8 fact rows where
-        # the DuckDB HUGEINT twin stays exact (round-14 review fix)
-        F.sum(F.col("cnt").cast(dec) * F.col("xu")).cast(dec).alias("sx"),
-        F.sum(F.col("pos").cast(dec) * F.col("xu")).cast(dec).alias("sxy"),
-        F.sum(F.col("cnt").cast(dec) * F.col("xu") * F.col("xu"))
-        .cast(dec)
-        .alias("sxx"),
-    )
-    num = F.col("n").cast("double") * (
-        F.col("sxy").cast("double") / 1000000000
-    ) - (F.col("sx").cast("double") / 1000000000) * F.col("sy").cast(
-        "double"
-    )
-    den = F.col("n").cast("double") * (
-        F.col("sxx").cast("double") / 1000000000000000000
-    ) - (F.col("sx").cast("double") / 1000000000) * (
-        F.col("sx").cast("double") / 1000000000
-    )
-    f = m.select(
-        "n",
-        "sy",
-        "sx",
-        F.when(den == 0, F.lit(None).cast("double"))
-        .otherwise(num / den)
-        .alias("slope"),
-    )
-    return f.select(
-        "n",
-        pround(F.col("slope"), 6).alias("slope"),
-        F.when(F.col("slope").isNull(), F.lit(None).cast("double"))
-        .otherwise(
-            pround(
-                (
-                    F.col("sy").cast("double")
-                    - F.col("slope")
-                    * (F.col("sx").cast("double") / 1000000000)
-                )
-                / F.col("n"),
-                6,
-            )
-        )
-        .alias("intercept"),
-    )
+    + " AS llu",
+    "cnt",
+    "pos",
+]
+
+
+def _ll_sums(wide: str) -> list[str]:
+    """The LL sum stays ``wide``: the 1e-9-unit sum wraps BIGINT at
+    ~4e9 rows (ADVICE r14 #2)."""
+    return [
+        f"CAST(SUM(CAST(llu AS {wide})) AS {wide}) AS llu",
+        "CAST(SUM(cnt) AS BIGINT) AS n",
+        "CAST(SUM(pos) AS BIGINT) AS sy",
+    ]
+
+
+_R = "CAST(sy AS DOUBLE) / n"
+# the null model has no likelihood without both classes (LN(0)): NULL
+# ll_null, mcfadden and nagelkerke on both engines
+_LL = [
+    "n",
+    "CAST(llu AS DOUBLE) / 1000000000 AS llm",
+    f"CASE WHEN sy = 0 OR sy = n THEN NULL ELSE CAST(n AS DOUBLE) * (({_R}) * LN({_R}) "
+    f"+ (1.0 - {_R}) * LN(1.0 - {_R})) END AS ll0",
+]
+_R2_OUT = [
+    "n",
+    sql_round("llm", 6) + " AS ll_model",
+    sql_round("ll0", 6) + " AS ll_null",
+    sql_round("1.0 - llm / ll0", 6) + " AS mcfadden",
+    sql_round("(1.0 - EXP(2.0 * (ll0 - llm) / n)) / (1.0 - EXP(2.0 * ll0 / n))", 6)
+    + " AS nagelkerke",
+]
 
 
 # ---------------------------------------------------------------------------
@@ -1677,38 +1344,11 @@ def q_calibration_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_pseudo_r2",
     oracle=(
         f"WITH s AS ({SCORED_SQL}), "
-        "g AS (SELECT CAST(FLOOR(score * 1000000 + 0.5) AS BIGINT) AS u, "
-        "CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(label) AS BIGINT) AS pos FROM s "
-        "WHERE score > 0 AND score < 1 GROUP BY u), "
-        # per-DISTINCT-SCORE log-likelihood folded to 1e-9 units before
-        # any accumulation (fixed_sum rule; LN of exact integer ratios)
-        "x AS (SELECT CAST(FLOOR((CAST(pos AS DOUBLE) "
-        "* LN(CAST(u AS DOUBLE) / 1000000) "
-        "+ CAST(cnt - pos AS DOUBLE) "
-        "* LN(CAST(1000000 - u AS DOUBLE) / 1000000)) "
-        "* 1000000000 + 0.5) AS BIGINT) AS llu, cnt, pos FROM g), "
-        # SUM stays HUGEINT (not narrowed to BIGINT): the 1e-9-unit LL
-        # sum wraps BIGINT at ~4e9 rows — the very scale the Spark
-        # DECIMAL(38,0) accumulation targets (ADVICE r14 #2)
-        "m AS (SELECT CAST(SUM(llu) AS HUGEINT) AS llu, "
-        "CAST(SUM(cnt) AS BIGINT) AS n, "
-        "CAST(SUM(pos) AS BIGINT) AS sy FROM x), "
-        "f AS (SELECT n, "
-        "CAST(llu AS DOUBLE) / 1000000000 AS llm, "
-        "CAST(n AS DOUBLE) * ((CAST(sy AS DOUBLE) / n) "
-        "* LN(CAST(sy AS DOUBLE) / n) "
-        "+ (1.0 - CAST(sy AS DOUBLE) / n) "
-        "* LN(1.0 - CAST(sy AS DOUBLE) / n)) AS ll0 FROM m) "
-        "SELECT n, " + sql_round("llm", 6) + " AS ll_model, "
-        + sql_round("ll0", 6) + " AS ll_null, "
-        + sql_round("1.0 - llm / ll0", 6) + " AS mcfadden, "
-        + sql_round(
-            "(1.0 - EXP(2.0 * (ll0 - llm) / n)) "
-            "/ (1.0 - EXP(2.0 * ll0 / n))",
-            6,
-        )
-        + " AS nagelkerke FROM f"
+        f"g AS ({_group_sql(f's WHERE {_SCORE_OPEN}', [_U_KEY], _CELL_SUMS)}), "
+        f"x AS ({_sel('g', _LL_X)}), "
+        f"m AS ({_sel('x', _ll_sums(_HUGE))}), "
+        f"f AS ({_sel('m', _LL)}) "
+        + _sel("f", _R2_OUT)
     ),
     tags=("ml", "monitor", "calibration"),
 )
@@ -1735,63 +1375,35 @@ def q_pseudo_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE map-side-combinable fact fold to the domain-bounded
     distinct-score table + a 3-scalar fold, zero windows, zero joins —
     the q_calibration_slope shape exactly."""
-    s = scored(spark, sf_dir)
-    g = (
-        s.filter((F.col("score") > 0) & (F.col("score") < 1))
-        .groupBy(
-            F.floor(F.col("score") * 1000000 + F.lit(0.5))
-            .cast("bigint")
-            .alias("u")
-        )
-        .agg(
-            F.count("*").cast("bigint").alias("cnt"),
-            F.sum("label").cast("bigint").alias("pos"),
-        )
-    )
-    llu = F.floor(
-        (
-            F.col("pos").cast("double")
-            * F.log(F.col("u").cast("double") / 1000000)
-            + (F.col("cnt") - F.col("pos")).cast("double")
-            * F.log((F.lit(1000000) - F.col("u")).cast("double") / 1000000)
-        )
-        * 1000000000
-        + F.lit(0.5)
-    ).cast("bigint")
-    m = g.select(llu.alias("llu"), "cnt", "pos").agg(
-        # accumulate in DECIMAL(38,0): a bare BIGINT sum of ~2.1e9-per-
-        # fact-row LL units would wrap silently at ~4e9 rows where the
-        # DuckDB HUGEINT sum stays exact (round-14 review fix)
-        F.sum(F.col("llu").cast("decimal(38,0)"))
-        .cast("decimal(38,0)")
-        .alias("llu"),
-        F.sum("cnt").cast("bigint").alias("n"),
-        F.sum("pos").cast("bigint").alias("sy"),
-    )
-    r = F.col("sy").cast("double") / F.col("n")
-    llm = F.col("llu").cast("double") / 1000000000
-    ll0 = F.col("n").cast("double") * (
-        r * F.log(r) + (F.lit(1.0) - r) * F.log(F.lit(1.0) - r)
-    )
-    f = m.select("n", llm.alias("llm"), ll0.alias("ll0"))
-    return f.select(
-        "n",
-        pround(F.col("llm"), 6).alias("ll_model"),
-        pround(F.col("ll0"), 6).alias("ll_null"),
-        pround(F.lit(1.0) - F.col("llm") / F.col("ll0"), 6).alias(
-            "mcfadden"
-        ),
-        pround(
-            (
-                F.lit(1.0)
-                - F.exp(
-                    F.lit(2.0) * (F.col("ll0") - F.col("llm")) / F.col("n")
-                )
-            )
-            / (F.lit(1.0) - F.exp(F.lit(2.0) * F.col("ll0") / F.col("n"))),
-            6,
-        ).alias("nagelkerke"),
-    )
+    g = _grouped(scored(spark, sf_dir).filter(_SCORE_OPEN), [_U_KEY], _CELL_SUMS)
+    m = g.selectExpr(*_LL_X).agg(*map(F.expr, _ll_sums(_DEC)))
+    return m.selectExpr(*_LL).selectExpr(*_R2_OUT)
+
+
+# cumulate from the TOP decile down (targeting order); the window runs
+# over <=10 rows — the KM bounded-window precedent
+_GAIN_CUM = [
+    "decile",
+    "n",
+    "ev",
+    f"CAST(SUM(n) OVER (ORDER BY decile DESC {_CUM}) AS BIGINT) AS cum_n",
+    f"CAST(SUM(ev) OVER (ORDER BY decile DESC {_CUM}) AS BIGINT) AS cum_ev",
+]
+# no-positives stream -> NULL capture/lift on both engines (the
+# q_delong degenerate guard)
+_GAIN_OUT = [
+    "decile",
+    "n",
+    "ev",
+    "cum_n",
+    "cum_ev",
+    "CASE WHEN tev = 0 THEN NULL ELSE "
+    + sql_round("CAST(cum_ev AS DOUBLE) / tev", 6)
+    + " END AS capture",
+    "CASE WHEN tev = 0 THEN NULL ELSE "
+    + sql_round("(CAST(cum_ev AS DOUBLE) / cum_n) / (CAST(tev AS DOUBLE) / nn)", 6)
+    + " END AS lift",
+]
 
 
 # ---------------------------------------------------------------------------
@@ -1808,30 +1420,10 @@ def q_pseudo_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_lift_gain",
     oracle=(
         f"WITH s AS ({SCORED_SQL}), "
-        "g AS (SELECT CAST(FLOOR(score * 10) AS BIGINT) AS decile, "
-        "CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(label) AS BIGINT) AS ev FROM s GROUP BY decile), "
-        "t AS (SELECT CAST(SUM(n) AS BIGINT) AS nn, "
-        "CAST(SUM(ev) AS BIGINT) AS tev FROM g), "
-        # cumulate from the TOP decile down (targeting order); the
-        # window runs over <=10 rows — the KM bounded-window precedent
-        "r AS (SELECT decile, n, ev, "
-        "CAST(SUM(n) OVER (ORDER BY decile DESC) AS BIGINT) AS cum_n, "
-        "CAST(SUM(ev) OVER (ORDER BY decile DESC) AS BIGINT) AS cum_ev "
-        "FROM g) "
-        "SELECT decile, n, ev, cum_n, cum_ev, "
-        # no-positives stream -> NULL capture/lift on both engines
-        # (the q_delong degenerate guard)
-        "CASE WHEN tev = 0 THEN NULL ELSE "
-        + sql_round("CAST(cum_ev AS DOUBLE) / tev", 6)
-        + " END AS capture, "
-        "CASE WHEN tev = 0 THEN NULL ELSE "
-        + sql_round(
-            "(CAST(cum_ev AS DOUBLE) / cum_n) "
-            "/ (CAST(tev AS DOUBLE) / nn)",
-            6,
-        )
-        + " END AS lift FROM r, t"
+        f"g AS ({_group_sql('s', [_DECILE], _DECILE_COUNTS)}), "
+        f"t AS ({_sel('g', _DECILE_TOT)}), "
+        f"r AS ({_sel('g', _GAIN_CUM)}) "
+        + _sel("r, t", _GAIN_OUT)
     ),
     tags=("ml", "monitor", "targeting"),
 )
@@ -1858,45 +1450,39 @@ def q_lift_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE map-side-combinable fact fold to <=10 decile rows, a
     1-row total, one bounded window — strictly the q_hosmer_lemeshow
     shape plus a 10-row window."""
-    s = scored(spark, sf_dir)
-    g = s.groupBy(
-        F.floor(F.col("score") * 10).cast("bigint").alias("decile")
-    ).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("label").cast("bigint").alias("ev"),
-    )
-    t = g.agg(
-        F.sum("n").cast("bigint").alias("nn"),
-        F.sum("ev").cast("bigint").alias("tev"),
-    )
-    w_desc = Window.orderBy(F.desc("decile")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    r = g.select(
-        "decile",
+    g = _grouped(scored(spark, sf_dir), [_DECILE], _DECILE_COUNTS)
+    t = g.selectExpr(*_DECILE_TOT)
+    r = g.selectExpr(*_GAIN_CUM)
+    return r.crossJoin(F.broadcast(t)).selectExpr(*_GAIN_OUT)
+
+
+def _cil_sums(wide: str) -> list[str]:
+    su, num, var = _spieg_sums(wide)
+    return [
+        "CAST(SUM(cnt) AS BIGINT) AS n",
+        "CAST(SUM(pos) AS BIGINT) AS pos_t",
+        su,
+        # O−E null variance in 1e-12 units: cnt·u·(1e6−u)
+        f"CAST(SUM(CAST(cnt AS {wide}) * u * (1000000 - u)) AS {wide}) AS var0",
+        num,
+        var,
+    ]
+
+
+def _cil_out(wide: str) -> list[str]:
+    """The in-the-large scalars; the gap promotes pos_t·1e6 − su to
+    ``wide`` BEFORE the double cast (ADVICE r14 #1)."""
+    gap = f"CAST(CAST(pos_t AS {wide}) * 1000000 - su AS DOUBLE) / 1000000"
+    return [
         "n",
-        "ev",
-        F.sum("n").over(w_desc).cast("bigint").alias("cum_n"),
-        F.sum("ev").over(w_desc).cast("bigint").alias("cum_ev"),
-    )
-    out = r.crossJoin(F.broadcast(t))
-    capture = F.col("cum_ev").cast("double") / F.col("tev")
-    lift = (F.col("cum_ev").cast("double") / F.col("cum_n")) / (
-        F.col("tev").cast("double") / F.col("nn")
-    )
-    return out.select(
-        "decile",
-        "n",
-        "ev",
-        "cum_n",
-        "cum_ev",
-        F.when(F.col("tev") == 0, F.lit(None).cast("double"))
-        .otherwise(pround(capture, 6))
-        .alias("capture"),
-        F.when(F.col("tev") == 0, F.lit(None).cast("double"))
-        .otherwise(pround(lift, 6))
-        .alias("lift"),
-    )
+        sql_round("CAST(pos_t AS DOUBLE) / n", 6) + " AS mean_obs",
+        sql_round("CAST(su AS DOUBLE) / 1000000 / n", 6) + " AS mean_pred",
+        sql_round(f"{gap} / n", 6) + " AS cal_gap",
+        "CASE WHEN var0 = 0 THEN NULL ELSE "
+        + sql_round(f"({gap}) / SQRT(CAST(var0 AS DOUBLE) / 1000000000000)", 6)
+        + " END AS z_oe",
+        *_SPIEG_Z,
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -1913,50 +1499,9 @@ def q_lift_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_cal_in_large",
     oracle=(
         f"WITH s AS ({SCORED_SQL}), "
-        "g AS (SELECT CAST(FLOOR(score * 1000000 + 0.5) AS BIGINT) AS u, "
-        "CAST(COUNT(*) AS BIGINT) AS cnt, "
-        "CAST(SUM(label) AS BIGINT) AS pos FROM s GROUP BY u), "
-        "m AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n, "
-        "CAST(SUM(pos) AS BIGINT) AS pos_t, "
-        "CAST(SUM(CAST(cnt AS HUGEINT) * u) AS HUGEINT) AS su, "
-        # O−E null variance in 1e-12 units: cnt·u·(1e6−u)
-        "CAST(SUM(CAST(cnt AS HUGEINT) * u * (1000000 - u)) AS HUGEINT) "
-        "AS var0, "
-        # Spiegelhalter numerator in 1e-12 units (the q_spiegelhalter
-        # text): (pos·1e6 − cnt·u)·(1e6 − 2u)
-        "CAST(SUM(CAST(pos * 1000000 - cnt * u AS HUGEINT) "
-        "* (1000000 - 2 * u)) AS HUGEINT) AS num, "
-        # Spiegelhalter variance in 1e-24 units: cnt·(1e6−2u)²·u·(1e6−u)
-        "CAST(SUM(CAST(cnt AS HUGEINT) * (1000000 - 2 * u) "
-        "* (1000000 - 2 * u) * u * (1000000 - u)) AS HUGEINT) AS var "
-        "FROM g) "
-        "SELECT n, "
-        + sql_round("CAST(pos_t AS DOUBLE) / n", 6) + " AS mean_obs, "
-        + sql_round("CAST(su AS DOUBLE) / 1000000 / n", 6)
-        + " AS mean_pred, "
-        + sql_round(
-            "CAST(CAST(pos_t AS HUGEINT) * 1000000 - su AS DOUBLE) "
-            "/ 1000000 / n",
-            6,
-        )
-        + " AS cal_gap, "
-        "CASE WHEN var0 = 0 THEN NULL ELSE "
-        + sql_round(
-            "(CAST(CAST(pos_t AS HUGEINT) * 1000000 - su AS DOUBLE) "
-            "/ 1000000) / SQRT(CAST(var0 AS DOUBLE) / 1000000000000)",
-            6,
-        )
-        + " END AS z_oe, "
-        + sql_round("CAST(num AS DOUBLE) / 1000000000000", 6)
-        + " AS num_spieg, "
-        "CASE WHEN var = 0 THEN NULL ELSE "
-        + sql_round(
-            "(CAST(num AS DOUBLE) / 1000000000000) "
-            "/ SQRT(CAST(var AS DOUBLE) / "
-            "1000000000000000000000000.0)",
-            6,
-        )
-        + " END AS z_spieg FROM m"
+        f"g AS ({_group_sql('s', [_U_KEY], _CELL_SUMS)}), "
+        f"m AS ({_sel('g', _cil_sums(_HUGE))}) "
+        + _sel("m", _cil_out(_HUGE))
     ),
     tags=("ml", "monitor", "calibration"),
 )
@@ -1987,59 +1532,5 @@ def q_cal_in_large(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows, zero joins. Ref: evaluate_model.py's scalar metrics
     family; Spiegelhalter (1986); calibration-in-the-large per
     Steyerberg's model-validation battery."""
-    s = scored(spark, sf_dir)
-    dec = "decimal(38,0)"
-    g = s.groupBy(
-        F.floor(F.col("score") * 1000000 + F.lit(0.5))
-        .cast("bigint")
-        .alias("u")
-    ).agg(
-        F.count("*").cast("bigint").alias("cnt"),
-        F.sum("label").cast("bigint").alias("pos"),
-    )
-    one_m_2u = F.lit(1000000) - 2 * F.col("u")
-    m = g.agg(
-        F.sum("cnt").cast("bigint").alias("n"),
-        F.sum("pos").cast("bigint").alias("pos_t"),
-        F.sum(F.col("cnt").cast(dec) * F.col("u")).alias("su"),
-        F.sum(
-            F.col("cnt").cast(dec)
-            * F.col("u")
-            * (F.lit(1000000) - F.col("u"))
-        ).alias("var0"),
-        F.sum(
-            (F.col("pos") * 1000000 - F.col("cnt") * F.col("u")).cast(dec)
-            * one_m_2u
-        ).alias("num"),
-        F.sum(
-            F.col("cnt").cast(dec)
-            * one_m_2u
-            * one_m_2u
-            * F.col("u")
-            * (F.lit(1000000) - F.col("u"))
-        ).alias("var"),
-    )
-    oe = (
-        (F.col("pos_t").cast(dec) * 1000000 - F.col("su")).cast("double")
-        / 1000000
-    )
-    numd = F.col("num").cast("double") / 1000000000000
-    vard = F.col("var").cast("double") / 1e24
-    var0d = F.col("var0").cast("double") / 1000000000000
-    return m.select(
-        "n",
-        pround(F.col("pos_t").cast("double") / F.col("n"), 6).alias(
-            "mean_obs"
-        ),
-        pround(F.col("su").cast("double") / 1000000 / F.col("n"), 6).alias(
-            "mean_pred"
-        ),
-        pround(oe / F.col("n"), 6).alias("cal_gap"),
-        F.when(F.col("var0") == 0, F.lit(None).cast("double"))
-        .otherwise(pround(oe / F.sqrt(var0d), 6))
-        .alias("z_oe"),
-        pround(numd, 6).alias("num_spieg"),
-        F.when(F.col("var") == 0, F.lit(None).cast("double"))
-        .otherwise(pround(numd / F.sqrt(vard), 6))
-        .alias("z_spieg"),
-    )
+    g = _grouped(scored(spark, sf_dir), [_U_KEY], _CELL_SUMS)
+    return g.agg(*map(F.expr, _cil_sums(_DEC))).selectExpr(*_cil_out(_DEC))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fraud_detection_spark.operators.ml_metrics import SCORE_SQL
 from fraud_detection_spark.registry import query, sql_round
 from fraud_detection_spark.sources import load_table
 
@@ -47,15 +48,7 @@ def sigmoid_score_udf(qty: pd.Series, disc: pd.Series, price: pd.Series) -> pd.S
 
 @query(
     "q_pandas_udf_score",
-    oracle=(
-        "SELECT l_orderkey, l_linenumber, "
-        + sql_round(
-            "1.0 / (1.0 + EXP(-(-2.0 + 0.03 * l_quantity + 9.0 * l_discount "
-            "+ 0.8 * (l_extendedprice / 100000.0))))",
-            6,
-        )
-        + " AS score FROM lineitem"
-    ),
+    oracle=f"SELECT l_orderkey, l_linenumber, {SCORE_SQL} AS score FROM lineitem",
     tags=("udf", "pandas_udf"),
 )
 def q_pandas_udf_score(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -44,6 +44,14 @@ def sql_round(expr: str, n: int) -> str:
     return f"FLOOR(({expr}) * {p} + 0.5) / {p}"
 
 
+def sql_sigmoid(x: str) -> str:
+    """The logistic 1/(1+e^{-x}) as SQL text, valid in both dialects.
+    EXP returns DOUBLE, so each bare ``1.0`` meets a DOUBLE operand and
+    Spark SQL evaluates the same double arithmetic as DuckDB; ``x``
+    must be DOUBLE-typed in Spark SQL as well (no DECIMAL-only sums)."""
+    return f"1.0 / (1.0 + EXP(-({x})))"
+
+
 def sql_double_lit(x: float) -> str:
     """Render a Python float as an EXACT double literal for oracle SQL.
 

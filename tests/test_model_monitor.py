@@ -138,3 +138,251 @@ def test_woe_iv_zero_sum_property(spark, sf_dir):
     # ((p-q) and ln(p/q) always share a sign)
     assert (woe.iv_term.dropna() >= -1e-12).all()
     assert woe.pos_c.sum() > 0 and woe.neg_c.sum() > 0
+
+
+# ---------------------------------------------------------------------------
+# Independent pandas/numpy references for the monitor queries that the
+# tests above do not check. Both engines evaluate one formula text per
+# column, so the oracle no longer cross-checks a formula against a
+# second hand-written copy: these recompute each query from the raw
+# parquet with numpy and compare within 1e-6 (counts exactly).
+
+
+def _close(got, want, label):
+    got, want = np.asarray(got, dtype=float), np.asarray(want, dtype=float)
+    both_nan = np.isnan(got) & np.isnan(want)
+    ok = both_nan | (np.abs(got - want) <= 1e-6 + 1e-12)
+    assert ok.all(), (label, got[~ok][:5], want[~ok][:5])
+
+
+def _round(x, n):
+    return np.floor(np.asarray(x, dtype=float) * 10**n + 0.5) / 10**n
+
+
+def _lineitem(sf_dir) -> pd.DataFrame:
+    """Raw lineitem plus the published model's label and 6-dp score,
+    recomputed in numpy."""
+    li = pd.read_parquet(f"{sf_dir}/lineitem.parquet")
+    logit = (
+        -2.0
+        + 0.03 * li.l_quantity.values
+        + 9.0 * li.l_discount.values
+        + 0.8 * (li.l_extendedprice.values / 100000.0)
+    )
+    li["score"] = _round(1.0 / (1.0 + np.exp(-logit)), 6)
+    li["label"] = (li.l_returnflag.values == "R").astype(np.int64)
+    return li
+
+
+def _bands(li, k) -> pd.DataFrame:
+    """Per score band floor(score·k): n, positives and the exact
+    fixed-point mean score."""
+    units = np.floor(li.score.values * 1e6 + 0.5).astype(np.int64)
+    g = (
+        pd.DataFrame(
+            {"band": np.floor(li.score.values * k).astype(np.int64),
+             "label": li.label.values, "units": units}
+        )
+        .groupby("band")
+        .agg(n=("label", "size"), pos=("label", "sum"), su=("units", "sum"))
+        .sort_index()
+    )
+    g["mean_score"] = g.su / 1e6 / g.n
+    g["rate"] = g.pos / g.n
+    return g
+
+
+def _by(df, key):
+    return df.set_index(key).sort_index()
+
+
+def test_calibration_matches_numpy_reference(spark, sf_dir):
+    want = _bands(_lineitem(sf_dir), 20)
+    got = _by(REGISTRY["q_calibration"].fn(spark, sf_dir).toPandas(), "band")
+    assert list(got.index) == list(want.index)
+    assert (got.n.values == want.n.values).all()
+    _close(got.mean_score, _round(want.mean_score, 6), "mean_score")
+    _close(got.pos_rate, _round(want.rate, 6), "pos_rate")
+
+
+def test_ece_matches_numpy_reference(spark, sf_dir):
+    g = _bands(_lineitem(sf_dir), 20)
+    want = (g.n * (g.mean_score - g.rate).abs()).sum() / g.n.sum()
+    got = REGISTRY["q_ece"].fn(spark, sf_dir).collect()[0]
+    assert got["n_bands"] == len(g)
+    _close([got["ece"]], [want], "ece")
+
+
+def test_threshold_sweep_matches_numpy_reference(spark, sf_dir):
+    g = _bands(_lineitem(sf_dir), 50).sort_index(ascending=False)
+    tp, fp = g.pos.cumsum().values, (g.n - g.pos).cumsum().values
+    p_all, n_all = g.pos.sum(), (g.n - g.pos).sum()
+    got = (
+        REGISTRY["q_threshold_sweep"].fn(spark, sf_dir).toPandas()
+        .sort_values("threshold", ascending=False)
+    )
+    _close(got.threshold, g.index.values / 50.0, "threshold")
+    assert (got.tp.values == tp).all() and (got.fp.values == fp).all()
+    assert (got.fn.values == p_all - tp).all()
+    _close(got.precision, tp / (tp + fp), "precision")
+    _close(got.recall, tp / p_all, "recall")
+    _close(got.f1, 2.0 * tp / (2.0 * tp + fp + (p_all - tp)), "f1")
+    _close(got.youden_j, tp / p_all - fp / n_all, "youden_j")
+
+
+def test_auc_by_segment_matches_numpy_trapezoid(spark, sf_dir):
+    li = _lineitem(sf_dir)
+    want = {}
+    for seg, s in li.groupby("l_linestatus"):
+        g = _bands(s, 50).sort_index(ascending=False)
+        tpr = g.pos.cumsum().values / g.pos.sum()
+        fpr = (g.n - g.pos).cumsum().values / (g.n - g.pos).sum()
+        # trapezoid from (0, 0) through the points in (fpr, tpr) order
+        pts = sorted(zip(fpr, tpr))
+        xs = np.array([0.0] + [p[0] for p in pts])
+        ys = np.array([0.0] + [p[1] for p in pts])
+        want[seg] = float(np.sum(np.diff(xs) * (ys[1:] + ys[:-1]) / 2.0))
+    got = _by(REGISTRY["q_auc_by_segment"].fn(spark, sf_dir).toPandas(), "seg")
+    assert sorted(got.index) == sorted(want)
+    _close(got.auc.values, [want[s] for s in got.index], "auc")
+    assert ((got.auc >= 0.0) & (got.auc <= 1.0)).all()
+
+
+def test_champion_challenger_matches_numpy_reference(spark, sf_dir):
+    from fraud_detection_spark.operators.feature_eng import _TREE_BIAS, _TREES
+
+    li = _lineitem(sf_dir)
+
+    def margin(node):
+        """Leaf margin of every row for one published tree spec."""
+        if isinstance(node, tuple):
+            return np.full(len(li), node[1])
+        go_left = li[node["feat"]].values < node["thr"]
+        return np.where(go_left, margin(node["left"]), margin(node["right"]))
+
+    m = _TREE_BIAS + sum(margin(t) for t in _TREES)
+    chall = _round(1.0 / (1.0 + np.exp(-m)), 6)
+    champ = li.score.values
+    d = pd.DataFrame({
+        "decile": np.floor(champ * 10).astype(np.int64),
+        "label": li.label.values,
+        "cu": np.floor(champ * 1e6 + 0.5).astype(np.int64),
+        "hu": np.floor(chall * 1e6 + 0.5).astype(np.int64),
+        "b": ((champ >= 0.5) & (chall < 0.5)).astype(np.int64),
+        "c": ((champ < 0.5) & (chall >= 0.5)).astype(np.int64),
+        "agree": ((champ >= 0.5) == (chall >= 0.5)).astype(np.int64),
+    })
+    want = d.groupby("decile").agg(
+        n=("label", "size"), n_pos=("label", "sum"), cu=("cu", "sum"),
+        hu=("hu", "sum"), b=("b", "sum"), c=("c", "sum"), agree=("agree", "sum"),
+    )
+    got = _by(REGISTRY["q_champion_challenger"].fn(spark, sf_dir).toPandas(), "decile")
+    assert list(got.index) == list(want.index)
+    for g, w in (("n", "n"), ("n_pos", "n_pos"), ("mcnemar_b", "b"),
+                 ("mcnemar_c", "c"), ("n_agree", "agree")):
+        assert (got[g].values == want[w].values).all(), g
+    _close(got.mean_champ, _round(want.cu / 1e6 / want.n, 6), "mean_champ")
+    _close(got.mean_chall, _round(want.hu / 1e6 / want.n, 6), "mean_chall")
+
+
+def test_drift_profile_matches_numpy_reference(spark, sf_dir):
+    li = pd.read_parquet(f"{sf_dir}/lineitem.parquet")
+    is_train = (
+        (li.l_orderkey.values * 2654435761 + li.l_linenumber.values) % 1000 < 800
+    )
+    rows = []
+    for c in ("l_quantity", "l_extendedprice", "l_discount", "l_tax"):
+        x = li[c].values
+        # discrete percentile: the smallest value whose empirical CDF
+        # reaches q
+        cuts = np.quantile(x, [i / 10 for i in range(1, 10)], method="inverted_cdf")
+        band = 1 + (x[:, None] > cuts[None, :]).sum(axis=1)
+        g = pd.DataFrame({"band": band, "t": is_train}).groupby("band").t
+        ne, na = g.sum(), g.size() - g.sum()
+        pe, pa = ne / ne.sum(), na / na.sum()
+        with np.errstate(divide="ignore", invalid="ignore"):
+            term = np.where((pe > 0) & (pa > 0), (pa - pe) * np.log(pa / pe), np.nan)
+        for b, e, a, t in zip(ne.index, ne.values, na.values, term):
+            rows.append((c, b, e, a, t))
+    want = pd.DataFrame(
+        rows, columns=["feature", "band", "n_expected", "n_actual", "psi_term"]
+    ).sort_values(["feature", "band"]).reset_index(drop=True)
+    got = (
+        REGISTRY["q_drift_profile"].fn(spark, sf_dir).toPandas()
+        .sort_values(["feature", "band"]).reset_index(drop=True)
+    )
+    assert got[["feature", "band", "n_expected", "n_actual"]].values.tolist() == (
+        want[["feature", "band", "n_expected", "n_actual"]].values.tolist()
+    )
+    _close(got.psi_term, _round(want.psi_term, 6), "psi_term")
+
+
+def _events(sf_dir) -> pd.DataFrame:
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet")
+    ev["sec"] = ev.ts.values.astype("datetime64[s]").astype(np.int64)
+    return ev
+
+
+def test_ab_test_matches_numpy_reference(spark, sf_dir):
+    ev = _events(sf_dir)
+    ev = ev[ev.event_type.isin(["click", "purchase"])]
+    g = ev.assign(conv=(ev.value > 100.0).astype(np.int64)).groupby("event_type").agg(
+        n=("conv", "size"), conv=("conv", "sum")
+    )
+    n_all, conv_all = g.n.sum(), g.conv.sum()
+    p, p_all = g.conv / g.n, conv_all / n_all
+    z = (p - p_all) / np.sqrt(p_all * (1 - p_all) * (1 / g.n + 1 / (n_all - g.n)))
+    got = _by(REGISTRY["q_ab_test"].fn(spark, sf_dir).toPandas(), "variant")
+    assert list(got.index) == list(g.index)
+    assert (got.n.values == g.n.values).all() and (got.conv.values == g.conv.values).all()
+    _close(got.rate, _round(p, 6), "rate")
+    _close(got.z, _round(z, 6), "z")
+
+
+def test_hourly_profile_matches_numpy_reference(spark, sf_dir):
+    ev = _events(sf_dir)
+    units = np.floor(ev.value.values * 1e4 + 0.5).astype(np.int64)
+    g = pd.DataFrame({"hod": (ev.sec.values % 86400) // 3600, "u": units}).groupby(
+        "hod"
+    ).agg(n=("u", "size"), su=("u", "sum"))
+    z = (g.n - g.n.mean()) / g.n.std(ddof=1)
+    got = _by(REGISTRY["q_hourly_profile"].fn(spark, sf_dir).toPandas(), "hod")
+    assert list(got.index) == list(g.index)
+    assert (got.n.values == g.n.values).all()
+    _close(got.share, _round(g.n / g.n.sum(), 6), "share")
+    _close(got.mean_value, _round(g.su / 1e4 / g.n, 4), "mean_value")
+    _close(got.volume_z, _round(z, 6), "volume_z")
+
+
+def test_monitor_formulas_are_one_text():
+    """Every model_monitor formula is SQL text that both engines run:
+    the module calls none of the Column formula helpers, and the tree
+    ensemble has no Column twin of its CASE text."""
+    import ast
+    import inspect
+
+    from fraud_detection_spark.operators import feature_eng, model_monitor
+
+    banned_names = {"pround", "fp_units", "fixed_sum", "fixed_avg"}
+    banned_attrs = {"when", "log", "log10", "exp", "sqrt", "nullif", "abs", "floor"}
+    tree = ast.parse(inspect.getsource(model_monitor))
+    used = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and node.id in banned_names:
+            used.add(node.id)
+        elif isinstance(node, ast.alias) and node.name in banned_names:
+            used.add(node.name)
+        elif (
+            isinstance(node, ast.Attribute)
+            and node.attr in banned_attrs
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "F"
+        ):
+            used.add(f"F.{node.attr}")
+    assert not used, sorted(used)
+    defs = {
+        n.name
+        for n in ast.walk(ast.parse(inspect.getsource(feature_eng)))
+        if isinstance(n, ast.FunctionDef)
+    }
+    assert "_tree_col" not in defs

@@ -478,8 +478,8 @@ def test_lift_gain_matches_python_reference(spark, duck, sf_dir):
 
 
 def test_xgb_round2_round1_is_q_xgb_round(spark, sf_dir):
-    """Round 1 of the chain IS q_xgb_round's pick (shared
-    _xgb_newton_pick machinery — the q_boosted_mf_tree2 pin style)."""
+    """Round 1 of the chain IS q_xgb_round's pick (both are runs of the
+    one Newton grower, _xgb_boost — the q_boosted_mf_tree2 pin style)."""
     one = REGISTRY["q_xgb_round"].fn(spark, sf_dir).collect()[0].asDict()
     two = REGISTRY["q_xgb_round2"].fn(spark, sf_dir).collect()
     r1 = next(r.asDict() for r in two if r["round"] == 1)
@@ -492,13 +492,12 @@ def test_xgb_round2_round2_matches_python_reference(spark, duck, sf_dir):
     reference fetches u2 BY DUCKDB with the oracle's own margin-update
     text (so the LN/EXP house class cannot skew the python fold) and
     runs the pure-python Newton pick on it."""
-    from fraud_detection_spark.operators.ml_metrics import (
-        _xgb_round2_oracle,
-    )
+    from fraud_detection_spark.operators.ml_metrics import _xgb_boost_sql
 
-    head = _xgb_round2_oracle().split(", r2 AS (")[0]
+    # q_xgb_round2's chain (the grower's (1, 2) run) read out at the
+    # round-2 margin table
     rows = duck.execute(
-        head + " SELECT label, disc, price, qty, u2 FROM f2"
+        _xgb_boost_sql(1, 2, tail=" SELECT label, disc, price, qty, u2 FROM f2")
     ).fetchall()
     gh_rows = [
         (int(l), {"disc": float(d), "price": float(p), "qty": float(q)}, int(u))
@@ -540,9 +539,8 @@ def test_xgb_fit_matches_python_fold_reference(spark, duck, sf_dir):
 
     from fraud_detection_spark.operators.ml_metrics import _xgb_fit_oracle
 
-    head = _xgb_fit_oracle().split(", m AS ")[0]
     cells = duck.execute(
-        head + " SELECT u, u2, u3, cnt, pos FROM s3v"
+        _xgb_fit_oracle(tail=" SELECT u, u2, u3, cnt, pos FROM s3v")
     ).fetchall()
     n = sum(c[3] for c in cells)
 

@@ -143,13 +143,12 @@ def test_xgb_boosted_tree2_tree2_matches_python_reference(spark, duck, sf_dir):
     fetches u2 BY DUCKDB with the oracle's own margin-update text (so
     the LN/EXP house class cannot skew the python fold) and runs the
     pure-python depth-2 tree reference on it."""
-    from fraud_detection_spark.operators.ml_metrics import (
-        _xgb_boosted_tree2_oracle,
-    )
+    from fraud_detection_spark.operators.ml_metrics import _xgb_boost_sql
 
-    head = _xgb_boosted_tree2_oracle().split(", r2 AS (")[0]
+    # q_xgb_boosted_tree2's chain (the grower's (2, 2) run) read out at
+    # the round-2 margin table
     rows = duck.execute(
-        head + " SELECT label, disc, price, qty, u2 FROM f2"
+        _xgb_boost_sql(2, 2, tail=" SELECT label, disc, price, qty, u2 FROM f2")
     ).fetchall()
     gh_rows = [
         (int(l), {"disc": float(d), "price": float(p), "qty": float(q)}, int(u))
@@ -174,16 +173,15 @@ def test_xgb_boosted_tree2_margin_update_is_4leaf_case(duck, sf_dir):
     import math
 
     from fraud_detection_spark.operators.ml_metrics import (
+        _xgb_boost_sql,
         _xgb_boosted_tree2_oracle,
     )
 
-    sql = _xgb_boosted_tree2_oracle()
-    head = sql.split(", cpa AS ")[0]
+    # tree 1: the oracle's published round-1 picks
     t1 = {
         r[0]: r
         for r in duck.execute(
-            head + " SELECT * FROM pra UNION ALL SELECT * FROM lpa "
-            "UNION ALL SELECT * FROM rpa"
+            f"SELECT * FROM ({_xgb_boosted_tree2_oracle()}) WHERE round = 1"
         ).fetchall()
     }
     # columns: node, round, feat, threshold, n_left, n_right, g_left,
@@ -197,16 +195,18 @@ def test_xgb_boosted_tree2_margin_update_is_4leaf_case(duck, sf_dir):
     # function of (disc, price, qty, u), so the (cell -> count)
     # histogram of f maps exactly onto the histogram of f2 — no
     # reliance on DuckDB preserving row order across queries
-    fhead = sql.split(", r1 AS (")[0]
     fact = duck.execute(
-        fhead + " SELECT disc, price, qty, u, COUNT(*) FROM f "
-        "GROUP BY disc, price, qty, u"
+        _xgb_boost_sql(
+            2, 2, tail=" SELECT disc, price, qty, u, COUNT(*) FROM f GROUP BY disc, price, qty, u"
+        )
     ).fetchall()
-    u2head = sql.split(", r2 AS (")[0]
     got = {}
     for d, p, q, u2, cnt in duck.execute(
-        u2head + " SELECT disc, price, qty, u2, COUNT(*) FROM f2 "
-        "GROUP BY disc, price, qty, u2"
+        _xgb_boost_sql(
+            2,
+            2,
+            tail=" SELECT disc, price, qty, u2, COUNT(*) FROM f2 GROUP BY disc, price, qty, u2",
+        )
     ).fetchall():
         got[(d, p, q, u2)] = got.get((d, p, q, u2), 0) + cnt
 
@@ -753,6 +753,7 @@ def test_xgb_boosted_tree2_improves_objective(duck, sf_dir):
     import math
 
     from fraud_detection_spark.operators.ml_metrics import (
+        _xgb_boost_sql,
         _xgb_boosted_tree2_oracle,
         _xgb_round2_oracle,
     )
@@ -763,26 +764,21 @@ def test_xgb_boosted_tree2_improves_objective(duck, sf_dir):
         "g_right h_right gain w_left w_right"
     ).split()
 
-    def tree(head_sql, names):
+    def tree(rnd):
+        """The oracle's published picks of round ``rnd``."""
         return {
             r[0]: dict(zip(cols, r))
-            for r in duck.execute(head_sql + " " + names).fetchall()
+            for r in duck.execute(f"SELECT * FROM ({sql}) WHERE round = {rnd}").fetchall()
         }
 
-    t1 = tree(
-        sql.split(", cpa AS ")[0],
-        "SELECT * FROM pra UNION ALL SELECT * FROM lpa "
-        "UNION ALL SELECT * FROM rpa",
-    )
-    t2 = tree(
-        sql.split(" SELECT * FROM pra UNION ALL")[0],
-        "SELECT * FROM prb UNION ALL SELECT * FROM lpb "
-        "UNION ALL SELECT * FROM rpb",
-    )
+    t1, t2 = tree(1), tree(2)
     cells = duck.execute(
-        sql.split(", r1 AS (")[0]
-        + " SELECT label, disc, price, qty, u, COUNT(*) FROM f "
-        "GROUP BY label, disc, price, qty, u"
+        _xgb_boost_sql(
+            2,
+            2,
+            tail=" SELECT label, disc, price, qty, u, COUNT(*) FROM f "
+            "GROUP BY label, disc, price, qty, u",
+        )
     ).fetchall()
 
     def leaf_w(t, disc, price, qty):
@@ -818,12 +814,8 @@ def test_xgb_boosted_tree2_improves_objective(duck, sf_dir):
     # the tree refines the stump: round-1 LL gain at least the stump
     # chain's round-1 gain (q_xgb_round2's own p1 row applied to the
     # same cells)
-    s_sql = _xgb_round2_oracle()
     p1 = duck.execute(
-        s_sql.split(", f2 AS (")[0].replace(
-            "p1 AS MATERIALIZED", "p1 AS"
-        )
-        + " SELECT * FROM p1"
+        f"SELECT * FROM ({_xgb_round2_oracle()}) WHERE round = 1"
     ).fetchall()[0]
     sp = dict(zip(["round"] + cols[2:], p1))
 

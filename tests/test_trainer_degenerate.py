@@ -1,12 +1,15 @@
 """Degenerate-input parity: each query below must return its DuckDB
 oracle's rows exactly (the test_partition_stress rule) on inputs the
-fixtures never hold. The trainer family and the other oracle-checked
-ML metrics run with lineitem empty, holding a single row, or holding
-one class only (no l_returnflag = 'R'), and the trainers also with
-lineitem holding two rows; the queries that divide by a
+fixtures never hold. The trainer family, the other oracle-checked
+ML metrics and the lineitem-reading model monitors run with lineitem
+empty, holding a single row, or holding one class only (no
+l_returnflag = 'R'), and the trainers also with lineitem holding two
+rows; the queries that divide by a
 fact count run with lineitem and events both empty; the survival
 family runs with events empty, holding a single user, holding no
-'error' event, or holding one parity arm only (even user ids);
+'error' event, or holding one parity arm only (even user ids), and
+the events-reading model monitors run on those cases and with one
+A/B variant only (no 'purchase' event);
 q_gini_index runs with orders empty, holding a single row, or
 holding a single customer. The inputs derive from the test SF's
 parquet under a pytest tmp dir: each rewritten table is a DuckDB COPY
@@ -71,6 +74,34 @@ METRICS = (
     "q_delong",
 )
 
+# the model_monitor queries that read lineitem
+MONITORS = (
+    "q_ks_stat",
+    "q_psi",
+    "q_calibration",
+    "q_lift_bands",
+    "q_benford",
+    "q_target_encode",
+    "q_woe_iv",
+    "q_isotonic",
+    "q_champion_challenger",
+    "q_brier",
+    "q_ece",
+    "q_drift_profile",
+    "q_auc_by_segment",
+    "q_threshold_sweep",
+    "q_spiegelhalter",
+    "q_brier_decomp",
+    "q_hosmer_lemeshow",
+    "q_calibration_slope",
+    "q_pseudo_r2",
+    "q_lift_gain",
+    "q_cal_in_large",
+)
+
+# the model_monitor queries that read events
+EVENT_MONITORS = ("q_velocity", "q_ab_test", "q_hourly_profile")
+
 # lineitem rewrite per case (a SELECT tail over the shipped table)
 CASES = {
     "empty": "WHERE FALSE",
@@ -113,6 +144,11 @@ EVENT_CASES = {
     "no_errors": "WHERE event_type <> 'error'",
     "one_arm": "WHERE user_id % 2 = 0",
 }
+
+
+# events rewrite for the event monitors only: q_ab_test compares the
+# click and purchase variants, so one variant leaves no complement
+VARIANT_CASES = {"one_variant": "WHERE event_type <> 'purchase'"}
 
 
 # orders rewrite per case, for q_gini_index
@@ -179,6 +215,11 @@ def degenerate_events(tmp_path_factory, sf_dir):
 
 
 @pytest.fixture(scope="module")
+def degenerate_variants(tmp_path_factory, sf_dir):
+    yield from _case_dirs(tmp_path_factory, sf_dir, "events", VARIANT_CASES)
+
+
+@pytest.fixture(scope="module")
 def degenerate_orders(tmp_path_factory, sf_dir):
     yield from _case_dirs(tmp_path_factory, sf_dir, "orders", ORDER_CASES)
 
@@ -225,6 +266,33 @@ def test_survival_degenerate_input_matches_oracle(
     spark, degenerate_events, name, case
 ):
     _assert_matches(spark, degenerate_events[case], name, case)
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+@pytest.mark.parametrize("name", MONITORS)
+def test_monitor_degenerate_input_matches_oracle(spark, degenerate, name, case):
+    _assert_matches(spark, degenerate[case], name, case)
+
+
+@pytest.mark.parametrize("case", sorted({**EVENT_CASES, **VARIANT_CASES}))
+@pytest.mark.parametrize("name", EVENT_MONITORS)
+def test_event_monitor_degenerate_input_matches_oracle(
+    spark, degenerate_events, degenerate_variants, name, case
+):
+    _assert_matches(spark, {**degenerate_events, **degenerate_variants}[case], name, case)
+
+
+def test_pseudo_r2_null_model_needs_both_classes(spark, degenerate):
+    """With one class only the base-rate null model has no likelihood
+    (LN(0)): ll_null, mcfadden and nagelkerke are NULL on both engines,
+    and ll_model is still reported."""
+    d, con = degenerate["one_class"]
+    q = REGISTRY["q_pseudo_r2"]
+    cols = "ll_null, mcfadden, nagelkerke"
+    assert con.execute(f"SELECT {cols} FROM ({q.oracle})").fetchall() == [(None,) * 3]
+    (row,) = q.fn(spark, d).collect()
+    assert (row.ll_null, row.mcfadden, row.nagelkerke) == (None,) * 3
+    assert row.ll_model is not None
 
 
 @pytest.mark.parametrize("case", sorted(ORDER_CASES))
